@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql.types import ArrayType, MapType, StructType
 
-from trip_data_pipeline_spark.registry import OPS, queries  # noqa: F401
+from trip_data_pipeline_spark.registry import OPS, PRIORITY, oracle_sql, queries
 from tests.oracle import compare
 
 queries()  # force registration
@@ -31,6 +31,19 @@ def assert_driver_safe_schema(name, df):
         f"{name}: hash-checked op projects complex-typed columns {bad}; "
         "the driver canonicalizer will ERR — encode as scalars on both sides"
     )
+
+
+def test_registry_order_and_oracles():
+    """queries() lists every registered op exactly once, PRIORITY
+    first and in order; oracle_sql() holds exactly the ops that
+    declare an oracle.  No Spark session needed."""
+    names = list(queries())
+    assert len(names) == len(set(names))
+    assert set(names) == set(OPS)
+    assert names[: len(PRIORITY)] == list(PRIORITY)
+    oracles = oracle_sql()
+    assert set(oracles) == {n for n, o in OPS.items() if o.oracle is not None}
+    assert all(oracles[n] == OPS[n].oracle for n in oracles)
 
 
 def _names():

@@ -73,8 +73,8 @@ PYTHON_OK = {
 
 # Ops whose plans legitimately contain CartesianProduct /
 # BroadcastNestedLoopJoin nodes.  Every entry is bounded by
-# construction — verified per-op (tools/plan_audit.py surfaced the
-# set; each cross/inequality site was read): either a 1-row global
+# construction — verified per-op (a whole-registry plan sweep surfaced
+# the set; each cross/inequality site was read): either a 1-row global
 # aggregate / tiny threshold relation broadcast back over the stream,
 # or a declared-bounded brute-force baseline whose scale path is a
 # separate bucketed op.  Anything NOT listed here must compile
@@ -172,8 +172,8 @@ _AGG_NODES = ("HashAggregate", "SortAggregate", "ObjectHashAggregate",
 def _single_partition_over_raw(tree: str) -> list[str]:
     """Lines of `tree` (a physical-plan tree string) that are an
     Exchange SinglePartition with NO aggregation anywhere below it —
-    i.e. a global sort/window over raw rows.  Shared by the sweep
-    gate below and tools/plan_audit.py."""
+    i.e. a global sort/window over raw rows.  Used by the sweep gate
+    below."""
     import re
 
     lines = tree.split("== Initial Plan ==")[0].splitlines()
@@ -347,8 +347,7 @@ PY_PLAN_NODES = (
 
 @pytest.mark.parametrize("name", sorted(set(OPS) - SKIP_PLAN_SWEEP))
 def test_plan_shape_sweep(spark, name):
-    """Global plan-shape gate over every buildable operator (the
-    report twin is tools/plan_audit.py, which shares these lists):
+    """Global plan-shape gate over every buildable operator:
     (a) non-UDF operators stay fully JVM-side — no Python evaluation
     node of any kind; (b) operators outside the audited CARTESIAN_OK
     set compile without CartesianProduct / BroadcastNestedLoopJoin —
@@ -2182,39 +2181,6 @@ def test_cluster_by_one_declared_exchange(spark):
     p = _exec_plan(spark, "sql_cluster_by_surface")
     assert p.count("Exchange hashpartitioning") <= 2, p
     assert "Join" not in p, p
-
-
-def test_plan_audit_sidecar_fresh():
-    """Ledger-style freshness gate for docs/PLAN_AUDIT.md (VERDICT r11
-    item 4: the audit sat two rounds stale across two plan changes).
-    tools/plan_audit.py writes a sidecar recording the HEAD it ran at
-    plus a digest over every op's SOURCE fingerprint (AST, docstrings
-    stripped — the STAMP_FRESHNESS fingerprint minus the oracle half,
-    since oracle text cannot change a physical plan).  This recomputes
-    the digest on the tree in front of us: any op-code change since
-    the last audit fails here and forces a regen — a conservative,
-    mechanical superset of "some physical plan changed"."""
-    import hashlib
-    import json
-    import os
-
-    from tools.stamp_freshness import fn_fingerprint
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(repo, "docs", "PLAN_AUDIT.json")
-    assert os.path.exists(path), (
-        "docs/PLAN_AUDIT.json missing — run tools/plan_audit.py"
-    )
-    sidecar = json.load(open(path))
-    src_fps = {n: fn_fingerprint(o.fn) for n, o in OPS.items()}
-    digest = hashlib.sha256(
-        json.dumps(src_fps, sort_keys=True).encode()
-    ).hexdigest()[:16]
-    assert sidecar["registry_src_digest"] == digest, (
-        "operator code changed since the last plan audit — re-run "
-        "tools/plan_audit.py (and re-check its 0-violations verdict)"
-    )
-    assert sidecar["n_violations"] == 0
 
 
 def test_decontam_semi_joins_broadcast_corpus_unshuffled(spark):

@@ -282,11 +282,12 @@ def test_word_ngrams_zip_form_equals_index_transform(spark):
 
 
 def test_connected_components_chain_and_plan_stats_drop(spark):
-    """Round-12 internals lock: (a) `_drop_plan_stats` is a row/schema
-    identity (it only rebuilds the DataFrame over its own internal RDD
-    to shed propagated plan statistics); (b) the self-loop-unioned
-    hop step still converges to exact min-label components on a long
-    chain — the adversarial shape for pointer-jumping loops."""
+    """Internals lock: (a) `_drop_plan_stats` is a row/schema identity
+    (it only rebuilds the DataFrame over its own internal RDD to shed
+    propagated plan statistics); (b) star contraction converges to
+    exact min-label components on a long chain; (c) a node whose only
+    edge is a self-loop gets no output row — the src > dst orientation
+    drops the edge, and with it the node."""
     from trip_data_pipeline_spark.operators.graph import (
         _drop_plan_stats,
         connected_components,
@@ -300,14 +301,16 @@ def test_connected_components_chain_and_plan_stats_drop(spark):
     assert rebuilt.schema == src.schema
     assert sorted(rebuilt.collect()) == sorted(src.collect())
 
-    # (b) chain 0-1-2-...-40 plus an isolated 2-clique {100,101}
+    # (b) chain 0-1-2-...-40 plus an isolated 2-clique {100,101};
+    # (c) plus a self-loop-only node 200
     n = 41
     chain = [(i, i + 1) for i in range(n - 1)] + [(100, 101)]
-    undirected = chain + [(b, a) for a, b in chain]
+    undirected = chain + [(b, a) for a, b in chain] + [(200, 200)]
     edges = spark.createDataFrame(undirected, "src long, dst long")
     got = {(r.node, r.component) for r in connected_components(edges).collect()}
     want = {(i, 0) for i in range(n)} | {(100, 100), (101, 100)}
     assert got == want
+    assert 200 not in {node for node, _ in got}
 
 
 def test_stream_outer_join_floor_semantics(spark):

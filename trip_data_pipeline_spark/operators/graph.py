@@ -131,8 +131,9 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_ROUNDS) -> Data
     toward the component minimum here), so 19 one-job rounds was the
     measured optimum of that family.  Star contraction rewires the
     EDGE LIST itself toward the component minimum and its round count
-    is O(log n) independent of id layout (measured on the same
-    fixture: 7 rounds, see OPTIMIZATION_r13.md).
+    is O(log n) independent of id layout (graph_connected_components
+    runs 5 cc_round_* jobs at sf0.01 and 7 at sf0.1, the last of each
+    being the no-change round; how they were counted is in CHANGES.md).
 
     One round = large-star then small-star over the evolving edge set:
 
@@ -162,8 +163,9 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_ROUNDS) -> Data
     """
     # Orient the (bidirectional) input once: keep the (max, min) copy
     # of every undirected edge.  Self-edges (none are produced by the
-    # callers) would be dropped here, which is correct: they carry no
-    # connectivity.
+    # callers) are dropped here, which is correct: they carry no
+    # connectivity.  A node whose only edge is a self-loop therefore
+    # gets no output row.
     oriented = edges.filter(F.col("src") > F.col("dst"))
     obs0 = Observation("cc_round_init")
     cur = _drop_plan_stats(

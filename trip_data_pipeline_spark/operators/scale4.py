@@ -2139,10 +2139,18 @@ def _register_minhash_eval():
         # is sum over shingles of df^2, and df scales with DUPLICATE
         # DENSITY, so at 10x (text payloads repeat per copy) class-level
         # df is 10x smaller and join rows drop ~100x (279.2M -> 2.8M
-        # measured), while at sf0.1 (classes ~singleton) the only added
-        # cost is one text-keyed aggregation.  Exact by construction at
+        # measured), while at sf0.1 (classes ~singleton) the added cost
+        # is the text-keyed aggregation below.  Exact by construction at
         # every duplicate density; the expansion is output-sized
         # (|truth| rows, 250,600 at 10x).
+        # `cls` is not materialized, and it runs THREE times: column
+        # pruning gives each consumer a different aggregate (base: min;
+        # mem: min + collect_list; intra: collect_list), so no exchange
+        # is shared.  The AQE-final plan at sf0.01 has three
+        # `Exchange hashpartitioning(text)` shuffles and zero
+        # ReusedExchange over them; its six ReusedExchange nodes are
+        # `spread`'s round-robin exchange of docs (4), the cj side of
+        # the ci self-join (1) and the mem broadcast for the m2 join (1).
         cls = (
             docs.groupBy("text")
             .agg(
