@@ -8,11 +8,12 @@ matches these; the explicit StructTypes exist for:
 - Structured Streaming sources (§2.9) — ``readStream`` requires one,
 - CSV round-trips (§2.1) — schema-on-read without inference.
 
-Note on timestamps: ``orders.o_orderdate`` / ``lineitem.l_shipdate`` are
-ms-precision parquet timestamps that are date-valued; ``events.ts`` is
-ns-precision in parquet, truncated to µs by both Spark and DuckDB 1.0
-(measured — zero ns residue), so integer µs math (``unix_micros`` vs
-``epoch_us``) is exactly parity-safe.
+Note on timestamps: ``events.ts``, ``orders.o_orderdate`` and
+``lineitem.l_shipdate`` are stored as parquet ``timestamp[us]`` with no
+time zone (pyarrow schema at sf0.001, sf0.01 and sf0.1; the dates are
+date-valued), which Spark reads as TIMESTAMP_NTZ and DuckDB as
+TIMESTAMP, so integer µs math (``unix_micros`` vs ``epoch_us``) is
+exactly parity-safe.
 """
 
 from __future__ import annotations
@@ -167,11 +168,10 @@ RAW_EVENTS_SCHEMA = T.StructType(
     ]
 )
 
-# Schema for streaming the ORIGINAL events.parquet, whose physical type
-# is TIMESTAMP(NANOS): PySpark 4.1.2 surfaces it as TIMESTAMP_NTZ (the
-# legacy nanosAsLong conf is a runtime no-op in this build), so the
-# readStream declaration must say NTZ; ns_to_ts then casts to
-# TimestampType (identity under the pinned-UTC session TZ).
+# Schema for streaming the ORIGINAL events.parquet, whose ``ts`` is a
+# µs timestamp with no time zone: PySpark 4.1.2 surfaces it as
+# TIMESTAMP_NTZ, so the readStream declaration must say NTZ; ns_to_ts
+# then casts to TimestampType (identity under the pinned-UTC session TZ).
 EVENTS_NTZ_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -191,21 +191,20 @@ def table_path(sf_dir: str, name: str) -> str:
 def ns_to_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     """Normalize the events ``ts`` column to TimestampType (µs).
 
-    The parquet file stores TIMESTAMP(NANOS).  Depending on the Spark
-    build/conf it surfaces three ways, all handled here:
+    The fixture files store a µs timestamp with no time zone; a ns file
+    or another Spark build/conf can surface it three ways, all handled
+    here:
 
-    - ``TimestampNTZType`` (PySpark 4.1.2 default for nanos parquet):
+    - ``TimestampNTZType`` (what PySpark 4.1.2 reads from the fixtures):
       cast to TimestampType — the session TZ is pinned UTC, so the
-      NTZ→TZ cast is the identity, and Spark's native nanos→µs
-      truncation matches DuckDB ``epoch_us`` exactly (verified
-      µs-identical on the fixtures).
+      NTZ→TZ cast is the identity and the µs values match DuckDB
+      ``epoch_us`` exactly (verified µs-identical on the fixtures).
     - ``LongType`` (a build honoring ``nanosAsLong``): ns-epoch integer,
       ``div 1000`` → µs → ``timestamp_micros``.
     - ``TimestampType`` already (derived fixtures re-written by our own
       sinks): no-op.
 
-    Exact parity with DuckDB, which also truncates this parquet type to
-    µs TIMESTAMP (measured: zero sub-µs residue in the fixtures)."""
+    Exact parity with DuckDB, which reads the same µs values."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -235,9 +234,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if df is not None:
         return df
     if name == "events":
-        # nanos parquet arrives as TIMESTAMP_NTZ in this PySpark build
-        # (the legacy nanosAsLong conf is a no-op at runtime here);
-        # ns_to_ts normalizes whatever type the read produced.
+        # the fixture's zone-less ts arrives as TIMESTAMP_NTZ; ns_to_ts
+        # normalizes whatever type the read produced.
         df = ns_to_ts(spark.read.parquet(table_path(sf_dir, name)))
     else:
         df = spark.read.parquet(table_path(sf_dir, name))

@@ -541,7 +541,7 @@ def sessionize_gap_and_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-millisecond groups at sf0.1, pure per-group overhead).  Now a
     partition-scan mapInPandas over repartition(user) +
     sortWithinPartitions(user, t, event_id): the JVM does the sort
-    once, each task walks its whole partition's numpy arrays with
+    once, each task walks its whole partition's columns with
     carry-over state across Arrow batches, and the per-group Python
     overhead disappears.  Same recurrence, same one shuffle."""
     import pandas as pd
@@ -577,10 +577,9 @@ def sessionize_gap_and_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
             out_d.append(total)
 
         for pdf in batches:
-            us = pdf["user_id"].to_numpy()
-            ts = pdf["t"].to_numpy()
-            for i in range(len(us)):
-                u, t = us[i], ts[i]
+            # Python lists, not per-row numpy scalar indexing: ~1.8x less
+            # CPU for this loop and the CUSUM one on sf0.1 events (CHANGES.md)
+            for u, t in zip(pdf["user_id"].tolist(), pdf["t"].tolist()):
                 if u != uid:
                     if uid is not None:
                         flush()
@@ -2325,7 +2324,7 @@ def timeseries_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-12 (guide §4.2/§4.5): groupBy(user).applyInPandas paid one
     # Python call + pandas DataFrame per user; now a partition-scan
     # mapInPandas over repartition(user)+sortWithinPartitions walks
-    # numpy arrays with carry-over state across Arrow batches — same
+    # column lists with carry-over state across Arrow batches — same
     # recurrence, same single shuffle, no per-group overhead.  The
     # partition count is pinned (cores-derived) because AQE would
     # coalesce the small shuffle to 1 task and serialize the scan.
@@ -2351,10 +2350,7 @@ def timeseries_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         s = mx = alarms = 0
         out_u, out_mx, out_s, out_a = [], [], [], []
         for pdf in batches:
-            us_arr = pdf["user_id"].to_numpy()
-            xs = pdf["x"].to_numpy()
-            for i in range(len(us_arr)):
-                u = us_arr[i]
+            for u, x in zip(pdf["user_id"].tolist(), pdf["x"].tolist()):
                 if u != uid:
                     if uid is not None:
                         out_u.append(uid)
@@ -2364,7 +2360,7 @@ def timeseries_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                     uid = u
                     s = mx = alarms = 0
                 prev = s
-                s = max(0, s + int(xs[i]) - K)
+                s = max(0, s + x - K)
                 mx = max(mx, s)
                 if s > H and prev <= H:
                     alarms += 1
