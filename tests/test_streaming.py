@@ -3,6 +3,7 @@ properties for the rows-only streaming operators."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from trip_data_pipeline_spark.io import load
@@ -226,3 +227,97 @@ def test_no_data_batch_skip_output_identity_and_conf_restore(spark):
     assert spark.conf.get(key) == before  # restored, not leaked
     assert len(with_ndb) > 0
     assert with_ndb == without_ndb
+
+
+
+def test_one_wave_partitions_rule():
+    """Spark-free: min(shuffle.partitions, defaultParallelism), so it
+    only ever lowers the session's count, and never below one."""
+    from types import SimpleNamespace as NS
+
+    from trip_data_pipeline_spark.session import one_wave_partitions
+
+    def stub(parts, cores):
+        conf = {"spark.sql.shuffle.partitions": str(parts)}
+        return NS(conf=NS(get=conf.__getitem__), sparkContext=NS(defaultParallelism=cores))
+
+    assert one_wave_partitions(stub(16, 4)) == 4
+    assert one_wave_partitions(stub(16, 32)) == 16
+    assert one_wave_partitions(stub(0, 4)) == 1
+    assert one_wave_partitions(stub(16, 0)) == 1
+
+
+PINNED = ("spark.sql.shuffle.partitions", "spark.sql.streaming.noDataMicroBatches.enabled")
+
+
+def _confs(spark):
+    return {k: spark.conf.get(k) for k in PINNED}
+
+
+def test_stateful_drain_runs_one_wave_of_state_stores(spark, sf_dir):
+    """A stateful run_to_memory drain plans one task wave of state
+    stores, not the batch default, and leaves the confs it pins as it
+    found them."""
+    import os
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from trip_data_pipeline_spark.session import one_wave_partitions
+    from trip_data_pipeline_spark.streaming import read_events_stream, run_to_memory
+
+    class Recorder(StreamingQueryListener):
+        parts, done = [], threading.Event()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.parts += [o.numShufflePartitions for o in event.progress.stateOperators]
+
+        def onQueryTerminated(self, event):
+            self.done.set()
+
+    before = _confs(spark)
+    rec = Recorder()
+    spark.streams.addListener(rec)
+    try:
+        ev = read_events_stream(spark, sf_dir)
+        agg = ev.groupBy(F.window("ts", "1 hour")).count()
+        assert run_to_memory(agg, "complete", final_no_data_batch=False).count() > 0
+        assert rec.done.wait(30)  # progress reaches listeners asynchronously
+    finally:
+        spark.streams.removeListener(rec)
+    batch_default = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "16"))
+    assert set(rec.parts) == {one_wave_partitions(spark)}
+    assert set(rec.parts) == {min(batch_default, spark.sparkContext.defaultParallelism)}
+    assert _confs(spark) == before
+
+
+def test_run_to_memory_restores_confs_when_start_raises(spark, sf_dir, monkeypatch):
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from trip_data_pipeline_spark.session import one_wave_partitions
+    from trip_data_pipeline_spark.streaming import read_events_stream, run_to_memory
+
+    seen = {}
+
+    def boom(self, *a, **kw):
+        seen.update(_confs(spark))
+        raise RuntimeError("start failed")
+
+    session_confs = _confs(spark)
+    before = dict(zip(PINNED, ("9", "true")))  # unlike the pins and the session's own
+    try:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+        pinned = str(one_wave_partitions(spark))
+        monkeypatch.setattr(DataStreamWriter, "start", boom)
+        stream = read_events_stream(spark, sf_dir).groupBy().count()
+        with pytest.raises(RuntimeError, match="start failed"):
+            run_to_memory(stream, "complete", final_no_data_batch=False)
+        assert seen == dict(zip(PINNED, (pinned, "false")))  # in force at start()
+        assert _confs(spark) == before  # and gone after the raise
+    finally:
+        for k, v in session_confs.items():
+            spark.conf.set(k, v)

@@ -35,6 +35,7 @@ from trip_data_pipeline_spark.operators.common import (
 from trip_data_pipeline_spark.operators.corpus2 import word_ngrams, words_of
 from trip_data_pipeline_spark.operators.graph import _copart_edges
 from trip_data_pipeline_spark.registry import op
+from trip_data_pipeline_spark.session import one_wave_partitions
 
 CAT = "2.18 analytics completeness (round-3 additions)"
 
@@ -546,13 +547,11 @@ def sessionize_gap_and_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     overhead disappears.  Same recurrence, same one shuffle."""
     import pandas as pd
 
-    # explicit partition count (cores-derived, scale-adaptive — not a
-    # local constant): AQE would coalesce a bare repartition(col) of
-    # this small input to 1 partition, serializing the Python scan.
-    n_parts = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-    )
+    # explicit partition count: AQE would coalesce a bare
+    # repartition(col) of this small input to 1 partition, serializing
+    # the Python scan, and cannot coalesce an explicit one — so one
+    # task wave (more tasks than cores only add per-task Python cost)
+    n_parts = one_wave_partitions(spark)
     ev = (
         load(spark, sf_dir, "events")
         .select("user_id", F.expr("unix_micros(ts)").alias("t"), "event_id")
@@ -2326,12 +2325,10 @@ def timeseries_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mapInPandas over repartition(user)+sortWithinPartitions walks
     # column lists with carry-over state across Arrow batches — same
     # recurrence, same single shuffle, no per-group overhead.  The
-    # partition count is pinned (cores-derived) because AQE would
-    # coalesce the small shuffle to 1 task and serialize the scan.
-    n_parts = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-    )
+    # partition count is pinned because AQE would coalesce the small
+    # shuffle to 1 task and serialize the scan; it is one task wave, as
+    # AQE cannot coalesce an explicit count either.
+    n_parts = one_wave_partitions(spark)
     ev = (
         load(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())

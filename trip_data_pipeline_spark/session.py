@@ -7,7 +7,12 @@ One shared session for tests/bench: JVM startup dominates at small scale
   broadcast conversion from observed sizes).
 - Arrow on (JVM->Python collection via Arrow IPC batches).
 - shuffle.partitions sized to cores, not the 200 default — at cluster
-  scale this would be set ~2-3x total cores / autotuned by AQE.
+  scale this would be set ~2-3x total cores / autotuned by AQE.  The
+  16 is a batch figure: AQE coalesces a batch shuffle's partitions at
+  run time.  Stages AQE cannot coalesce — streaming micro-batches (AQE
+  is off there, and every shuffle partition is a task that loads and
+  commits its own state store) and explicit ``repartition(n, col)`` —
+  are sized to one task wave instead, see ``one_wave_partitions``.
 - Session timezone pinned to UTC so timestamp semantics match the
   DuckDB oracle (naive-UTC).
 - Python workers start from ``pyworker`` (``spark.python.daemon.module``),
@@ -47,6 +52,20 @@ def parse_extra_conf(extra: str) -> list[tuple[str, str]]:
             )
         out.append((k.strip(), v.strip()))
     return out
+
+
+def one_wave_partitions(spark: SparkSession) -> int:
+    """Partition count for a stage AQE cannot coalesce: one task wave,
+    ``min(spark.sql.shuffle.partitions, defaultParallelism)``, floored
+    at 1.  It can only lower the session's count: on 4 cores the batch
+    default of 16 becomes 4, on 32 cores it stays 16."""
+    return max(
+        1,
+        min(
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
+            spark.sparkContext.defaultParallelism,
+        ),
+    )
 
 
 def get_session(app_name: str = "trip-data-pipeline-spark") -> SparkSession:
