@@ -28,6 +28,17 @@ from tests.oracle import (
 )
 
 
+def mismatch_detail(s_cols, s_canon, d_cols, d_canon) -> str:
+    """What a HASH-MISMATCH differs in: the column lists when they
+    differ, else the row counts and the first 3 differing canonical rows."""
+    if sorted(s_cols) != sorted(d_cols):
+        return f"    spark cols: {s_cols}\n    duck  cols: {d_cols}"
+    diffs = [(a, b) for a, b in zip(s_canon, d_canon) if a != b][:3]
+    return f"    rows {len(s_canon)}/{len(d_canon)}" + "".join(
+        f"\n    spark: {a}\n    duck : {b}" for a, b in diffs
+    )
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     # vanilla session: deliberately NOT trip_data_pipeline_spark.get_session —
@@ -56,6 +67,7 @@ def main() -> int:
     fails: list[str] = []
     for name in sorted(qs):
         t0 = time.time()
+        detail = ""
         try:
             rdf = qs[name](spark, sf_dir)
             if name in oracles:
@@ -63,12 +75,11 @@ def main() -> int:
                 d_cols, d_rows = duck_result(con, oracles[name])
                 driver_sort_check(s_cols, s_rows)  # crash on list cells
                 driver_sort_check(d_cols, d_rows)  # exactly like the driver
-                ok = (
-                    sorted(s_cols) == sorted(d_cols)
-                    and len(s_rows) == len(d_rows)
-                    and canon_rows(s_cols, s_rows) == canon_rows(d_cols, d_rows)
-                )
+                s_canon, d_canon = canon_rows(s_cols, s_rows), canon_rows(d_cols, d_rows)
+                ok = sorted(s_cols) == sorted(d_cols) and s_canon == d_canon
                 status = "HASH-OK" if ok else "HASH-MISMATCH"
+                if not ok:
+                    detail = mismatch_detail(s_cols, s_canon, d_cols, d_canon)
             else:
                 c = rdf.count()
                 ok, status = True, f"ROWS-ONLY({c})"
@@ -76,6 +87,8 @@ def main() -> int:
             ok, status = False, f"ERROR: {exc}"
         dt = time.time() - t0
         print(f"  {name:32s} {status:16s} {dt:5.2f}s")
+        if detail:
+            print(detail)
         if not ok:
             fails.append(name)
     print(f"{len(qs) - len(fails)}/{len(qs)} ok")

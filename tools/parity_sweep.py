@@ -7,7 +7,7 @@ ppm overflows, for example, only materialize once counts approach
 10^9+ and were caught by a hand audit, not a gate.  This sweep
 mechanizes that audit: every registered op runs against its DuckDB
 oracle ON THE SAME 10x (sf≈1) layout and the full VALUE bag is
-compared, not just timings (tools/profile_ops.py) or row counts.
+compared, not just timings (tools/measure.py) or row counts.
 
 Two comparison modes, chosen per op by output size:
 
@@ -951,9 +951,9 @@ def check_op(spark, con, name: str, sf_dir: str, scaled: bool = False) -> dict:
 
 
 def main() -> int:
-    # argv parsed only under __main__ (ADVICE r6 precedent on
-    # tools/profile_ops.py: tool modules must be importable — the
-    # fingerprint encoder is imported by tests/test_parity_fingerprint).
+    # argv parsed only under __main__: tool modules must be importable
+    # (the fingerprint encoder is imported by
+    # tests/test_parity_fingerprint, tools/measure.py by tests/test_measure).
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/scale_probe_x10"
     out_path = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

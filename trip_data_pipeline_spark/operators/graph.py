@@ -15,8 +15,16 @@ component to a star centered at its minimum id in O(log n) rounds
 regardless of id layout.  (Rounds 1-12 used hop + pointer-jump
 min-label propagation; the round-12 A/B showed its round count is
 bound by the id layout — 19 rounds on this fixture however many jumps
-— which is exactly the weakness star contraction removes; round 13
-measures 7 rounds on the same fixture.)
+— which is exactly the weakness star contraction removes.)
+
+Star contraction takes 7 rounds at sf0.1, read off the job count in
+docs/MEASURE_sf0.1.json (tools/measure.py): graph_connected_components
+runs 68 jobs = 12 fixed + 8 per round.  Under AQE every shuffle and
+broadcast stage runs as its own job, so a round is its one eager
+localCheckpoint job plus 7 query-stage jobs; the fixed 12 are the
+initial checkpoint (1 + 3) and the convergence check, output plan and
+write (8).  Rounds = (jobs - 12) / 8; the same op at sf0.01 runs
+52 jobs = 5 rounds (per-job breakdown of both in CHANGES.md).
 
 Scale notes (100 TB): each star operation is one min-aggregate keyed
 on `src` plus one join of the edge list back onto that per-node min

@@ -2136,11 +2136,13 @@ def _register_minhash_eval():
         # — and it attacks the truth arm's real cost law: the index join
         # is sum over shingles of df^2, and df scales with DUPLICATE
         # DENSITY, so at 10x (text payloads repeat per copy) class-level
-        # df is 10x smaller and join rows drop ~100x (279.2M -> 2.8M
-        # measured), while at sf0.1 (classes ~singleton) the added cost
-        # is the text-keyed aggregation below.  Exact by construction at
-        # every duplicate density; the expansion is output-sized
-        # (|truth| rows, 250,600 at 10x).
+        # df is 10x smaller and join rows drop ~100x (sum df^2 279.2M
+        # over 50,000 docs -> 2.8M over 4,992 text classes on the
+        # tools/scale_probe.py 10x layout; the measurement is recorded
+        # in CHANGES.md under mh_probe_r13), while at sf0.1 (classes
+        # ~singleton) the added cost is the text-keyed aggregation
+        # below.  Exact by construction at every duplicate density; the
+        # expansion is output-sized (|truth| rows, 250,600 at 10x).
         # `cls` is not materialized, and it runs THREE times: column
         # pruning gives each consumer a different aggregate (base: min;
         # mem: min + collect_list; intra: collect_list), so no exchange
@@ -3104,7 +3106,8 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (round-7 rework — PREFIX FILTERING, Chaudhuri/Ganti/Kaushik
     ICDE'06; Xiao et al. ppjoin, WWW'08): the full inverted-index
     self-join costs sum(df^2) over shingles — measured 279M join rows
-    on the 10x corpus (50k docs, 2.6M index entries, max df 250) and
+    on the 10x corpus (50k docs, 2.6M index entries, max df 250; the
+    probe output is recorded in CHANGES.md under mh_probe_r13) and
     growing ~quadratically with duplicate density.  A qualifying pair
     shares >= ceil(0.9*na) of A's na shingles, so at most
     na - ceil(0.9*na) of A's shingles are NOT shared — by pigeonhole,
