@@ -114,7 +114,7 @@ def test_shingle_col_total_below_k(spark):
     INSIDE the expression.  1-word input must yield [], not raise."""
     from pyspark.sql import functions as F
 
-    from trip_data_pipeline_spark.operators.dedup import shingle_col
+    from trip_data_pipeline_spark.operators.common import shingle_col
 
     df = spark.createDataFrame(
         [(0, []), (1, ["a"]), (2, ["a", "b"]), (3, ["a", "b", "c"])],

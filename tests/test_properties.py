@@ -93,7 +93,8 @@ def test_simhash_identical_docs_distance_zero(spark):
 
 
 def test_cosine_self_similarity_and_symmetry(spark):
-    from trip_data_pipeline_spark.operators.similarity import as_double_vec, cosine
+    from trip_data_pipeline_spark.operators.multimodal import as_double_vec
+    from trip_data_pipeline_spark.operators.similarity import cosine
     from trip_data_pipeline_spark.io import load
 
     e = load(spark, SF, "embeddings").filter(F.col("vec_id") < 5).select(
@@ -154,7 +155,7 @@ def test_bucketed_join_has_no_exchange(spark):
     import contextlib
     import io
 
-    from trip_data_pipeline_spark.operators.extras import bucketed_join_df
+    from trip_data_pipeline_spark.operators.joins import bucketed_join_df
 
     joined = bucketed_join_df(spark, SF)
     buf = io.StringIO()
@@ -255,7 +256,7 @@ def test_word_ngrams_zip_form_equals_index_transform(spark):
     to the reference index-transform form for every n in use (2..6),
     including short docs (< n words), exactly-n docs, empty-string
     words from doubled separators, and NULL text."""
-    from trip_data_pipeline_spark.operators.corpus2 import word_ngrams
+    from trip_data_pipeline_spark.operators.common import word_ngrams
 
     rows = [
         (1, "a b c d e f g"),
@@ -366,7 +367,7 @@ def test_gap_cap_sessions_respect_both_bounds(spark):
     spans <= the 2h cap, intra-session gaps are <= 30min, and session
     counts match the operator output."""
     from trip_data_pipeline_spark.io import load
-    from trip_data_pipeline_spark.operators.scale4 import sessionize_gap_and_cap
+    from trip_data_pipeline_spark.operators.sessionize import sessionize_gap_and_cap
 
     out = {
         r["user_id"]: r
@@ -408,7 +409,7 @@ def test_contiguous_ids_are_dense_rank(spark):
     """The distributed two-pass id assignment must produce exactly
     0..n-1: max = n-1, min = 0, total sum = n(n-1)/2 (summed across
     the checksum buckets)."""
-    from trip_data_pipeline_spark.operators.scale4 import ids_global_contiguous
+    from trip_data_pipeline_spark.operators.windows import ids_global_contiguous
 
     rows = ids_global_contiguous(spark, SF).collect()
     n = sum(r["n"] for r in rows)
@@ -430,7 +431,7 @@ def test_triangle_orientation_counts_each_once(spark):
     b = idordered.select(F.col("src").alias("b"), F.col("dst").alias("c"))
     c = idordered.select(F.col("src").alias("a"), F.col("dst").alias("c"))
     naive_total = a.join(b, "b").join(c, ["a", "c"]).count()
-    from trip_data_pipeline_spark.operators.scale4 import graph_triangle_count
+    from trip_data_pipeline_spark.operators.graph import graph_triangle_count
 
     # node participation sums to 3x the triangle count over ALL nodes;
     # recompute the oriented total directly for the exact comparison
@@ -459,10 +460,8 @@ def test_gap_cap_and_cusum_batch_boundary_carryover(spark):
     carry per-user state across Arrow batch boundaries.  Force 7-row
     batches (every user spans many batches) and check output equality
     with the default-batch run."""
-    from trip_data_pipeline_spark.operators.scale4 import (
-        sessionize_gap_and_cap,
-        timeseries_cusum_drift,
-    )
+    from trip_data_pipeline_spark.operators.sessionize import sessionize_gap_and_cap
+    from trip_data_pipeline_spark.operators.timeseries import timeseries_cusum_drift
 
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
@@ -482,7 +481,7 @@ def test_cusum_replay_matches_operator(spark):
     """Replay the CUSUM recurrence driver-side for 25 users and check
     max/final/alarm-count equality with the operator output."""
     from trip_data_pipeline_spark.io import load
-    from trip_data_pipeline_spark.operators.scale4 import timeseries_cusum_drift
+    from trip_data_pipeline_spark.operators.timeseries import timeseries_cusum_drift
 
     out = {r["user_id"]: r for r in timeseries_cusum_drift(spark, SF).collect()}
     ev = (
@@ -516,7 +515,7 @@ def test_cusum_replay_matches_operator(spark):
 def test_bfs_seeds_zero_and_bounded(spark):
     """Seeds get distance 0; no distance exceeds the 3 unrolled
     supersteps."""
-    from trip_data_pipeline_spark.operators.scale4 import graph_bfs_distance
+    from trip_data_pipeline_spark.operators.graph import graph_bfs_distance
 
     rows = graph_bfs_distance(spark, SF).collect()
     dists = {r["dist"] for r in rows}
@@ -528,7 +527,7 @@ def test_max_concurrency_naive_replay(spark):
     """Naive per-user interval-overlap counting at the reported peak
     time must reproduce max_conc for a sample of users."""
     from trip_data_pipeline_spark.io import load
-    from trip_data_pipeline_spark.operators.scale4 import interval_max_concurrency
+    from trip_data_pipeline_spark.operators.lifecycle import interval_max_concurrency
 
     out = {r["user_id"]: r for r in interval_max_concurrency(spark, SF).collect()}
     iv = (
@@ -559,7 +558,7 @@ def test_cep_pathological_user_100k_events(spark, tmp_path):
     bound, a ~100 KB cell, comfortably inside the documented 1e6 cap —
     and (b) refuse LOUDLY (ValueError naming the observed count), not
     OOM, when the hottest user exceeds the cap."""
-    from trip_data_pipeline_spark.operators import scale5
+    from trip_data_pipeline_spark.operators import lifecycle
     from pyspark.sql import functions as F
 
     n = 100_002  # divisible by 3: the history is exactly 'vcp' * 33334
@@ -576,21 +575,21 @@ def test_cep_pathological_user_100k_events(spark, tmp_path):
     )
     ev.write.parquet(f"{tmp_path}/events.parquet")
 
-    row = scale5.events_pattern_match_cep(spark, str(tmp_path)).collect()[0]
+    row = lifecycle.events_pattern_match_cep(spark, str(tmp_path)).collect()[0]
     assert row["n_events"] == n
     assert row["n_funnels"] == n // 3  # every 'vcp' is one strict funnel
     assert row["n_error_bursts"] == 0
     assert row["signup_then_purchase"] is False
 
-    orig = scale5.CEP_MAX_EVENTS_PER_USER
-    scale5.CEP_MAX_EVENTS_PER_USER = 10_000
+    orig = lifecycle.CEP_MAX_EVENTS_PER_USER
+    lifecycle.CEP_MAX_EVENTS_PER_USER = 10_000
     try:
         import pytest as _pytest
 
         with _pytest.raises(ValueError, match="100,002 events"):
-            scale5.events_pattern_match_cep(spark, str(tmp_path))
+            lifecycle.events_pattern_match_cep(spark, str(tmp_path))
     finally:
-        scale5.CEP_MAX_EVENTS_PER_USER = orig
+        lifecycle.CEP_MAX_EVENTS_PER_USER = orig
 
 
 def test_peak_concurrency_tie_order_stable(spark, tmp_path):
@@ -600,7 +599,7 @@ def test_peak_concurrency_tie_order_stable(spark, tmp_path):
     (16 users x 8 duplicated instants), run the op over several
     physical orderings (1, 3, 32 input partitions), and pin that the
     peak is identical — and equal to the brute-force exact peak."""
-    from trip_data_pipeline_spark.operators import scale6
+    from trip_data_pipeline_spark.operators import lifecycle
 
     rows = []
     eid = 0
@@ -636,7 +635,7 @@ def test_peak_concurrency_tie_order_stable(spark, tmp_path):
         # (session, dir, table), so an overwrite would break the plan
         d = f"{tmp_path}/p{parts}"
         df.repartition(parts).write.parquet(f"{d}/events.parquet")
-        got = scale6.events_peak_concurrency(spark, d).collect()
+        got = lifecycle.events_peak_concurrency(spark, d).collect()
         assert len(got) == 1
         outs.add((got[0]["n_intervals"], got[0]["peak_concurrent"]))
     assert outs == {(len(rows), peak)}, outs
@@ -860,37 +859,28 @@ def test_semdedup_vectorized_pairs_match_naive(spark, tmp_path, seed):
     assert want, "degenerate case: no hits — planted dups failed"
 
 
-def test_sessionize_tiers_value_identical(spark):
+def test_sessionize_tiers_value_identical(spark, monkeypatch):
     """The size-tiered sessionize_batch (round 10) must produce the
     identical bag from BOTH branches — the JVM double-window shape
     (default at fixture size) and the Arrow grouped-map scale path
     (forced by dropping the tier threshold to 0)."""
-    import os
-
     from trip_data_pipeline_spark.operators import sessionize as mod
     from trip_data_pipeline_spark.registry import evict_plan
 
-    # The threshold env var is read at CALL time (VERDICT r10 item 5),
-    # so each leg pins it explicitly (ADVICE r11): if an ambient sweep
-    # exported SESSIONIZE_ARROW_MIN_BYTES=0, an unset-assuming small
-    # leg would silently take the Arrow branch too and the JVM-vs-Arrow
-    # equivalence would go untested.  A huge threshold guarantees the
-    # JVM double-window branch; 0 guarantees Arrow.
-    orig = os.environ.get("SESSIONIZE_ARROW_MIN_BYTES")
+    # Each leg pins the tier: a huge threshold guarantees the JVM
+    # double-window branch, 0 guarantees Arrow.  The op is
+    # plan-memoized, so each leg evicts before it builds.
     try:
-        os.environ["SESSIONIZE_ARROW_MIN_BYTES"] = str(1 << 60)
+        monkeypatch.setattr(mod, "_ARROW_MIN_BYTES", 1 << 60)
         evict_plan(spark, "sessionize_batch")
         small = mod.sessionize_batch(spark, SF).cache()
-        os.environ["SESSIONIZE_ARROW_MIN_BYTES"] = "0"
+        monkeypatch.setattr(mod, "_ARROW_MIN_BYTES", 0)
         evict_plan(spark, "sessionize_batch")
         big = mod.sessionize_batch(spark, SF).cache()
         assert small.exceptAll(big).count() == 0
         assert big.exceptAll(small).count() == 0
     finally:
-        if orig is None:
-            del os.environ["SESSIONIZE_ARROW_MIN_BYTES"]
-        else:
-            os.environ["SESSIONIZE_ARROW_MIN_BYTES"] = orig
+        monkeypatch.undo()
         evict_plan(spark, "sessionize_batch")
 
 
@@ -957,12 +947,8 @@ def test_minhash_eval_index_and_counts_equivalence(spark):
        instead of three separate aggs crossJoined; n_truth/n_cand/n_hit
        must be identical.
     """
-    from trip_data_pipeline_spark.operators.dedup import (
-        SHINGLE_K,
-        minhash_candidate_pairs,
-        shingle_col,
-    )
-    from trip_data_pipeline_spark.operators.text_ops import _words
+    from trip_data_pipeline_spark.operators.common import SHINGLE_K, _words, shingle_col
+    from trip_data_pipeline_spark.operators.dedup import minhash_candidate_pairs
     from trip_data_pipeline_spark.io import load
     from trip_data_pipeline_spark.registry import OPS, queries
 

@@ -102,7 +102,7 @@ def main() -> None:
 
     # --- documents ------------------------------------------------------
     docs = load(spark, src, "documents")
-    from trip_data_pipeline_spark.operators.scale3 import RAKE_STOPS
+    from trip_data_pipeline_spark.operators.text_ops import RAKE_STOPS
 
     stoptext = " ".join(list(RAKE_STOPS)[:3] * 4)
     docs_extra = spark.createDataFrame(

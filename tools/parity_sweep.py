@@ -193,15 +193,15 @@ def _minhash_eval_scaled(con) -> str:
     in seconds.  Stepwise temp tables pin the fast per-arm plans and
     make the final summary a read over three tiny relations — the
     same imperative pattern as the CC override above."""
-    from trip_data_pipeline_spark.operators.dedup import (
+    from trip_data_pipeline_spark.operators.common import (
         LSH_BANDS,
         MINHASH_MOD,
         MINHASH_PERMS,
         SHINGLE_K,
         _duck_hex28,
-        _SHINGLES_DUCK,
+        _duck_words,
     )
-    from trip_data_pipeline_spark.operators.text_ops import _duck_words
+    from trip_data_pipeline_spark.operators.dedup import _SHINGLES_DUCK
 
     base = f"""
 WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
@@ -271,7 +271,7 @@ def _shingle_containment_scaled(con) -> str:  # noqa: ARG001 — uniform signatu
     list_intersect over the full arrays.  The 10*nb >= 9*na size
     filter is lossless (a qualifying pair has i >= ceil(0.9*na) and
     i <= nb, hence 10*nb >= 9*na).  Shingle construction is verbatim
-    from the registry oracle (scale4.py dedup_shingle_containment)."""
+    from the registry oracle (dedup.py dedup_shingle_containment)."""
     return """
 WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
 d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= 3),
@@ -296,7 +296,7 @@ FROM (
 """
 # NOTE (ADVICE r9): the shingle-construction SQL above (string_split,
 # k=3, list-comprehension shingles) intentionally duplicates the
-# registry oracle in scale4.py rather than importing it — the registry
+# registry oracle in dedup.py rather than importing it — the registry
 # oracle is a single opaque SQL string with the verify arm fused in, so
 # there is no shared sub-expression to factor without rewriting it.
 # The duplication is guarded: tests/test_scaled_oracles.py locks this
@@ -308,7 +308,7 @@ FROM (
 def _decontam_scaled(con) -> str:
     """corpus_decontam_fuzzy oracle with the verification arm evaluated
     CANDIDATE-DRIVEN — the same round-11 semi-join pruning the op
-    itself ships (scale5.py): sh / cand materialize stepwise into temp
+    itself ships (corpus.py): sh / cand materialize stepwise into temp
     tables, both shingle legs of the intersection count are
     semi-filtered to the LSH candidate doc sets, and doc sizes still
     compute over the UNPRUNED shingle sets.  The registry oracle's
@@ -319,15 +319,15 @@ def _decontam_scaled(con) -> str:
     by tests/test_scaled_oracles.py.  Shingle/minhash construction is
     shared verbatim with the registry oracles via _SHINGLES_DUCK and
     the minhash constants."""
-    from trip_data_pipeline_spark.operators.dedup import (
+    from trip_data_pipeline_spark.operators.common import (
         LSH_BANDS,
         MINHASH_MOD,
         MINHASH_PERMS,
         SHINGLE_K,
         _duck_hex28,
-        _SHINGLES_DUCK,
+        _duck_words,
     )
-    from trip_data_pipeline_spark.operators.text_ops import _duck_words
+    from trip_data_pipeline_spark.operators.dedup import _SHINGLES_DUCK
 
     con.execute(f"""
 CREATE OR REPLACE TEMP TABLE dc_sh AS
@@ -438,7 +438,7 @@ def _normalize_tokenize_scaled(con) -> str:
     budget (VERDICT r11 item 2).  A temp table pins single evaluation;
     the three list accessors are verbatim from the registry oracle.
     Value-locked at sf0.01 by tests/test_scaled_oracles.py."""
-    from trip_data_pipeline_spark.operators.text_ops import _duck_words
+    from trip_data_pipeline_spark.operators.common import _duck_words
 
     con.execute(f"""
 CREATE OR REPLACE TEMP TABLE tnt_m AS
@@ -463,11 +463,8 @@ def _quality_score_scaled(con) -> str:
     (string_split of '' yields [''], so every doc keeps >= 1 row).
     The punct/length arithmetic is verbatim from the registry oracle.
     Value-locked at sf0.01 by tests/test_scaled_oracles.py."""
-    from trip_data_pipeline_spark.operators.text_ops import (
-        _duck_norm,
-        _duck_words,
-        _STOP_SQL,
-    )
+    from trip_data_pipeline_spark.operators.common import _duck_norm, _duck_words
+    from trip_data_pipeline_spark.operators.text_ops import _STOP_SQL
 
     con.execute(f"""
 CREATE OR REPLACE TEMP TABLE tqs_m AS
@@ -511,7 +508,7 @@ def _gopher_rules_scaled(con) -> str:
     reconstruct nt); stop_hits / max_wlen are grouped CASE/max.  The
     rule bitmask stage is verbatim from the registry oracle.
     Value-locked at sf0.01 by tests/test_scaled_oracles.py."""
-    from trip_data_pipeline_spark.operators.text_ops import _duck_words
+    from trip_data_pipeline_spark.operators.common import _duck_words
 
     con.execute(f"""
 CREATE OR REPLACE TEMP TABLE gqr_m AS

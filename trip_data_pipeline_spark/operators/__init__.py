@@ -1,30 +1,20 @@
-"""Operator modules — importing this package registers every operator
-from SURVEY.md §2 into trip_data_pipeline_spark.registry.OPS."""
+"""Operator modules, one per operator family — importing this package
+registers every operator from SURVEY.md §2 into
+trip_data_pipeline_spark.registry.OPS."""
 
 from trip_data_pipeline_spark.operators import (  # noqa: F401
     aggregates,
-    behavior,
     composite,
-    composite2,
-    composite3,
     corpus,
-    corpus2,
-    corpus3,
     dedup,
-    extras,
+    dq,
     filters,
     geo,
     graph,
     joins,
-    kmeans,
     lifecycle,
-    mlprep,
     multimodal,
     scalar_funcs,
-    scale3,
-    scale4,
-    scale5,
-    scale6,
     scans,
     sessionize,
     setops,

@@ -1,4 +1,9 @@
-"""Shared parity-safe column helpers (SURVEY.md §5.3 rules).
+"""Shared kernels: the parity-safe column helpers (SURVEY.md §5.3
+rules), scratch dirs and plan-time file sizes, and every kernel that
+two or more operator families use — text normalize/tokenize/shingle,
+the md5 hash family and MinHash, integer-quantized vector math, the
+PPM codec.  A kernel only one family uses lives in that family's
+module; operator modules import nothing private from each other.
 
 The Spark<->DuckDB hash check compares exact values, so every derived
 double is rounded (2 dp money / 4 dp similarity) and every timestamp is
@@ -15,8 +20,10 @@ import shutil
 import tempfile
 from functools import lru_cache
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from trip_data_pipeline_spark import io as _io
 
 _SCRATCH_DIRS: list[str] = []
 
@@ -56,10 +63,6 @@ def nz(c: Column) -> Column:
     Oracle-side mirror: ``CASE WHEN x = 0 THEN CAST(0.0 AS DOUBLE) ELSE x END``.
     """
     return F.when(c == 0, F.lit(0.0)).otherwise(c)
-
-
-def duck_nz(expr: str) -> str:
-    return f"CASE WHEN {expr} = 0 THEN CAST(0.0 AS DOUBLE) ELSE {expr} END"
 
 
 def bigint(c: Column) -> Column:
@@ -158,7 +161,6 @@ def spread(df, min_fraction: float = 1.0):
 def _scan_partitions(df) -> int:
     """Partition count of `df`'s scan: file-stat estimate for io.load
     frames, exact RDD probe otherwise."""
-    from trip_data_pipeline_spark import io as _io
 
     src = _io._DF_SRC.get(df)
     if src is None:
@@ -192,6 +194,32 @@ def _conf_bytes(spark, key: str, default: int) -> int:
         return default
 
 
+def _file_sizes(path: str) -> list[int]:
+    """On-disk sizes of a fixture file, or of the data files under a
+    fixture directory (hidden and ``_``-prefixed files skipped).  A path
+    os cannot stat — a remote URI (s3a://, hdfs://) that Spark reads
+    fine — yields no sizes."""
+    if os.path.isfile(path):
+        return [os.path.getsize(path)]
+    return [
+        os.path.getsize(os.path.join(root, f))
+        for root, _dirs, files in os.walk(path)
+        for f in files
+        if not f.startswith((".", "_"))
+    ]
+
+
+def _path_bytes(path: str) -> int:
+    """Total on-disk bytes of a fixture file or directory (plan-time
+    scan-stat for strategy switches; fixture files are immutable).
+
+    Returns 0 for anything os cannot stat.  Callers MUST treat 0 as
+    over-cap (fail CLOSED): picking the broadcast branch for a relation
+    of unknown size is exactly the executor-OOM the cap exists to
+    prevent (ADVICE r6 item 1)."""
+    return sum(_file_sizes(path))
+
+
 @lru_cache(maxsize=256)
 def _estimate_file_scan_partitions(
     path: str, max_partition_bytes: int, open_cost: int, parallelism: int
@@ -204,16 +232,9 @@ def _estimate_file_scan_partitions(
     the decision is 'scan already wide vs single-digit splits'.
     An unstatable path (remote URI) yields no sizes and returns 1, so
     the caller widens via repartition — the safe direction here (an
-    extra shuffle, never an OOM; contrast joins._path_bytes where 0
-    must fail closed away from broadcast)."""
-    sizes: list[int] = []
-    if os.path.isfile(path):
-        sizes.append(os.path.getsize(path))
-    else:
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if not f.startswith((".", "_")):
-                    sizes.append(os.path.getsize(os.path.join(root, f)))
+    extra shuffle, never an OOM; contrast _path_bytes where 0 must
+    fail closed away from broadcast)."""
+    sizes = _file_sizes(path)
     if not sizes:
         return 1
     total = sum(sizes)
@@ -234,3 +255,331 @@ def _estimate_file_scan_partitions(
             cur = 0
         cur += sp + open_cost
     return parts + (1 if cur else 0)
+
+
+# --------------------------------------------------------------------------
+# Text kernels: normalize, tokenize, n-grams, shingles
+# --------------------------------------------------------------------------
+
+# normalization used by every text op: lowercase, strip ASCII
+# punctuation/control.  documents.text is already lowercase/
+# space-separated (FIXTURES.md) but the operators must not rely on that.
+#
+# Round-3 perf change: the original `regexp_replace(lower(text),
+# '[^a-z0-9 ]', '')` was 70-80% of the ENTIRE dedup/term-freq runtime
+# at the 10x scale probe (Java per-row regex, 1.5 s of 2.0 s wall on 32
+# cores, vs DuckDB's vectorized RE2).  `translate()` is a single JVM
+# char-map pass — measured 3-5x faster end-to-end — and DuckDB computes
+# the identical mapping, so parity is exact by construction.  Semantics
+# shift: instead of KEEPING only [a-z0-9 ] (which silently ate
+# non-ASCII letters), normalization now STRIPS ASCII punctuation,
+# residual uppercase, and control whitespace; byte-identical to the old
+# regex on the fixture corpus (0/50k rows differ at 10x, measured).
+_PUNCT = (
+    "!\"#$%&'()*+,-./:;<=>?@ABCDEFGHIJKLMNOPQRSTUVWXYZ[\\]^_`{|}~"
+    "\t\n\r"
+)
+
+# DuckDB rendering: printable part as a quoted literal (with '' for the
+# embedded quote), control chars via chr() so no raw bytes live in SQL.
+_DUCK_PUNCT = (
+    "concat('"
+    + _PUNCT[:-3].replace("'", "''")
+    + "', chr(9), chr(10), chr(13))"
+)
+
+
+def _norm(col: str = "text"):
+    return F.translate(F.lower(F.col(col)), _PUNCT, "")
+
+
+def _duck_norm(col: str = "text") -> str:
+    return f"translate(lower({col}), {_DUCK_PUNCT}, '')"
+
+
+def _words(col: str = "text"):
+    return F.split(_norm(col), " ")
+
+
+def _duck_words(col: str = "text") -> str:
+    return f"string_split({_duck_norm(col)}, ' ')"
+
+
+def words_of(col: str = "text") -> Column:
+    """Space-separated word array; fixtures are single-space separated
+    (DuckDB mirror: ``string_split(text, ' ')``)."""
+    return F.split(F.col(col), " ")
+
+
+def word_ngrams(w: Column, n: int) -> Column:
+    """All n-word grams joined by spaces, with multiplicity, in
+    document order.  Guarded for docs shorter than n (Spark's
+    ``sequence(1, k)`` DESCENDS for k < 1 — an unguarded short doc
+    would silently produce garbage grams).
+
+    DuckDB mirror: ``list_transform(range(1, len(w) - {n-2}),
+    i -> array_to_string(w[i:i+{n-1}], ' '))`` (range is
+    exclusive-upper; slice is inclusive 1-based on both engines).
+
+    Round-12 shape (guide §1.1/§4): built as a ZIP of n shifted
+    slices, not ``transform(sequence(...), i -> slice(w, i, n))``.
+    Higher-order lambdas are interpreted, and an interpreted lambda
+    body re-evaluates non-lambda subexpressions PER ELEMENT — when the
+    optimizer inlines `w = split(text)` into the lambda (projection
+    collapse, and the inferred `size(grams) > 0` pre-explode filter
+    pushed to the scan does it unconditionally), each gram re-split
+    the whole document: O(words²) per doc, ~5x the runtime of the
+    consuming operators.  In the zip form every slice is evaluated
+    once per ROW under the same inlining, so the worst case stays
+    O(n·words).  Element j is w[j..j+n-1] joined by single spaces in
+    both forms (split() yields no NULL elements, so concat_ws ==
+    array_join here), and the short-doc guard is unchanged."""
+    cnt = F.size(w) - F.lit(n - 1)
+    grams = F.slice(w, 1, cnt)
+    for i in range(1, n):
+        grams = F.zip_with(
+            grams,
+            F.slice(w, i + 1, cnt),
+            lambda a, b: F.concat_ws(" ", a, b),
+        )
+    return F.when(F.size(w) >= n, grams).otherwise(
+        F.expr("CAST(array() AS ARRAY<STRING>)")
+    )
+
+
+SHINGLE_K = 3
+
+
+def shingle_col(ws: Column, k: int = SHINGLE_K) -> Column:
+    """k-word shingles of a token array, as strings — TOTAL for any
+    input length (empty array below k words).
+
+    The guard is load-bearing even though every call site filters
+    size(ws) >= k first: the round-8 degenerate-shape gate caught
+    codegen SUBEXPRESSION ELIMINATION evaluating this transform
+    eagerly inside a Filter predicate (an inferred isnotnull
+    constraint on a shingle-derived column lands in the same Filter
+    as the size guard, and subExpr_0$ runs before the conjunct
+    short-circuit), where a 1-word doc made sequence(0, size-k)
+    DESCEND and element_at(ws, 2) raise.  CASE-WHEN branches are
+    exempt from subexpression elimination, so guarding INSIDE the
+    expression is the only placement the optimizer cannot reorder."""
+    return F.when(
+        F.size(ws) >= k,
+        F.transform(
+            F.sequence(F.lit(0), F.size(ws) - k),
+            lambda i: F.concat_ws(
+                " ", *[F.element_at(ws, i + j + 1) for j in range(k)]
+            ),
+        ),
+    ).otherwise(F.expr("CAST(array() AS ARRAY<STRING>)"))
+
+
+# marker-word "n-gram model" per language: the tiny deterministic
+# heuristic version of fasttext-style lang-ID.  Markers are chosen from
+# common function words; on this synthetic corpus most docs fall through
+# to 'und' (undetermined), which is itself the honest output.
+_LANG_MARKERS = {
+    "en": ["the", "and", "of"],
+    "de": ["der", "und", "die"],
+    "fr": ["le", "et", "la"],
+    "es": ["el", "los", "una"],
+    "zh": ["de5", "shi4", "le5"],
+}
+
+
+def _marker_regex(words: list[str]) -> str:
+    alts = "|".join(words)
+    return f"(^| )({alts})( |$)"
+
+
+# BPE-ish pre-tokenizer: letter runs, digit runs, or single non-space
+# symbols — the regex shape GPT-2-style byte-pair pre-tokenization uses.
+_BPE_RE = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
+
+
+# --------------------------------------------------------------------------
+# md5 hash family and MinHash signatures
+# --------------------------------------------------------------------------
+
+MINHASH_PERMS = 64
+
+LSH_BANDS = 16  # r = 64/16 = 4 rows per band -> ~0.5 Jaccard threshold
+
+# Engine-portable universal-hash MinHash (SURVEY §2.11 / §5.3): one
+# md5 per shingle yields two 28-bit integers (a, b) parsed from hex;
+# permutation j is h_j = (a + (j+1)*b) mod M.  Both Spark (conv) and
+# DuckDB (strpos fold, see _DUCK_HEX28) compute the identical integers,
+# which is what upgrades this op from rows-only to a full value-hash
+# oracle.  28-bit a/b keeps (a + 64*b) < 2^35 — no overflow in either
+# engine — and MinHash only needs a consistent pseudo-random total
+# order per permutation, not a cryptographic one.
+MINHASH_MOD = 2_147_483_647  # 2^31 - 1
+
+
+def _hex28(md5_col: Column, start: int) -> Column:
+    """Spark side: parse 7 hex chars of an md5 string as a bigint."""
+    return F.conv(F.substring(md5_col, start, 7), 16, 10).cast("bigint")
+
+
+def _duck_hex28(h: str, start: int) -> str:
+    """DuckDB side: identical 7-hex-char parse as a positional fold
+    (DuckDB has no base-16 string->int conversion function)."""
+    return "(" + " + ".join(
+        f"(strpos('0123456789abcdef', substr({h}, {start + i}, 1)) - 1)"
+        f" * {16 ** (6 - i)}"
+        for i in range(7)
+    ) + ")"
+
+
+def minhash_signatures_arrow(docs: DataFrame) -> DataFrame:
+    """docs(doc_id, ws) -> (doc_id, sig: array<bigint>) with the
+    64-perm fold done as a numpy batch kernel instead of Catalyst
+    lambdas.  Round-4 measurement (10x layout, 50k docs x ~58
+    shingles): the interpreted HOF fold costs 17 s — higher-order
+    lambdas are NOT codegen'd, so 185M modular ops run on the
+    expression interpreter — while md5 (codegen'd) is only 1.9 s.
+    This keeps the md5 (a, b) parse JVM-side and ships two small
+    int arrays per doc through Arrow for a (64 x n) vectorized
+    min-fold: same integers, same signature, ~8x faster fold (the
+    JVM-fold-vs-Arrow-matmul crossover rule in docs/SCALE.md — this
+    kernel is firmly in the Arrow regime)."""
+    from typing import Iterator as _Iter
+
+    import numpy as np
+    import pandas as pd
+
+    sh = shingle_col(F.col("ws"))
+    # Round-12 (guide §1.2 per-task work, §4.1): ONE md5 + ONE conv per
+    # shingle instead of two.  The old shape ran two separate transform
+    # lambdas — ha = conv(substring(md5(s), 1, 7)) and
+    # hb = conv(substring(md5(s), 8, 7)) — and higher-order lambdas are
+    # interpreted expression trees with no cross-lambda subexpression
+    # sharing, so every shingle was md5'd twice.  Parsing the first 14
+    # hex chars as one 56-bit long (the exact trick simhash_bits_arrow
+    # already uses) and splitting hab = a * 2^28 + b inside the numpy
+    # kernel yields bit-identical (a, b): substring(1,14) is the
+    # concatenation of substring(1,7) and substring(8,7), so
+    # hab >> 28 == a and hab & (2^28 - 1) == b by construction.
+    ab = docs.select(
+        "doc_id",
+        F.transform(
+            sh,
+            lambda s: F.conv(F.substring(F.md5(s), 1, 14), 16, 10).cast(
+                "bigint"
+            ),
+        ).alias("hab"),
+    )
+
+    def fold(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
+        ks = np.arange(1, MINHASH_PERMS + 1, dtype=np.int64).reshape(-1, 1)
+        for pdf in batches:
+            sigs = []
+            for hab in pdf["hab"]:
+                hab = np.asarray(hab, dtype=np.int64)
+                a = hab >> 28
+                b = hab & ((1 << 28) - 1)
+                # a, b < 2^28 and k <= 64 -> a + k*b < 2^35: no overflow
+                sigs.append(((a + ks * b) % MINHASH_MOD).min(axis=1).tolist())
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "sig": sigs})
+
+    return ab.mapInPandas(fold, schema="doc_id bigint, sig array<bigint>")
+
+
+# --------------------------------------------------------------------------
+# Vector kernels over integer-quantized embeddings
+# --------------------------------------------------------------------------
+
+
+def dot(a: Column, b: Column) -> Column:
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
+
+
+def l2norm(a: Column) -> Column:
+    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
+
+
+def qvec(col: str = "embedding") -> Column:
+    """Embedding quantized to integer millis — floor(x*1000 + 0.5) —
+    kept as doubles.  Dot products and squared norms of these are
+    exact integers well under 2^53, so their sums are EXACT in any
+    partial-agg order, sqrt/divide are correctly-rounded IEEE ops on
+    bit-identical inputs, and the resulting cosine is bit-identical
+    across Spark and DuckDB: rankings computed on it cannot flip at a
+    float boundary (round-3 ADVICE fix)."""
+    return F.transform(
+        F.col(col),
+        lambda x: F.floor(x.cast("double") * 1000 + F.lit(0.5)).cast("double"),
+    )
+
+
+def fr4(c: Column) -> Column:
+    """Engine-portable 4-dp half-up round: floor(x*10000 + 0.5)/10000.
+    Multiply/add/floor/divide are single IEEE ops, identical on both
+    engines for a bit-identical input — unlike round(), whose decimal
+    re-rounding path is engine-specific.  Never produces -0.0."""
+    return F.floor(c * 10000 + F.lit(0.5)).cast("double") / F.lit(10000.0)
+
+
+# --------------------------------------------------------------------------
+# PPM (P6) image codec
+# --------------------------------------------------------------------------
+
+PPM_W = 16  # fixture image width; height varies per doc (1..13 rows)
+
+
+def _encode_ppm(doc_id: int) -> bytes:
+    """Deterministic valid binary PPM (P6) payload for a doc: the
+    container ships no image files, so the fixture image is synthesized
+    — but it is a REAL P6 byte stream (magic, ASCII dims, maxval, raw
+    RGB triples) that any PPM reader decodes."""
+    w, h = PPM_W, (doc_id % 13) + 1
+    header = f"P6\n# doc {doc_id}\n{w} {h}\n255\n".encode("ascii")
+    return header + bytes((doc_id * 31 + i) % 256 for i in range(w * h * 3))
+
+
+def _decode_ppm(payload: bytes) -> dict:
+    """REAL pure-python P6 decoder (replaces the round-2 stub): parses
+    magic, '#' comments, whitespace-separated width/height/maxval, then
+    the raw RGB plane.  General over any binary PPM, not just
+    _encode_ppm output; PIL/ffmpeg decoders for richer formats slot
+    into this exact function signature."""
+    if payload is None or payload[:2] != b"P6":
+        raise ValueError("not a binary PPM (P6) payload")
+    pos, fields = 2, []
+    while len(fields) < 3:  # width, height, maxval
+        while pos < len(payload) and payload[pos : pos + 1].isspace():
+            pos += 1
+        if payload[pos : pos + 1] == b"#":  # comment to end-of-line
+            while pos < len(payload) and payload[pos] != 0x0A:
+                pos += 1
+            continue
+        start = pos
+        while pos < len(payload) and not payload[pos : pos + 1].isspace():
+            pos += 1
+        fields.append(int(payload[start:pos]))
+    pos += 1  # single whitespace after maxval, then raw pixels
+    w, h, maxval = fields
+    px = payload[pos : pos + w * h * 3]
+    if maxval > 255 or len(px) != w * h * 3:
+        raise ValueError("truncated or 16-bit PPM unsupported")
+    return {
+        "width": w,
+        "height": h,
+        "maxval": maxval,
+        "n_px": len(px),
+        "sum_px": sum(px),
+        "px": px,  # raw RGB plane for downstream transforms (resize)
+    }
+
+
+# --------------------------------------------------------------------------
+# Money as integer cents
+# --------------------------------------------------------------------------
+
+_CENTS = "CAST(round(value * 100) AS BIGINT)"
+
+
+def _cents() -> Column:
+    """``events.value`` as integer cents (DuckDB mirror: ``_CENTS``)."""
+    return F.round(F.col("value") * 100).cast("bigint")

@@ -153,41 +153,3 @@ def case_when_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
             r2(F.sum("o_totalprice")).alias("total"),
         )
     )
-
-
-@op(
-    "validate_quarantine",
-    oracle="""
-SELECT CASE WHEN l_discount BETWEEN 0 AND 0.1
-             AND l_quantity > 0
-             AND l_extendedprice > 0
-             AND l_tax >= 0 THEN 'valid' ELSE 'quarantine' END AS bucket,
-       CAST(count(*) AS BIGINT) AS n,
-       round(sum(l_extendedprice), 2) AS total_price
-FROM lineitem GROUP BY 1
-""",
-    category=CAT,
-)
-def validate_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Valid/quarantine split with per-bucket stats — SURVEY.md §2.2
-    row 6 (the reference's record-validation step generalized).  One
-    pass, no separate filters: at scale this is a single scan + tiny
-    agg, not two scans."""
-    li = load(spark, sf_dir, "lineitem")
-    valid = (
-        F.col("l_discount").between(0, 0.1)
-        & (F.col("l_quantity") > 0)
-        & (F.col("l_extendedprice") > 0)
-        & (F.col("l_tax") >= 0)
-    )
-    return (
-        li.select(
-            F.when(valid, "valid").otherwise("quarantine").alias("bucket"),
-            "l_extendedprice",
-        )
-        .groupBy("bucket")
-        .agg(
-            bigint(F.count(F.lit(1))).alias("n"),
-            r2(F.sum("l_extendedprice")).alias("total_price"),
-        )
-    )

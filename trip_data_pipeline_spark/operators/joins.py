@@ -9,12 +9,23 @@ for skew AQE can't fix (skewed *aggregation-feeding* keys).
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trip_data_pipeline_spark.io import load, table_path
-from trip_data_pipeline_spark.operators.common import as_date, bigint, epoch_s, r2
+from trip_data_pipeline_spark.operators.common import (
+    _path_bytes,
+    as_date,
+    bigint,
+    epoch_s,
+    r2,
+    scratch_dir,
+    spread,
+)
 from trip_data_pipeline_spark.registry import op
+from trip_data_pipeline_spark.streaming import read_events_stream, run_to_memory
 
 CAT = "2.3 joins"
 
@@ -31,10 +42,13 @@ _BIG_ORDER = 350000  # threshold making outer/semi/anti joins selective
 # ran in 10 s) and broadcasts if rows * _STAR_ROW_BYTES fits the cap;
 # only past THAT does the plan flip to SHUFFLE_HASH (value-identical).
 _STAR_BROADCAST_CAP = 1 << 30
+
 # Conservative in-memory bytes per broadcast row for the reduced
 # (bigint key, short string) relation: 8 key + ~16 string + hash-map
 # entry overhead.  9.2M rows -> ~440 MB, under the cap with margin.
 _STAR_ROW_BYTES = 48
+
+
 # The row-count probe tier uses HALF the scan-bytes cap (ADVICE r7
 # item 3): _STAR_ROW_BYTES is an estimate, not a measured
 # LongHashedRelation footprint, and a broadcast near 1 GiB must first
@@ -54,27 +68,6 @@ def _star_reduced_rows(o, dims) -> int:
     broadcast decision.  Module-level so tests can monkeypatch the
     measurement and pin both probe outcomes (tests/test_plans.py)."""
     return o.join(F.broadcast(dims), o.o_custkey == dims.c_custkey).count()
-
-
-def _path_bytes(path: str) -> int:
-    """Total on-disk bytes of a fixture file or directory (plan-time
-    scan-stat for strategy switches; fixture files are immutable).
-
-    Returns 0 for anything os cannot stat — remote URIs (s3a://,
-    hdfs://) that Spark reads fine but the local filesystem cannot.
-    Callers MUST treat 0 as over-cap (fail CLOSED): picking the
-    broadcast branch for a relation of unknown size is exactly the
-    executor-OOM the cap exists to prevent (ADVICE r6 item 1)."""
-    import os
-
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith((".", "_")):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
 
 
 @op(
@@ -448,6 +441,29 @@ def join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _asof_sides(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The two sides every as-of join here matches: orders 0..1999
+    mapped onto the 150 event users (uid) with a synthetic order time
+    (order_s), and each event's whole-second time (ev_s)."""
+    o = (
+        load(spark, sf_dir, "orders")
+        .filter(F.col("o_orderkey") < 2000)
+        .select(
+            "o_orderkey",
+            (F.col("o_custkey") % 150).alias("uid"),
+            (F.lit(1704067200) + (F.col("o_orderkey") * 1700) % 2592000).alias(
+                "order_s"
+            ),
+        )
+    )
+    e = load(spark, sf_dir, "events").select(
+        "user_id", "event_id", epoch_s("ts").alias("ev_s")
+    )
+    return o, e
+
+
 @op(
     "join_asof_latest",
     oracle="""
@@ -478,20 +494,7 @@ def join_asof_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     join (or applyInPandas + pandas.merge_asof per key group); here the
     probe side is explicitly bounded (o_orderkey < 2000) per the survey.
     """
-    o = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") < 2000)
-        .select(
-            "o_orderkey",
-            (F.col("o_custkey") % 150).alias("uid"),
-            (F.lit(1704067200) + (F.col("o_orderkey") * 1700) % 2592000).alias(
-                "order_s"
-            ),
-        )
-    )
-    e = load(spark, sf_dir, "events").select(
-        "user_id", "event_id", epoch_s("ts").alias("ev_s")
-    )
+    o, e = _asof_sides(spark, sf_dir)
     j = o.join(e, (e.user_id == o.uid) & (e.ev_s <= o.order_s))
     w = Window.partitionBy("o_orderkey").orderBy(
         F.col("ev_s").desc(), F.col("event_id").desc()
@@ -597,20 +600,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set exactly like the latest-prior variant; at scale both
     sides pre-bucket on floor(t/86400) and join on adjacent buckets,
     turning the band predicate into an equi-join."""
-    o = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") < 2000)
-        .select(
-            "o_orderkey",
-            (F.col("o_custkey") % 150).alias("uid"),
-            (F.lit(1704067200) + (F.col("o_orderkey") * 1700) % 2592000).alias(
-                "order_s"
-            ),
-        )
-    )
-    e = load(spark, sf_dir, "events").select(
-        "user_id", "event_id", epoch_s("ts").alias("ev_s")
-    )
+    o, e = _asof_sides(spark, sf_dir)
     dist = F.abs(F.col("ev_s") - F.col("order_s"))
     j = o.join(e, (e.user_id == o.uid) & (dist <= 86400))
     w = Window.partitionBy("o_orderkey").orderBy(dist.asc(), F.col("event_id").asc())
@@ -817,4 +807,510 @@ def join_asof_bucketed_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_id").alias("last_event_id"),
             F.col("ev_s").alias("last_ev_s"),
         )
+    )
+
+
+@op(
+    "join_null_safe",
+    oracle="""
+WITH a AS (SELECT o_orderkey, NULLIF(o_orderstatus, 'P') AS k FROM orders
+           WHERE o_orderkey < 500),
+     b AS (SELECT DISTINCT NULLIF(o_orderstatus, 'P') AS k FROM orders)
+SELECT a.o_orderkey, a.k AS k
+FROM a JOIN b ON a.k IS NOT DISTINCT FROM b.k
+""",
+    category=CAT,
+)
+def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Null-safe equality join (<=> / IS NOT DISTINCT FROM): NULL keys
+    match each other instead of vanishing — the semantics a merge on a
+    nullable natural key needs."""
+    o = load(spark, sf_dir, "orders")
+    a = o.filter(F.col("o_orderkey") < 500).select(
+        "o_orderkey", F.nullif(F.col("o_orderstatus"), F.lit("P")).alias("k")
+    )
+    b = o.select(F.nullif(F.col("o_orderstatus"), F.lit("P")).alias("bk")).distinct()
+    return a.join(b, a.k.eqNullSafe(b.bk)).select("o_orderkey", "k")
+
+
+def bucketed_join_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Write orders/customer bucketed+sorted by the join key, return
+    the join of the two bucketed tables (used by the operator and by
+    the no-Exchange plan assertion in tests)."""
+    suffix = uuid.uuid4().hex[:8]
+    base = scratch_dir(prefix="bucketed_")
+    o = load(spark, sf_dir, "orders")
+    c = load(spark, sf_dir, "customer")
+    ot, ct = f"orders_b_{suffix}", f"customer_b_{suffix}"
+    (
+        o.write.bucketBy(8, "o_custkey")
+        .sortBy("o_custkey")
+        .option("path", f"{base}/{ot}")
+        .mode("overwrite")
+        .saveAsTable(ot)
+    )
+    (
+        c.write.bucketBy(8, "c_custkey")
+        .sortBy("c_custkey")
+        .option("path", f"{base}/{ct}")
+        .mode("overwrite")
+        .saveAsTable(ct)
+    )
+    ob, cb = spark.table(ot), spark.table(ct)
+    # At fixture scale the optimizer would (rightly) broadcast the
+    # small side; the merge hint forces the sort-merge path so the
+    # bucketed no-shuffle property is observable — at 100 TB neither
+    # side broadcasts and this IS the chosen plan.
+    return ob.hint("merge").join(cb, ob.o_custkey == cb.c_custkey)
+
+
+@op(
+    "join_bucketed_colocated",
+    oracle="""
+SELECT c_mktsegment,
+       CAST(count(*) AS BIGINT) AS n_orders,
+       round(sum(o_totalprice), 2) AS total
+FROM orders JOIN customer ON o_custkey = c_custkey
+GROUP BY 1
+""",
+    category=CAT,
+)
+def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bucketed co-located join.  Hash-checked since round 3: the
+    bucketed-table join must produce exactly the rows of the plain
+    join on the source tables — bucketing changes the physical plan
+    (no Exchange), never the result.
+
+    Writes orders and customer bucketed by the join key
+    (bucketBy(8, custkey) + sortBy), then joins the two bucketed
+    tables: Spark plans a sort-merge join with NO Exchange on either
+    side (asserted in tests/test_properties.py) — the 100 TB pattern
+    for repeated joins on a stable key: pay the shuffle once at write
+    time, never at read time."""
+    joined = bucketed_join_df(spark, sf_dir)
+    return joined.groupBy("c_mktsegment").agg(
+        bigint(F.count(F.lit(1))).alias("n_orders"),
+        r2(F.sum("o_totalprice")).alias("total"),
+    )
+
+
+@op(
+    "stream_static_join",
+    oracle="""
+SELECT c_mktsegment,
+       CAST(count(*) AS BIGINT) AS n_events,
+       round(sum(value), 2)     AS total_value
+FROM events
+JOIN customer ON c_custkey = user_id
+WHERE ts IS NOT NULL
+GROUP BY c_mktsegment
+""",
+    category=CAT,
+)
+def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-static join: the events stream enriched with a broadcast
+    dimension, then aggregated — the canonical streaming enrichment
+    shape (dim re-read per micro-batch; broadcast, no stream-side
+    shuffle for the join).  user_id 0..149 joins customer c_custkey
+    1:1.  Final counts equal the batch join, so it hash-checks."""
+    ev = read_events_stream(spark, sf_dir)
+    dim = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    joined = ev.join(F.broadcast(dim), ev.user_id == dim.c_custkey)
+    agg = (
+        joined.withWatermark("ts", "1 hour")
+        .groupBy("c_mktsegment")
+        .agg(
+            bigint(F.count(F.lit(1))).alias("n_events"),
+            r2(F.sum("value")).alias("total_value"),
+        )
+    )
+    return run_to_memory(agg, "complete")
+
+
+@op(
+    "lateral_correlated_topk",
+    oracle="""
+SELECT n.n_name, t.c_name, t.c_acctbal
+FROM nation n,
+     LATERAL (SELECT c_name, c_acctbal FROM customer
+              WHERE c_nationkey = n.n_nationkey
+              ORDER BY c_acctbal DESC, c_name LIMIT 2) t
+ORDER BY n.n_name, t.c_acctbal DESC, t.c_name
+""",
+    category=CAT,
+)
+def lateral_correlated_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Correlated LATERAL subquery (SQL API): per-nation top-2
+    customers by balance.  Catalyst decorrelates the LATERAL into a
+    window-rank under the hood — same plan family as win_topk_per_group
+    but exercising the LATERAL front-end path."""
+    load(spark, sf_dir, "nation").createOrReplaceTempView("_lat_nation")
+    load(spark, sf_dir, "customer").createOrReplaceTempView("_lat_customer")
+    return spark.sql(
+        """
+        SELECT n.n_name, t.c_name, t.c_acctbal
+        FROM _lat_nation n,
+             LATERAL (SELECT c_name, c_acctbal FROM _lat_customer
+                      WHERE c_nationkey = n.n_nationkey
+                      ORDER BY c_acctbal DESC, c_name LIMIT 2) t
+        ORDER BY n.n_name, t.c_acctbal DESC, t.c_name
+        """
+    )
+
+
+_IVL_DUCK = """
+iv AS (
+  SELECT o_orderkey AS id,
+         CAST(o_orderdate AS DATE) AS s,
+         CAST(o_orderdate AS DATE) + CAST((o_orderkey % 7) + 1 AS INTEGER) AS e,
+         o_orderkey % 2 AS side
+  FROM orders WHERE o_orderkey % 13 = 0
+)
+"""
+
+
+@op(
+    "join_interval_overlap",
+    oracle=f"""
+WITH {_IVL_DUCK}
+SELECT a.id AS left_id,
+       CAST(count(*) AS BIGINT) AS n_overlaps,
+       CAST(sum(date_diff('day', greatest(a.s, b.s), least(a.e, b.e)) + 1) AS BIGINT)
+         AS overlap_days
+FROM iv a JOIN iv b
+  ON a.side = 0 AND b.side = 1 AND a.s <= b.e AND b.s <= a.e
+GROUP BY 1
+""",
+    category=CAT,
+)
+def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Interval-vs-interval overlap join — the two-sided generalization
+    of the point-in-interval containment op: reservation-style windows
+    on both sides, pairs that overlap in time.
+
+    Spark has no native interval join, so the scale formulation
+    explodes each interval into its covered week buckets and
+    equi-joins on the bucket (candidates bounded per bucket because
+    interval length is bounded: <= 8 days -> <= 2 buckets), dedups the
+    pairs, then verifies true overlap — the standard bucketed range
+    join.  The oracle runs the direct theta join; identical results
+    prove the bucketing loses nothing.
+
+    Scale: the only shuffle is the bucket equi-join; a naive theta
+    join would be a cartesian product.  Bucket width tracks the max
+    interval length so each interval lands in O(1) buckets."""
+    o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 13 == 0)
+    iv = o.select(
+        F.col("o_orderkey").alias("id"),
+        as_date(F.col("o_orderdate")).alias("s"),
+        F.date_add(
+            as_date(F.col("o_orderdate")),
+            ((F.col("o_orderkey") % 7) + 1).cast("int"),
+        ).alias("e"),
+        (F.col("o_orderkey") % 2).alias("side"),
+    )
+    # week bucket indices covered by [s, e] (epoch-day // 7)
+    wk = iv.withColumn(
+        "wk",
+        F.explode(
+            F.sequence(
+                F.floor(F.unix_date("s") / 7), F.floor(F.unix_date("e") / 7)
+            )
+        ),
+    )
+    a = wk.filter(F.col("side") == 0).select(
+        F.col("id").alias("left_id"), F.col("s").alias("s1"),
+        F.col("e").alias("e1"), "wk",
+    )
+    b = wk.filter(F.col("side") == 1).select(
+        F.col("id").alias("right_id"), F.col("s").alias("s2"),
+        F.col("e").alias("e2"), "wk",
+    )
+    pairs = (
+        a.join(b, "wk")
+        .filter((F.col("s1") <= F.col("e2")) & (F.col("s2") <= F.col("e1")))
+        .select(
+            "left_id", "right_id",
+            (
+                F.datediff(
+                    F.least("e1", "e2"), F.greatest("s1", "s2")
+                ) + 1
+            ).alias("od"),
+        )
+        .distinct()  # same pair can meet in 2 shared buckets
+    )
+    return pairs.groupBy("left_id").agg(
+        bigint(F.count(F.lit(1))).alias("n_overlaps"),
+        bigint(F.sum("od")).alias("overlap_days"),
+    )
+
+
+@op(
+    "join_lateral_api_topk",
+    oracle="""
+WITH r AS (
+  SELECT c_nationkey, c_custkey,
+         CAST(round(c_acctbal * 100) AS BIGINT) AS bal_cents,
+         row_number() OVER (PARTITION BY c_nationkey
+                            ORDER BY round(c_acctbal * 100) DESC, c_custkey) AS rn
+  FROM customer
+)
+SELECT c_nationkey, c_custkey, bal_cents
+FROM r WHERE rn <= 2
+""",
+    category=CAT,
+)
+def join_lateral_api_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """df.lateralJoin (new DataFrame API in Spark 4): for every nation
+    key, the correlated top-2 customers by balance — the API twin of
+    the SQL LATERAL in lateral_correlated_topk.  The outer() marker
+    names the correlated column; Catalyst decorrelates the
+    limit-per-key subquery (same rewrite family as the window form the
+    oracle uses).  Deterministic: integer cents + key tie-break."""
+    cust = load(spark, sf_dir, "customer").select(
+        "c_nationkey",
+        "c_custkey",
+        F.round(F.col("c_acctbal") * 100).cast("bigint").alias("bal_cents"),
+    )
+    nations = cust.select("c_nationkey").distinct()
+    inner = (
+        cust.alias("c")
+        .where(F.col("c.c_nationkey") == F.col("n_key").outer())
+        .orderBy(F.desc("bal_cents"), "c_custkey")
+        .limit(2)
+        .select("c_custkey", "bal_cents")
+    )
+    return (
+        nations.withColumnRenamed("c_nationkey", "n_key")
+        .lateralJoin(inner)
+        .select(
+            F.col("n_key").alias("c_nationkey"), "c_custkey", "bal_cents"
+        )
+    )
+
+
+@op(
+    "join_null_aware_anti",
+    oracle="""
+SELECT o_orderpriority,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+FROM orders
+WHERE o_custkey NOT IN (
+  SELECT CASE WHEN c_acctbal < -100000 THEN NULL ELSE c_custkey END
+  FROM customer WHERE c_mktsegment = 'BUILDING'
+)
+GROUP BY o_orderpriority
+""",
+    category=CAT,
+)
+def join_null_aware_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """NOT IN over a NULLABLE subquery — three-valued logic makes this
+    a different operator from anti-join: one NULL in the subquery
+    empties the whole result, so Catalyst must plan a null-aware anti
+    join (broadcast NAAJ) instead of a plain LeftAnti.  The CASE
+    branch keeps the column nullable (exercising the null-aware path)
+    while never firing at runtime, so the result is non-degenerate and
+    the oracle replays the identical three-valued semantics."""
+    o = load(spark, sf_dir, "orders")
+    c = load(spark, sf_dir, "customer")
+    o.createOrReplaceTempView("ord_naaj")
+    c.createOrReplaceTempView("cust_naaj")
+    return spark.sql(
+        """
+SELECT o_orderpriority,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+FROM ord_naaj
+WHERE o_custkey NOT IN (
+  SELECT CASE WHEN c_acctbal < -100000 THEN NULL ELSE c_custkey END
+  FROM cust_naaj WHERE c_mktsegment = 'BUILDING'
+)
+GROUP BY o_orderpriority
+"""
+    )
+
+
+@op(
+    "join_asof_forward",
+    oracle="""
+WITH o AS (
+  SELECT o_orderkey,
+         o_custkey % 150 AS uid,
+         1704067200 + (o_orderkey * 1700) % 2592000 AS order_s
+  FROM orders WHERE o_orderkey < 2000
+), e AS (
+  SELECT user_id, event_id, (epoch_us(ts) // 1000000) AS ev_s FROM events
+), j AS (
+  SELECT o.o_orderkey, o.order_s, e.event_id, e.ev_s,
+         row_number() OVER (PARTITION BY o.o_orderkey
+                            ORDER BY e.ev_s ASC, e.event_id ASC) AS rn
+  FROM o JOIN e ON e.user_id = o.uid AND e.ev_s >= o.order_s
+)
+SELECT o_orderkey, order_s, event_id AS next_event_id, ev_s AS next_ev_s,
+       CAST(ev_s - order_s AS BIGINT) AS lag_s
+FROM j WHERE rn = 1
+""",
+    category=CAT,
+)
+def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Forward as-of join: EARLIEST event at-or-after each order (the
+    mirror of join_asof_latest's backward lookup) plus the response
+    lag in seconds — the SLA / next-touch query: 'how long until the
+    system reacted'.  Same user-key + inequality + row_number()=1
+    formulation; the same coarse-time-bucket bounding strategy from
+    the backward op (joins.py:330) is the 100-TB path.
+
+    Scale: candidate fan-out is bounded by the probe-side filter per
+    the backward op's contract; the shuffle keys on the user id and
+    the per-order top-1 is a window over the candidates."""
+    o, e = _asof_sides(spark, sf_dir)
+    j = o.join(
+        e,
+        (e.user_id == o.uid) & (e.ev_s >= o.order_s),
+    )
+    w = Window.partitionBy("o_orderkey").orderBy(
+        F.col("ev_s").asc(), F.col("event_id").asc()
+    )
+    return (
+        j.select(
+            "o_orderkey", "order_s", "event_id", "ev_s",
+            F.row_number().over(w).alias("rn"),
+        )
+        .filter(F.col("rn") == 1)
+        .select(
+            "o_orderkey",
+            "order_s",
+            F.col("event_id").alias("next_event_id"),
+            F.col("ev_s").alias("next_ev_s"),
+            bigint(F.col("ev_s") - F.col("order_s")).alias("lag_s"),
+        )
+    )
+
+
+@op(
+    "join_null_safe_equi",
+    oracle="""
+WITH c AS (
+  SELECT c_custkey, nullif(c_mktsegment, 'BUILDING') AS seg, c_acctbal
+  FROM customer
+),
+s AS (
+  SELECT nullif(seg, 'BUILDING') AS seg, count(*) AS seg_n
+  FROM (SELECT c_mktsegment AS seg FROM customer) GROUP BY 1
+)
+SELECT c.c_custkey, coalesce(c.seg, '<null>') AS seg_key,
+       CAST(s.seg_n AS BIGINT) AS seg_population
+FROM c JOIN s ON c.seg IS NOT DISTINCT FROM s.seg
+WHERE c.c_custkey < 300
+""",
+    category=CAT,
+)
+def join_null_safe_equi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Null-safe equi-join (IS NOT DISTINCT FROM / <=>): NULL keys
+    match NULL keys — the join SQL users reach for when a dimension
+    key is legitimately absent on both sides (here the 'BUILDING'
+    segment is nulled on both sides to exercise it; a plain equi-join
+    would silently DROP every such row).  The §2.3 surface row plain
+    equi/outer joins cannot express.
+
+    Scale: Spark plans <=> as a hash join on a null-safe key wrapper
+    (still an equi-join — no BNLJ penalty); the probe side is bounded
+    per the as-of ops' contract."""
+    c = load(spark, sf_dir, "customer").select(
+        "c_custkey",
+        F.expr("nullif(c_mktsegment, 'BUILDING')").alias("seg"),
+    ).filter(F.col("c_custkey") < 300)
+    s = (
+        load(spark, sf_dir, "customer")
+        .select(F.expr("nullif(c_mktsegment, 'BUILDING')").alias("sseg"))
+        .groupBy("sseg")
+        .agg(F.count(F.lit(1)).alias("seg_n"))
+    )
+    return (
+        c.join(F.broadcast(s), c.seg.eqNullSafe(s.sseg))
+        .select(
+            "c_custkey",
+            F.coalesce(F.col("seg"), F.lit("<null>")).alias("seg_key"),
+            bigint(F.col("seg_n")).alias("seg_population"),
+        )
+    )
+
+
+@op(
+    "join_existence_flags",
+    oracle="""
+WITH flags AS (
+  SELECT o.o_orderkey,
+         year(o.o_orderdate) * 100 + month(o.o_orderdate) AS ym,
+         max(CASE WHEN l.l_returnflag = 'R' THEN 1 ELSE 0 END) AS has_return,
+         max(CASE WHEN l.l_quantity >= 45 THEN 1 ELSE 0 END) AS has_bulk,
+         max(CASE WHEN l.l_discount >= 0.08 THEN 1 ELSE 0 END)
+           AS has_deep_discount
+  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+  GROUP BY o.o_orderkey, year(o.o_orderdate) * 100 + month(o.o_orderdate)
+)
+SELECT CAST(ym AS BIGINT) AS ym,
+       CAST(count(*) AS BIGINT) AS n_orders,
+       CAST(sum(has_return) AS BIGINT) AS n_with_return,
+       CAST(sum(has_bulk) AS BIGINT) AS n_with_bulk,
+       CAST(sum(has_deep_discount) AS BIGINT) AS n_with_deep_discount,
+       CAST(sum(has_return * has_bulk * has_deep_discount) AS BIGINT)
+         AS n_all_three
+FROM flags GROUP BY ym
+""",
+    category=CAT,
+)
+def join_existence_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-existence flags in ONE pass: three EXISTS-style questions
+    (any returned line? any bulk line? any deeply discounted line?)
+    answered as max(CASE) flags over a single fact join + group-by —
+    where the naive formulation runs three separate semi-joins
+    (3 fact shuffles); the flag form also yields the conjunction
+    (orders hitting all three) for free, which semi-joins cannot
+    compose without a fourth pass.
+
+    Scale: one orderkey-keyed join + agg (both sides keyed on the
+    join key), then a month rollup — 1 fact shuffle instead of 3."""
+    o = load(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        (F.year("o_orderdate") * 100 + F.month("o_orderdate")).alias("ym"),
+    )
+    li = spread(load(spark, sf_dir, "lineitem")).select(
+        "l_orderkey", "l_returnflag", "l_quantity", "l_discount"
+    )
+    flags = (
+        o.join(li, o.o_orderkey == li.l_orderkey)
+        .groupBy("o_orderkey", "ym")
+        .agg(
+            F.max(
+                F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
+            ).alias("has_return"),
+            F.max(
+                F.when(F.col("l_quantity") >= 45, 1).otherwise(0)
+            ).alias("has_bulk"),
+            F.max(
+                F.when(F.col("l_discount") >= 0.08, 1).otherwise(0)
+            ).alias("has_deep_discount"),
+        )
+    )
+    return flags.groupBy("ym").agg(
+        bigint(F.count(F.lit(1))).alias("n_orders"),
+        bigint(F.sum("has_return")).alias("n_with_return"),
+        bigint(F.sum("has_bulk")).alias("n_with_bulk"),
+        bigint(F.sum("has_deep_discount")).alias("n_with_deep_discount"),
+        bigint(
+            F.sum(
+                F.col("has_return")
+                * F.col("has_bulk")
+                * F.col("has_deep_discount")
+            )
+        ).alias("n_all_three"),
+    ).select(
+        bigint(F.col("ym")).alias("ym"),
+        "n_orders",
+        "n_with_return",
+        "n_with_bulk",
+        "n_with_deep_discount",
+        "n_all_three",
     )

@@ -16,17 +16,24 @@ ops, and valid P6 byte streams (_encode_ppm) for the decoder.
 
 from __future__ import annotations
 
-import os
-
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trip_data_pipeline_spark.io import load
-from trip_data_pipeline_spark.operators.common import bigint
-from trip_data_pipeline_spark.registry import op
+from trip_data_pipeline_spark.operators.common import (
+    PPM_W,
+    _decode_ppm,
+    _encode_ppm,
+    bigint,
+    l2norm,
+    nz,
+    r4,
+    spread,
+)
+from trip_data_pipeline_spark.registry import OPS, op
 
 CAT = "2.11 multimodal binary"
 
@@ -76,54 +83,6 @@ def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("size_band"),
         F.md5(F.col("payload")).alias("content_hash"),
     )
-
-
-PPM_W = 16  # fixture image width; height varies per doc (1..13 rows)
-
-
-def _encode_ppm(doc_id: int) -> bytes:
-    """Deterministic valid binary PPM (P6) payload for a doc: the
-    container ships no image files, so the fixture image is synthesized
-    — but it is a REAL P6 byte stream (magic, ASCII dims, maxval, raw
-    RGB triples) that any PPM reader decodes."""
-    w, h = PPM_W, (doc_id % 13) + 1
-    header = f"P6\n# doc {doc_id}\n{w} {h}\n255\n".encode("ascii")
-    return header + bytes((doc_id * 31 + i) % 256 for i in range(w * h * 3))
-
-
-def _decode_ppm(payload: bytes) -> dict:
-    """REAL pure-python P6 decoder (replaces the round-2 stub): parses
-    magic, '#' comments, whitespace-separated width/height/maxval, then
-    the raw RGB plane.  General over any binary PPM, not just
-    _encode_ppm output; PIL/ffmpeg decoders for richer formats slot
-    into this exact function signature."""
-    if payload is None or payload[:2] != b"P6":
-        raise ValueError("not a binary PPM (P6) payload")
-    pos, fields = 2, []
-    while len(fields) < 3:  # width, height, maxval
-        while pos < len(payload) and payload[pos : pos + 1].isspace():
-            pos += 1
-        if payload[pos : pos + 1] == b"#":  # comment to end-of-line
-            while pos < len(payload) and payload[pos] != 0x0A:
-                pos += 1
-            continue
-        start = pos
-        while pos < len(payload) and not payload[pos : pos + 1].isspace():
-            pos += 1
-        fields.append(int(payload[start:pos]))
-    pos += 1  # single whitespace after maxval, then raw pixels
-    w, h, maxval = fields
-    px = payload[pos : pos + w * h * 3]
-    if maxval > 255 or len(px) != w * h * 3:
-        raise ValueError("truncated or 16-bit PPM unsupported")
-    return {
-        "width": w,
-        "height": h,
-        "maxval": maxval,
-        "n_px": len(px),
-        "sum_px": sum(px),
-        "px": px,  # raw RGB plane for downstream transforms (resize)
-    }
 
 
 @op(
@@ -575,51 +534,984 @@ def multimodal_wav_decimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @op(
-    "scan_metadata_row_index",
+    "multimodal_ppm_channel_stats",
     oracle="""
-SELECT CAST(event_id % 7 AS BIGINT) AS bucket,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(event_id) AS BIGINT) AS sum_ri,
-       CAST(count(*) AS BIGINT) AS n_match
-FROM events GROUP BY bucket
+WITH px AS (
+  SELECT doc_id, unnest(range(0, 16 * ((doc_id % 13) + 1) * 3)) AS i
+  FROM documents
+),
+ch AS (SELECT doc_id, CAST(i % 3 AS INT) AS channel,
+              (doc_id * 31 + i) % 256 AS v
+       FROM px)
+SELECT doc_id, channel,
+       CAST(count(*) AS BIGINT) AS n_px,
+       CAST(sum(v) AS BIGINT)   AS sum_v,
+       CAST(min(v) AS INT)      AS min_v,
+       CAST(max(v) AS INT)      AS max_v
+FROM ch GROUP BY doc_id, channel
 """,
-    category="2.1 scans/sources/sinks",
+    category=CAT,
 )
-def scan_metadata_row_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The hidden `_metadata` file-source column family:
-    `_metadata.row_index` exposes each row's physical position in its
-    parquet file — the zero-cost stable row identity a pipeline uses
-    for resumable scans and row-level lineage (no window, no
-    monotonically_increasing_id non-determinism).  The fixture's
-    events file is written in event_id order with event_id dense from
-    0, so row_index must equal event_id exactly — n_match counts the
-    equality per bucket and the oracle replays it as count(*): ANY
-    divergence between physical position and the metadata column
-    breaks the hash.
+def multimodal_ppm_channel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-channel (R/G/B) pixel statistics computed by actually
+    DECODING the binary PPM payloads through the real byte-level P6
+    parser (multimodal._decode-path plumbing: Arrow mapInPandas,
+    BinaryType in, typed rows out) — the feature-extraction stage of
+    an image-curation pipeline.  Hash-checked: the fixture images are
+    deterministic, so the oracle recomputes the same integer pixel
+    statistics arithmetically while Spark round-trips real bytes.
 
-    ADVICE r3: that premise silently requires ONE data file —
-    row_index resets per file, so a multi-file fixture would fail as
-    an opaque hash mismatch.  Assert the layout loudly instead."""
-    path = f"{sf_dir}/events.parquet"
-    if os.path.isdir(path):
-        parts = [
-            f
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
-        if len(parts) != 1:
-            raise AssertionError(
-                f"scan_metadata_row_index premise broken: {path} holds "
-                f"{len(parts)} data files; row_index==event_id only holds "
-                "for a single dense, event_id-ordered file"
-            )
-    ev = spark.read.parquet(path).select(
-        F.col("_metadata.row_index").alias("ri"), "event_id"
-    )
-    return ev.groupBy((F.col("ri") % 7).cast("bigint").alias("bucket")).agg(
-        bigint(F.count(F.lit(1))).alias("n"),
-        bigint(F.sum("ri")).alias("sum_ri"),
-        bigint(F.sum(F.when(F.col("ri") == F.col("event_id"), 1).otherwise(0))).alias(
-            "n_match"
+    Scale: map-only Arrow-batched decode (the expensive stage —
+    embarrassingly parallel, no shuffle), then a partial+final
+    aggregate keyed by (doc, channel)."""
+
+    def channel_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        rows: dict[str, list] = {
+            "doc_id": [], "channel": [], "n_px": [],
+            "sum_v": [], "min_v": [], "max_v": [],
+        }
+        for pdf in batches:
+            for doc_id in pdf["doc_id"]:
+                payload = _encode_ppm(doc_id)
+                meta = _decode_ppm(payload)  # validates header + plane
+                w, h = meta["width"], meta["height"]
+                plane = payload[-w * h * 3:]
+                for c in range(3):
+                    chan = plane[c::3]
+                    rows["doc_id"].append(doc_id)
+                    rows["channel"].append(c)
+                    rows["n_px"].append(len(chan))
+                    rows["sum_v"].append(sum(chan))
+                    rows["min_v"].append(min(chan))
+                    rows["max_v"].append(max(chan))
+        yield pd.DataFrame(rows)
+
+    d = load(spark, sf_dir, "documents").select("doc_id")
+    return d.mapInPandas(
+        channel_stats,
+        schema=(
+            "doc_id bigint, channel int, n_px bigint, sum_v bigint, "
+            "min_v int, max_v int"
         ),
+    )
+
+
+@op(
+    "multimodal_image_phash",
+    oracle="""
+WITH g AS (
+  SELECT doc_id, (doc_id % 13) + 1 AS h, t.i AS i,
+         ((t.i // 8) * ((doc_id % 13) + 1)) // 8 AS gy,
+         (t.i % 8) * 2 AS gx
+  FROM documents CROSS JOIN (SELECT unnest(range(0, 64)) AS i) t
+),
+cells AS (
+  SELECT doc_id, i,
+         (doc_id * 31 + (gy * 16 + gx) * 3) % 256
+         + (doc_id * 31 + (gy * 16 + gx) * 3 + 1) % 256
+         + (doc_id * 31 + (gy * 16 + gx) * 3 + 2) % 256 AS cell
+  FROM g
+),
+b AS (
+  SELECT doc_id, i, cell,
+         sum(cell) OVER (PARTITION BY doc_id) AS total
+  FROM cells
+)
+SELECT doc_id,
+       string_agg(CASE WHEN 64 * cell > total THEN '1' ELSE '0' END,
+                  '' ORDER BY i) AS phash_bits,
+       CAST(count(CASE WHEN 64 * cell > total THEN 1 END) AS BIGINT) AS n_ones
+FROM b GROUP BY doc_id
+""",
+    category=CAT,
+)
+def multimodal_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Perceptual image hash (average-hash / aHash) over the REAL PPM
+    decode chain: decode the P6 byte stream, sample an 8x8
+    nearest-neighbor grid (gy = (r*h)//8, gx = 2*c for the 16-wide
+    fixture), gray = integer sum of the 3 channels (no /3 — division
+    would round), bit = [64*cell > total] (cross-multiplied mean
+    comparison, strict both engines) -> 64-bit hash as a bit string +
+    popcount.  The oracle replays the sampled pixel lattice
+    arithmetically while the Spark side round-trips actual bytes
+    through the parser.
+
+    Scale shape: map-only mapInPandas (Arrow batches of binary
+    payloads in, 72-char rows out) — the standard pre-shuffle
+    compression step before image near-dup banding (the SimHash
+    banding ops show the join half on exactly this kind of
+    signature)."""
+
+    def phash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = {"doc_id": [], "phash_bits": [], "n_ones": []}
+            for doc_id in pdf["doc_id"]:
+                f = _decode_ppm(_encode_ppm(int(doc_id)))
+                w, h, px = f["width"], f["height"], f["px"]
+                cells = []
+                for r in range(8):
+                    gy = (r * h) // 8
+                    for c in range(8):
+                        gx = 2 * c
+                        base = (gy * w + gx) * 3
+                        cells.append(px[base] + px[base + 1] + px[base + 2])
+                total = sum(cells)
+                bits = "".join(
+                    "1" if 64 * cell > total else "0" for cell in cells
+                )
+                out["doc_id"].append(doc_id)
+                out["phash_bits"].append(bits)
+                out["n_ones"].append(bits.count("1"))
+            yield pd.DataFrame(out)
+
+    d = load(spark, sf_dir, "documents").select("doc_id")
+    return d.mapInPandas(
+        phash_batches, schema="doc_id bigint, phash_bits string, n_ones bigint"
+    )
+
+
+VAD_FRAME = 8  # samples per frame
+
+VAD_THRESH = 100_000  # integer energy threshold (sum of |s16| per frame)
+
+
+@op(
+    "multimodal_audio_vad",
+    oracle=f"""
+WITH d AS (SELECT doc_id, (doc_id % 50) + 10 AS n FROM documents),
+s0 AS (SELECT doc_id, unnest(range(0, n)) AS i FROM d),
+s AS (
+  SELECT doc_id, i // {VAD_FRAME} AS fi,
+         abs(((doc_id * 131 + i * 17) % 65536) - 32768) AS a
+  FROM s0
+),
+f AS (
+  SELECT doc_id, fi,
+         CASE WHEN sum(a) > {VAD_THRESH} THEN 1 ELSE 0 END AS act
+  FROM s GROUP BY doc_id, fi
+),
+g AS (
+  SELECT doc_id, fi, act,
+         lag(act, 1, 0) OVER (PARTITION BY doc_id ORDER BY fi) AS pact
+  FROM f
+)
+SELECT doc_id,
+       CAST(count(*) AS BIGINT)  AS n_frames,
+       CAST(sum(act) AS BIGINT)  AS n_active,
+       CAST(count(CASE WHEN act = 1 AND pact = 0 THEN 1 END) AS BIGINT)
+         AS n_segments,
+       CAST((1000000 * sum(act)) // count(*) AS BIGINT) AS active_ppm
+FROM g GROUP BY doc_id
+""",
+    category=CAT,
+)
+def multimodal_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Energy-based voice-activity detection over the REAL RIFF/WAVE
+    decode chain: decode the PCM s16le payload, frame at 8 samples
+    (last frame partial), a frame is ACTIVE iff its integer
+    sum-of-|sample| energy exceeds a fixed threshold, segments are
+    maximal runs of active frames (gaps-and-islands on the frame
+    sequence).  Per doc: frames, active frames, segment count,
+    active share in integer ppm — the speech-share gate an audio
+    corpus applies before paying for transcription.
+
+    The oracle replays the deterministic PCM lattice arithmetically;
+    the Spark side round-trips actual RIFF bytes through the parser.
+    Scale shape: map-only mapInPandas; segmentation is per-payload
+    local state inside the batch (no cross-row windows needed)."""
+
+    def vad_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = {
+                "doc_id": [],
+                "n_frames": [],
+                "n_active": [],
+                "n_segments": [],
+                "active_ppm": [],
+            }
+            for doc_id in pdf["doc_id"]:
+                f = _decode_wav(_encode_wav(int(doc_id)))
+                samples = f["samples"]
+                acts = []
+                for start in range(0, len(samples), VAD_FRAME):
+                    e = sum(abs(int(s)) for s in samples[start : start + VAD_FRAME])
+                    acts.append(1 if e > VAD_THRESH else 0)
+                segs = sum(
+                    1
+                    for k, a in enumerate(acts)
+                    if a == 1 and (k == 0 or acts[k - 1] == 0)
+                )
+                out["doc_id"].append(doc_id)
+                out["n_frames"].append(len(acts))
+                out["n_active"].append(sum(acts))
+                out["n_segments"].append(segs)
+                out["active_ppm"].append(1_000_000 * sum(acts) // len(acts))
+            yield pd.DataFrame(out)
+
+    d = load(spark, sf_dir, "documents").select("doc_id")
+    return d.mapInPandas(
+        vad_batches,
+        schema=(
+            "doc_id bigint, n_frames bigint, n_active bigint, "
+            "n_segments bigint, active_ppm bigint"
+        ),
+    )
+
+
+# ViT-style patchify grid over the PPM fixture images (16 px wide,
+# 1..13 px tall): 8x4 tiles, ragged bottom tile kept (a production
+# pipeline pads instead; the stats contract is identical).
+_TILE_W, _TILE_H = 8, 4
+
+
+@op(
+    "multimodal_image_tiles",
+    oracle=f"""
+WITH g AS (SELECT doc_id, (doc_id % 13) + 1 AS h FROM documents),
+t AS (
+  SELECT doc_id, h, tx.x AS tx, ty.y AS ty
+  FROM g
+  CROSS JOIN (SELECT unnest(range(0, 2)) AS x) tx
+  CROSS JOIN (SELECT unnest(range(0, 4)) AS y) ty
+  WHERE ty.y * {_TILE_H} < h
+),
+py AS (
+  SELECT doc_id, tx, ty,
+         unnest(range(ty * {_TILE_H}, least(ty * {_TILE_H} + {_TILE_H}, h))) AS y
+  FROM t
+),
+px AS (
+  SELECT doc_id, tx, ty, y,
+         unnest(range(tx * {_TILE_W}, tx * {_TILE_W} + {_TILE_W})) AS x
+  FROM py
+),
+c AS (SELECT doc_id, tx, ty, y, x, unnest(range(0, 3)) AS ch FROM px)
+SELECT doc_id,
+       CAST(tx AS INT) AS tile_x, CAST(ty AS INT) AS tile_y,
+       CAST(count(*) // 3 AS BIGINT) AS n_px,
+       CAST(sum(CASE WHEN ch = 0
+                THEN (doc_id * 31 + ((y * 16 + x) * 3 + ch)) % 256 END)
+            AS BIGINT) AS sum_r,
+       CAST(sum(CASE WHEN ch = 1
+                THEN (doc_id * 31 + ((y * 16 + x) * 3 + ch)) % 256 END)
+            AS BIGINT) AS sum_g,
+       CAST(sum(CASE WHEN ch = 2
+                THEN (doc_id * 31 + ((y * 16 + x) * 3 + ch)) % 256 END)
+            AS BIGINT) AS sum_b
+FROM c GROUP BY doc_id, tx, ty
+""",
+    category=CAT,
+)
+def multimodal_image_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ViT-style patchify (Dosovitskiy et al. 2021): decode each PPM
+    through the REAL byte-level parser, cut the pixel plane into 8x4
+    tiles (ragged bottom edge kept), and emit per-tile pixel count +
+    per-channel integer sums — the patch-statistics pass that feeds
+    patch normalization / dead-patch filtering before ViT training.
+    The oracle replays the deterministic pixel lattice arithmetically;
+    the Spark side round-trips actual bytes through the decoder and a
+    numpy (h, w, 3) reshape.
+
+    Scale: map-only mapInPandas (zero exchanges) — decode + tiling
+    never leaves the mapper; tiles-per-image is a constant, so output
+    is O(corpus)."""
+
+    import numpy as np
+
+    def tile_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = {
+                "doc_id": [], "tile_x": [], "tile_y": [],
+                "n_px": [], "sum_r": [], "sum_g": [], "sum_b": [],
+            }
+            for d in pdf["doc_id"]:
+                f = _decode_ppm(_encode_ppm(int(d)))
+                arr = np.frombuffer(f["px"], dtype=np.uint8).reshape(
+                    f["height"], f["width"], 3
+                )
+                for ty in range((f["height"] + _TILE_H - 1) // _TILE_H):
+                    for tx in range(f["width"] // _TILE_W):
+                        tile = arr[
+                            ty * _TILE_H : ty * _TILE_H + _TILE_H,
+                            tx * _TILE_W : tx * _TILE_W + _TILE_W,
+                            :,
+                        ].astype(np.int64)
+                        out["doc_id"].append(int(d))
+                        out["tile_x"].append(tx)
+                        out["tile_y"].append(ty)
+                        out["n_px"].append(tile.shape[0] * tile.shape[1])
+                        out["sum_r"].append(int(tile[:, :, 0].sum()))
+                        out["sum_g"].append(int(tile[:, :, 1].sum()))
+                        out["sum_b"].append(int(tile[:, :, 2].sum()))
+            yield pd.DataFrame(out)
+
+    d = load(spark, sf_dir, "documents").select("doc_id")
+    return d.mapInPandas(
+        tile_batches,
+        schema=(
+            "doc_id bigint, tile_x int, tile_y int, n_px bigint, "
+            "sum_r bigint, sum_g bigint, sum_b bigint"
+        ),
+    )
+
+
+# Synthetic "video": a concatenation of real P6/PPM frames (that IS
+# what raw video is — a frame sequence), 16x4 px per frame, frame
+# count (doc_id % 7) + 2.  The pixel lattice shifts per frame and the
+# per-frame gradient changes every 3rd frame, so genuine cuts exist.
+_VID_W, _VID_H = 16, 4
+
+
+def _encode_video(doc_id: int) -> bytes:
+    frames = []
+    n_frames = (doc_id % 7) + 2
+    for f in range(n_frames):
+        header = f"P6\n{_VID_W} {_VID_H}\n255\n".encode("ascii")
+        npx = _VID_W * _VID_H * 3
+        frames.append(
+            header
+            + bytes(
+                (doc_id * 31 + f * 64 + i * ((f // 3) + 1)) % 256
+                for i in range(npx)
+            )
+        )
+    return b"".join(frames)
+
+
+@op(
+    "multimodal_video_scene_cut",
+    oracle=f"""
+WITH g AS (SELECT doc_id, (doc_id % 7) + 2 AS nf FROM documents),
+fp AS (
+  SELECT doc_id, f.f AS f, i.i AS i,
+         (doc_id * 31 + f.f * 64 + i.i * ((f.f // 3) + 1)) % 256 AS v
+  FROM g
+  CROSS JOIN (SELECT unnest(range(0, 8)) AS f) f
+  CROSS JOIN (SELECT unnest(range(0, {_VID_W * _VID_H * 3})) AS i) i
+  WHERE f.f < nf
+),
+d AS (
+  SELECT a.doc_id, a.f, sum(abs(a.v - b.v)) AS diff
+  FROM fp a
+  JOIN fp b ON b.doc_id = a.doc_id AND b.f = a.f - 1 AND b.i = a.i
+  GROUP BY a.doc_id, a.f
+)
+SELECT doc_id,
+       CAST(count(*) + 1 AS BIGINT) AS n_frames,
+       CAST(sum(CASE WHEN diff > {_VID_W * _VID_H * 3} * 80 THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_cuts,
+       CAST(max(diff) AS BIGINT) AS max_diff
+FROM d GROUP BY doc_id
+""",
+    category=CAT,
+)
+def multimodal_video_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scene-cut detection over a REAL decoded frame sequence: each
+    'video' payload is a concatenation of valid P6/PPM frames (which
+    is literally what raw video is); the Spark side walks the byte
+    stream frame by frame through the same _decode_ppm parser the
+    image ops use, then flags a cut wherever the inter-frame
+    sum-of-absolute-differences exceeds a mean-per-pixel-80 threshold
+    — the shot-boundary pass a video-curation pipeline runs before
+    sampling keyframes for captioning.  The oracle replays the
+    deterministic pixel lattice arithmetically.
+
+    Scale: map-only mapInPandas — decode + frame differencing never
+    leave the mapper and per-doc state is two frames (current +
+    previous), so memory is O(frame), not O(video)."""
+    import numpy as np
+
+
+    def cuts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        thresh = _VID_W * _VID_H * 3 * 80
+        out = {"doc_id": [], "n_frames": [], "n_cuts": [], "max_diff": []}
+        for pdf in batches:
+            for d in pdf["doc_id"]:
+                payload = _encode_video(int(d))
+                pos, prev, n_frames, n_cuts, max_diff = 0, None, 0, 0, 0
+                while pos < len(payload):
+                    # frame-by-frame walk: decode one P6 stream, advance
+                    f = _decode_ppm(payload[pos:])
+                    hdr_end = payload.index(b"255\n", pos) + 4
+                    pos = hdr_end + f["n_px"]
+                    cur = np.frombuffer(f["px"], dtype=np.uint8).astype(
+                        np.int64
+                    )
+                    if prev is not None:
+                        diff = int(np.abs(cur - prev).sum())
+                        max_diff = max(max_diff, diff)
+                        if diff > thresh:
+                            n_cuts += 1
+                    prev = cur
+                    n_frames += 1
+                out["doc_id"].append(int(d))
+                out["n_frames"].append(n_frames)
+                out["n_cuts"].append(n_cuts)
+                out["max_diff"].append(max_diff)
+            yield pd.DataFrame(out)
+            out = {k: [] for k in out}
+
+    d = load(spark, sf_dir, "documents").select("doc_id")
+    return d.mapInPandas(
+        cuts,
+        schema="doc_id bigint, n_frames bigint, n_cuts bigint, max_diff bigint",
+    )
+
+
+@op(
+    "multimodal_audio_zcr",
+    oracle="""
+WITH s AS (
+  SELECT doc_id, i.i AS i,
+         ((doc_id * 131 + i.i * 17) % 65536) - 32768 AS s
+  FROM documents
+  CROSS JOIN (SELECT unnest(range(0, 60)) AS i) i
+  WHERE i.i < (doc_id % 50) + 10
+),
+z AS (
+  SELECT doc_id, i, s,
+         lag(s) OVER (PARTITION BY doc_id ORDER BY i) AS prev
+  FROM s
+)
+SELECT doc_id,
+       CAST(count(*) AS BIGINT) AS n_samples,
+       CAST(sum(CASE WHEN prev IS NOT NULL
+                      AND (s >= 0) != (prev >= 0) THEN 1 ELSE 0 END)
+            AS BIGINT) AS zc_count,
+       CAST(1000000 * sum(CASE WHEN prev IS NOT NULL
+                      AND (s >= 0) != (prev >= 0) THEN 1 ELSE 0 END)
+            // (count(*) - 1) AS BIGINT) AS zcr_ppm
+FROM z GROUP BY doc_id
+""",
+    category=CAT,
+)
+def multimodal_audio_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Zero-crossing rate over the REAL RIFF/WAVE decode chain: count
+    of sign flips between consecutive PCM samples (nonnegative vs
+    negative), as count + exact ppm rate — the classic cheap
+    speech-vs-music / silence-vs-tone discriminator an audio-curation
+    pipeline runs alongside energy VAD (multimodal_audio_vad).  The
+    oracle replays the deterministic PCM lattice through a lag window;
+    the Spark side decodes actual RIFF bytes.
+
+    Scale: map-only mapInPandas — one pass, per-doc state is one
+    previous sample."""
+    import numpy as np
+
+
+    def zcr(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        out = {"doc_id": [], "n_samples": [], "zc_count": [], "zcr_ppm": []}
+        for pdf in batches:
+            for d in pdf["doc_id"]:
+                f = _decode_wav(_encode_wav(int(d)))
+                s = np.asarray(f["samples"], dtype=np.int64)
+                nn = s >= 0
+                zc = int((nn[1:] != nn[:-1]).sum())
+                out["doc_id"].append(int(d))
+                out["n_samples"].append(len(s))
+                out["zc_count"].append(zc)
+                out["zcr_ppm"].append(1_000_000 * zc // (len(s) - 1))
+            yield pd.DataFrame(out)
+            out = {k: [] for k in out}
+
+    d = load(spark, sf_dir, "documents").select("doc_id")
+    return d.mapInPandas(
+        zcr,
+        schema="doc_id bigint, n_samples bigint, zc_count bigint, zcr_ppm bigint",
+    )
+
+
+@op(
+    "multimodal_image_histogram_stats",
+    oracle=f"""
+WITH px AS (
+  SELECT doc_id,
+         unnest(range(0, {16} * ((doc_id % 13) + 1))) AS p
+  FROM documents
+),
+g AS (
+  SELECT doc_id, p,
+         ((doc_id * 31 + p * 3) % 256)
+       + ((doc_id * 31 + p * 3 + 1) % 256)
+       + ((doc_id * 31 + p * 3 + 2) % 256) AS gray
+  FROM px
+),
+b AS (SELECT doc_id, (gray * 8) // 766 AS bin FROM g),
+h AS (SELECT doc_id, bin, count(*) AS c FROM b GROUP BY doc_id, bin)
+SELECT doc_id,
+       CAST(sum(c) AS BIGINT) AS n_px,
+       CAST(count(*) AS BIGINT) AS n_nonzero_bins,
+       CAST(1000000 * max(c) // sum(c) AS BIGINT) AS max_bin_share_ppm
+FROM h GROUP BY doc_id
+""",
+    category=CAT,
+)
+def multimodal_image_histogram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gray-level histogram shape stats over the REAL PPM decode: 8-bin
+    histogram of per-pixel gray sums (r+g+b in 0..765), reporting
+    occupied-bin count and the max bin's share in ppm — the
+    blank/corrupt-image detector (a screenshot of one color peaks one
+    bin; a natural image spreads) that gates images before captioning
+    spend.  Oracle replays the pixel lattice; Spark decodes bytes and
+    histograms in numpy.
+
+    Scale: map-only mapInPandas, constant 8-int state per image."""
+    import numpy as np
+
+
+    def hist(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        out = {
+            "doc_id": [], "n_px": [], "n_nonzero_bins": [],
+            "max_bin_share_ppm": [],
+        }
+        for pdf in batches:
+            for d in pdf["doc_id"]:
+                f = _decode_ppm(_encode_ppm(int(d)))
+                arr = np.frombuffer(f["px"], dtype=np.uint8).astype(np.int64)
+                gray = arr.reshape(-1, 3).sum(axis=1)
+                bins = np.bincount(gray * 8 // 766, minlength=8)
+                n = int(gray.size)
+                out["doc_id"].append(int(d))
+                out["n_px"].append(n)
+                out["n_nonzero_bins"].append(int((bins > 0).sum()))
+                out["max_bin_share_ppm"].append(1_000_000 * int(bins.max()) // n)
+            yield pd.DataFrame(out)
+            out = {k: [] for k in out}
+
+    d = load(spark, sf_dir, "documents").select("doc_id")
+    return d.mapInPandas(
+        hist,
+        schema=(
+            "doc_id bigint, n_px bigint, n_nonzero_bins bigint, "
+            "max_bin_share_ppm bigint"
+        ),
+    )
+
+
+# Watermark detection reuses the tiles op wholesale: its DataFrame on
+# the Spark side, its arithmetic-replay oracle (embedded as a derived
+# table) on the DuckDB side.
+_TILES_ORACLE = OPS["multimodal_image_tiles"].oracle
+
+
+@op(
+    "multimodal_tile_watermark_detect",
+    oracle=f"""
+WITH q AS (
+  SELECT tile_x, tile_y,
+         (sum_r * 4) // (n_px * 256) AS qr,
+         (sum_g * 4) // (n_px * 256) AS qg,
+         (sum_b * 4) // (n_px * 256) AS qb
+  FROM ({_TILES_ORACLE}) tiles
+)
+SELECT tile_x, tile_y,
+       CAST(qr AS BIGINT) AS qr,
+       CAST(qg AS BIGINT) AS qg,
+       CAST(qb AS BIGINT) AS qb,
+       CAST(count(*) AS BIGINT) AS n_docs
+FROM q GROUP BY tile_x, tile_y, qr, qg, qb
+HAVING count(*) >= 5
+""",
+    category=CAT,
+)
+def multimodal_tile_watermark_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Watermark / logo / banner detection by coarse tile signatures:
+    each decoded tile's per-channel mean quantized to 2 bits, then
+    (position, signature) buckets appearing in >= 5 distinct images
+    are flagged — repeated same-looking content at the same position
+    is how overlay watermarks surface in a crawl, and removing them
+    before dedup stops a shared banner from gluing unrelated pages
+    into one near-dup cluster.
+
+    Scale: consumes the tiles op's map-only decode (zero exchanges),
+    adds one (position, signature)-keyed partial/final agg; the
+    signature space is constant (32 positions x 64 signatures) so the
+    output is bounded regardless of corpus size."""
+    tiles = multimodal_image_tiles(spark, sf_dir)
+    q = tiles.select(
+        "tile_x",
+        "tile_y",
+        F.expr("(sum_r * 4) div (n_px * 256)").alias("qr"),
+        F.expr("(sum_g * 4) div (n_px * 256)").alias("qg"),
+        F.expr("(sum_b * 4) div (n_px * 256)").alias("qb"),
+    )
+    return (
+        q.groupBy("tile_x", "tile_y", "qr", "qg", "qb")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") >= 5)
+        .select(
+            "tile_x",
+            "tile_y",
+            bigint(F.col("qr")).alias("qr"),
+            bigint(F.col("qg")).alias("qg"),
+            bigint(F.col("qb")).alias("qb"),
+            bigint(F.col("n")).alias("n_docs"),
+        )
+    )
+
+
+@op(
+    "multimodal_audio_clipping",
+    oracle="""
+WITH s AS (
+  SELECT doc_id, i.i AS i,
+         ((doc_id * 131 + i.i * 17) % 65536) - 32768 AS s
+  FROM documents
+  CROSS JOIN (SELECT unnest(range(0, 60)) AS i) i
+  WHERE i.i < (doc_id % 50) + 10
+)
+SELECT doc_id,
+       CAST(count(*) AS BIGINT) AS n_samples,
+       CAST(max(abs(s)) AS BIGINT) AS peak_abs,
+       CAST(sum(CASE WHEN abs(s) >= 32256 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_clipped,
+       CAST(1000000 * sum(CASE WHEN abs(s) >= 32256 THEN 1 ELSE 0 END)
+            // count(*) AS BIGINT) AS clip_ppm
+FROM s GROUP BY doc_id
+""",
+    category=CAT,
+)
+def multimodal_audio_clipping(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Clipping / loudness QA over the REAL RIFF/WAVE decode chain:
+    per clip, sample count, peak absolute amplitude, and the count +
+    exact ppm of samples within 512 of full scale (|s| >= 32256, about
+    -0.14 dBFS) — the hard-clipping gate an audio-curation pipeline
+    applies before spending ASR/captioning compute, next to the energy
+    VAD and ZCR ops.  The oracle replays the deterministic PCM
+    lattice; the Spark side decodes actual RIFF bytes.
+
+    Scale: map-only mapInPandas, constant per-doc state."""
+    import numpy as np
+
+
+    def clip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cols = ["doc_id", "n_samples", "peak_abs", "n_clipped", "clip_ppm"]
+        out = {k: [] for k in cols}
+        for pdf in batches:
+            for d in pdf["doc_id"]:
+                f = _decode_wav(_encode_wav(int(d)))
+                s = np.abs(np.asarray(f["samples"], dtype=np.int64))
+                nc = int((s >= 32256).sum())
+                out["doc_id"].append(int(d))
+                out["n_samples"].append(len(s))
+                out["peak_abs"].append(int(s.max()))
+                out["n_clipped"].append(nc)
+                out["clip_ppm"].append(1_000_000 * nc // len(s))
+            yield pd.DataFrame(out)
+            out = {k: [] for k in cols}
+
+    d = load(spark, sf_dir, "documents").select("doc_id")
+    return d.mapInPandas(
+        clip,
+        schema=(
+            "doc_id bigint, n_samples bigint, peak_abs bigint,"
+            " n_clipped bigint, clip_ppm bigint"
+        ),
+    )
+
+
+@op(
+    "multimodal_aspect_buckets",
+    oracle="""
+WITH dims AS (
+  SELECT doc_id, 16 AS w, (doc_id % 13) + 1 AS h FROM documents
+),
+assigned AS (
+  SELECT doc_id, w, h,
+         CASE WHEN h <= 4 THEN 4 WHEN h <= 8 THEN 8 ELSE 13 END AS canon_h
+  FROM dims
+)
+SELECT CAST(canon_h AS BIGINT) AS canon_h,
+       CAST(count(*) AS BIGINT) AS n_images,
+       CAST(sum(w * h) AS BIGINT) AS native_px,
+       CAST(sum(w * canon_h) AS BIGINT) AS padded_px,
+       CAST(1000000 * (sum(w * canon_h) - sum(w * h))
+            // sum(w * canon_h) AS BIGINT) AS waste_ppm
+FROM assigned GROUP BY canon_h
+""",
+    category=CAT,
+)
+def multimodal_aspect_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Aspect-ratio bucketing (the SDXL/NovelAI training technique):
+    assign each decoded image to the smallest canonical height bucket
+    that fits (4 / 8 / 13 here), and report per bucket the image
+    count, native vs padded pixel mass, and padding waste in exact
+    ppm — the number that tunes the bucket list (too few buckets
+    wastes compute on padding; too many starves batches).  The Spark
+    side reads REAL dimensions out of the PPM decode chain; the oracle
+    replays the deterministic size lattice.
+
+    Scale: map-only mapInPandas decode to (w, h), then a constant-size
+    bucket agg."""
+
+    def dims(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        out = {"doc_id": [], "w": [], "h": []}
+        for pdf in batches:
+            for d in pdf["doc_id"]:
+                img = _decode_ppm(_encode_ppm(int(d)))
+                out["doc_id"].append(int(d))
+                out["w"].append(img["width"])
+                out["h"].append(img["height"])
+            yield pd.DataFrame(out)
+            out = {k: [] for k in out}
+
+    d = load(spark, sf_dir, "documents").select("doc_id")
+    wh = d.mapInPandas(dims, schema="doc_id bigint, w bigint, h bigint")
+    assigned = wh.select(
+        "w",
+        "h",
+        F.when(F.col("h") <= 4, 4)
+        .when(F.col("h") <= 8, 8)
+        .otherwise(13)
+        .alias("canon_h"),
+    )
+    return assigned.groupBy("canon_h").agg(
+        bigint(F.count(F.lit(1))).alias("n_images"),
+        bigint(F.sum(F.col("w") * F.col("h"))).alias("native_px"),
+        bigint(F.sum(F.col("w") * F.col("canon_h"))).alias("padded_px"),
+        bigint(
+            F.expr(
+                "1000000 * (sum(w * canon_h) - sum(w * h))"
+                " div sum(w * canon_h)"
+            )
+        ).alias("waste_ppm"),
+    ).select(
+        bigint(F.col("canon_h")).alias("canon_h"),
+        "n_images",
+        "native_px",
+        "padded_px",
+        "waste_ppm",
+    )
+
+
+@op(
+    "multimodal_image_symmetry_score",
+    oracle="""
+WITH px AS (
+  SELECT doc_id, (doc_id % 13) + 1 AS h, y.y AS y, x.x AS x
+  FROM documents
+  CROSS JOIN (SELECT unnest(range(0, 13)) AS y) y
+  CROSS JOIN (SELECT unnest(range(0, 8)) AS x) x
+  WHERE y.y < (doc_id % 13) + 1
+),
+d AS (
+  SELECT doc_id, h,
+         abs(
+           ((doc_id * 31 + ((y * 16 + x) * 3 + 0)) % 256)
+           - ((doc_id * 31 + ((y * 16 + (15 - x)) * 3 + 0)) % 256)
+         ) AS dr
+  FROM px
+)
+SELECT doc_id,
+       CAST(count(*) AS BIGINT) AS n_pairs,
+       CAST(sum(dr) AS BIGINT) AS abs_diff_sum,
+       CAST(1000000 * sum(dr) // (count(*) * 255) AS BIGINT)
+         AS asymmetry_ppm
+FROM d GROUP BY doc_id
+""",
+    category=CAT,
+)
+def multimodal_image_symmetry_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Horizontal-mirror symmetry score over the REAL PPM decode: mean
+    absolute red-channel difference between each pixel and its
+    mirrored column (left half vs flipped right half), normalized to
+    exact ppm of full scale — near-zero marks mirrored/symmetric
+    content (logos, borders, flipped-augmentation dupes the pHash op
+    can miss because aHash is mirror-sensitive).  The oracle replays
+    the deterministic pixel lattice; the Spark side flips actual
+    decoded pixel arrays with numpy.
+
+    Scale: map-only mapInPandas, constant state per image."""
+    import numpy as np
+
+
+    def sym(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cols = ["doc_id", "n_pairs", "abs_diff_sum", "asymmetry_ppm"]
+        out = {k: [] for k in cols}
+        for pdf in batches:
+            for d in pdf["doc_id"]:
+                img = _decode_ppm(_encode_ppm(int(d)))
+                w, h = img["width"], img["height"]
+                px = (np.frombuffer(bytes(img["px"]), dtype=np.uint8)
+                      .astype(np.int64).reshape(h, w, 3))
+                red = px[:, :, 0]
+                half = w // 2
+                left = red[:, :half]
+                right = np.flip(red[:, w - half:], axis=1)
+                diff = np.abs(left - right)
+                s = int(diff.sum())
+                n = int(diff.size)
+                out["doc_id"].append(int(d))
+                out["n_pairs"].append(n)
+                out["abs_diff_sum"].append(s)
+                out["asymmetry_ppm"].append(1_000_000 * s // (n * 255))
+            yield pd.DataFrame(out)
+            out = {k: [] for k in cols}
+
+    d = load(spark, sf_dir, "documents").select("doc_id")
+    return d.mapInPandas(
+        sym,
+        schema=(
+            "doc_id bigint, n_pairs bigint, abs_diff_sum bigint,"
+            " asymmetry_ppm bigint"
+        ),
+    )
+
+
+@op(
+    "multimodal_grayscale_detect",
+    oracle="""
+WITH px AS (
+  SELECT doc_id, (doc_id % 13) + 1 AS h, y.y AS y, x.x AS x,
+         (doc_id * 31 + ((y.y * 16 + x.x) * 3 + 0)) % 256 AS r,
+         (doc_id * 31 + ((y.y * 16 + x.x) * 3 + 1)) % 256 AS g
+  FROM documents
+  CROSS JOIN (SELECT unnest(range(0, 13)) AS y) y
+  CROSS JOIN (SELECT unnest(range(0, 16)) AS x) x
+  WHERE y.y < (doc_id % 13) + 1
+),
+m AS (
+  SELECT doc_id,
+         count(*) AS n,
+         sum(r) AS sr, sum(g) AS sg,
+         sum(r * r) AS srr, sum(g * g) AS sgg, sum(r * g) AS srg
+  FROM px GROUP BY doc_id
+)
+SELECT doc_id,
+       CAST(n AS BIGINT) AS n_px,
+       CAST(floor(1000000.0 * (n * srg - sr * sg)
+            / sqrt(CAST((n * srr - sr * sr) AS DOUBLE)
+                   * (n * sgg - sg * sg))) AS BIGINT) AS rg_corr_ppm,
+       CAST(CASE WHEN 1000000.0 * (n * srg - sr * sg)
+                      / sqrt(CAST((n * srr - sr * sr) AS DOUBLE)
+                             * (n * sgg - sg * sg)) > 990000
+                 THEN 1 ELSE 0 END AS BIGINT) AS grayscale_like
+FROM m
+""",
+    category=CAT,
+)
+def multimodal_grayscale_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Grayscale-stored-as-RGB detection over the real PPM decode:
+    Pearson correlation between the R and G channel samples (exact
+    integer moment sums; the single sqrt runs on integers well below
+    2^53, so the double is the same in both engines), floored to ppm —
+    corr near 10^6 means the three channels carry one channel's
+    information and the image can be stored/processed at a third the
+    cost.  The left-half sample of the channel-stats op's discipline,
+    extended to a second moment.
+
+    Scale: map-only mapInPandas computing the six moment sums,
+    constant state per image."""
+    import numpy as np
+
+
+    def moments(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cols = ["doc_id", "n_px", "rg_corr_ppm", "grayscale_like"]
+        out = {k: [] for k in cols}
+        for pdf in batches:
+            for d in pdf["doc_id"]:
+                f = _decode_ppm(_encode_ppm(int(d)))
+                w, h = f["width"], f["height"]
+                px = (
+                    np.frombuffer(bytes(f["px"]), dtype=np.uint8)
+                    .astype(np.int64)
+                    .reshape(h, w, 3)
+                )
+                r = px[:, :, 0].ravel()
+                g = px[:, :, 1].ravel()
+                n = len(r)
+                num = n * int((r * g).sum()) - int(r.sum()) * int(g.sum())
+                d1 = n * int((r * r).sum()) - int(r.sum()) ** 2
+                d2 = n * int((g * g).sum()) - int(g.sum()) ** 2
+                import math
+
+                corr = math.floor(1000000.0 * num / math.sqrt(float(d1) * d2))
+                out["doc_id"].append(int(d))
+                out["n_px"].append(n)
+                out["rg_corr_ppm"].append(corr)
+                out["grayscale_like"].append(
+                    1 if 1000000.0 * num / math.sqrt(float(d1) * d2) > 990000
+                    else 0
+                )
+            yield pd.DataFrame(out)
+            out = {k: [] for k in cols}
+
+    d = load(spark, sf_dir, "documents").select("doc_id")
+    return d.mapInPandas(
+        moments,
+        schema=(
+            "doc_id bigint, n_px bigint, rg_corr_ppm bigint,"
+            " grayscale_like bigint"
+        ),
+    )
+
+
+def as_double_vec(col: str = "embedding") -> Column:
+    return F.transform(F.col(col), lambda x: x.cast("double"))
+
+
+_DUCK_EMB = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
+
+
+@op(
+    "multimodal_vector_norm",
+    oracle=f"""
+WITH e AS (SELECT vec_id, label, {_DUCK_EMB} AS emb FROM embeddings)
+SELECT vec_id, label,
+       round(sqrt(list_aggregate(list_transform(emb, x -> x * x), 'sum')), 4) AS l2,
+       CASE WHEN round(list_aggregate(emb, 'sum') / len(emb), 4) = 0
+            THEN CAST(0.0 AS DOUBLE)
+            ELSE round(list_aggregate(emb, 'sum') / len(emb), 4) END          AS mean_val,
+       list_aggregate(emb, 'min')                                             AS min_val,
+       list_aggregate(emb, 'max')                                             AS max_val
+FROM e
+""",
+    category=CAT,
+)
+def multimodal_vector_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-vector L2 norm and dim stats via HOFs — SURVEY.md §2.11
+    row 8.  min/max are raw float-origin elements: projected UNROUNDED
+    (exact across engines; rounding them at 4 dp hits shortest-repr
+    half-boundaries — observed at sf0.1).  l2/mean are derived reals
+    where 4 dp rounding is tie-free."""
+    e = spread(load(spark, sf_dir, "embeddings"))
+    emb = as_double_vec()
+    return e.select(
+        "vec_id",
+        "label",
+        r4(l2norm(emb)).alias("l2"),
+        nz(
+            r4(
+                F.aggregate(emb, F.lit(0.0), lambda s, x: s + x)
+                / F.size("embedding")
+            )
+        ).alias("mean_val"),
+        F.array_min(emb).alias("min_val"),
+        F.array_max(emb).alias("max_val"),
+    )
+
+
+@op(
+    "multimodal_join_doc_vec",
+    oracle=f"""
+SELECT doc_id, lang, label, n_chars,
+       CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+       round(sqrt(list_aggregate(
+         list_transform({_DUCK_EMB}, x -> x * x), 'sum')), 4) AS l2
+FROM documents JOIN embeddings ON vec_id = doc_id
+""",
+    category=CAT,
+)
+def multimodal_join_doc_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Join text table with its embedding table (1:1 on id), combining
+    text stats and vector stats — SURVEY.md §2.11 row 9."""
+    d = spread(load(spark, sf_dir, "documents"))
+    e = spread(load(spark, sf_dir, "embeddings"))
+    return d.join(e, d.doc_id == e.vec_id).select(
+        "doc_id",
+        "lang",
+        "label",
+        "n_chars",
+        bigint(F.size(F.split(F.col("text"), " "))).alias("n_tokens"),
+        r4(l2norm(as_double_vec())).alias("l2"),
     )

@@ -8,6 +8,7 @@ at 100 TB — the publish step of the reference pipeline generalized.
 
 from __future__ import annotations
 
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -495,4 +496,523 @@ def scan_partitioned_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
             bigint(F.count(F.lit(1))).alias("n"),
             bigint(F.sum(cents)).alias("value_cents"),
         )
+    )
+
+
+@op(
+    "sink_json_roundtrip",
+    oracle="""
+SELECT CAST(count(*) AS BIGINT) AS n,
+       round(sum(o_totalprice), 2) AS total
+FROM orders
+""",
+    category=CAT,
+)
+def sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """JSON lines publish + schema-on-read ingest round trip.
+
+    Hash-checked since round 3: the JSON cycle is lossless for these
+    types, so the post-roundtrip aggregate must equal the same
+    aggregate on the source table."""
+    out = scratch_dir(prefix="sink_json_")
+    o = load(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
+    )
+    o.write.mode("overwrite").json(out)
+    back = spark.read.schema(
+        "o_orderkey bigint, o_custkey bigint, o_orderstatus string, o_totalprice double"
+    ).json(out)
+    return back.agg(
+        bigint(F.count(F.lit(1))).alias("n"),
+        r2(F.sum("o_totalprice")).alias("total"),
+    )
+
+
+@op(
+    "sink_orc_roundtrip",
+    oracle="""
+SELECT CAST(count(*) AS BIGINT) AS n,
+       CAST(count(DISTINCT p_brand) AS BIGINT) AS n_brands,
+       round(sum(p_retailprice), 2) AS total_price
+FROM part
+""",
+    category=CAT,
+)
+def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ORC publish + ingest round trip — second columnar format
+    besides parquet.  Hash-checked since round 3: ORC round-trips
+    losslessly, so the post-roundtrip aggregate must equal the
+    source-table aggregate."""
+    out = scratch_dir(prefix="sink_orc_")
+    p = load(spark, sf_dir, "part")
+    p.write.mode("overwrite").orc(out)
+    back = spark.read.orc(out)
+    return back.agg(
+        bigint(F.count(F.lit(1))).alias("n"),
+        bigint(F.countDistinct("p_brand")).alias("n_brands"),
+        r2(F.sum("p_retailprice")).alias("total_price"),
+    )
+
+
+@op(
+    "scan_metadata_row_index",
+    oracle="""
+SELECT CAST(event_id % 7 AS BIGINT) AS bucket,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(event_id) AS BIGINT) AS sum_ri,
+       CAST(count(*) AS BIGINT) AS n_match
+FROM events GROUP BY bucket
+""",
+    category=CAT,
+)
+def scan_metadata_row_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The hidden `_metadata` file-source column family:
+    `_metadata.row_index` exposes each row's physical position in its
+    parquet file — the zero-cost stable row identity a pipeline uses
+    for resumable scans and row-level lineage (no window, no
+    monotonically_increasing_id non-determinism).  The fixture's
+    events file is written in event_id order with event_id dense from
+    0, so row_index must equal event_id exactly — n_match counts the
+    equality per bucket and the oracle replays it as count(*): ANY
+    divergence between physical position and the metadata column
+    breaks the hash.
+
+    ADVICE r3: that premise silently requires ONE data file —
+    row_index resets per file, so a multi-file fixture would fail as
+    an opaque hash mismatch.  Assert the layout loudly instead."""
+    path = f"{sf_dir}/events.parquet"
+    if os.path.isdir(path):
+        parts = [
+            f
+            for f in os.listdir(path)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+        if len(parts) != 1:
+            raise AssertionError(
+                f"scan_metadata_row_index premise broken: {path} holds "
+                f"{len(parts)} data files; row_index==event_id only holds "
+                "for a single dense, event_id-ordered file"
+            )
+    ev = spark.read.parquet(path).select(
+        F.col("_metadata.row_index").alias("ri"), "event_id"
+    )
+    return ev.groupBy((F.col("ri") % 7).cast("bigint").alias("bucket")).agg(
+        bigint(F.count(F.lit(1))).alias("n"),
+        bigint(F.sum("ri")).alias("sum_ri"),
+        bigint(F.sum(F.when(F.col("ri") == F.col("event_id"), 1).otherwise(0))).alias(
+            "n_match"
+        ),
+    )
+
+
+@op(
+    "scan_binary_files",
+    oracle="""
+SELECT doc_id,
+       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+       md5(text) AS content_md5
+FROM documents WHERE doc_id < 64
+""",
+    category=CAT,
+)
+def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``binaryFile`` source — whole-file ingestion of opaque
+    payloads (the on-ramp for image/audio corpora: one row per file
+    with path, length, and raw bytes).
+
+    Setup materializes the first 64 documents as individual files;
+    the scan reads them back whole-file and the oracle checks byte
+    length and content md5 against the source rows — a truncated or
+    corrupted read would hash-mismatch.
+
+    Scale: binaryFile is a FileFormat scan like parquet — splits are
+    whole files, listing is distributed, and pathGlobFilter/
+    recursiveFileLookup prune at listing time.  The per-file payload
+    stays in one row, so downstream decode parallelism is per-file
+    (pair with mapInPandas decoders, cf. multimodal_decode_ppm)."""
+    out = scratch_dir(prefix="binsrc_")
+    docs = (
+        load(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < 64)
+        .select("doc_id", "text")
+        .collect()
+    )
+    for row in docs:
+        with open(os.path.join(out, f"doc_{row.doc_id}.txt"), "wb") as fh:
+            fh.write(row.text.encode("utf-8"))
+    b = spark.read.format("binaryFile").load(out)
+    return b.select(
+        F.regexp_extract(F.col("path"), r"doc_(\d+)\.txt", 1)
+        .cast("bigint")
+        .alias("doc_id"),
+        bigint(F.col("length")).alias("n_bytes"),
+        F.md5(F.col("content")).alias("content_md5"),
+    )
+
+
+@op(
+    "scan_python_datasource",
+    oracle="""
+SELECT CAST(i AS BIGINT) AS i, CAST(i * i AS BIGINT) AS sq
+FROM range(0, 1000) t(i)
+""",
+    category=CAT,
+)
+def scan_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Custom PYTHON DataSource (the Spark 4 `pyspark.sql.datasource`
+    API): a user-defined source with its own partition planning and
+    per-partition reader — the extension point for ingesting from
+    systems Spark has no built-in connector for (internal APIs, custom
+    binary stores) while keeping the scan DISTRIBUTED (each
+    InputPartition reads independently on an executor).
+
+    The demo source emits a deterministic integer sequence across 8
+    planned partitions; the oracle recomputes it relationally, so a
+    partition-planning bug (dropped/duplicated partition) breaks the
+    hash."""
+    from pyspark.sql.datasource import (
+        DataSource,
+        DataSourceReader,
+        InputPartition,
+    )
+
+    class _SquaresReader(DataSourceReader):
+        def partitions(self):
+            return [InputPartition(p) for p in range(8)]
+
+        def read(self, partition):
+            p = partition.value
+            for i in range(p * 125, (p + 1) * 125):
+                yield (i, i * i)
+
+    class _SquaresSource(DataSource):
+        @classmethod
+        def name(cls) -> str:
+            return "deterministic_squares"
+
+        def schema(self) -> str:
+            return "i bigint, sq bigint"
+
+        def reader(self, schema):
+            return _SquaresReader()
+
+    try:
+        spark.dataSource.register(_SquaresSource)
+    except Exception:
+        pass  # already registered in this session
+    return spark.read.format("deterministic_squares").load()
+
+
+@op(
+    "scan_xml_roundtrip",
+    oracle="""
+SELECT o_orderpriority,
+       CAST(count(*) AS BIGINT) AS n,
+       round(sum(o_totalprice), 2) AS total
+FROM orders WHERE o_orderkey % 7 = 0
+GROUP BY 1
+""",
+    category=CAT,
+)
+def scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Native XML publish + schema-on-read ingest round trip (XML
+    support is built into Spark 4 — no spark-xml package): write a
+    deterministic orders slice as row-tagged XML, read it back with an
+    explicit schema, aggregate, and hash-check against the same
+    aggregate on the source table (the lossless-cycle oracle class) —
+    a row dropped by tag mismatch or a double mangled by text
+    round-tripping breaks the hash."""
+    out = scratch_dir(prefix="xmlsrc_") + "/orders"
+    o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 7 == 0).select(
+        "o_orderkey", "o_orderpriority", "o_totalprice"
+    )
+    (
+        o.write.format("xml")
+        .option("rootTag", "orders")
+        .option("rowTag", "order")
+        .mode("overwrite")
+        .save(out)
+    )
+    back = (
+        spark.read.format("xml")
+        .option("rowTag", "order")
+        .schema("o_orderkey bigint, o_orderpriority string, o_totalprice double")
+        .load(out)
+    )
+    return back.groupBy("o_orderpriority").agg(
+        bigint(F.count(F.lit(1))).alias("n"),
+        r2(F.sum("o_totalprice")).alias("total"),
+    )
+
+
+@op(
+    "scan_range_generator",
+    oracle="""
+SELECT CAST(x % 7 AS BIGINT) AS bucket,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(x) AS BIGINT) AS s,
+       CAST(sum(x * x) AS BIGINT) AS ss
+FROM range(1, 100001) t(x)
+GROUP BY bucket
+""",
+    category=CAT,
+)
+def scan_range_generator(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The `range` generator source: spark.range(1, 100001) produces
+    rows *in the executors* (numPartitions splits of the id space, no
+    driver materialization, no input files) — the standard way to
+    synthesize spines, fuzz inputs, and load generators at cluster
+    scale.  DuckDB's table function range() is the oracle mirror.
+    The aggregate proves no id is dropped or doubled across the
+    partition splits (sum and sum-of-squares over each residue
+    class)."""
+    r = spark.range(1, 100001).select(F.col("id").alias("x"))
+    return r.groupBy((F.col("x") % 7).cast("bigint").alias("bucket")).agg(
+        bigint(F.count(F.lit(1))).alias("n"),
+        bigint(F.sum("x")).alias("s"),
+        bigint(F.sum(F.col("x") * F.col("x"))).alias("ss"),
+    )
+
+
+@op(
+    "sink_dynamic_partition_overwrite",
+    oracle="""
+WITH b AS (SELECT o_orderpriority,
+                  CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+           FROM orders),
+f AS (SELECT o_orderpriority,
+             CASE WHEN o_orderpriority = '1-URGENT'
+                  THEN (cents * 9) // 10 ELSE cents END AS cents
+      FROM b)
+SELECT o_orderpriority,
+       CAST(count(*) AS BIGINT) AS n,
+       round(sum(cents) / 100.0, 2) AS total
+FROM f GROUP BY o_orderpriority
+""",
+    category=CAT,
+)
+def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dynamic partition overwrite — the lakehouse partition-replace
+    primitive: a full partitioned write, then a second overwrite-mode
+    write that carries ONLY the 1-URGENT partition (a 10% price cut,
+    exact integer cents) with partitionOverwriteMode=dynamic.  Static
+    overwrite would TRUNCATE the table to the one incoming partition;
+    dynamic replaces exactly the partitions present in the new data
+    and leaves the other four untouched — the read-back aggregate
+    hash-proves both halves (urgent rows updated, others intact).
+
+    Scale: partition-granular replacement is O(changed partition), not
+    O(table) — the daily-restatement pattern for partitioned facts."""
+
+    out = scratch_dir(prefix="sink_dpo_")
+    base = load(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        "o_orderpriority",
+    )
+    base.write.partitionBy("o_orderpriority").mode("overwrite").parquet(out)
+    upd = (
+        base.filter(F.col("o_orderpriority") == "1-URGENT")
+        .withColumn("cents", F.expr("(cents * 9) div 10"))
+    )
+    (
+        upd.write.partitionBy("o_orderpriority")
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(out)
+    )
+    rb = spark.read.parquet(out)
+    return rb.groupBy("o_orderpriority").agg(
+        bigint(F.count(F.lit(1))).alias("n"),
+        F.round(F.sum("cents") / 100.0, 2).alias("total"),
+    )
+
+
+@op(
+    "scan_csv_multiline_quotes",
+    oracle="""
+SELECT c_mktsegment,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(length(c_name || chr(10) || 'line2,"q"' )) AS BIGINT) AS chars,
+       CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT) AS cents
+FROM customer GROUP BY c_mktsegment
+""",
+    category=CAT,
+)
+def scan_csv_multiline_quotes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RFC 4180 multiline CSV round trip: fields containing embedded
+    newlines, commas AND double quotes are written quoted (escape='"'
+    gives the standard doubled-quote form) and read back with
+    multiLine=true.  The lossless-cycle aggregate (row count, exact
+    character mass including the newline, integer cents) breaks if
+    the reader splits records on embedded newlines or mangles quotes.
+
+    Scale note: multiLine=true makes CSV files unsplittable (a record
+    boundary can't be found mid-file), so at cluster scale this is for
+    many-medium-files layouts — exactly how the option behaves here,
+    one file per shuffle partition."""
+
+    out = scratch_dir(prefix="csv_multiline_")
+    src = load(spark, sf_dir, "customer").select(
+        "c_custkey",
+        F.concat(F.col("c_name"), F.lit('\nline2,"q"')).alias("text"),
+        "c_mktsegment",
+        F.round(F.col("c_acctbal") * 100).cast("bigint").alias("cents"),
+    )
+    (
+        src.write.mode("overwrite")
+        .option("header", "true")
+        .option("quoteAll", "true")
+        .option("escape", '"')
+        .csv(out)
+    )
+    rb = (
+        spark.read.option("header", "true")
+        .option("multiLine", "true")
+        .option("escape", '"')
+        .schema("c_custkey bigint, text string, c_mktsegment string, cents bigint")
+        .csv(out)
+    )
+    return rb.groupBy("c_mktsegment").agg(
+        bigint(F.count(F.lit(1))).alias("n"),
+        bigint(F.sum(F.length("text"))).alias("chars"),
+        bigint(F.sum("cents")).alias("cents"),
+    )
+
+
+@op(
+    "scan_text_lines",
+    oracle="""
+SELECT lang,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(length(text)) AS BIGINT) AS chars,
+       CAST(sum(doc_id) AS BIGINT) AS id_sum
+FROM documents GROUP BY lang
+""",
+    category=CAT,
+)
+def scan_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The `text` source: one record per LINE — the rawest corpus
+    interchange format (and the one every crawl dump starts as).
+    Documents are published as doc_id<TAB>lang<TAB>text lines and
+    re-ingested with spark.read.text + split_part projection; the
+    lossless-cycle aggregate (count, exact char mass, id checksum per
+    lang) fails if any line splits, drops, or mangles.  Text files
+    split by line at any byte offset, so unlike multiline CSV this
+    source stays fully splittable at 100 TB."""
+
+    out = scratch_dir(prefix="text_lines_")
+    # NULL-safe TSV: concat_ws SKIPS null fields, silently shifting
+    # every later column left (round-8 NULL-payload sweep: a NULL lang
+    # put the text in the lang field).  NULLs are encoded as the
+    # classic \\N sentinel and decoded back symmetrically.
+    nul = "\\N"
+    src = load(spark, sf_dir, "documents").select(
+        F.concat_ws(
+            "\t",
+            F.col("doc_id").cast("string"),
+            F.coalesce(F.col("lang"), F.lit(nul)),
+            F.coalesce(F.col("text"), F.lit(nul)),
+        ).alias("value")
+    )
+    src.write.mode("overwrite").text(out)
+    rb = spark.read.text(out).select(
+        F.split_part(F.col("value"), F.lit("\t"), F.lit(1)).cast("bigint").alias(
+            "doc_id"
+        ),
+        F.nullif(
+            F.split_part(F.col("value"), F.lit("\t"), F.lit(2)), F.lit(nul)
+        ).alias("lang"),
+        F.nullif(
+            F.split_part(F.col("value"), F.lit("\t"), F.lit(3)), F.lit(nul)
+        ).alias("text"),
+    )
+    return rb.groupBy("lang").agg(
+        bigint(F.count(F.lit(1))).alias("n"),
+        bigint(F.sum(F.length("text"))).alias("chars"),
+        bigint(F.sum("doc_id")).alias("id_sum"),
+    )
+
+
+@op(
+    "sink_compressed_roundtrip",
+    oracle="""
+SELECT l_returnflag,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+         AS cents
+FROM lineitem GROUP BY l_returnflag
+""",
+    category=CAT,
+)
+def sink_compressed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Codec-explicit parquet cycle: write with zstd (the 100 TB
+    default — ~2x better ratio than snappy at similar scan speed,
+    splittable because parquet compresses per-page), read back, and
+    hash-prove losslessness.  Codec choice is a table-level knob a
+    petabyte lake gets right once; the cycle check catches a codec
+    that silently truncates or corrupts."""
+
+    out = scratch_dir(prefix="zstd_cycle_")
+    src = load(spark, sf_dir, "lineitem").select(
+        "l_returnflag",
+        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
+    )
+    src.write.mode("overwrite").option("compression", "zstd").parquet(out)
+    rb = spark.read.parquet(out)
+    return rb.groupBy("l_returnflag").agg(
+        bigint(F.count(F.lit(1))).alias("n"),
+        bigint(F.sum("cents")).alias("cents"),
+    )
+
+
+@op(
+    "scan_parquet_row_group_prune",
+    oracle="""
+SELECT o_orderpriority,
+       CAST(count(*) AS BIGINT) AS n_orders,
+       round(sum(o_totalprice), 2) AS revenue
+FROM orders
+WHERE o_orderdate >= TIMESTAMP '1996-01-01'
+  AND o_orderdate <  TIMESTAMP '1997-01-01'
+GROUP BY o_orderpriority
+""",
+    category=CAT,
+)
+def scan_parquet_row_group_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Row-group (zone-map) pruning round trip: write orders
+    range-partitioned + sorted by o_orderdate with SMALL parquet row
+    groups (parquet.block.size=128 KiB), then read back through a raw
+    timestamp range predicate.  Because the layout is date-sorted,
+    parquet min/max statistics prune whole row groups before
+    decompression — with the pushed filter asserted in
+    tests/test_plans.py.  Hash-checked lossless against the same
+    filter+agg on the source table.
+
+    At 100 TB this sort-on-write + stats-prune-on-read pair is the
+    single highest-leverage scan optimization there is: a day's query
+    over a year's table touches ~1/365 of the row groups.  The same
+    sorted layout is what layout_partition_sort publishes at directory
+    granularity; this op proves the WITHIN-file granularity."""
+    out = scratch_dir(prefix="rg_prune_")
+    o = load(spark, sf_dir, "orders")
+    (
+        # Write fan-out derives from the session (range_parts — VERDICT
+        # r8 item 6): a literal 4 pins the sort+write stage to 4 tasks
+        # at any scale.  Pruning effectiveness is layout-local (each
+        # range partition is date-sorted regardless of how many there
+        # are), so the count only affects write parallelism.
+        o.repartitionByRange(range_parts(spark), "o_orderdate")
+        .sortWithinPartitions("o_orderdate")
+        .write.option("parquet.block.size", 131072)
+        .mode("overwrite")
+        .parquet(out)
+    )
+    back = spark.read.parquet(out).filter(
+        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
+    )
+    return back.groupBy("o_orderpriority").agg(
+        bigint(F.count(F.lit(1))).alias("n_orders"),
+        r2(F.sum("o_totalprice")).alias("revenue"),
     )

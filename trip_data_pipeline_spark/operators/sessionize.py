@@ -3,27 +3,38 @@ SURVEY.md §2.9's session windows, benched in BASELINE.md.
 
 Same semantics as stream_session_window (30-min inactivity gap,
 session = [first, last+gap)), size-tiered since round 10: the JVM
-double-window shape below the SESSIONIZE_ARROW_MIN_BYTES env
-threshold of events scan, an Arrow grouped-map state collapse (one
-user-keyed shuffle, one vectorized per-user pass) above it — measured
+double-window shape below the 256 MB ``_ARROW_MIN_BYTES`` tier of
+events scan, an Arrow grouped-map state collapse (one user-keyed
+shuffle, one vectorized per-user pass) above it — measured
 2x over the double window at 1000x; the full A/B (native
 session_window, partition counts, Arrow) is in the op docstring and
 docs/SCALE.md.  At 100 TB this shuffles each user's events once and
 keeps per-user state linear.
+
+``sessionize_gap_and_cap`` adds a maximum session span on top of the
+inactivity gap, which needs ordered per-user state (an Arrow
+grouped-map pass) rather than a pure window.
 """
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trip_data_pipeline_spark.io import load
-from trip_data_pipeline_spark.operators.common import bigint
+from trip_data_pipeline_spark.io import load, table_path
+from trip_data_pipeline_spark.operators.common import _path_bytes, bigint
 from trip_data_pipeline_spark.registry import op
+from trip_data_pipeline_spark.session import one_wave_partitions
+
+CAT = "2.9 streaming (batch form)"
 
 GAP_US = 1800 * 1_000_000
+
+# Events-scan size at or below which sessionize_batch runs the JVM
+# double-window shape; above it (or when the path cannot be statted)
+# the Arrow grouped-map runs.  Derivation in the op docstring.  The op
+# is plan-memoized, so a caller that patches this must evict_plan first.
+_ARROW_MIN_BYTES = 256 << 20
 
 
 @op(
@@ -46,12 +57,12 @@ SELECT user_id,
        CAST(count(*) AS BIGINT)                       AS n_events
 FROM s GROUP BY user_id, sid
 """,
-    category="2.9 streaming (batch form)",
+    category=CAT,
     pure=True,
 )
 def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization, size-tiered (the join_star_5way pattern): below
-    the SESSIONIZE_ARROW_MIN_BYTES threshold of events scan the JVM
+    the _ARROW_MIN_BYTES tier of events scan the JVM
     double-window shape runs (no Python worker spin-up); above it — or
     when the path cannot be statted (remote URI) — an Arrow
     grouped-map state collapse: shuffle once by user_id, then one
@@ -59,17 +70,6 @@ def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids, groupby-agg) inside applyInPandas.  Both branches are
     value-identical (exceptAll 0/0 at sf0.01 AND 10x) and share the
     one oracle.
-
-    Round-11 hygiene (VERDICT r10 item 5 + ADVICE r10): the tier
-    threshold env var is read at CALL time, so a mid-session override
-    (the adversarial sweeps set SESSIONIZE_ARROW_MIN_BYTES=0 to force
-    the Arrow branch on tiny fixtures) takes effect without
-    re-importing the module — callers that override after a prior call
-    must still evict_plan("sessionize_batch") because the op is
-    pure=True plan-memoized; and the small-tier window shape is
-    INLINED below (it was a module-level helper, which sat outside the
-    stamp-freshness fingerprint — half the op's behavior was
-    unfingerprinted).
 
     Tier default (round-10, measured three-point crossover): below
     256 MB of events scan the JVM double-window shape wins (no Python
@@ -121,15 +121,12 @@ def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from trip_data_pipeline_spark.io import table_path
-    from trip_data_pipeline_spark.operators.joins import _path_bytes
 
     ev = load(spark, sf_dir, "events").filter(F.col("ts").isNotNull()).select(
         "user_id", "event_id", F.unix_micros("ts").alias("us")
     )
-    arrow_min = int(_os.environ.get("SESSIONIZE_ARROW_MIN_BYTES", 256 << 20))
     ev_bytes = _path_bytes(table_path(sf_dir, "events"))
-    if 0 < ev_bytes <= arrow_min:
+    if 0 < ev_bytes <= _ARROW_MIN_BYTES:
         # JVM double-window shape (small tier): lag -> new-session
         # flag -> running sum -> hash agg over one user-keyed sort.
         from pyspark.sql import Window
@@ -177,4 +174,128 @@ def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.groupBy("user_id").applyInPandas(
         sess,
         "user_id bigint, sess_start_us bigint, dur_us bigint, n_events bigint",
+    )
+
+
+@op(
+    "sessionize_gap_and_cap",
+    oracle="""
+WITH RECURSIVE ev AS (
+  SELECT user_id, epoch_us(ts) AS t, event_id,
+         row_number() OVER (PARTITION BY user_id
+                            ORDER BY epoch_us(ts), event_id) AS rn
+  FROM events
+),
+r AS (
+  SELECT user_id, rn, t, t AS sess_start, 1 AS sess
+  FROM ev WHERE rn = 1
+  UNION ALL
+  SELECT e.user_id, e.rn, e.t,
+         CASE WHEN e.t - r.t > 1800000000 OR e.t - r.sess_start > 7200000000
+              THEN e.t ELSE r.sess_start END,
+         r.sess + CASE WHEN e.t - r.t > 1800000000
+                         OR e.t - r.sess_start > 7200000000
+                       THEN 1 ELSE 0 END
+  FROM r JOIN ev e ON e.user_id = r.user_id AND e.rn = r.rn + 1
+),
+sessions AS (
+  SELECT user_id, sess, count(*) AS n_ev,
+         (max(t) - min(t)) // 1000000 AS dur_s
+  FROM r GROUP BY user_id, sess
+)
+SELECT user_id,
+       CAST(count(*) AS BIGINT) AS n_sessions,
+       CAST(max(n_ev) AS BIGINT) AS max_events,
+       CAST(sum(dur_s) AS BIGINT) AS total_dur_s
+FROM sessions GROUP BY user_id
+""",
+    category=CAT,
+)
+def sessionize_gap_and_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sessionization with BOTH a 30-min inactivity gap and a 2-hour
+    maximum session duration.  The cap makes this genuinely
+    sequential: whether event i opens a new session depends on the
+    running session start, which depends on every earlier break — no
+    window/gaps-and-islands form exists (the plain gap rule is
+    `sessionize_batch`; this is the variant Spark's built-ins can't
+    express).  Per the brief, that's exactly when to drop to
+    applyInPandas: per-user Arrow batches, a linear int64-µs scan per
+    user, state bounded by one user's events.  The DuckDB oracle
+    replays the same recurrence as a recursive CTE over per-user event
+    ranks — depth = max events per user, work O(total events).
+
+    Scale: one shuffle by user_id; session state never leaves the
+    executor.  Skewed users bound the worst task at |events(u)|.
+
+    Round-12 (guide §4.2/§4.5): was groupBy(user).applyInPandas — one
+    Python call + one pandas DataFrame construction PER USER (~10k
+    sub-millisecond groups at sf0.1, pure per-group overhead).  Now a
+    partition-scan mapInPandas over repartition(user) +
+    sortWithinPartitions(user, t, event_id): the JVM does the sort
+    once, each task walks its whole partition's columns with
+    carry-over state across Arrow batches, and the per-group Python
+    overhead disappears.  Same recurrence, same one shuffle."""
+    import pandas as pd
+
+    # explicit partition count: AQE would coalesce a bare
+    # repartition(col) of this small input to 1 partition, serializing
+    # the Python scan, and cannot coalesce an explicit one — so one
+    # task wave (more tasks than cores only add per-task Python cost)
+    n_parts = one_wave_partitions(spark)
+    ev = (
+        load(spark, sf_dir, "events")
+        .select("user_id", F.expr("unix_micros(ts)").alias("t"), "event_id")
+        .repartition(n_parts, "user_id")
+        .sortWithinPartitions("user_id", "t", "event_id")
+    )
+
+    GAP = 1800 * 1000000
+    CAP = 7200 * 1000000
+
+    def sess_scan(batches):
+        uid = None
+        n_sessions = max_events = total_dur = cur_n = 0
+        cur_start = prev = None
+        out_u, out_s, out_m, out_d = [], [], [], []
+
+        def flush():
+            total = total_dur + (prev - cur_start) // 1000000
+            out_u.append(uid)
+            out_s.append(n_sessions)
+            out_m.append(max(max_events, cur_n))
+            out_d.append(total)
+
+        for pdf in batches:
+            # Python lists, not per-row numpy scalar indexing: ~1.8x less
+            # CPU for this loop and the CUSUM one on sf0.1 events (CHANGES.md)
+            for u, t in zip(pdf["user_id"].tolist(), pdf["t"].tolist()):
+                if u != uid:
+                    if uid is not None:
+                        flush()
+                    uid = u
+                    n_sessions = max_events = total_dur = cur_n = 0
+                    cur_start = prev = None
+                if cur_start is None or t - prev > GAP or t - cur_start > CAP:
+                    if cur_start is not None:
+                        total_dur += (prev - cur_start) // 1000000
+                        max_events = max(max_events, cur_n)
+                    n_sessions += 1
+                    cur_start = t
+                    cur_n = 0
+                cur_n += 1
+                prev = t
+        if uid is not None:
+            flush()
+        yield pd.DataFrame(
+            {
+                "user_id": out_u,
+                "n_sessions": out_s,
+                "max_events": out_m,
+                "total_dur_s": out_d,
+            }
+        )
+
+    return ev.mapInPandas(
+        sess_scan,
+        schema="user_id bigint, n_sessions bigint, max_events bigint, total_dur_s bigint",
     )

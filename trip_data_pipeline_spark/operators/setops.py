@@ -6,7 +6,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trip_data_pipeline_spark.io import load
-from trip_data_pipeline_spark.operators.common import bigint
+from trip_data_pipeline_spark.operators.common import bigint, spread
 from trip_data_pipeline_spark.registry import op
 
 CAT = "2.7 set operations"
@@ -235,4 +235,71 @@ def sample_topk_hash_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 5)
         .select("lang", "doc_id", bigint(F.col("rn")).alias("rn"))
+    )
+
+
+@op(
+    "sample_negatives_hash_ring",
+    oracle="""
+WITH n AS (SELECT count(*) AS n_docs FROM documents),
+pos AS (SELECT doc_id, lang FROM documents),
+neg AS (
+  SELECT p.doc_id, j.j AS neg_rank,
+         (p.doc_id + j.j * 104729) % n.n_docs AS neg_id
+  FROM pos p, n, (SELECT unnest([1, 2, 3]) AS j) j
+  WHERE (p.doc_id + j.j * 104729) % n.n_docs <> p.doc_id
+)
+SELECT neg.doc_id, neg.neg_rank, CAST(neg.neg_id AS BIGINT) AS neg_id,
+       CAST(CASE WHEN p.lang = q.lang THEN 1 ELSE 0 END AS BIGINT)
+         AS same_lang
+FROM neg
+JOIN pos p ON p.doc_id = neg.doc_id
+JOIN pos q ON q.doc_id = neg.neg_id
+""",
+    category=CAT,
+)
+def sample_negatives_hash_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic negative sampling for contrastive training: each
+    doc gets k=3 negatives at fixed prime strides around the dense-id
+    ring ((id + j*104729) mod N — reproducible across runs and
+    engines, no RNG), annotated with a same-language flag so the
+    training mix can control easy-vs-hard negative ratios.  Requires
+    dense ids; the ids_global_contiguous op is the densifier when a
+    corpus lacks them (its docstring carries the premise).
+
+    Scale: the 1-row corpus count broadcasts, the 3-way explode is
+    map-side, and the negative's features arrive via one equi-join on
+    the ring id — no shuffle beyond that join; self-pairs (N divides
+    the stride ring onto itself) are excluded identically in both
+    engines."""
+    docs = spread(load(spark, sf_dir, "documents"), min_fraction=0.25).select(
+        "doc_id", "lang"
+    )
+    n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
+    neg = (
+        docs.crossJoin(F.broadcast(n))
+        .select(
+            "doc_id",
+            "lang",
+            F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("neg_rank"),
+            "n_docs",
+        )
+        .select(
+            "doc_id",
+            "lang",
+            "neg_rank",
+            F.expr("(doc_id + neg_rank * 104729) % n_docs").alias("neg_id"),
+        )
+        .filter(F.col("neg_id") != F.col("doc_id"))
+    )
+    q = docs.select(
+        F.col("doc_id").alias("neg_id"), F.col("lang").alias("neg_lang")
+    )
+    return neg.join(q, "neg_id").select(
+        "doc_id",
+        "neg_rank",
+        bigint(F.col("neg_id")).alias("neg_id"),
+        bigint(
+            F.when(F.col("lang") == F.col("neg_lang"), 1).otherwise(0)
+        ).alias("same_lang"),
     )

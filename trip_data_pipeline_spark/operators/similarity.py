@@ -1,5 +1,6 @@
-"""§2.11 similarity search + multimodal vector ops (SURVEY.md §2.11)
-plus the IVF-bucketed ANN scale path the task brief asks for.
+"""§2.11 similarity search (SURVEY.md §2.11) plus the IVF-bucketed ANN
+scale path the task brief asks for, and the embedding-quality reports
+(quantization, truncation, drift, recall) around it.
 
 Vector math is pure higher-order functions (zip_with/aggregate) over
 double-cast arrays — JVM-side, no UDFs (FIXTURES.md gotcha 5: cast
@@ -21,54 +22,29 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trip_data_pipeline_spark.io import load
-from trip_data_pipeline_spark.operators.common import bigint, nz, r4, spread
+from trip_data_pipeline_spark.operators.common import (
+    bigint,
+    dot,
+    fr4,
+    l2norm,
+    nz,
+    qvec,
+    r4,
+    spread,
+)
 from trip_data_pipeline_spark.registry import op
 
 CAT = "2.11 similarity search"
-
-
-def as_double_vec(col: str = "embedding") -> Column:
-    return F.transform(F.col(col), lambda x: x.cast("double"))
-
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-
-
-def l2norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
 
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2norm(a) * l2norm(b))
 
 
-def qvec(col: str = "embedding") -> Column:
-    """Embedding quantized to integer millis — floor(x*1000 + 0.5) —
-    kept as doubles.  Dot products and squared norms of these are
-    exact integers well under 2^53, so their sums are EXACT in any
-    partial-agg order, sqrt/divide are correctly-rounded IEEE ops on
-    bit-identical inputs, and the resulting cosine is bit-identical
-    across Spark and DuckDB: rankings computed on it cannot flip at a
-    float boundary (round-3 ADVICE fix)."""
-    return F.transform(
-        F.col(col),
-        lambda x: F.floor(x.cast("double") * 1000 + F.lit(0.5)).cast("double"),
-    )
-
-
-def fr4(c: Column) -> Column:
-    """Engine-portable 4-dp half-up round: floor(x*10000 + 0.5)/10000.
-    Multiply/add/floor/divide are single IEEE ops, identical on both
-    engines for a bit-identical input — unlike round(), whose decimal
-    re-rounding path is engine-specific.  Never produces -0.0."""
-    return F.floor(c * 10000 + F.lit(0.5)).cast("double") / F.lit(10000.0)
-
-
-_DUCK_EMB = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
 # SQL mirrors of qvec / fr4 (see qvec docstring for the exactness
 # argument; list_inner_product(q, q) == l2norm-squared, both exact)
 _DUCK_QEMB = "list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1000 + 0.5))"
+
 _DUCK_QNORM = f"sqrt(list_inner_product({_DUCK_QEMB}, {_DUCK_QEMB}))"
 
 
@@ -375,70 +351,6 @@ def sim_ann_ivf_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @op(
-    "multimodal_vector_norm",
-    oracle=f"""
-WITH e AS (SELECT vec_id, label, {_DUCK_EMB} AS emb FROM embeddings)
-SELECT vec_id, label,
-       round(sqrt(list_aggregate(list_transform(emb, x -> x * x), 'sum')), 4) AS l2,
-       CASE WHEN round(list_aggregate(emb, 'sum') / len(emb), 4) = 0
-            THEN CAST(0.0 AS DOUBLE)
-            ELSE round(list_aggregate(emb, 'sum') / len(emb), 4) END          AS mean_val,
-       list_aggregate(emb, 'min')                                             AS min_val,
-       list_aggregate(emb, 'max')                                             AS max_val
-FROM e
-""",
-    category=CAT,
-)
-def multimodal_vector_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-vector L2 norm and dim stats via HOFs — SURVEY.md §2.11
-    row 8.  min/max are raw float-origin elements: projected UNROUNDED
-    (exact across engines; rounding them at 4 dp hits shortest-repr
-    half-boundaries — observed at sf0.1).  l2/mean are derived reals
-    where 4 dp rounding is tie-free."""
-    e = spread(load(spark, sf_dir, "embeddings"))
-    emb = as_double_vec()
-    return e.select(
-        "vec_id",
-        "label",
-        r4(l2norm(emb)).alias("l2"),
-        nz(
-            r4(
-                F.aggregate(emb, F.lit(0.0), lambda s, x: s + x)
-                / F.size("embedding")
-            )
-        ).alias("mean_val"),
-        F.array_min(emb).alias("min_val"),
-        F.array_max(emb).alias("max_val"),
-    )
-
-
-@op(
-    "multimodal_join_doc_vec",
-    oracle=f"""
-SELECT doc_id, lang, label, n_chars,
-       CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       round(sqrt(list_aggregate(
-         list_transform({_DUCK_EMB}, x -> x * x), 'sum')), 4) AS l2
-FROM documents JOIN embeddings ON vec_id = doc_id
-""",
-    category=CAT,
-)
-def multimodal_join_doc_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join text table with its embedding table (1:1 on id), combining
-    text stats and vector stats — SURVEY.md §2.11 row 9."""
-    d = spread(load(spark, sf_dir, "documents"))
-    e = spread(load(spark, sf_dir, "embeddings"))
-    return d.join(e, d.doc_id == e.vec_id).select(
-        "doc_id",
-        "lang",
-        "label",
-        "n_chars",
-        bigint(F.size(F.split(F.col("text"), " "))).alias("n_tokens"),
-        r4(l2norm(as_double_vec())).alias("l2"),
-    )
-
-
-@op(
     "embed_quantize_int8",
     oracle="""
 SELECT vec_id,
@@ -487,4 +399,808 @@ def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             ",",
         ).alias("q"),
+    )
+
+
+def _lsh_planes_sql() -> str:
+    """DuckDB bucket expression for the 6 deterministic hyperplanes."""
+    bits = []
+    for j in range(6):
+        s = (
+            "list_aggregate(list_transform(range(0, 64), i -> "
+            f"CAST(floor(CAST(embedding[i + 1] AS DOUBLE) * 1000 + 0.5) AS BIGINT)"
+            f" * ((((i * 31) + {j * 17}) % 7) - 3)), 'sum')"
+        )
+        bits.append(f"CAST({s} > 0 AS INT) * {1 << j}")
+    return " + ".join(bits)
+
+
+@op(
+    "sim_ann_lsh_hyperplane",
+    oracle=f"""
+WITH e AS (
+  SELECT vec_id,
+         list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1000 + 0.5)) AS emb,
+         {_lsh_planes_sql()} AS bucket
+  FROM embeddings
+),
+n AS (SELECT vec_id, emb, bucket, sqrt(list_inner_product(emb, emb)) AS nrm FROM e),
+q AS (SELECT vec_id AS q_id, emb AS qe, nrm AS qn, bucket FROM n WHERE vec_id < 20),
+s AS (SELECT q.q_id, n.vec_id AS c_id,
+             floor(list_inner_product(q.qe, n.emb) / (q.qn * n.nrm) * 10000 + 0.5)
+               / 10000.0 AS cos
+      FROM q JOIN n ON n.bucket = q.bucket AND n.vec_id <> q.q_id),
+r AS (SELECT q_id, c_id, cos,
+             CAST(row_number() OVER (PARTITION BY q_id
+                    ORDER BY cos DESC, c_id ASC) AS BIGINT) AS rn
+      FROM s)
+SELECT q_id, c_id AS neighbor_id, cos, rn FROM r WHERE rn <= 3
+""",
+    category=CAT,
+)
+def sim_ann_lsh_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Random-hyperplane LSH ANN: 6 deterministic integer-weight
+    hyperplanes (weight(i, j) = ((i*31 + j*17) % 7) - 3 over the 64
+    dims) sign-quantize each embedding into a 6-bit bucket; neighbors
+    are searched only within the bucket via an equality join.
+
+    Complements `sim_ann_ivf_bucket` (data-dependent octant quantizer)
+    with the data-INDEPENDENT quantizer real LSH uses.  The plane
+    projections use floor(x*1000 + 0.5) integer dot products, so the bucket
+    assignment is bit-exact across engines — no float sign boundary.
+
+    Scale: identical shape to the IVF variant — bucket equi-join
+    bounds candidates to ~n/2^b per probe; plane count trades recall
+    for probe cost without changing the plan.  The plane projections
+    run as posexplode -> 6 integer conditional sums in ONE
+    groupBy(vec_id) — plain whole-stage-codegen arithmetic.  (Both a
+    per-element aggregate() fold and a 384-term unrolled expression
+    measured ~20x slower: the fold is interpreted per step, the unroll
+    blows Janino's 64 KB method limit and falls back to interpreted.)
+    Integer sums are order-independent, so the groupBy's partial-agg
+    ordering cannot perturb the bucket, unlike a float projection.
+    Neighbor RANKING uses the integer-exact quantized cosine
+    (similarity.qvec — round-3 ADVICE fix)."""
+
+    raw = spread(load(spark, sf_dir, "embeddings"))
+    exploded = raw.select(
+        "vec_id", F.posexplode("embedding").alias("pos", "val")
+    ).select(
+        "vec_id",
+        "pos",
+        F.floor(F.col("val").cast("double") * 1000 + 0.5).cast("bigint").alias("iv"),
+    )
+    plane_sums = [
+        F.sum(
+            F.col("iv") * (((F.col("pos") * 31 + F.lit(j * 17)) % 7) - 3)
+        ).alias(f"s{j}")
+        for j in range(6)
+    ]
+    buckets = exploded.groupBy("vec_id").agg(*plane_sums)
+    bucket = sum(
+        ((F.col(f"s{j}") > 0).cast("int") * (1 << j) for j in range(6)), F.lit(0)
+    )
+    e = raw.join(buckets.select("vec_id", bucket.alias("bucket")), "vec_id").select(
+        "vec_id", qvec().alias("emb"), "bucket"
+    )
+    e = e.withColumn("nrm", l2norm(F.col("emb")))
+    q = e.filter(F.col("vec_id") < 20).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("emb").alias("qe"),
+        F.col("nrm").alias("qn"),
+        "bucket",
+    )
+    s = (
+        F.broadcast(q)
+        .join(e, ["bucket"])
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .select(
+            "q_id",
+            F.col("vec_id").alias("c_id"),
+            fr4(
+                dot(F.col("qe"), F.col("emb")) / (F.col("qn") * F.col("nrm"))
+            ).alias("cos"),
+        )
+    )
+    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id").asc())
+    return (
+        s.withColumn("rn", bigint(F.row_number().over(w)))
+        .filter(F.col("rn") <= 3)
+        .select(
+            "q_id",
+            F.col("c_id").alias("neighbor_id"),
+            "cos",
+            "rn",
+        )
+    )
+
+
+@op(
+    "embed_covariance_int",
+    oracle="""
+WITH q AS (
+  SELECT vec_id,
+         list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS iv
+  FROM embeddings
+),
+cells AS (
+  SELECT i.i AS di, j.j AS dj, q.iv[i.i + 1] AS vi, q.iv[j.j + 1] AS vj
+  FROM q
+  CROSS JOIN (SELECT unnest(range(0, 64)) AS i) i
+  CROSS JOIN (SELECT unnest(range(0, 64)) AS j) j
+  WHERE j.j >= i.i
+)
+SELECT CAST(di AS BIGINT) AS di, CAST(dj AS BIGINT) AS dj,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(vi) AS BIGINT) AS sum_i,
+       CAST(sum(vj) AS BIGINT) AS sum_j,
+       CAST(sum(vi * vj) AS BIGINT) AS sum_ij
+FROM cells
+GROUP BY di, dj
+""",
+    category=CAT,
+)
+def embed_covariance_int(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding covariance accumulators (PCA/whitening prep): the
+    upper-triangular 64x64 grid of (n, sum_i, sum_j, sum_i*j) over
+    round(x*1000) integer-quantized components — the exact sufficient
+    statistics cov(i,j) = sum_ij/n - sum_i*sum_j/n^2 needs, kept in
+    integers so the result is bit-exact regardless of aggregation
+    order (a float covariance would hash-mismatch on partial-agg
+    ordering).
+
+    Scale: one map-side explode to (vector x upper-tri pair) rows and
+    ONE aggregation keyed by the fixed 2,080-cell grid — partial aggs
+    reduce each partition to at most 2,080 rows before the shuffle, so
+    network cost is constant in corpus size (the textbook
+    sufficient-statistics pattern for distributed PCA).
+
+    Overflow bound (round-7 ppm audit): |vi*vj| <= 1e6 per vector, so
+    int64 sum_ij holds to ~9.2e12 vectors (~2 PB of 64-dim float32) —
+    an order of magnitude past the 100 TB target; past that, widen the
+    accumulator to DECIMAL(38,0) exactly as the ppm ops do."""
+    # floor(x*1000 + 0.5): engine-independent rounding — DuckDB round()
+    # and Spark round() disagree at exact .5 boundaries (hit at sf0.1)
+    q = spread(load(spark, sf_dir, "embeddings")).select(
+        F.transform(
+            F.col("embedding"),
+            lambda x: F.floor(x.cast("double") * 1000 + 0.5).cast("bigint"),
+        ).alias("iv")
+    )
+    pairs = q.select(
+        F.explode(
+            F.expr(
+                "flatten(transform(sequence(0, 63), i ->"
+                " transform(sequence(i, 63), j ->"
+                " struct(i AS di, j AS dj, iv[i] AS vi, iv[j] AS vj))))"
+            )
+        ).alias("c")
+    ).select("c.di", "c.dj", "c.vi", "c.vj")
+    return pairs.groupBy(
+        bigint(F.col("di")).alias("di"), bigint(F.col("dj")).alias("dj")
+    ).agg(
+        bigint(F.count(F.lit(1))).alias("n"),
+        bigint(F.sum("vi")).alias("sum_i"),
+        bigint(F.sum("vj")).alias("sum_j"),
+        bigint(F.sum(F.col("vi") * F.col("vj"))).alias("sum_ij"),
+    )
+
+
+@op(
+    "knn_eval_confusion",
+    oracle="""
+WITH e0 AS (SELECT vec_id, label,
+                   list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1000 + 0.5)) AS emb
+            FROM embeddings),
+e AS (SELECT vec_id, label, emb, sqrt(list_inner_product(emb, emb)) AS nrm FROM e0),
+q AS (SELECT vec_id AS q_id, label AS true_label, emb AS qe, nrm AS qn
+      FROM e WHERE vec_id < 50),
+s AS (SELECT q.q_id, q.true_label, e.label AS cand_label,
+             floor(list_inner_product(q.qe, e.emb) / (q.qn * e.nrm) * 10000 + 0.5)
+               / 10000.0 AS cos,
+             e.vec_id AS c_id
+      FROM q JOIN e ON e.vec_id <> q.q_id
+      WHERE q.qn > 0 AND e.nrm > 0),
+r AS (SELECT q_id, true_label, cand_label, cos, c_id,
+             row_number() OVER (PARTITION BY q_id
+                    ORDER BY cos DESC, c_id ASC) AS rn
+      FROM s),
+votes AS (
+  SELECT q_id, true_label, cand_label, count(*) AS v, min(rn) AS best
+  FROM r WHERE rn <= 5 GROUP BY q_id, true_label, cand_label
+),
+pred AS (
+  SELECT q_id, true_label, cand_label AS pred_label,
+         row_number() OVER (PARTITION BY q_id ORDER BY v DESC, best ASC) AS pr
+  FROM votes
+)
+SELECT true_label, pred_label, CAST(count(*) AS BIGINT) AS n
+FROM pred WHERE pr = 1
+GROUP BY true_label, pred_label
+""",
+    category=CAT,
+)
+def knn_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """kNN classifier evaluation: 5-NN majority vote (deterministic
+    nearest-rank tie-break) for 50 held-out queries, reported as the
+    (true_label, predicted_label) confusion matrix — the quality gate
+    a label-propagation / auto-labeling pipeline runs before trusting
+    its labels.
+
+    Scale: same broadcast-bounded-query shape as the other brute-force
+    sim ops (the eval set is small by construction); the vote and
+    confusion aggregations act on k x |eval| rows — negligible.
+    Neighbor RANKING uses the integer-exact quantized cosine
+    (similarity.qvec — round-3 ADVICE fix)."""
+    e = spread(load(spark, sf_dir, "embeddings"))
+
+    base = e.select(
+        "vec_id", "label", qvec().alias("emb"), l2norm(qvec()).alias("nrm")
+    )
+    q = base.filter(F.col("vec_id") < 50).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("label").alias("true_label"),
+        F.col("emb").alias("qe"),
+        F.col("nrm").alias("qn"),
+    )
+    # zero-norm exclusion on both sides (round-8 degenerate gate)
+    s = (
+        F.broadcast(q.filter(F.col("qn") > 0))
+        .crossJoin(base.filter(F.col("nrm") > 0))
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .select(
+            "q_id",
+            "true_label",
+            F.col("label").alias("cand_label"),
+            F.col("vec_id").alias("c_id"),
+            fr4(dot(F.col("qe"), F.col("emb")) / (F.col("qn") * F.col("nrm"))).alias(
+                "cos"
+            ),
+        )
+    )
+    wr = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id").asc())
+    top5 = s.withColumn("rn", F.row_number().over(wr)).filter(F.col("rn") <= 5)
+    votes = top5.groupBy("q_id", "true_label", "cand_label").agg(
+        F.count(F.lit(1)).alias("v"), F.min("rn").alias("best")
+    )
+    wp = Window.partitionBy("q_id").orderBy(F.col("v").desc(), F.col("best").asc())
+    pred = (
+        votes.withColumn("pr", F.row_number().over(wp))
+        .filter(F.col("pr") == 1)
+        .select("true_label", F.col("cand_label").alias("pred_label"))
+    )
+    return pred.groupBy("true_label", "pred_label").agg(
+        bigint(F.count(F.lit(1))).alias("n")
+    )
+
+
+@op(
+    "embed_zscore_normalize",
+    oracle="""
+WITH flat AS (
+  SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
+         CAST(unnest(embedding) AS DOUBLE) AS v
+  FROM embeddings
+),
+stats AS (
+  SELECT pos, round(avg(v), 6) AS mu, round(stddev_pop(v), 6) AS sigma
+  FROM flat GROUP BY pos
+)
+SELECT vec_id, CAST(f.pos AS BIGINT) AS pos,
+       CASE WHEN round((v - mu) / sigma, 4) = 0 THEN CAST(0.0 AS DOUBLE)
+            ELSE round((v - mu) / sigma, 4) END AS z
+FROM flat f JOIN stats s ON f.pos = s.pos
+ORDER BY vec_id, pos
+""",
+    category=CAT,
+)
+def embed_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-dimension z-score feature normalization of the embedding
+    column: posexplode -> 64-row (mean, stddev_pop) aggregate ->
+    broadcast join back -> standardize.  No UDF anywhere; the stats
+    table is O(dims) regardless of corpus size, so the join is always
+    a broadcast and the whole op is one shuffle (the stats groupBy).
+    Mean/stddev are rounded to 6 dp BEFORE the division so both
+    engines standardize with bit-identical parameters (sum-order noise
+    lives below 1e-12, far under the grid)."""
+    emb = load(spark, sf_dir, "embeddings")
+    flat = emb.select("vec_id", F.posexplode("embedding")).select(
+        "vec_id",
+        (F.col("pos") + 1).alias("pos"),
+        F.col("col").cast("double").alias("v"),
+    )
+    stats = flat.groupBy("pos").agg(
+        F.round(F.avg("v"), 6).alias("mu"),
+        F.round(F.stddev_pop("v"), 6).alias("sigma"),
+    )
+    return (
+        flat.join(F.broadcast(stats), "pos")
+        .select(
+            "vec_id",
+            bigint(F.col("pos")).alias("pos"),
+            nz(r4((F.col("v") - F.col("mu")) / F.col("sigma"))).alias("z"),
+        )
+        .orderBy("vec_id", "pos")
+    )
+
+
+PQ_CENTS = 16
+
+
+@op(
+    "embed_pq_assign",
+    oracle=f"""
+WITH v AS (
+  SELECT vec_id, gd,
+         CAST(floor(CAST(embedding[CAST(gd + 1 AS INT)] AS DOUBLE) * 1000 + 0.5)
+              AS BIGINT) AS val
+  FROM (SELECT vec_id, embedding, unnest(range(0, 64)) AS gd
+        FROM embeddings WHERE embedding IS NOT NULL)
+),
+d AS (
+  SELECT vec_id, gd // 8 AS subspace, cc.c AS c,
+         sum((val - ((cc.c * 31 + gd * 17) % 21 - 10) * 1000)
+             * (val - ((cc.c * 31 + gd * 17) % 21 - 10) * 1000)) AS dist
+  FROM v CROSS JOIN (SELECT unnest(range(0, {PQ_CENTS})) AS c) cc
+  GROUP BY 1, 2, 3
+)
+SELECT vec_id, CAST(subspace AS INT) AS subspace,
+       CAST(min(dist * {PQ_CENTS} + c) % {PQ_CENTS} AS INT) AS code
+FROM d GROUP BY 1, 2
+""",
+    category=CAT,
+)
+def embed_pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-quantization code assignment: 64-dim embeddings split
+    into 8 subvectors, each assigned to its nearest of 16 fixed
+    centroids — the index-build step of a PQ/IVF-PQ ANN system (codes
+    compress each vector 64 floats -> 8 nibbles for in-memory search).
+
+    The codebook is a deterministic integer lattice
+    (cent[c][gd] = (c*31 + gd*17) % 21 - 10, scaled x1000 to match
+    millis-quantized vectors), distances are exact integer sums of
+    squares, and the argmin ties break to the lowest code via the
+    ``min(dist*16 + c) % 16`` encoding — bit-identical in both
+    engines, so assignment membership can never flip.
+
+    Scale: posexplode -> one shuffle keyed (vec_id, subspace); the
+    16-row centroid table broadcasts; output is 8 rows per vector.
+    A trained codebook would arrive the same way — a small broadcast
+    relation — leaving the plan unchanged."""
+    e = spread(load(spark, sf_dir, "embeddings"))
+    v = e.select(
+        "vec_id", F.posexplode(F.col("embedding")).alias("gd", "x")
+    ).select(
+        "vec_id",
+        "gd",
+        F.floor(F.col("x").cast("double") * 1000 + 0.5).cast("bigint").alias("val"),
+    )
+    cents = spark.range(PQ_CENTS).select(F.col("id").cast("int").alias("c"))
+    cent_val = ((F.col("c") * 31 + F.col("gd") * 17) % 21 - 10) * 1000
+    diff = F.col("val") - cent_val
+    d = (
+        v.join(F.broadcast(cents))
+        .groupBy(
+            "vec_id",
+            F.expr("gd div 8").cast("int").alias("subspace"),
+            "c",
+        )
+        .agg(F.sum(diff * diff).alias("dist"))
+    )
+    return d.groupBy("vec_id", "subspace").agg(
+        (F.min(F.col("dist") * PQ_CENTS + F.col("c")) % PQ_CENTS)
+        .cast("int")
+        .alias("code")
+    )
+
+
+@op(
+    "embed_matryoshka_truncate",
+    oracle="""
+WITH q AS (SELECT vec_id,
+                  list_transform(embedding,
+                                 x -> floor(CAST(x AS DOUBLE) * 1000 + 0.5)) AS e
+           FROM embeddings)
+SELECT vec_id,
+       CAST(list_inner_product(e[1:16], e[1:16]) AS BIGINT) AS prefix_sq,
+       CAST(list_inner_product(e, e) AS BIGINT)             AS full_sq,
+       CAST(CASE WHEN list_inner_product(e, e) = 0 THEN NULL
+                 ELSE (1000000 * CAST(list_inner_product(e[1:16], e[1:16]) AS BIGINT))
+                        // CAST(list_inner_product(e, e) AS BIGINT)
+            END AS BIGINT) AS retention_ppm,
+       CAST(CASE WHEN 4 * CAST(list_inner_product(e[1:16], e[1:16]) AS BIGINT)
+                      >= CAST(list_inner_product(e, e) AS BIGINT)
+                 THEN 1 ELSE 0 END AS BIGINT) AS prefix_ok
+FROM q
+""",
+    category=CAT,
+)
+def embed_matryoshka_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Matryoshka-style embedding truncation audit: how much squared
+    mass does the 16-dim prefix of each (quantized) embedding retain,
+    and does it clear the 25% gate that would let the ANN index store
+    only the prefix?  All decisions are exact integers (quantized
+    millis -> integer dot products, cross-multiplied gate, floor-div
+    ppm).  Map-only: zero shuffles, the same fused higher-order-fold
+    shape as the other embedding ops."""
+
+    e = spread(load(spark, sf_dir, "embeddings")).select(
+        "vec_id", qvec().alias("e")
+    )
+    isum = lambda c: F.aggregate(c, F.lit(0.0), lambda s, x: s + x)  # noqa: E731
+    pref = F.slice(F.col("e"), 1, 16)
+    prefix_sq = isum(F.zip_with(pref, pref, lambda a, b: a * b))
+    full_sq = isum(F.zip_with(F.col("e"), F.col("e"), lambda a, b: a * b))
+    # the quantized sums are exact integers (< 2^53) held as doubles;
+    # cast to BIGINT before the div so the ppm is true integer floor
+    # division (a float divide + floor could flip at a boundary)
+    with_sq = e.select(
+        "vec_id",
+        bigint(prefix_sq).alias("prefix_sq"),
+        bigint(full_sq).alias("full_sq"),
+    )
+    return with_sq.select(
+        "vec_id",
+        "prefix_sq",
+        "full_sq",
+        # zero vector: retention undefined -> NULL in both engines
+        # (round-8 degenerate gate; ANSI integer div raised here)
+        bigint(
+            F.expr(
+                "CASE WHEN full_sq = 0 THEN NULL"
+                " ELSE (1000000 * prefix_sq) div full_sq END"
+            )
+        ).alias("retention_ppm"),
+        bigint(
+            F.when(4 * F.col("prefix_sq") >= F.col("full_sq"), 1).otherwise(0)
+        ).alias("prefix_ok"),
+    )
+
+
+_RECALL_DUCK_BASE = """
+e AS (SELECT vec_id,
+             list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1000 + 0.5)) AS emb,
+             CAST(embedding[1] > 0 AS INT) * 4
+           + CAST(embedding[2] > 0 AS INT) * 2
+           + CAST(embedding[3] > 0 AS INT) AS bucket
+      FROM embeddings),
+en AS (SELECT vec_id, emb, bucket,
+              sqrt(list_inner_product(emb, emb)) AS nrm FROM e),
+q AS (SELECT vec_id AS q_id, emb AS qe, nrm AS qn, bucket AS qb
+      FROM en WHERE vec_id < 10),
+bf AS (
+  SELECT q_id, c_id FROM (
+    SELECT q.q_id, en.vec_id AS c_id,
+           row_number() OVER (
+             PARTITION BY q.q_id
+             ORDER BY floor(list_inner_product(q.qe, en.emb)
+                            / (q.qn * en.nrm) * 10000 + 0.5) DESC,
+                      en.vec_id ASC) AS rn
+    FROM q JOIN en ON en.vec_id <> q.q_id
+    WHERE q.qn > 0 AND en.nrm > 0
+  ) WHERE rn <= 5
+),
+ivf AS (
+  SELECT q_id, c_id FROM (
+    SELECT q.q_id, en.vec_id AS c_id,
+           row_number() OVER (
+             PARTITION BY q.q_id
+             ORDER BY floor(list_inner_product(q.qe, en.emb)
+                            / (q.qn * en.nrm) * 10000 + 0.5) DESC,
+                      en.vec_id ASC) AS rn
+    FROM q JOIN en ON en.bucket = q.qb AND en.vec_id <> q.q_id
+    WHERE q.qn > 0 AND en.nrm > 0
+  ) WHERE rn <= 5
+)
+"""
+
+
+@op(
+    "sim_ann_recall_eval",
+    oracle=f"""
+WITH {_RECALL_DUCK_BASE}
+SELECT bf.q_id,
+       CAST(count(*) AS BIGINT) AS n_true,
+       CAST(count(ivf.c_id) AS BIGINT) AS n_hit,
+       CAST((1000000 * count(ivf.c_id)) // count(*) AS BIGINT) AS recall_ppm
+FROM bf LEFT JOIN ivf ON ivf.q_id = bf.q_id AND ivf.c_id = bf.c_id
+GROUP BY bf.q_id
+""",
+    category=CAT,
+)
+def sim_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@5 of the IVF octant index against exact brute force,
+    computed IN-ENGINE per query — the index-quality gate an ANN
+    deployment runs before trusting the pruned path (and the eval a
+    training-data pipeline runs when it swaps brute-force dedup for
+    bucketed).  Both pipelines rank on the integer-quantized cosine
+    with id tie-breaks, so the top-5 sets — and therefore the recall
+    — are deterministic in both engines.
+
+    Scale: brute force here is the EVAL (10 probes broadcast), not the
+    serving path; the IVF side stays a bucket equi-join.  Overlap is a
+    (q_id, c_id) equi-join of two 50-row sets."""
+
+    e = spread(load(spark, sf_dir, "embeddings")).select(
+        "vec_id",
+        qvec().alias("emb"),
+        l2norm(qvec()).alias("nrm"),
+        (
+            (F.col("embedding")[0] > 0).cast("int") * 4
+            + (F.col("embedding")[1] > 0).cast("int") * 2
+            + (F.col("embedding")[2] > 0).cast("int")
+        ).alias("bucket"),
+    )
+    q = e.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("emb").alias("qe"),
+        F.col("nrm").alias("qn"),
+        F.col("bucket").alias("qb"),
+    )
+
+    def top5(pairs):
+        w = Window.partitionBy("q_id").orderBy(F.desc("qcos"), F.asc("c_id"))
+        return (
+            pairs.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= 5)
+            .select("q_id", "c_id")
+        )
+
+    qcos = F.floor(
+        dot(F.col("qe"), F.col("emb")) / (F.col("qn") * F.col("nrm")) * 10000
+        + F.lit(0.5)
+    )
+    # zero-norm exclusion on both sides (round-8 degenerate gate)
+    qnz = q.filter(F.col("qn") > 0)
+    enz = e.filter(F.col("nrm") > 0)
+    bf = top5(
+        F.broadcast(qnz)
+        .crossJoin(enz)
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .select("q_id", F.col("vec_id").alias("c_id"), qcos.alias("qcos"))
+    )
+    ivf = top5(
+        F.broadcast(qnz)
+        .join(enz, F.col("bucket") == F.col("qb"))
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .select("q_id", F.col("vec_id").alias("c_id"), qcos.alias("qcos"))
+    )
+    hit = ivf.withColumnRenamed("c_id", "h_id")
+    j = bf.join(
+        hit,
+        (bf.q_id == hit.q_id) & (bf.c_id == hit.h_id),
+        "left",
+    ).select(bf.q_id.alias("qq"), "c_id", "h_id")
+    return j.groupBy(F.col("qq").alias("q_id")).agg(
+        bigint(F.count(F.lit(1))).alias("n_true"),
+        bigint(F.count("h_id")).alias("n_hit"),
+        bigint(F.expr("(1000000 * count(h_id)) div count(1)")).alias("recall_ppm"),
+    )
+
+
+@op(
+    "embed_quality_gate",
+    oracle="""
+WITH q AS (
+  SELECT vec_id, label,
+         CAST(list_inner_product(
+           list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1000 + 0.5)),
+           list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1000 + 0.5)))
+           AS BIGINT) AS sq,
+         CAST(len(list_filter(embedding, x -> x = 0)) AS BIGINT) AS n_zero,
+         CAST(len(embedding) AS BIGINT) AS dim
+  FROM embeddings
+),
+g AS (
+  SELECT vec_id, label, sq, n_zero, dim,
+         CASE WHEN sq BETWEEN 1000000 AND 64000000
+               AND 10 * n_zero <= dim THEN 1 ELSE 0 END AS ok
+  FROM q
+)
+SELECT label,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(ok) AS BIGINT) AS n_ok,
+       CAST(sum(sq) AS BIGINT) AS sq_sum,
+       CAST(sum(n_zero) AS BIGINT) AS zeros
+FROM g GROUP BY label
+""",
+    category=CAT,
+)
+def embed_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding hygiene gate: reject vectors whose quantized squared
+    norm falls outside [1e6, 6.4e7] (collapsed or exploded vectors —
+    both symptoms of upstream encoder failures) or with > 10%
+    exactly-zero components (dead dimensions / truncated writes).
+    Both tests are exact integers (quantized-milli dot product,
+    cross-multiplied zero-share), per-label pass rates feed the
+    ingestion dashboard.  Map-only + one small aggregate — the
+    embedding sibling of corpus_quality_ensemble_gate."""
+
+    e = spread(load(spark, sf_dir, "embeddings"))
+    sq = F.aggregate(
+        F.zip_with(qvec(), qvec(), lambda a, b: a * b),
+        F.lit(0.0),
+        lambda s, x: s + x,
+    ).cast("bigint")
+    n_zero = F.size(F.filter(F.col("embedding"), lambda x: x == 0)).cast("bigint")
+    g = e.select(
+        "label",
+        sq.alias("sq"),
+        n_zero.alias("n_zero"),
+        F.size("embedding").cast("bigint").alias("dim"),
+    ).withColumn(
+        "ok",
+        F.when(
+            F.col("sq").between(1000000, 64000000)
+            & (10 * F.col("n_zero") <= F.col("dim")),
+            1,
+        ).otherwise(0),
+    )
+    return g.groupBy("label").agg(
+        bigint(F.count(F.lit(1))).alias("n"),
+        bigint(F.sum("ok")).alias("n_ok"),
+        bigint(F.sum("sq")).alias("sq_sum"),
+        bigint(F.sum("n_zero")).alias("zeros"),
+    )
+
+
+# IVF list geometry: sampled seed centroids (vec_id % 50 == 0, capped
+# below 400 -> at most 8 lists, >= 1 at every fixture SF).
+_IVF_SEED_MOD, _IVF_SEED_CAP = 50, 400
+
+
+@op(
+    "embed_ivf_balance_report",
+    oracle=f"""
+WITH q AS (
+  SELECT vec_id,
+         list_transform(embedding,
+           x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS v
+  FROM embeddings
+),
+c AS (
+  SELECT vec_id AS cid, v AS cv FROM q
+  WHERE vec_id % {_IVF_SEED_MOD} = 0 AND vec_id < {_IVF_SEED_CAP}
+),
+d AS (
+  SELECT q.vec_id, c.cid,
+         list_sum(list_transform(range(1, len(q.v) + 1),
+           i -> (q.v[i] - c.cv[i]) * (q.v[i] - c.cv[i]))) AS dist
+  FROM q CROSS JOIN c
+),
+a AS (
+  SELECT vec_id, min(dist * {_IVF_SEED_CAP} + cid) % {_IVF_SEED_CAP} AS cid
+  FROM d GROUP BY vec_id
+),
+n AS (SELECT cid, count(*) AS n_assigned FROM a GROUP BY cid),
+tot AS (SELECT count(*) AS n_lists FROM c),
+tv AS (SELECT count(*) AS n_vecs FROM a)
+SELECT CAST(n.cid AS BIGINT) AS centroid_id,
+       CAST(n.n_assigned AS BIGINT) AS n_assigned,
+       n.n_assigned * tot.n_lists > 2 * tv.n_vecs AS over_2x_mean
+FROM n, tot, tv
+""",
+    category=CAT,
+)
+def embed_ivf_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF list-balance report — the index-health check an ANN build
+    runs before committing a centroid set: assign every vector to its
+    nearest seed centroid (sampled rows, integer-lattice distances,
+    argmin tie-broken to the lowest centroid id via the
+    min(dist*CAP + cid) % CAP encoding) and report per-list occupancy
+    plus a cross-multiplied >2x-mean skew flag.  Skewed lists are the
+    ANN equivalent of a hot shuffle key: probe latency concentrates
+    there, and the fix (split the list / re-seed) needs exactly this
+    report.
+
+    Scale: the centroid side is nlist rows (<= 8 here, 10^4-10^5 in a
+    real IVF) — always broadcast; assignment is then map-side argmin
+    per vector with ONE shuffle for the per-list counts.  The totals
+    attach via 1-row global aggregates (bounded crossJoin)."""
+    q = spread(load(spark, sf_dir, "embeddings")).select(
+        "vec_id",
+        F.transform(
+            "embedding",
+            lambda x: F.floor(x.cast("double") * 1000 + 0.5).cast("bigint"),
+        ).alias("v"),
+    )
+    c = (
+        q.filter(
+            (F.col("vec_id") % _IVF_SEED_MOD == 0)
+            & (F.col("vec_id") < _IVF_SEED_CAP)
+        )
+        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
+    )
+    d = q.crossJoin(F.broadcast(c)).select(
+        "vec_id",
+        "cid",
+        F.aggregate(
+            F.zip_with("v", "cv", lambda a, b: (a - b) * (a - b)),
+            F.lit(0).cast("bigint"),
+            lambda acc, x: acc + x,
+        ).alias("dist"),
+    )
+    a = d.groupBy("vec_id").agg(
+        (F.min(F.col("dist") * _IVF_SEED_CAP + F.col("cid")) % _IVF_SEED_CAP)
+        .alias("cid")
+    )
+    n = a.groupBy("cid").agg(F.count(F.lit(1)).alias("n_assigned"))
+    tot = c.agg(F.count(F.lit(1)).alias("n_lists"))
+    tv = a.agg(F.count(F.lit(1)).alias("n_vecs"))
+    return (
+        n.crossJoin(tot)
+        .crossJoin(tv)
+        .select(
+            bigint(F.col("cid")).alias("centroid_id"),
+            bigint(F.col("n_assigned")).alias("n_assigned"),
+            (
+                F.col("n_assigned") * F.col("n_lists")
+                > 2 * F.col("n_vecs")
+            ).alias("over_2x_mean"),
+        )
+    )
+
+
+@op(
+    "embed_centroid_drift",
+    oracle="""
+WITH q AS (
+  SELECT vec_id % 2 AS half,
+         list_transform(embedding,
+           x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS iv
+  FROM embeddings
+),
+cells AS (
+  SELECT half, i.i AS dim, q.iv[i.i + 1] AS v
+  FROM q CROSS JOIN (SELECT unnest(range(0, 64)) AS i) i
+),
+m AS (
+  SELECT dim,
+         sum(CASE WHEN half = 0 THEN v END)
+           // sum(CASE WHEN half = 0 THEN 1 END) AS mean_a,
+         sum(CASE WHEN half = 1 THEN v END)
+           // sum(CASE WHEN half = 1 THEN 1 END) AS mean_b
+  FROM cells GROUP BY dim
+)
+SELECT CAST(dim AS BIGINT) AS dim,
+       CAST(mean_a AS BIGINT) AS mean_a_milli,
+       CAST(mean_b AS BIGINT) AS mean_b_milli,
+       CAST(abs(mean_a - mean_b) AS BIGINT) AS shift_milli
+FROM m
+""",
+    category=CAT,
+)
+def embed_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-centroid drift between two corpus halves (vec_id
+    parity stands in for before/after an encoder upgrade): per
+    dimension, both centroid means in exact quantized milli-units and
+    the absolute shift — the drift monitor that catches a silently
+    retrained/requantized embedding model before mixed-version vectors
+    poison an ANN index.  Same floor(x*1000+0.5) quantization contract
+    as the covariance op.
+
+    Scale: posexplode to (half, dim, v) then ONE partial/final agg on
+    the 64-dim key with conditional sums — both halves aggregate in a
+    single pass, no join, constant-size output."""
+    raw = spread(load(spark, sf_dir, "embeddings"), min_fraction=0.25)
+    cells = raw.select(
+        (F.col("vec_id") % 2).alias("half"),
+        F.posexplode(
+            F.transform(
+                "embedding",
+                lambda x: F.floor(x.cast("double") * 1000 + 0.5).cast("bigint"),
+            )
+        ).alias("dim", "v"),
+    )
+    m = cells.groupBy("dim").agg(
+        F.sum(F.when(F.col("half") == 0, F.col("v"))).alias("sa"),
+        F.sum(F.when(F.col("half") == 0, 1)).alias("na"),
+        F.sum(F.when(F.col("half") == 1, F.col("v"))).alias("sb"),
+        F.sum(F.when(F.col("half") == 1, 1)).alias("nb"),
+    )
+    return m.select(
+        bigint(F.col("dim")).alias("dim"),
+        bigint(F.expr("sa div na")).alias("mean_a_milli"),
+        bigint(F.expr("sb div nb")).alias("mean_b_milli"),
+        bigint(F.expr("abs(sa div na - sb div nb)")).alias("shift_milli"),
     )

@@ -115,3 +115,35 @@ def drop_duplicates_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.groupBy("user_id", "event_type").agg(
         bigint(F.min("event_id")).alias("first_event_id")
     )
+
+
+@op(
+    "limit_topk_with_ties",
+    oracle="""
+SELECT c_nationkey, c_custkey, bal_cents FROM (
+  SELECT c_nationkey, c_custkey,
+         CAST(round(c_acctbal * 100) AS BIGINT) AS bal_cents,
+         rank() OVER (PARTITION BY c_nationkey
+                      ORDER BY round(c_acctbal * 100) DESC) AS r
+  FROM customer
+) WHERE r <= 3
+""",
+    category=CAT,
+)
+def limit_topk_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-3 per group WITH TIES: rank() instead of row_number(), so
+    every row tying the 3rd-place value survives — the FETCH FIRST
+    ... WITH TIES semantics (row_number top-k silently drops tied
+    peers; which rows survive would then be nondeterministic without a
+    full tie-break).  Still compiles to WindowGroupLimit: rank-based
+    group limits prune per-partition before the window sort exactly
+    like row_number ones."""
+    cust = load(spark, sf_dir, "customer")
+    cents = F.round(F.col("c_acctbal") * 100).cast("bigint")
+    w = Window.partitionBy("c_nationkey").orderBy(F.desc("bal_cents"))
+    return (
+        cust.select("c_nationkey", "c_custkey", cents.alias("bal_cents"))
+        .withColumn("r", F.rank().over(w))
+        .filter(F.col("r") <= 3)
+        .select("c_nationkey", "c_custkey", "bal_cents")
+    )

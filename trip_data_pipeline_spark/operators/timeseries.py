@@ -1,6 +1,6 @@
 """Time-series warehouse patterns: hypertable-style two-level rollup,
-calendar gap-fill with last-observation-carried-forward, cumulative
-distinct counting, and IQR outlier fences.
+calendar gap-fill with last-observation-carried-forward, resampling,
+seasonal decomposition, drift and trend estimators, and downsampling.
 
 These are the continuous-aggregate / downsampling operations a
 time-series store (TimescaleDB-style hypertable rollups) provides,
@@ -21,12 +21,6 @@ Scale notes (100 TB):
   pass reads only the rollup — the query shape here is that plan.
 - ``timeseries_gap_fill_locf``: the spine is generated (no scan) and
   the fill is one window sort per series key — never a self-join.
-- ``agg_cumulative_distinct``: the classic distributed form — distinct
-  via min(first-seen) per user (one shuffle), then a tiny running sum
-  over days — instead of a quadratic windowed COUNT(DISTINCT).
-- ``dq_outlier_iqr``: exact quantiles per group need a per-group sort;
-  at real scale swap in approx_percentile with the same fence logic
-  (the rows-only `agg_percentile_approx` op covers the sketch path).
 """
 
 from __future__ import annotations
@@ -35,16 +29,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trip_data_pipeline_spark.io import load
-from trip_data_pipeline_spark.operators.common import bigint
+from trip_data_pipeline_spark.operators.common import (
+    _CENTS,
+    _cents,
+    as_date,
+    bigint,
+    r2,
+    spread,
+)
 from trip_data_pipeline_spark.registry import op
+from trip_data_pipeline_spark.session import one_wave_partitions
 
 CAT = "2.14 time-series rollups"
-
-_CENTS = "CAST(round(value * 100) AS BIGINT)"
-
-
-def _cents(c: F.Column = None):
-    return F.round(F.col("value") * 100).cast("bigint")
 
 
 @op(
@@ -168,149 +164,686 @@ def timeseries_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @op(
-    "agg_cumulative_distinct",
+    "rollup_incremental_merge",
     oracle="""
-WITH first_seen AS (
-  SELECT user_id, min(ts::DATE) AS day FROM events GROUP BY user_id
-),
-daily_new AS (
-  SELECT day, CAST(count(*) AS BIGINT) AS new_users
-  FROM first_seen GROUP BY day
-)
-SELECT day, new_users,
-       CAST(sum(new_users) OVER (ORDER BY day
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         AS cum_users
-FROM daily_new
-""",
-    category=CAT,
-)
-def agg_cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative distinct users per day WITHOUT a windowed
-    COUNT(DISTINCT): min(first-seen day) per user (one shuffle on
-    user_id), count per day, tiny running sum.  The standard rewrite
-    that makes 'users to date' linear at warehouse scale."""
-    ev = load(spark, sf_dir, "events")
-    first_seen = ev.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("day"))
-    daily_new = first_seen.groupBy("day").agg(
-        bigint(F.count(F.lit(1))).alias("new_users")
-    )
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return daily_new.select(
-        "day", "new_users", bigint(F.sum("new_users").over(w)).alias("cum_users")
-    )
-
-
-@op(
-    "dq_outlier_iqr",
-    oracle=f"""
-WITH vals AS (
-  SELECT event_type, {_CENTS} AS cents FROM events
-),
-fences AS (
-  SELECT event_type,
-         quantile_cont(cents, 0.25) AS q1,
-         quantile_cont(cents, 0.75) AS q3
-  FROM vals GROUP BY event_type
-)
-SELECT v.event_type,
+SELECT CAST(date_trunc('month', CAST(o_orderdate AS DATE)) AS DATE) AS month,
+       o_orderpriority,
        CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CASE WHEN v.cents * 2.0 < f.q1 * 5 - f.q3 * 3
-                       OR v.cents * 2.0 > f.q3 * 5 - f.q1 * 3
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-       round(f.q1 / 100.0, 4) AS q1,
-       round(f.q3 / 100.0, 4) AS q3
-FROM vals v JOIN fences f USING (event_type)
-GROUP BY v.event_type, f.q1, f.q3
+       round(sum(o_totalprice), 2) AS total,
+       round(min(o_totalprice), 2) AS lo,
+       round(max(o_totalprice), 2) AS hi,
+       round(round(sum(o_totalprice), 2) / count(*), 2) AS avg_price
+FROM orders
+GROUP BY 1, 2
 """,
     category=CAT,
 )
-def dq_outlier_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tukey-fence outlier counts per group.  Fence test is
-    cross-multiplied: x < q1 - 1.5*(q3-q1)  <=>  2x < 5*q1 - 3*q3,
-    keeping the comparison in exact halves of integer cents (q1/q3 are
-    midpoint-interpolated, so 2*q is integral).  Spark `percentile` and
-    DuckDB `quantile_cont` both interpolate linearly on the sorted set."""
-    ev = load(spark, sf_dir, "events").select("event_type", _cents().alias("cents"))
-    fences = ev.groupBy("event_type").agg(
-        F.percentile("cents", 0.25).alias("q1"),
-        F.percentile("cents", 0.75).alias("q3"),
+def rollup_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental rollup maintenance: daily partial aggregates merged
+    into monthly finals — the materialized-view pattern where each new
+    day's partition aggregates once and coarser rollups merge partials
+    instead of rescanning history (sum-of-sums, count-of-counts,
+    min-of-mins, max-of-maxes; avg recomposed exactly from merged
+    sum/count, never averaged-of-averages).
+
+    The oracle aggregates the source directly — the hash check proves
+    merge-of-partials is value-identical to a full recompute.
+
+    Scale: at 100 TB the daily partials are tiny (days x priorities
+    rows) regardless of fact size, so the monthly merge touches
+    KB not TB; the expensive pass is the per-day partial, which runs
+    once per new partition."""
+    o = load(spark, sf_dir, "orders")
+    daily = o.groupBy(
+        as_date(F.col("o_orderdate")).alias("day"), "o_orderpriority"
+    ).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("o_totalprice").alias("s"),
+        F.min("o_totalprice").alias("mn"),
+        F.max("o_totalprice").alias("mx"),
     )
-    lo = F.col("q1") * 5 - F.col("q3") * 3
-    hi = F.col("q3") * 5 - F.col("q1") * 3
-    out_flag = (F.col("cents") * 2.0 < lo) | (F.col("cents") * 2.0 > hi)
     return (
-        ev.join(F.broadcast(fences), "event_type")
-        .groupBy("event_type", "q1", "q3")
+        daily.groupBy(F.trunc("day", "month").alias("month"), "o_orderpriority")
         .agg(
-            bigint(F.count(F.lit(1))).alias("n"),
-            bigint(F.sum(F.when(out_flag, 1).otherwise(0))).alias("n_outliers"),
+            bigint(F.sum("n")).alias("n"),
+            F.sum("s").alias("s"),
+            F.min("mn").alias("mn"),
+            F.max("mx").alias("mx"),
         )
         .select(
-            "event_type",
+            "month",
+            "o_orderpriority",
             "n",
-            "n_outliers",
-            F.round(F.col("q1") / 100.0, 4).alias("q1"),
-            F.round(F.col("q3") / 100.0, 4).alias("q3"),
+            r2(F.col("s")).alias("total"),
+            r2(F.col("mn")).alias("lo"),
+            r2(F.col("mx")).alias("hi"),
+            # divide the ROUNDED (exact-cents) total, not the raw sum:
+            # partial-merge order perturbs the raw double's last ulp,
+            # which can flip round(s/n) at a half-cent boundary; the
+            # rounded total is bit-identical in both engines, so the
+            # division (and its rounding) is too.
+            r2(r2(F.col("s")) / F.col("n")).alias("avg_price"),
+        )
+    )
+
+
+GRID_US = 900_000_000  # 15-minute grid
+
+
+@op(
+    "timeseries_resample_linear",
+    oracle=f"""
+WITH ev AS (SELECT user_id, epoch_us(ts) AS us,
+                   CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc FROM events),
+bounds AS (SELECT user_id, min(us) AS mn, max(us) AS mx FROM ev GROUP BY 1),
+grid AS (SELECT user_id,
+                unnest(range(CAST(ceil(mn / {GRID_US}.0) AS BIGINT),
+                             CAST(floor(mx / {GRID_US}.0) AS BIGINT) + 1)) AS g
+         FROM bounds),
+u AS (
+  SELECT user_id, us AS t, vc, 0 AS is_grid FROM ev
+  UNION ALL
+  SELECT user_id, g * {GRID_US} AS t, NULL AS vc, 1 AS is_grid FROM grid
+),
+w AS (
+  SELECT user_id, t, is_grid,
+         last_value(vc IGNORE NULLS) OVER wp AS pv,
+         last_value(CASE WHEN vc IS NOT NULL THEN t END IGNORE NULLS) OVER wp AS pt,
+         first_value(vc IGNORE NULLS) OVER wn AS nv,
+         first_value(CASE WHEN vc IS NOT NULL THEN t END IGNORE NULLS) OVER wn AS nt
+  FROM u
+  WINDOW wp AS (PARTITION BY user_id ORDER BY t, is_grid
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+         wn AS (PARTITION BY user_id ORDER BY t, is_grid DESC
+                ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
+)
+SELECT user_id, CAST(t // 1000000 AS BIGINT) AS grid_s,
+       CAST(CASE WHEN nt = pt THEN pv
+            ELSE (pv * (nt - t) + nv * (t - pt)) // (nt - pt) END AS BIGINT)
+         AS v_interp_c
+FROM w WHERE is_grid = 1
+""",
+    category=CAT,
+)
+def timeseries_resample_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Resample each user's irregular event series onto a 15-minute
+    grid with LINEAR interpolation between the surrounding
+    observations — the other half of gap handling beside
+    timeseries_gap_fill_locf (LOCF holds, this one interpolates; both
+    are what feature-store time alignment needs).
+
+    Interpolation is exact integer arithmetic on cent values and µs
+    timestamps: (pv*(nt-t) + nv*(t-pt)) div (nt-pt) — weights are
+    non-negative integers (events.value >= 0, grid inside [min, max]),
+    so Spark ``div`` and DuckDB ``//`` agree and the hash cannot
+    drift.  An observation exactly on a grid point wins both
+    directions (pt == nt -> its value verbatim).
+
+    Scale: the union of events and grid points sorts once per user
+    partition; prev/next are two frames over that one sort — no
+    self-join, no per-grid-point probe.  Grid density is fixed by the
+    time span, so output size is (users x span/15min) regardless of
+    event volume."""
+    # `tb` (event_id; NULL on grid rows) is a pure tie-break: the µs
+    # fixture timestamps are tie-free per (user_id, t), so it changes
+    # no output — it makes the two-sided ordering deterministic BY
+    # CONSTRUCTION for any input (VERDICT r12 item 8: two non-null
+    # events at equal t would otherwise leave both the old and new
+    # forms nondeterministic).  It rides both window orders below.
+    ev = load(spark, sf_dir, "events").select(
+        "user_id",
+        F.unix_micros("ts").alias("t"),
+        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("vc"),
+        F.col("event_id").alias("tb"),
+    )
+    grid = (
+        ev.groupBy("user_id")
+        .agg(F.min("t").alias("mn"), F.max("t").alias("mx"))
+        .select(
+            "user_id",
+            # guard the inverted range: a single-event user (mn == mx
+            # between grid points) has ceil(mn/G) > floor(mx/G), and
+            # Spark's sequence() DESCENDS there — minting two phantom
+            # grid points outside [mn, mx] with NULL interpolation —
+            # while DuckDB's exclusive-upper range() is already empty
+            # (round-8 degenerate-shape gate)
+            F.explode(
+                F.when(
+                    F.ceil(F.col("mn") / F.lit(float(GRID_US))).cast("bigint")
+                    <= F.floor(F.col("mx") / F.lit(float(GRID_US))).cast("bigint"),
+                    F.sequence(
+                        F.ceil(F.col("mn") / F.lit(float(GRID_US))).cast("bigint"),
+                        F.floor(F.col("mx") / F.lit(float(GRID_US))).cast("bigint"),
+                    ),
+                ).otherwise(F.expr("CAST(array() AS ARRAY<BIGINT>)"))
+            ).alias("g"),
+        )
+        .select("user_id", (F.col("g") * GRID_US).alias("t"),
+                F.lit(None).cast("bigint").alias("vc"),
+                F.lit(1).alias("is_grid"),
+                F.lit(None).cast("bigint").alias("tb"))
+    )
+    u = ev.select("user_id", "t", "vc", F.lit(0).alias("is_grid"), "tb").unionByName(
+        grid
+    )
+    wp = (
+        Window.partitionBy("user_id")
+        .orderBy(F.col("t"), F.col("is_grid"), F.col("tb"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    # "Next observation" via a GROWING frame over the REVERSED sort
+    # (r12 optimization, guide §2/§7): the natural formulation —
+    # first_value IGNORE NULLS over ROWS BETWEEN CURRENT ROW AND
+    # UNBOUNDED FOLLOWING — executes as Spark's
+    # UnboundedFollowingWindowFunctionFrame, which RESCANS from the
+    # current row to the partition end for every row: O(rows^2) per
+    # user partition (~2,900 grid+event rows/user at sf0.1 -> 42 s for
+    # the whole op; 4.2 s at sf0.01).  last_value over
+    # [UNBOUNDED PRECEDING, CURRENT ROW] on the exact reverse ordering
+    # — (t DESC NULLS LAST, is_grid ASC), the mirror of
+    # (t ASC NULLS FIRST, is_grid DESC) — visits the identical row set
+    # per frame but runs as the incremental O(rows) growing frame.
+    # Value-identical by construction (same rows in frame), locked by
+    # the oracle hash and test_resample_next_frame_equivalence.  The
+    # reversed order is the exact MIRROR of the forward one
+    # (t ASC, is_grid DESC, tb ASC) -> (t DESC, is_grid ASC, tb DESC);
+    # Spark's ASC = NULLS FIRST mirrors DESC = NULLS LAST, so the NULL
+    # tb of grid rows keeps its relative position under reversal.
+    wn = (
+        Window.partitionBy("user_id")
+        .orderBy(F.col("t").desc(), F.col("is_grid"), F.col("tb").desc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    ev_t = F.when(F.col("vc").isNotNull(), F.col("t"))
+    w = u.select(
+        "user_id",
+        "t",
+        "is_grid",
+        F.last("vc", ignorenulls=True).over(wp).alias("pv"),
+        F.last(ev_t, ignorenulls=True).over(wp).alias("pt"),
+        F.last("vc", ignorenulls=True).over(wn).alias("nv"),
+        F.last(ev_t, ignorenulls=True).over(wn).alias("nt"),
+    )
+    interp = F.when(F.col("nt") == F.col("pt"), F.col("pv")).otherwise(
+        F.expr("(pv * (nt - t) + nv * (t - pt)) div (nt - pt)")
+    )
+    return (
+        w.filter(F.col("is_grid") == 1)
+        .select(
+            "user_id",
+            F.expr("t div 1000000").cast("bigint").alias("grid_s"),
+            interp.cast("bigint").alias("v_interp_c"),
         )
     )
 
 
 @op(
-    "dq_anomaly_mad",
+    "timeseries_seasonal_residual",
     oracle="""
-WITH x AS (
-  SELECT event_type, CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-  FROM events
-),
-med AS (SELECT event_type, median(cents) AS med FROM x GROUP BY event_type),
-dev AS (
-  SELECT x.event_type, x.cents, abs(x.cents - med.med) AS d, med.med
-  FROM x JOIN med USING (event_type)
-),
-mad AS (SELECT event_type, median(d) AS mad FROM dev GROUP BY event_type)
-SELECT dev.event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       round(min(dev.med), 1)   AS med_cents,
-       round(min(mad.mad), 1)   AS mad_cents,
-       CAST(sum(CASE WHEN dev.d > 3 * mad.mad THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_outliers
-FROM dev JOIN mad USING (event_type)
-GROUP BY dev.event_type
+WITH e AS (SELECT ((epoch_us(ts) // 1000000) // 86400 + 4) % 7 AS dow,
+                  CAST(round(value * 100) AS BIGINT) AS cents
+           FROM events),
+s1 AS (SELECT dow, CAST(sum(cents) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS c
+       FROM e GROUP BY dow),
+d AS (SELECT e.dow, abs(e.cents * s1.c - s1.s) AS dev, s1.c
+      FROM e JOIN s1 ON e.dow = s1.dow),
+s2 AS (SELECT dow, sum(dev) // max(c) AS a FROM d GROUP BY dow)
+SELECT d.dow,
+       CAST(max(d.c) AS BIGINT) AS n,
+       CAST(sum(CASE WHEN d.dev > 3 * s2.a THEN 1 ELSE 0 END) AS BIGINT) AS n_anom,
+       CAST(max(d.dev) AS BIGINT) AS max_dev
+FROM d JOIN s2 ON d.dow = s2.dow
+GROUP BY d.dow
 """,
     category=CAT,
 )
-def dq_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust anomaly detection via median absolute deviation: flag
-    values more than 3 MAD from the per-group median — the
-    outlier-resistant sibling of dq_outlier_iqr (a single wild value
-    shifts an IQR fence, not a MAD fence).
+def timeseries_seasonal_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Seasonal-baseline anomaly detection: each event's value is
+    compared against its day-of-week mean, and an event is anomalous
+    when its deviation exceeds 3x the day-of-week mean absolute
+    deviation — the weekday/weekend traffic-pattern outlier sweep.
 
-    Exactness: values quantized to integer cents; medians of integers
-    are either integers or exact .5 halves (quantile interpolation at
-    the midpoint) — every comparison and the 3xMAD threshold are
-    exact doubles, so outlier membership cannot flip between engines.
+    Exactness: day-of-week is pure integer epoch arithmetic (1970-01-01
+    was a Thursday; no engine-specific dayofweek numbering), and the
+    mean comparison is cross-multiplied (|v*c - S| vs the floor-div MAD
+    scale) so no division ever happens on the decision path.
 
-    Scale: two grouped exact medians (per-group sort; swap in
-    approx_percentile at real scale, same shape) + two broadcast-size
-    joins of per-type statistics back onto the value stream."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
+    Scale: the seasonal profile is ALGEBRAIC, so it reduces by
+    partial aggregation to 7 rows which broadcast back onto the
+    stream — deliberately NOT a count() window over dow (7 giant
+    window partitions would serialize at cluster scale).  Two
+    broadcast joins, three map-side-combining aggregations."""
+    ev = load(spark, sf_dir, "events")
+    e = ev.select(
+        F.expr("((unix_micros(ts) div 1000000) div 86400 + 4) % 7").alias("dow"),
+        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
     )
-    med = ev.groupBy("event_type").agg(
-        F.expr("percentile(cents, 0.5)").alias("med")
+    s1 = e.groupBy("dow").agg(
+        bigint(F.sum("cents")).alias("s"), bigint(F.count(F.lit(1))).alias("c")
     )
-    dev = ev.join(F.broadcast(med), "event_type").withColumn(
-        "d", F.abs(F.col("cents") - F.col("med"))
+    d = e.join(F.broadcast(s1), "dow").select(
+        "dow", F.abs(F.col("cents") * F.col("c") - F.col("s")).alias("dev"), "c"
     )
-    mad = dev.groupBy("event_type").agg(F.expr("percentile(d, 0.5)").alias("mad"))
-    j = dev.join(F.broadcast(mad), "event_type")
-    return j.groupBy("event_type").agg(
-        bigint(F.count(F.lit(1))).alias("n"),
-        F.round(F.min("med"), 1).alias("med_cents"),
-        F.round(F.min("mad"), 1).alias("mad_cents"),
+    s2 = d.groupBy("dow").agg(F.expr("sum(dev) div max(c)").alias("a"))
+    return (
+        d.join(F.broadcast(s2), "dow")
+        .groupBy("dow")
+        .agg(
+            bigint(F.max("c")).alias("n"),
+            bigint(
+                F.sum(F.when(F.col("dev") > 3 * F.col("a"), 1).otherwise(0))
+            ).alias("n_anom"),
+            bigint(F.max("dev")).alias("max_dev"),
+        )
+    )
+
+
+@op(
+    "timeseries_cusum_drift",
+    oracle="""
+WITH RECURSIVE ev AS (
+  SELECT user_id, CAST(round(value * 100) AS BIGINT) AS x,
+         row_number() OVER (PARTITION BY user_id
+                            ORDER BY epoch_us(ts), event_id) AS rn
+  FROM events WHERE value IS NOT NULL
+),
+r AS (
+  SELECT user_id, rn,
+         greatest(CAST(0 AS BIGINT), x - 15000) AS s,
+         CASE WHEN greatest(CAST(0 AS BIGINT), x - 15000) > 200000
+              THEN 1 ELSE 0 END AS alarms
+  FROM ev WHERE rn = 1
+  UNION ALL
+  SELECT e.user_id, e.rn,
+         greatest(CAST(0 AS BIGINT), r.s + e.x - 15000),
+         r.alarms + CASE WHEN greatest(CAST(0 AS BIGINT), r.s + e.x - 15000)
+                              > 200000
+                          AND r.s <= 200000
+                         THEN 1 ELSE 0 END
+  FROM r JOIN ev e ON e.user_id = r.user_id AND e.rn = r.rn + 1
+),
+fin AS (
+  SELECT user_id, max(rn) AS last_rn, max(s) AS max_s
+  FROM r GROUP BY user_id
+)
+SELECT f.user_id,
+       CAST(f.max_s AS BIGINT) AS max_s,
+       CAST(r.s AS BIGINT) AS final_s,
+       CAST(r.alarms AS BIGINT) AS n_alarms
+FROM fin f JOIN r ON r.user_id = f.user_id AND r.rn = f.last_rn
+""",
+    category=CAT,
+)
+def timeseries_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One-sided CUSUM drift detection per user: s_t = max(0,
+    s_{t-1} + (x_t - k)) with allowance k=150.00 and alarm threshold
+    h=2000.00 (integer cents) — the change-point monitor a metrics
+    pipeline runs per entity.  Like the gap+cap sessionizer, the
+    recurrence is genuinely sequential (each state folds the previous
+    max), so Spark runs it as ONE Arrow grouped-map pass per user and
+    the oracle replays the identical recurrence as a recursive CTE
+    over per-user event ranks.  Alarms count upward crossings only
+    (s <= h before, s > h after) — re-alarms require a reset first."""
+    import pandas as pd
+
+    K, H = 15000, 200000
+
+    # NULL measurements carry no signal: excluded from the CUSUM
+    # sequence in BOTH engines (round-8 NULL-payload sweep — the
+    # kernel's int(x) raised on NaN; the sf fixtures have no NULL
+    # values, so defined-case output is unchanged)
+    # Round-12 (guide §4.2/§4.5): groupBy(user).applyInPandas paid one
+    # Python call + pandas DataFrame per user; now a partition-scan
+    # mapInPandas over repartition(user)+sortWithinPartitions walks
+    # column lists with carry-over state across Arrow batches — same
+    # recurrence, same single shuffle, no per-group overhead.  The
+    # partition count is pinned because AQE would coalesce the small
+    # shuffle to 1 task and serialize the scan; it is one task wave, as
+    # AQE cannot coalesce an explicit count either.
+    n_parts = one_wave_partitions(spark)
+    ev = (
+        load(spark, sf_dir, "events")
+        .filter(F.col("value").isNotNull())
+        .select(
+            "user_id",
+            F.expr("unix_micros(ts)").alias("us"),
+            "event_id",
+            F.round(F.col("value") * 100).cast("bigint").alias("x"),
+        )
+        .repartition(n_parts, "user_id")
+        .sortWithinPartitions("user_id", "us", "event_id")
+    )
+
+    def cusum_scan(batches):
+        uid = None
+        s = mx = alarms = 0
+        out_u, out_mx, out_s, out_a = [], [], [], []
+        for pdf in batches:
+            for u, x in zip(pdf["user_id"].tolist(), pdf["x"].tolist()):
+                if u != uid:
+                    if uid is not None:
+                        out_u.append(uid)
+                        out_mx.append(mx)
+                        out_s.append(s)
+                        out_a.append(alarms)
+                    uid = u
+                    s = mx = alarms = 0
+                prev = s
+                s = max(0, s + x - K)
+                mx = max(mx, s)
+                if s > H and prev <= H:
+                    alarms += 1
+        if uid is not None:
+            out_u.append(uid)
+            out_mx.append(mx)
+            out_s.append(s)
+            out_a.append(alarms)
+        yield pd.DataFrame(
+            {
+                "user_id": out_u,
+                "max_s": out_mx,
+                "final_s": out_s,
+                "n_alarms": out_a,
+            }
+        )
+
+    return ev.mapInPandas(
+        cusum_scan,
+        schema="user_id bigint, max_s bigint, final_s bigint, n_alarms bigint",
+    )
+
+
+@op(
+    "rollup_month_over_month",
+    oracle="""
+WITH m AS (
+  SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
+         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents,
+         CAST(count(*) AS BIGINT) AS n
+  FROM orders GROUP BY 1
+)
+SELECT month, cents, n,
+       CAST(cents - lag(cents) OVER (ORDER BY month) AS BIGINT) AS delta_cents,
+       CAST(CASE WHEN lag(cents) OVER (ORDER BY month) IS NOT NULL
+                 THEN (1000000 * (cents - lag(cents) OVER (ORDER BY month)))
+                        // lag(cents) OVER (ORDER BY month) END AS BIGINT)
+         AS mom_ppm
+FROM m
+""",
+    category=CAT,
+)
+def rollup_month_over_month(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Month-over-month revenue deltas — the BI staple: monthly
+    integer-cents totals, absolute delta, and the MoM growth rate in
+    integer ppm (floor-div on positive cents, exact in both engines).
+    The lag window runs over the AGGREGATED months (at most a few
+    hundred rows regardless of fact size), so the single-partition
+    month ordering is a non-issue at any scale — the heavy lifting is
+    the partial/final monthly aggregate."""
+    o = load(spark, sf_dir, "orders").select(
+        F.date_trunc("month", F.col("o_orderdate")).cast("date").alias("month"),
+        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c"),
+    )
+    m = o.groupBy("month").agg(
+        bigint(F.sum("c")).alias("cents"), bigint(F.count(F.lit(1))).alias("n")
+    )
+    w = Window.orderBy("month")
+    prev = F.lag("cents").over(w)
+    return m.select(
+        "month",
+        "cents",
+        "n",
+        bigint(F.col("cents") - prev).alias("delta_cents"),
         bigint(
-            F.sum((F.col("d") > 3 * F.col("mad")).cast("bigint"))
-        ).alias("n_outliers"),
+            F.when(
+                prev.isNotNull(),
+                F.expr(
+                    "(1000000 * (cents - lag(cents) OVER (ORDER BY month))) "
+                    "div lag(cents) OVER (ORDER BY month)"
+                ),
+            )
+        ).alias("mom_ppm"),
+    )
+
+
+@op(
+    "timeseries_ewma_int",
+    oracle="""
+WITH e AS (
+  SELECT user_id, epoch_us(ts) AS us, event_id,
+         CAST(round(value * 100) AS BIGINT) AS x
+  FROM events
+),
+l AS (
+  SELECT user_id, list(x ORDER BY us, event_id) AS xs, count(*) AS n
+  FROM e GROUP BY user_id
+)
+SELECT user_id,
+       CAST(n AS BIGINT) AS n_events,
+       CAST(xs[1] AS BIGINT) AS first_x100,
+       CAST(list_reduce(xs, (acc, x) -> (3 * acc + x) // 4) AS BIGINT)
+         AS ewma_x100
+FROM l
+""",
+    category=CAT,
+)
+def timeseries_ewma_int(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Integer EWMA per user (alpha = 1/4 as the exact rational
+    recurrence s_t = (3*s_{t-1} + x_t) div 4, seeded s_0 = x_0): the
+    smoothing pass behind rate limiting / anomaly baselines, computed
+    with NO floats so the result is engine-exact — float EWMA would
+    drift between engines through rounding order.  x >= 0 on this
+    table, so floor (DuckDB //) and truncating (Spark div) integer
+    division agree everywhere.
+
+    Scale: one user-keyed shuffle into the same sorted state-collapse
+    the sessionize/CEP ops use (sort_array(collect_list) -> one
+    aggregate() fold per user); per-user history is bounded by the
+    CEP-documented cap reasoning.  A streaming deployment carries the
+    single integer s_t as its state — this is the batch replay of
+    exactly that operator."""
+    ev = load(spark, sf_dir, "events")
+    seq = (
+        ev.select(
+            "user_id",
+            F.struct(
+                F.expr("unix_micros(ts)").alias("us"),
+                "event_id",
+                F.round(F.col("value") * 100).cast("bigint").alias("x"),
+            ).alias("rec"),
+        )
+        .groupBy("user_id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list("rec")), lambda r: r["x"]
+            ).alias("xs")
+        )
+    )
+    return seq.select(
+        "user_id",
+        bigint(F.size("xs")).alias("n_events"),
+        bigint(F.element_at("xs", 1)).alias("first_x100"),
+        bigint(
+            F.aggregate(
+                F.slice("xs", 2, 1_000_000_000),
+                F.element_at("xs", 1),
+                # floor((3s+x)/4) on exact small ints == DuckDB's //;
+                # x >= 0 keeps the state nonnegative so floor==trunc
+                lambda acc, x: F.floor((acc * 3 + x) / F.lit(4)).cast("long"),
+            )
+        ).alias("ewma_x100"),
+    )
+
+
+@op(
+    "timeseries_downsample_ltob",
+    oracle="""
+WITH p AS (
+  SELECT user_id, epoch_us(ts) AS x,
+         CAST(round(value * 100) AS BIGINT) AS y,
+         event_id,
+         row_number() OVER (PARTITION BY user_id
+                            ORDER BY ts, event_id) - 1 AS rn
+  FROM events
+),
+n AS (
+  SELECT user_id, x, y, event_id, rn, rn // 8 AS bucket,
+         lag(x)  OVER w AS px, lag(y)  OVER w AS py,
+         lead(x) OVER w AS nx, lead(y) OVER w AS ny
+  FROM p WINDOW w AS (PARTITION BY user_id ORDER BY rn)
+),
+a AS (
+  SELECT user_id, bucket, event_id, y,
+         abs((px - nx) * (y - py) - (px - x) * (ny - py)) AS area2
+  FROM n WHERE px IS NOT NULL AND nx IS NOT NULL
+),
+r AS (
+  SELECT user_id, bucket, event_id, y, area2,
+         row_number() OVER (PARTITION BY user_id, bucket
+                            ORDER BY area2 DESC, event_id) AS pick
+  FROM a
+)
+SELECT user_id, CAST(bucket AS BIGINT) AS bucket,
+       event_id AS kept_event_id,
+       CAST(y AS BIGINT) AS kept_y_cents,
+       CAST(area2 AS BIGINT) AS area2
+FROM r WHERE pick = 1
+""",
+    category=CAT,
+)
+def timeseries_downsample_ltob(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Largest-Triangle-One-Bucket downsampling (Steinarsson 2013's
+    LTOB variant): per user, split the series into 8-point buckets and
+    keep the point with the largest doubled-triangle area against its
+    immediate neighbors — the chart-fidelity downsampler dashboards
+    run before plotting millions of points.  The area is an exact
+    integer cross product on (epoch us, cents), so selection —
+    including the event_id tiebreak — replays exactly in both engines
+    (unlike true LTTB, whose previous-selected-point recurrence is
+    sequential; LTOB is the parallelizable variant).
+
+    Scale: one user-keyed window sort shared by row_number + lag/lead,
+    then a (user, bucket)-keyed top-1 — rank pushdown
+    (WindowGroupLimit) keeps only candidates per bucket pre-shuffle."""
+    ev = spread(load(spark, sf_dir, "events"))
+    worder = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    p = ev.select(
+        "user_id",
+        F.expr("unix_micros(ts)").alias("x"),
+        F.expr("CAST(round(value * 100) AS BIGINT)").alias("y"),
+        "event_id",
+        (F.row_number().over(worder) - 1).alias("rn"),
+    )
+    wrn = Window.partitionBy("user_id").orderBy("rn")
+    n = p.select(
+        "user_id",
+        "x",
+        "y",
+        "event_id",
+        F.expr("rn div 8").alias("bucket"),
+        F.lag("x").over(wrn).alias("px"),
+        F.lag("y").over(wrn).alias("py"),
+        F.lead("x").over(wrn).alias("nx"),
+        F.lead("y").over(wrn).alias("ny"),
+    )
+    a = n.filter(F.col("px").isNotNull() & F.col("nx").isNotNull()).select(
+        "user_id",
+        "bucket",
+        "event_id",
+        "y",
+        F.abs(
+            (F.col("px") - F.col("nx")) * (F.col("y") - F.col("py"))
+            - (F.col("px") - F.col("x")) * (F.col("ny") - F.col("py"))
+        ).alias("area2"),
+    )
+    pick = Window.partitionBy("user_id", "bucket").orderBy(
+        F.col("area2").desc(), F.col("event_id")
+    )
+    return (
+        a.select(
+            "user_id", "bucket", "event_id", "y", "area2",
+            F.row_number().over(pick).alias("pk"),
+        )
+        .filter(F.col("pk") == 1)
+        .select(
+            "user_id",
+            bigint(F.col("bucket")).alias("bucket"),
+            F.col("event_id").alias("kept_event_id"),
+            bigint(F.col("y")).alias("kept_y_cents"),
+            bigint(F.col("area2")).alias("area2"),
+        )
+    )
+
+
+@op(
+    "timeseries_theil_sen_int",
+    oracle="""
+WITH d AS (
+  SELECT epoch_us(CAST(CAST(o_orderdate AS DATE) AS TIMESTAMP))
+           // 86400000000 AS x,
+         count(*) AS y
+  FROM orders GROUP BY 1
+),
+pairs AS (
+  SELECT (b.y - a.y) * 1000000 // (b.x - a.x) AS slope_micro
+  FROM d a JOIN d b ON b.x > a.x
+),
+ranked AS (
+  SELECT slope_micro,
+         row_number() OVER (ORDER BY slope_micro) AS rn,
+         count(*) OVER () AS n
+  FROM pairs
+)
+SELECT CAST(min(n) AS BIGINT) AS n_pairs,
+       CAST(min(slope_micro) AS BIGINT) AS theil_sen_micro
+FROM ranked WHERE 2 * rn >= n + 1
+""",
+    category=CAT,
+)
+def timeseries_theil_sen_int(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Theil-Sen robust trend estimator over the daily order-count
+    series: the MEDIAN of all pairwise slopes, each slope floored to
+    integer micro-units/day — the trend line outliers cannot drag
+    (one crazy ingest day moves an OLS slope but not this), computed
+    exactly: median = first slope whose rank reaches the ceiling
+    half, deterministic because the rank order is total.
+
+    Scale: the day series is an aggregate (one fact shuffle); the
+    O(days^2) pair join runs on aggregate rows — for decade-long
+    series the standard move is Theil-Sen on a coarse (weekly) series
+    or the repeated-median variant, both the same shape."""
+    o = spread(load(spark, sf_dir, "orders"))
+    d = o.groupBy(
+        F.expr(
+            "unix_micros(CAST(CAST(o_orderdate AS DATE) AS TIMESTAMP))"
+            " div 86400000000"
+        ).alias("x")
+    ).agg(F.count(F.lit(1)).alias("y"))
+    a = d.select(F.col("x").alias("xa"), F.col("y").alias("ya"))
+    b = d.select(F.col("x").alias("xb"), F.col("y").alias("yb"))
+    pairs = a.join(b, F.col("xb") > F.col("xa")).select(
+        F.expr("(yb - ya) * 1000000 div (xb - xa)").alias("slope_micro")
+    )
+    # Round-12 (guide §2.3/§2.4): the old form ranked every pairwise
+    # slope with row_number() over a GLOBAL order — a single-partition
+    # Sort + two Window nodes over all O(days^2) pair rows.  The rank
+    # test only needs each slope VALUE's highest rank, which is the
+    # cumulative frequency: rank(last occurrence of s) = cum(s), so
+    # `exists rn of s with 2*rn >= n+1` <=> `2*cum(s) >= n+1`, and the
+    # median is the smallest such s.  groupBy(slope) aggregates the
+    # pair stream distributed (map-side partial agg); only the
+    # distinct-slope frequency table — O(value range), not O(pairs) —
+    # crosses into the single-partition cumulative window.
+    freq = pairs.groupBy("slope_micro").agg(F.count(F.lit(1)).alias("c"))
+    w_cum = Window.orderBy("slope_micro").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    ranked = freq.select(
+        "slope_micro",
+        F.sum("c").over(w_cum).alias("cum"),
+        F.sum("c").over(Window.partitionBy()).alias("n"),
+    )
+    return ranked.filter(2 * F.col("cum") >= F.col("n") + 1).agg(
+        bigint(F.min("n")).alias("n_pairs"),
+        bigint(F.min("slope_micro")).alias("theil_sen_micro"),
     )
