@@ -772,6 +772,22 @@ def test_spread_no_shuffle_when_wide(spark):
     assert f"Exchange roundrobinpartitioning({par}".lower() in spread_plan.lower(), spread_plan
 
 
+def test_spread_no_shuffle_when_wide_uri_scan(spark, tmp_path):
+    """spread asks Spark for the scan's width, so a wide table read
+    through a URI that os cannot stat (file://, and likewise s3a:// or
+    hdfs://) is left as it is — no round-robin shuffle of raw text."""
+    from trip_data_pipeline_spark.io import load
+    from trip_data_pipeline_spark.operators.common import spread
+
+    par = spark.sparkContext.defaultParallelism
+    load(spark, SF, "documents").repartition(2 * par).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    df = load(spark, f"file://{tmp_path}", "documents")
+    assert df.rdd.getNumPartitions() >= par
+    assert spread(df) is df
+
+
 def _df_exec_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 

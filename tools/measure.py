@@ -6,7 +6,8 @@ record, for each, where the execution went layer by layer.
 Ops (default: every registered op) run one after another on one
 ``get_session`` session, built through ``OPS[name].fn`` exactly as
 perfbench builds them.  Per op: with ``--plans``, ``explain("formatted")``
-goes to ``DIR/<op>.txt`` first; then one warm noop write, then N timed
+goes to ``DIR/<op>.txt`` first, its session counters replaced
+(``normalize_plan``); then one warm noop write, then N timed
 build + noop-write reps, each under its own job group.  Build and
 execute seconds are the min and the spread (max - min) over the reps.
 The last rep's job group gives the layer record, read through
@@ -28,7 +29,9 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
+import tempfile
 import time
 import traceback
 
@@ -42,6 +45,32 @@ sys.path.insert(0, ROOT)
 # them.  Retention is bookkeeping only; execution does not change.
 RETAIN_CONF = "spark.ui.retainedJobs=100000;spark.ui.retainedStages=100000"
 _STAGE_SUMS = ("run_s", "cpu_s", "gc_s", "shuffle_read_mb", "shuffle_write_mb", "spill_mb")
+
+# Session counters and random names that explain() prints: they follow
+# what ran earlier in the session (or chance: the bucketed-join tables'
+# uuid suffix, common.scratch_dir's mkdtemp names), not the plan's
+# shape, so --plans replaces them and two trees' captures can be diffed
+# file by file.
+# One residue stays: with two or more distinct aggregates
+# (agg_multi_distinct, text_stem_naive) the Expand projection order
+# follows expression ids, so those plans match only between fresh
+# sessions.
+_PLAN_NOISE = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\] at (\w+) at \S+:\d+"), r"RDD[N] at \1 at CALLSITE"),
+    (re.compile(r"\blambda x_\d+"), "lambda x_N"),
+    (re.compile(r"\b_common_expr_\d+\b"), "_common_expr_N"),
+    (re.compile(r"\b(orders|customer)_b_[0-9a-f]{8}\b"), r"\1_b_SUFFIX"),
+    (re.compile(re.escape(tempfile.gettempdir()) + r"/([\w.-]*?)[a-z0-9_]{8}(?!\w)"), r"TMP/\1XXXXXXXX"),
+)
+
+
+def normalize_plan(text: str) -> str:
+    """``text`` with each ``_PLAN_NOISE`` pattern replaced."""
+    for pattern, repl in _PLAN_NOISE:
+        text = pattern.sub(repl, text)
+    return text
 
 
 def _layers(jobs: list[dict], batches: list[dict]) -> dict:
@@ -68,7 +97,8 @@ def _measure_op(spark, sf_dir: str, name: str, reps: int, plans: str | None, lis
         df = fn(spark, sf_dir)
         with open(os.path.join(plans, f"{name}.txt"), "w") as f:
             f.write(f"# {name} — explain('formatted') @ {sf_dir}\n")
-            f.write(sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted"))
+            plan = sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+            f.write(normalize_plan(plan))
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
     build, execute = [], []
     for rep in range(reps):

@@ -18,19 +18,8 @@ exactly parity-safe.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-# DataFrame -> source parquet path for freshly-loaded fixture tables.
-# operators.common.spread consults this to estimate the scan's partition
-# count from file sizes (pure-Python stat, microseconds) instead of
-# forcing a full physical plan + RDD conversion per call
-# (df.rdd.getNumPartitions() measured ~70 ms of driver time per op
-# construction — judge r4 "What's wrong" item 2).  Weak keys: entries
-# die with their DataFrames, nothing pins query plans in memory.
-_DF_SRC: "weakref.WeakKeyDictionary[DataFrame, str]" = weakref.WeakKeyDictionary()
 
 # Per-session memo of loaded fixture DataFrames.  spark.read.parquet
 # EAGERLY resolves the schema (footer read + file listing over py4j)
@@ -44,6 +33,9 @@ _DF_SRC: "weakref.WeakKeyDictionary[DataFrame, str]" = weakref.WeakKeyDictionary
 # an entry (value->key cycle pins it — ADVICE r5 item 1); an instance
 # attribute has exactly the session's own lifetime, with no global
 # root, so the cache truly dies when the session object does.
+# The memo also makes operators.common.spread's
+# df.rdd.getNumPartitions() probe a once-per-table cost: PySpark caches
+# a DataFrame's .rdd.
 _LOAD_CACHE_ATTR = "_tdp_spark_load_cache"
 
 TABLES = (
@@ -239,9 +231,5 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = ns_to_ts(spark.read.parquet(table_path(sf_dir, name)))
     else:
         df = spark.read.parquet(table_path(sf_dir, name))
-    try:
-        _DF_SRC[df] = table_path(sf_dir, name)
-    except TypeError:  # non-weak-referenceable DataFrame impl: skip hint
-        pass
     cache[(sf_dir, name)] = df
     return df

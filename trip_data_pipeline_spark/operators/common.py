@@ -18,12 +18,9 @@ import atexit
 import os
 import shutil
 import tempfile
-from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from trip_data_pipeline_spark import io as _io
 
 _SCRATCH_DIRS: list[str] = []
 
@@ -94,20 +91,17 @@ def duck_epoch_s(col: str) -> str:
 def range_parts(spark) -> int:
     """Partition count for explicit repartitionByRange calls in the
     two-pass global-order shapes (ids_global_contiguous,
-    dq_sequence_gaps): the session's spark.sql.shuffle.partitions,
-    falling back to defaultParallelism (ADVICE r7 item 2 — a literal
-    32 is a fixed-parallelism ceiling at cluster scale; a 1000-executor
-    session sets shuffle.partitions in the thousands and each range
-    task must stay bounded by rows/partition).  Output of both callers
+    dq_sequence_gaps): the session's spark.sql.shuffle.partitions
+    (ADVICE r7 item 2 — a literal 32 is a fixed-parallelism ceiling at
+    cluster scale; a 1000-executor session sets shuffle.partitions in
+    the thousands and each range task must stay bounded by
+    rows/partition).  Spark rejects a non-positive value when it is
+    set, so the conf is always a usable count.  Output of both callers
     is boundary-independent (property-locked by
     test_sequence_gaps_two_pass_matches_naive and the
     ids_global_contiguous checksum), so the count only affects
     parallelism, never values."""
-    try:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions", "0"))
-    except Exception:
-        n = 0
-    return n if n > 0 else max(1, spark.sparkContext.defaultParallelism)
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def spread(df, min_fraction: float = 1.0):
@@ -140,12 +134,9 @@ def spread(df, min_fraction: float = 1.0):
     compute-bound ops keep the strict default (always reach full
     parallelism).
 
-    Probe cost (judge r4 + ADVICE r4): for fixture scans registered by
-    io.load the partition count is ESTIMATED from file sizes with
-    Spark's own FilePartition packing formula (pure-Python os.stat,
-    lru-cached) — df.rdd.getNumPartitions() forces a second full
-    physical plan + RDD conversion and measured ~70 ms of driver time
-    per op construction.  Non-scan inputs keep the exact RDD probe.
+    The exact probe, df.rdd.getNumPartitions(), is cheap here: every
+    caller passes an io.load frame, which is memoized per (session,
+    table), and PySpark caches its .rdd, so Spark plans each scan once.
     The guard floor is 1 only when target==1 (a defaultParallelism==1
     session never gets a pointless repartition(1) Exchange — ADVICE r4
     item 3) and stays 2 otherwise, so a 1-partition scan on a small
@@ -153,45 +144,9 @@ def spread(df, min_fraction: float = 1.0):
     round to 1) is still widened (ADVICE r5 item 3)."""
     target = df.sparkSession.sparkContext.defaultParallelism
     floor = 1 if target == 1 else 2
-    if _scan_partitions(df) >= max(floor, int(target * min_fraction)):
+    if df.rdd.getNumPartitions() >= max(floor, int(target * min_fraction)):
         return df
     return df.repartition(target)
-
-
-def _scan_partitions(df) -> int:
-    """Partition count of `df`'s scan: file-stat estimate for io.load
-    frames, exact RDD probe otherwise."""
-
-    src = _io._DF_SRC.get(df)
-    if src is None:
-        return df.rdd.getNumPartitions()
-    spark = df.sparkSession
-    return _estimate_file_scan_partitions(
-        src,
-        _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20),
-        _conf_bytes(spark, "spark.sql.files.openCostInBytes", 4 << 20),
-        spark.sparkContext.defaultParallelism,
-    )
-
-
-_UNITS = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-
-
-def _conf_bytes(spark, key: str, default: int) -> int:
-    """Parse a Spark byte-valued conf ('134217728', '128m', '4MB')."""
-    try:
-        v = str(spark.conf.get(key, str(default))).strip().lower()
-    except Exception:
-        return default
-    if v.endswith("b") and not v[:-1].isdigit():
-        v = v[:-1]  # 'kb'/'mb'/'gb' -> 'k'/'m'/'g'
-    mult = 1
-    if v and v[-1] in _UNITS:
-        mult, v = _UNITS[v[-1]], v[:-1]
-    try:
-        return int(v) * mult
-    except ValueError:
-        return default
 
 
 def _file_sizes(path: str) -> list[int]:
@@ -218,43 +173,6 @@ def _path_bytes(path: str) -> int:
     of unknown size is exactly the executor-OOM the cap exists to
     prevent (ADVICE r6 item 1)."""
     return sum(_file_sizes(path))
-
-
-@lru_cache(maxsize=256)
-def _estimate_file_scan_partitions(
-    path: str, max_partition_bytes: int, open_cost: int, parallelism: int
-) -> int:
-    """Replicate FilePartition.getFilePartitions packing on os.stat sizes
-    (fixture files are immutable, so caching on the path is sound):
-    maxSplitBytes = min(maxPartitionBytes, max(openCost, bytesPerCore));
-    files split into <= maxSplitBytes chunks, sorted desc, greedily
-    packed with openCost added per split.  Exact enough for the guard —
-    the decision is 'scan already wide vs single-digit splits'.
-    An unstatable path (remote URI) yields no sizes and returns 1, so
-    the caller widens via repartition — the safe direction here (an
-    extra shuffle, never an OOM; contrast _path_bytes where 0 must
-    fail closed away from broadcast)."""
-    sizes = _file_sizes(path)
-    if not sizes:
-        return 1
-    total = sum(sizes)
-    bytes_per_core = (total + len(sizes) * open_cost) // max(1, parallelism)
-    max_split = min(max_partition_bytes, max(open_cost, bytes_per_core))
-    splits: list[int] = []
-    for s in sizes:
-        while s > max_split:
-            splits.append(max_split)
-            s -= max_split
-        if s > 0:
-            splits.append(s)
-    splits.sort(reverse=True)
-    parts, cur = 0, 0
-    for sp in splits:
-        if cur + sp > max_split and cur > 0:
-            parts += 1
-            cur = 0
-        cur += sp + open_cost
-    return parts + (1 if cur else 0)
 
 
 # --------------------------------------------------------------------------

@@ -72,7 +72,7 @@ GROUP BY 1
 def dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on normalized-text md5, deterministic survivor —
     SURVEY.md §2.11 row 4.  Round 3: normalization is the shared
-    translate() char-map (text_ops._norm) — the old Java regex was
+    translate() char-map (common._norm) — the old Java regex was
     ~75% of this op's wall time at the 10x probe (2.03 s -> 0.63 s).
     Light per-row work: relaxed spread guard (common.spread r4 note)."""
     d = spread(load(spark, sf_dir, "documents"), min_fraction=0.25)
@@ -436,7 +436,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup: top-10 most similar pairs in a
     bounded id range — task-brief dedup addition.  The top-10
     membership RANKS on cosine, so it uses the integer-exact quantized
-    cosine (similarity.qvec) — see the round-3 ADVICE fix.
+    cosine (common.qvec) — see the round-3 ADVICE fix.
 
     Brute-force within the bound; at 100 TB the same query runs after
     an LSH/IVF bucket join (see sim_ann_ivf_bucket) so pairs are only

@@ -460,7 +460,7 @@ def sim_ann_lsh_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer sums are order-independent, so the groupBy's partial-agg
     ordering cannot perturb the bucket, unlike a float projection.
     Neighbor RANKING uses the integer-exact quantized cosine
-    (similarity.qvec — round-3 ADVICE fix)."""
+    (common.qvec — round-3 ADVICE fix)."""
 
     raw = spread(load(spark, sf_dir, "embeddings"))
     exploded = raw.select(
@@ -631,7 +631,7 @@ def knn_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim ops (the eval set is small by construction); the vote and
     confusion aggregations act on k x |eval| rows — negligible.
     Neighbor RANKING uses the integer-exact quantized cosine
-    (similarity.qvec — round-3 ADVICE fix)."""
+    (common.qvec — round-3 ADVICE fix)."""
     e = spread(load(spark, sf_dir, "embeddings"))
 
     base = e.select(
