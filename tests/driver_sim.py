@@ -19,24 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as entrymod
-from tests.oracle import (
-    canon_rows,
-    driver_sort_check,
-    duck_connect,
-    duck_result,
-    spark_result,
-)
-
-
-def mismatch_detail(s_cols, s_canon, d_cols, d_canon) -> str:
-    """What a HASH-MISMATCH differs in: the column lists when they
-    differ, else the row counts and the first 3 differing canonical rows."""
-    if sorted(s_cols) != sorted(d_cols):
-        return f"    spark cols: {s_cols}\n    duck  cols: {d_cols}"
-    diffs = [(a, b) for a, b in zip(s_canon, d_canon) if a != b][:3]
-    return f"    rows {len(s_canon)}/{len(d_canon)}" + "".join(
-        f"\n    spark: {a}\n    duck : {b}" for a, b in diffs
-    )
+from tests.oracle import diff_results, duck_connect, duck_result, spark_result
 
 
 def main() -> int:
@@ -71,15 +54,11 @@ def main() -> int:
         try:
             rdf = qs[name](spark, sf_dir)
             if name in oracles:
-                s_cols, s_rows = spark_result(rdf)
-                d_cols, d_rows = duck_result(con, oracles[name])
-                driver_sort_check(s_cols, s_rows)  # crash on list cells
-                driver_sort_check(d_cols, d_rows)  # exactly like the driver
-                s_canon, d_canon = canon_rows(s_cols, s_rows), canon_rows(d_cols, d_rows)
-                ok = sorted(s_cols) == sorted(d_cols) and s_canon == d_canon
+                detail = diff_results(
+                    *spark_result(rdf), *duck_result(con, oracles[name])
+                ) or ""
+                ok = not detail
                 status = "HASH-OK" if ok else "HASH-MISMATCH"
-                if not ok:
-                    detail = mismatch_detail(s_cols, s_canon, d_cols, d_canon)
             else:
                 c = rdf.count()
                 ok, status = True, f"ROWS-ONLY({c})"
@@ -88,7 +67,7 @@ def main() -> int:
         dt = time.time() - t0
         print(f"  {name:32s} {status:16s} {dt:5.2f}s")
         if detail:
-            print(detail)
+            print("    " + detail.replace("\n", "\n    "))
         if not ok:
             fails.append(name)
     print(f"{len(qs) - len(fails)}/{len(qs)} ok")

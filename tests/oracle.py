@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import math
 import os
+from collections import Counter
 from typing import Any
 
 import duckdb
@@ -100,26 +101,33 @@ def duck_result(con, sql: str) -> tuple[list[str], list[tuple]]:
     return cols, rows
 
 
-def compare(df, con, sql: str) -> None:
-    """Assert Spark df == DuckDB sql result (column names, row count,
-    order-insensitive values)."""
-    s_cols, s_rows = spark_result(df)
-    d_cols, d_rows = duck_result(con, sql)
-    assert sorted(s_cols) == sorted(d_cols), (
-        f"column mismatch: spark={sorted(s_cols)} duck={sorted(d_cols)}"
-    )
-    assert len(s_rows) == len(d_rows), (
-        f"row count mismatch: spark={len(s_rows)} duck={len(d_rows)}"
-    )
+def diff_results(
+    s_cols: list[str], s_rows: list[tuple], d_cols: list[str], d_rows: list[tuple]
+) -> str | None:
+    """None when the Spark result equals the DuckDB one under the
+    driver's check (column names, row count, order-insensitive values),
+    else what differs: the column lists, the row counts, or up to 3
+    spark-only and 3 duck-only canonical rows.  Raises like the driver
+    on list cells (driver_sort_check)."""
+    if sorted(s_cols) != sorted(d_cols):
+        return f"column mismatch: spark={sorted(s_cols)} duck={sorted(d_cols)}"
+    if len(s_rows) != len(d_rows):
+        return f"row count mismatch: spark={len(s_rows)} duck={len(d_rows)}"
     driver_sort_check(s_cols, s_rows)
     driver_sort_check(d_cols, d_rows)
-    sc = canon_rows(s_cols, s_rows)
-    dc = canon_rows(d_cols, d_rows)
-    if sc != dc:
-        dset, sset = set(dc), set(sc)
-        only_s = [r for r in sc if r not in dset][:3]
-        only_d = [r for r in dc if r not in sset][:3]
-        raise AssertionError(
-            f"value mismatch; cols={sorted(s_cols)}\n"
-            f"spark-only rows: {only_s}\nduck-only rows: {only_d}"
-        )
+    sc = Counter(canon_rows(s_cols, s_rows))
+    dc = Counter(canon_rows(d_cols, d_rows))
+    if sc == dc:
+        return None
+    only_s = list((sc - dc).elements())[:3]
+    only_d = list((dc - sc).elements())[:3]
+    return (
+        f"value mismatch; cols={sorted(s_cols)}\n"
+        f"spark-only rows: {only_s}\nduck-only rows: {only_d}"
+    )
+
+
+def compare(df, con, sql: str) -> None:
+    """Assert Spark df == DuckDB sql result (see diff_results)."""
+    msg = diff_results(*spark_result(df), *duck_result(con, sql))
+    assert msg is None, msg

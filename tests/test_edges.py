@@ -109,6 +109,66 @@ def test_md5_of_unicode(edge_pair):
     )
 
 
+def test_hash_and_quantize_kernels_match_duckdb(spark):
+    """The two encodings every hash-checked op shares with its oracle:
+    common.hex_int / duck_hex_int (md5 hex -> bigint) agree with each
+    other and with Python's int(hex, 16) at every (start, n) the ops
+    use, including md5s with a leading 0 or f; the MinHash 56-bit parse
+    splits into the two 28-bit parses minhash_signatures_arrow relies
+    on; and qmilli / duck_qmilli agree on float32 inputs at exact
+    half-milli boundaries, zero, negatives and NULL."""
+    import hashlib
+
+    import numpy as np
+    import pyarrow as pa
+
+    from trip_data_pipeline_spark.operators.common import (
+        duck_hex_int,
+        duck_qmilli,
+        hex_int,
+        qmilli,
+    )
+
+    def md5(s: str) -> str:
+        return hashlib.md5(s.encode()).hexdigest()
+
+    lead = {c: next(s for s in map(str, range(1000)) if md5(s)[0] == c) for c in "0f"}
+    texts = ["", "héllo wörld 日本", lead["0"], lead["f"]]
+    spans = [(1, 4), (1, 7), (8, 7), (15, 7), (22, 7), (1, 14)]
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"id": range(len(texts)), "s": texts}))
+    sdf = spark.createDataFrame(list(enumerate(texts)), "id int, s string")
+    cols = [hex_int(F.md5("s"), st, n).alias(f"h{st}_{n}") for st, n in spans]
+    got = sorted(tuple(r) for r in sdf.select("id", *cols).collect())
+    duck = ", ".join(duck_hex_int("md5(s)", st, n) for st, n in spans)
+    want = sorted(con.execute(f"SELECT id, {duck} FROM t").fetchall())
+    ref = [
+        (i, *(int(md5(s)[st - 1 : st - 1 + n], 16) for st, n in spans))
+        for i, s in enumerate(texts)
+    ]
+    assert got == want == ref, f"spark={got}\nduck={want}\npython={ref}"
+    for _, _, h1_7, h8_7, *_, hab in got:
+        assert hab >> 28 == h1_7
+        assert hab & ((1 << 28) - 1) == h8_7
+
+    # float32 values whose x*1000 is an exact .5 (k/16), their float32
+    # neighbours, values printed as x.xxx5, zero, -0.0 and negatives
+    halves = np.float32([0.0625, -0.0625, 0.3125, -0.3125, 2.5625, -2.5625])
+    near = np.concatenate(
+        [np.nextafter(halves, np.float32(np.inf)), np.nextafter(halves, np.float32(-np.inf))]
+    )
+    printed = np.float32([0.0005, -0.0005, 1.2345, -1.2345, 0.0015, -0.9995])
+    rest = np.float32([0.0, -0.0, -3.0])
+    xs = [float(x) for x in np.concatenate([halves, near, printed, rest])] + [None]
+    ids = pa.array(range(len(xs)), pa.int32())
+    con.register("q", pa.table({"id": ids, "x": pa.array(xs, pa.float32())}))
+    sq = spark.createDataFrame(list(enumerate(xs)), "id int, x float")
+    got = sorted(tuple(r) for r in sq.select("id", qmilli(F.col("x"))).collect())
+    want = sorted(con.execute(f"SELECT id, CAST({duck_qmilli('x')} AS BIGINT) FROM q").fetchall())
+    assert got == want, f"spark={got}\nduck={want}"
+    assert dict(got)[0] == 63 and dict(got)[1] == -62 and dict(got)[len(xs) - 1] is None
+
+
 def test_parse_extra_conf():
     """SPARK_GRAFT_EXTRA_CONF parsing (ADVICE r2/r3): well-formed
     entries round-trip, malformed entries raise loudly."""

@@ -45,6 +45,7 @@ def test_normalize_plan_replaces_session_counters_and_random_names():
         "Output [2]: [o_orderkey#123L, o_totalprice#7]\n"
         "(2) Project [codegen id : 1]\n"
         "Input: transform(ws#16, lambdafunction((lambda x_12#18 + 1), lambda x_12#18, false))\n"
+        "Input: zip_with(a#3, b#4, lambdafunction((lambda x_13#19 * lambda y_14#20), lambda x_13#19, lambda y_14#20, false))\n"
         "Arguments: [plan_id=42], MapPartitionsRDD[590] at localCheckpoint at <unknown>:0\n"
         "Scan ExistingRDD: RDD[251] at toRdd at NativeMethodAccessorImpl.java:0\n"
         "With: _common_expr_3#99 AS _common_expr_3\n"
@@ -56,6 +57,7 @@ def test_normalize_plan_replaces_session_counters_and_random_names():
         "Output [2]: [o_orderkey#NL, o_totalprice#N]\n"
         "(2) Project [codegen id : 1]\n"
         "Input: transform(ws#N, lambdafunction((lambda x_N#N + 1), lambda x_N#N, false))\n"
+        "Input: zip_with(a#N, b#N, lambdafunction((lambda x_N#N * lambda y_N#N), lambda x_N#N, lambda y_N#N, false))\n"
         "Arguments: [plan_id=N], MapPartitionsRDD[N] at localCheckpoint at CALLSITE\n"
         "Scan ExistingRDD: RDD[N] at toRdd at CALLSITE\n"
         "With: _common_expr_N#N AS _common_expr_N\n"

@@ -80,40 +80,48 @@ def test_dedup_exact_partitions_corpus(spark):
 
 
 def test_simhash_identical_docs_distance_zero(spark):
-    from trip_data_pipeline_spark.operators.dedup import simhash_bits_expr
+    from trip_data_pipeline_spark.operators.dedup import simhash_bits_arrow
 
     df = spark.createDataFrame(
         [(1, "a b c d e f g h"), (2, "a b c d e f g h"), (3, "totally different words here now")],
         "doc_id long, text string",
-    ).select("doc_id", F.expr(simhash_bits_expr("split(text, ' ')")).alias("sh"))
-    rows = {r.doc_id: r.sh for r in df.collect()}
+    ).select("doc_id", F.split("text", " ").alias("ws"))
+    rows = {r.doc_id: r.sh for r in simhash_bits_arrow(df).collect()}
     assert rows[1] == rows[2]
     assert len(rows[1]) == 56 and set(rows[1]) <= {"0", "1"}
     assert rows[1] != rows[3]
 
 
 def test_cosine_self_similarity_and_symmetry(spark):
-    from trip_data_pipeline_spark.operators.multimodal import as_double_vec
-    from trip_data_pipeline_spark.operators.similarity import cosine
+    """The ranked cosine the similarity ops compute (qvec, l2norm, dot,
+    fr4 over nonzero norms) is exactly 1.0 against itself and exactly
+    symmetric."""
     from trip_data_pipeline_spark.io import load
+    from trip_data_pipeline_spark.operators.common import dot, fr4, l2norm, qvec
 
-    e = load(spark, SF, "embeddings").filter(F.col("vec_id") < 5).select(
-        "vec_id", as_double_vec().alias("emb")
+    e = (
+        load(spark, SF, "embeddings")
+        .filter(F.col("vec_id") < 5)
+        .select("vec_id", qvec().alias("emb"))
+        .withColumn("nrm", l2norm(F.col("emb")))
+        .filter(F.col("nrm") > 0)
     )
-    self_sim = e.select(F.round(cosine(F.col("emb"), F.col("emb")), 9).alias("c")).collect()
-    assert all(abs(r.c - 1.0) < 1e-9 for r in self_sim)
+
+    def cos(x, y):
+        norms = F.col(f"{x}.nrm") * F.col(f"{y}.nrm")
+        return fr4(dot(F.col(f"{x}.emb"), F.col(f"{y}.emb")) / norms)
 
     a, b = e.alias("a"), e.alias("b")
+    self_sim = a.select(cos("a", "a").alias("c")).collect()
+    assert self_sim and all(r.c == 1.0 for r in self_sim)
+
     sym = (
         a.crossJoin(b)
         .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            (F.round(cosine(F.col("a.emb"), F.col("b.emb")), 9)
-             - F.round(cosine(F.col("b.emb"), F.col("a.emb")), 9)).alias("d")
-        )
+        .select((cos("a", "b") - cos("b", "a")).alias("d"))
         .collect()
     )
-    assert all(r.d == 0.0 for r in sym)
+    assert sym and all(r.d == 0.0 for r in sym)
 
 
 def test_ann_results_subset_of_bruteforce(spark):

@@ -52,14 +52,14 @@ _STAGE_SUMS = ("run_s", "cpu_s", "gc_s", "shuffle_read_mb", "shuffle_write_mb", 
 # shape, so --plans replaces them and two trees' captures can be diffed
 # file by file.
 # One residue stays: with two or more distinct aggregates
-# (agg_multi_distinct, text_stem_naive) the Expand projection order
-# follows expression ids, so those plans match only between fresh
-# sessions.
+# (agg_multi_distinct, profile_table, text_stem_naive) the Expand
+# projection order follows expression ids, so those plans match only
+# between fresh sessions.
 _PLAN_NOISE = (
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\] at (\w+) at \S+:\d+"), r"RDD[N] at \1 at CALLSITE"),
-    (re.compile(r"\blambda x_\d+"), "lambda x_N"),
+    (re.compile(r"\blambda ([xyz])_\d+"), r"lambda \1_N"),
     (re.compile(r"\b_common_expr_\d+\b"), "_common_expr_N"),
     (re.compile(r"\b(orders|customer)_b_[0-9a-f]{8}\b"), r"\1_b_SUFFIX"),
     (re.compile(re.escape(tempfile.gettempdir()) + r"/([\w.-]*?)[a-z0-9_]{8}(?!\w)"), r"TMP/\1XXXXXXXX"),

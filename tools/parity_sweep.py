@@ -59,6 +59,7 @@ from tests.oracle import (
     duck_connect,
     duck_result,
 )
+from trip_data_pipeline_spark.operators.common import duck_hex_int, hex_int
 from trip_data_pipeline_spark.registry import OPS, queries
 
 CAP = int(os.environ.get("PARITY_CAP_ROWS", "500000"))
@@ -198,8 +199,8 @@ def _minhash_eval_scaled(con) -> str:
         MINHASH_MOD,
         MINHASH_PERMS,
         SHINGLE_K,
-        _duck_hex28,
         _duck_words,
+        duck_hex_int,
     )
     from trip_data_pipeline_spark.operators.dedup import _SHINGLES_DUCK
 
@@ -227,8 +228,8 @@ SELECT doc_id1, doc_id2 FROM (
 CREATE OR REPLACE TEMP TABLE mh_cand AS
 WITH hx AS (
   SELECT doc_id,
-         {_duck_hex28('md5(s)', 1)} AS a,
-         {_duck_hex28('md5(s)', 8)} AS b
+         {duck_hex_int('md5(s)', 1, 7)} AS a,
+         {duck_hex_int('md5(s)', 8, 7)} AS b
   FROM mh_sh
 ),
 hj AS (
@@ -324,8 +325,8 @@ def _decontam_scaled(con) -> str:
         MINHASH_MOD,
         MINHASH_PERMS,
         SHINGLE_K,
-        _duck_hex28,
         _duck_words,
+        duck_hex_int,
     )
     from trip_data_pipeline_spark.operators.dedup import _SHINGLES_DUCK
 
@@ -339,8 +340,8 @@ SELECT DISTINCT doc_id, unnest({_SHINGLES_DUCK}) AS s FROM d3
 CREATE OR REPLACE TEMP TABLE dc_cand AS
 WITH hx AS (
   SELECT doc_id,
-         {_duck_hex28('md5(s)', 1)} AS a,
-         {_duck_hex28('md5(s)', 8)} AS b
+         {duck_hex_int('md5(s)', 1, 7)} AS a,
+         {duck_hex_int('md5(s)', 8, 7)} AS b
   FROM dc_sh
 ),
 hj AS (
@@ -700,17 +701,6 @@ def duck_canon_col(name: str, dtype: str) -> str:
     return f"coalesce({e}, chr(1))"
 
 
-def _duck_hexparse(expr: str, start: int, n: int) -> str:
-    """Parse n hex chars of `expr` starting at 1-based `start` to an
-    integer (DuckDB has no from-hex; positional strpos fold, the
-    generalization of operators/dedup.py's _duck_hex28)."""
-    return "(" + " + ".join(
-        f"(strpos('0123456789abcdef', substr({expr}, {start + i}, 1)) - 1)"
-        f" * {16 ** (n - 1 - i)}::HUGEINT"
-        for i in range(n)
-    ) + ")"
-
-
 def spark_fingerprint(df) -> tuple[int, int, int]:
     """(count, sum of md5 chunk1, sum of chunk2) over canonical rows."""
     dtypes = dict(df.dtypes)
@@ -718,8 +708,8 @@ def spark_fingerprint(df) -> tuple[int, int, int]:
     h = F.md5(F.concat_ws("|", *[spark_canon_col(c, dtypes[c]) for c in cols]))
     agg = df.select(h.alias("h")).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.conv(F.substring("h", 1, 14), 16, 10).cast("decimal(38,0)")).alias("f1"),
-        F.sum(F.conv(F.substring("h", 15, 14), 16, 10).cast("decimal(38,0)")).alias("f2"),
+        F.sum(hex_int("h", 1, 14).cast("decimal(38,0)")).alias("f1"),
+        F.sum(hex_int("h", 15, 14).cast("decimal(38,0)")).alias("f2"),
     ).collect()[0]
     return int(agg["n"]), int(agg["f1"] or 0), int(agg["f2"] or 0)
 
@@ -731,8 +721,8 @@ def duck_fingerprint(con, sql: str) -> tuple[int, int, int]:
     canon = ", ".join(duck_canon_col(c, t) for c, t in cols)
     row = con.execute(
         f"SELECT count(*), "
-        f"sum({_duck_hexparse('h', 1, 14)}), "
-        f"sum({_duck_hexparse('h', 15, 14)}) "
+        f"sum({duck_hex_int('h', 1, 14)}), "
+        f"sum({duck_hex_int('h', 15, 14)}) "
         f"FROM (SELECT md5(concat_ws('|', {canon})) AS h FROM ({body}))"
     ).fetchone()
     return int(row[0]), int(row[1] or 0), int(row[2] or 0)
@@ -798,9 +788,7 @@ def exact_sample_check(con, df, oracle: str, total_rows: int) -> dict:
                 "detail": "all-float schema — no stable selection skeleton"}
     k = max(2, total_rows // SAMPLE_TARGET)
     h = F.md5(F.concat_ws("|", *[spark_canon_col(c, dtypes[c]) for c in skel]))
-    sel = (
-        F.conv(F.substring(h, 1, 14), 16, 10).cast("decimal(38,0)") % k == 0
-    )
+    sel = hex_int(h, 1, 14) % k == 0
     s_raw = [tuple(r) for r in df.filter(sel).limit(CAP + 1).collect()]
     body = oracle.rstrip().rstrip(";")
     desc = con.execute(f"DESCRIBE SELECT * FROM ({body})").fetchall()
@@ -809,7 +797,7 @@ def exact_sample_check(con, df, oracle: str, total_rows: int) -> dict:
     sample_sql = (
         f"SELECT * EXCLUDE (__ps_h) FROM ("
         f"SELECT *, md5(concat_ws('|', {dcanon})) AS __ps_h FROM ({body})"
-        f") WHERE {_duck_hexparse('__ps_h', 1, 14)} % {k} = 0"
+        f") WHERE {duck_hex_int('__ps_h', 1, 14)} % {k} = 0"
     )
     d_cols, d_raw = _with_budget(
         con, lambda: duck_result(con, f"SELECT * FROM ({sample_sql}) LIMIT {CAP + 1}")

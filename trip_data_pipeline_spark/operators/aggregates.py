@@ -13,12 +13,12 @@ from pyspark.sql import functions as F
 
 from trip_data_pipeline_spark.io import load
 from trip_data_pipeline_spark.operators.common import (
-    _duck_hex28,
     _duck_words,
-    _hex28,
     _words,
     as_date,
     bigint,
+    duck_hex_int,
+    hex_int,
     r2,
     r4,
     spread,
@@ -942,7 +942,7 @@ def _duck_cms_bucket(expr: str) -> str:
     return (
         "(CASE j "
         + " ".join(
-            f"WHEN {j} THEN {_duck_hex28(expr, s)}"
+            f"WHEN {j} THEN {duck_hex_int(expr, s, 7)}"
             for j, s in enumerate(_CMS_STARTS)
         )
         + f" END) % {_CMS_W}"
@@ -996,7 +996,7 @@ def agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.posexplode(
             F.array(
                 *[
-                    (_hex28(F.md5(wcol), s) % _CMS_W)
+                    (hex_int(F.md5(wcol), s, 7) % _CMS_W)
                     for s in _CMS_STARTS
                 ]
             )

@@ -326,28 +326,27 @@ LSH_BANDS = 16  # r = 64/16 = 4 rows per band -> ~0.5 Jaccard threshold
 
 # Engine-portable universal-hash MinHash (SURVEY §2.11 / §5.3): one
 # md5 per shingle yields two 28-bit integers (a, b) parsed from hex;
-# permutation j is h_j = (a + (j+1)*b) mod M.  Both Spark (conv) and
-# DuckDB (strpos fold, see _DUCK_HEX28) compute the identical integers,
-# which is what upgrades this op from rows-only to a full value-hash
-# oracle.  28-bit a/b keeps (a + 64*b) < 2^35 — no overflow in either
-# engine — and MinHash only needs a consistent pseudo-random total
-# order per permutation, not a cryptographic one.
+# permutation j is h_j = (a + (j+1)*b) mod M.  Both engines parse the
+# identical integers (hex_int / duck_hex_int), which is what upgrades
+# this op from rows-only to a full value-hash oracle.  28-bit a/b keeps
+# (a + 64*b) < 2^35 — no overflow in either engine — and MinHash only
+# needs a consistent pseudo-random total order per permutation, not a
+# cryptographic one.
 MINHASH_MOD = 2_147_483_647  # 2^31 - 1
 
 
-def _hex28(md5_col: Column, start: int) -> Column:
-    """Spark side: parse 7 hex chars of an md5 string as a bigint."""
-    return F.conv(F.substring(md5_col, start, 7), 16, 10).cast("bigint")
+def hex_int(h: Column | str, start: int, n: int) -> Column:
+    """The ``n`` hex chars of string column ``h`` from 1-based ``start``
+    as a bigint — the md5 hash family every hash-checked op shares with
+    its oracle.  ``n <= 15`` keeps the value inside a signed bigint.
+    DuckDB mirror: ``duck_hex_int``."""
+    return F.conv(F.substring(h, start, n), 16, 10).cast("bigint")
 
 
-def _duck_hex28(h: str, start: int) -> str:
-    """DuckDB side: identical 7-hex-char parse as a positional fold
-    (DuckDB has no base-16 string->int conversion function)."""
-    return "(" + " + ".join(
-        f"(strpos('0123456789abcdef', substr({h}, {start + i}, 1)) - 1)"
-        f" * {16 ** (6 - i)}"
-        for i in range(7)
-    ) + ")"
+def duck_hex_int(h: str, start: int, n: int) -> str:
+    """DuckDB side of ``hex_int``: a '0x'-prefixed string casts to the
+    same BIGINT."""
+    return f"('0x' || substr({h}, {start}, {n}))::BIGINT"
 
 
 def minhash_signatures_arrow(docs: DataFrame) -> DataFrame:
@@ -368,10 +367,10 @@ def minhash_signatures_arrow(docs: DataFrame) -> DataFrame:
     import pandas as pd
 
     sh = shingle_col(F.col("ws"))
-    # Round-12 (guide §1.2 per-task work, §4.1): ONE md5 + ONE conv per
-    # shingle instead of two.  The old shape ran two separate transform
-    # lambdas — ha = conv(substring(md5(s), 1, 7)) and
-    # hb = conv(substring(md5(s), 8, 7)) — and higher-order lambdas are
+    # Round-12 (guide §1.2 per-task work, §4.1): ONE md5 + ONE hex parse
+    # per shingle instead of two.  The old shape ran two separate
+    # transform lambdas — a = hex_int(md5(s), 1, 7) and
+    # b = hex_int(md5(s), 8, 7) — and higher-order lambdas are
     # interpreted expression trees with no cross-lambda subexpression
     # sharing, so every shingle was md5'd twice.  Parsing the first 14
     # hex chars as one 56-bit long (the exact trick simhash_bits_arrow
@@ -381,12 +380,7 @@ def minhash_signatures_arrow(docs: DataFrame) -> DataFrame:
     # hab >> 28 == a and hab & (2^28 - 1) == b by construction.
     ab = docs.select(
         "doc_id",
-        F.transform(
-            sh,
-            lambda s: F.conv(F.substring(F.md5(s), 1, 14), 16, 10).cast(
-                "bigint"
-            ),
-        ).alias("hab"),
+        F.transform(sh, lambda s: hex_int(F.md5(s), 1, 14)).alias("hab"),
     )
 
     def fold(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
@@ -417,26 +411,48 @@ def l2norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
 
 
+def qmilli(x: Column) -> Column:
+    """``x`` quantized to integer millis, half up: floor(x*1000 + 0.5)
+    as a bigint.  The float32 input is widened to double first
+    (FIXTURES.md gotcha 5), and multiply/add/floor are single IEEE ops,
+    so both engines land on the same integer — unlike round(), which disagrees between Spark and
+    DuckDB at exact .5 boundaries.  DuckDB mirror: ``duck_qmilli``."""
+    return F.floor(x.cast("double") * 1000 + F.lit(0.5))
+
+
+def duck_qmilli(x: str) -> str:
+    """DuckDB side of ``qmilli`` (its floor yields a DOUBLE)."""
+    return f"floor(CAST({x} AS DOUBLE) * 1000 + 0.5)"
+
+
 def qvec(col: str = "embedding") -> Column:
-    """Embedding quantized to integer millis — floor(x*1000 + 0.5) —
-    kept as doubles.  Dot products and squared norms of these are
+    """Embedding quantized to integer millis (``qmilli``) — kept as
+    doubles.  Dot products and squared norms of these are
     exact integers well under 2^53, so their sums are EXACT in any
     partial-agg order, sqrt/divide are correctly-rounded IEEE ops on
     bit-identical inputs, and the resulting cosine is bit-identical
     across Spark and DuckDB: rankings computed on it cannot flip at a
-    float boundary (round-3 ADVICE fix)."""
-    return F.transform(
-        F.col(col),
-        lambda x: F.floor(x.cast("double") * 1000 + F.lit(0.5)).cast("double"),
-    )
+    float boundary (round-3 ADVICE fix).  DuckDB mirror: ``duck_qvec``
+    (``list_inner_product`` of two of them is ``dot``)."""
+    return F.transform(F.col(col), lambda x: qmilli(x).cast("double"))
+
+
+def duck_qvec() -> str:
+    """DuckDB side of ``qvec()`` (a DOUBLE list of the embedding)."""
+    return f"list_transform(embedding, x -> {duck_qmilli('x')})"
 
 
 def fr4(c: Column) -> Column:
     """Engine-portable 4-dp half-up round: floor(x*10000 + 0.5)/10000.
     Multiply/add/floor/divide are single IEEE ops, identical on both
     engines for a bit-identical input — unlike round(), whose decimal
-    re-rounding path is engine-specific.  Never produces -0.0."""
+    re-rounding path is engine-specific.  Never produces -0.0.
+    DuckDB mirror: ``duck_fr4``."""
     return F.floor(c * 10000 + F.lit(0.5)).cast("double") / F.lit(10000.0)
+
+
+def duck_fr4(x: str) -> str:
+    return f"floor({x} * 10000 + 0.5) / 10000.0"
 
 
 # --------------------------------------------------------------------------

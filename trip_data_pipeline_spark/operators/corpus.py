@@ -26,15 +26,17 @@ from trip_data_pipeline_spark.operators.common import (
     SHINGLE_K,
     _BPE_RE,
     _LANG_MARKERS,
-    _duck_hex28,
     _duck_norm,
     _duck_words,
-    _hex28,
     _marker_regex,
     _norm,
     _words,
     bigint,
+    duck_hex_int,
+    duck_qmilli,
+    hex_int,
     minhash_signatures_arrow,
+    qmilli,
     r2,
     r4,
     shingle_col,
@@ -348,12 +350,12 @@ def vocab_topk_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "corpus_quality_weighted_sample",
-    oracle="""
+    oracle=f"""
 WITH scored AS (
   SELECT doc_id, lang,
          CAST((len(list_distinct(string_split(text, ' '))) * 1000)
            // len(string_split(text, ' ')) AS BIGINT) AS uniq_ppm,
-         CAST(('0x' || substr(md5(text), 1, 4))::BIGINT AS BIGINT) AS h16
+         {duck_hex_int('md5(text)', 1, 4)} AS h16
   FROM documents
 )
 SELECT doc_id, lang, uniq_ppm
@@ -380,7 +382,7 @@ def corpus_quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFram
         "CAST((size(array_distinct(split(text, ' '))) * 1000)"
         " div size(split(text, ' ')) AS BIGINT)"
     )
-    h16 = F.conv(F.substring(F.md5("text"), 1, 4), 16, 10).cast("bigint")
+    h16 = hex_int(F.md5("text"), 1, 4)
     return (
         spread(load(spark, sf_dir, "documents"))
         .select("doc_id", "lang", uniq_ppm.alias("uniq_ppm"), h16.alias("h16"))
@@ -1056,8 +1058,8 @@ sh AS (
 ),
 hx AS (
   SELECT doc_id,
-         {_duck_hex28('md5(s)', 1)} AS a,
-         {_duck_hex28('md5(s)', 8)} AS b
+         {duck_hex_int('md5(s)', 1, 7)} AS a,
+         {duck_hex_int('md5(s)', 8, 7)} AS b
   FROM sh
 ),
 hj AS (
@@ -1336,7 +1338,7 @@ WITH tok AS (
   SELECT doc_id, lang, unnest({_duck_words()}) AS w FROM documents
 ),
 tb AS (
-  SELECT doc_id, lang, {_duck_hex28('md5(w)', 1)} % {_DSIR_BUCKETS} AS b
+  SELECT doc_id, lang, {duck_hex_int('md5(w)', 1, 7)} % {_DSIR_BUCKETS} AS b
   FROM tok
 ),
 bc AS (
@@ -1364,7 +1366,7 @@ LIMIT 100
 def corpus_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-style importance scoring (Xie et al. 2023): rank raw docs
     by how target-like their hashed-feature distribution is.  Features
-    are md5-hashed unigram buckets (engine-portable _hex28 % 64);
+    are md5-hashed unigram buckets (engine-portable hex_int % 64);
     bucket weight = target ppm - raw ppm as exact integers (target =
     the 'en' slice standing in for the high-quality target corpus);
     doc score = sum of its tokens' bucket weights; top-100 selection
@@ -1379,7 +1381,7 @@ def corpus_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", F.explode(_words()).alias("w")
     )
     tb = tok.select(
-        "doc_id", "lang", (_hex28(F.md5("w"), 1) % _DSIR_BUCKETS).alias("b")
+        "doc_id", "lang", (hex_int(F.md5("w"), 1, 7) % _DSIR_BUCKETS).alias("b")
     )
     bc = tb.groupBy("b").agg(
         F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("en_cnt"),
@@ -1549,7 +1551,7 @@ _SEM_NUM, _SEM_DEN = 7, 20
 WITH q AS (
   SELECT vec_id,
          list_transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS v
+           x -> CAST({duck_qmilli('x')} AS BIGINT)) AS v
   FROM embeddings
 ),
 c AS (SELECT vec_id AS cid, v AS cv FROM q
@@ -1635,10 +1637,7 @@ def corpus_semdedup_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(block * cluster) regardless of cluster size."""
     q = spread(load(spark, sf_dir, "embeddings")).select(
         "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * 1000 + 0.5).cast("bigint"),
-        ).alias("v"),
+        F.transform("embedding", qmilli).alias("v"),
     )
     c = q.filter(
         (F.col("vec_id") % _SEM_SEED_MOD == 0)
@@ -1878,7 +1877,7 @@ def stats_chi2_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_shard_assign",
     oracle=f"""
 WITH d AS (
-  SELECT {_duck_hex28("md5(CAST(doc_id AS VARCHAR))", 1)} % 16 AS shard,
+  SELECT {duck_hex_int("md5(CAST(doc_id AS VARCHAR))", 1, 7)} % 16 AS shard,
          len({_duck_words()}) AS n_tokens
   FROM documents
 ),
@@ -1910,7 +1909,7 @@ def corpus_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrameWriter.partitionBy/repartition does the actual write."""
     d = spread(load(spark, sf_dir, "documents"), min_fraction=0.25)
     shard = (
-        _hex28(F.md5(F.col("doc_id").cast("string")), 1) % 16
+        hex_int(F.md5(F.col("doc_id").cast("string")), 1, 7) % 16
     ).alias("shard")
     s = d.select(shard, F.size(_words()).alias("n_tokens")).groupBy(
         "shard"

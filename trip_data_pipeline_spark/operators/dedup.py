@@ -35,7 +35,6 @@ from trip_data_pipeline_spark.operators.common import (
     MINHASH_PERMS,
     SHINGLE_K,
     _decode_ppm,
-    _duck_hex28,
     _duck_norm,
     _duck_words,
     _encode_ppm,
@@ -43,7 +42,11 @@ from trip_data_pipeline_spark.operators.common import (
     _words,
     bigint,
     dot,
+    duck_fr4,
+    duck_hex_int,
+    duck_qvec,
     fr4,
+    hex_int,
     l2norm,
     minhash_signatures_arrow,
     qvec,
@@ -149,11 +152,12 @@ def verified_jaccard_pairs(docs: DataFrame, pairs: DataFrame, tau: float) -> Dat
 
 
 # DuckDB mirror of the full MinHash/LSH pipeline.  Feasible because the
-# permutation family is md5-derived integer arithmetic (see module
-# note) rather than an engine-private hash: DuckDB parses the same two
-# 28-bit ints from the same md5 hex, folds the same 64 permutation
-# mins, bands them with the same '_'-joined keys, and verifies the same
-# exact Jaccard — full value-hash parity, not rows-only.
+# permutation family is md5-derived integer arithmetic (see the
+# common.MINHASH_MOD note) rather than an engine-private hash: DuckDB
+# parses the same two 28-bit ints from the same md5 hex, folds the same
+# 64 permutation mins, bands them with the same '_'-joined keys, and
+# verifies the same exact Jaccard — full value-hash parity, not
+# rows-only.
 _SHINGLES_DUCK = (
     "[ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] "
     "for i in range(1, len(ws) - 1)]"
@@ -167,8 +171,8 @@ sh AS (
 ),
 hx AS (
   SELECT doc_id,
-         {_duck_hex28('md5(s)', 1)} AS a,
-         {_duck_hex28('md5(s)', 8)} AS b
+         {duck_hex_int('md5(s)', 1, 7)} AS a,
+         {duck_hex_int('md5(s)', 8, 7)} AS b
   FROM sh
 ),
 hj AS (
@@ -217,49 +221,29 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return verified_jaccard_pairs(docs, pairs, tau=0.5)
 
 
-def simhash_bits_expr(ws_sql: str, nbits: int = 56) -> str:
-    """SQL-expression SimHash (bit shifts on a lambda variable need the
-    SQL dialect; the DataFrame lambda API can't shift by a column).
-
-    The per-word hash is the first 14 hex chars of md5 parsed as a
-    56-bit non-negative integer — the same engine-portable family the
-    MinHash ops use — so the whole signature replays in DuckDB and the
-    op hash-checks (round-3 upgrade from the xxhash64 rows-only form;
-    56 bits keeps the 4-band split at an even 14 bits per band)."""
-    return f"""
-    array_join(
-      transform(
-        aggregate(
-          transform({ws_sql},
-                    w -> cast(conv(substring(md5(w), 1, 14), 16, 10) as long)),
-          array_repeat(0L, {nbits}),
-          (acc, h) -> zip_with(
-            acc,
-            transform(sequence(0, {nbits - 1}),
-                      i -> CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END),
-            (a, b) -> a + CAST(b AS LONG))),
-        v -> CASE WHEN v > 0 THEN '1' ELSE '0' END),
-      '')
-    """
-
-
 def simhash_bits_arrow(docs: DataFrame, nbits: int = 56) -> DataFrame:
     """docs(doc_id, ws) -> (doc_id, sh: 56-char bit string, shl: the
     same 56 bits as ONE bigint — char i+1 of sh == bit i of shl), with
-    the bit-vote fold as a numpy batch kernel.  Downstream band keys
-    and hamming distances work on shl ((shl >> 14b) & 0x3FFF band
-    extraction, bit_count(xor) hamming — both codegen'd) instead of
-    56-char strings: identical values by construction, far cheaper
-    join keys.  Same round-4 lesson as
-    minhash_signatures_arrow: the aggregate+zip_with fold above runs
-    on the expression interpreter (HOF lambdas are never codegen'd)
-    and cost ~25 s of dedup_simhash's 33 s at the 10x layout; the md5
-    word hash (codegen'd conv/substring) stays JVM-side and only one
-    small long array per doc crosses Arrow.  Bit-identical by
-    construction: votes are the same +/-1 integer sums, threshold the
-    same strict > 0.  simhash_bits_expr remains the single-expression
-    SQL-dialect form (property-tested; it is also the documentation of
-    the portable hash family the DuckDB oracle replays)."""
+    the bit-vote fold as a numpy batch kernel.
+
+    The per-word hash is the first 14 hex chars of md5 parsed as a
+    56-bit non-negative integer (``hex_int``) — the same
+    engine-portable family the MinHash ops use — so the whole signature
+    replays in DuckDB and the op hash-checks (round-3 upgrade from the
+    xxhash64 rows-only form; 56 bits keeps the 4-band split at an even
+    14 bits per band).  Bit i votes +1 when bit i of a word hash is
+    set, else -1, and is set in the signature when its vote sum is
+    strictly positive.
+
+    Downstream band keys and hamming distances work on shl
+    ((shl >> 14b) & 0x3FFF band extraction, bit_count(xor) hamming —
+    both codegen'd) instead of 56-char strings: identical values by
+    construction, far cheaper join keys.  Same round-4 lesson as
+    minhash_signatures_arrow: an aggregate+zip_with fold of the votes
+    runs on the expression interpreter (HOF lambdas are never
+    codegen'd) and cost ~25 s of dedup_simhash's 33 s at the 10x
+    layout; the md5 word hash (codegen'd) stays JVM-side and only one
+    small long array per doc crosses Arrow."""
     from typing import Iterator as _Iter
 
     import numpy as np
@@ -267,9 +251,7 @@ def simhash_bits_arrow(docs: DataFrame, nbits: int = 56) -> DataFrame:
 
     hs = docs.select(
         "doc_id",
-        F.expr(
-            "transform(ws, w -> cast(conv(substring(md5(w), 1, 14), 16, 10) as long))"
-        ).alias("hv"),
+        F.transform("ws", lambda w: hex_int(F.md5(w), 1, 14)).alias("hv"),
     )
 
     def fold(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
@@ -297,7 +279,7 @@ WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
 w AS (SELECT doc_id, unnest(ws) AS w FROM d WHERE len(ws) > 0),
 h AS (
   SELECT doc_id,
-         ({_duck_hex28('md5(w)', 1)} * 268435456 + {_duck_hex28('md5(w)', 8)}) AS h
+         {duck_hex_int('md5(w)', 1, 14)} AS h
   FROM w
 ),
 bits AS (
@@ -340,7 +322,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pigeonhole: one of 4 bands must match exactly).
 
     Hash-checked since round 3: the per-word hash is md5-derived
-    integer arithmetic (see simhash_bits_expr), so the oracle replays
+    integer arithmetic (see simhash_bits_arrow), so the oracle replays
     the ENTIRE pipeline — word hashes, bit votes, banding, candidate
     join, hamming verify — and must land on the identical pair set."""
     d = spread(load(spark, sf_dir, "documents"))
@@ -418,14 +400,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "dedup_embedding_cosine",
-    oracle="""
+    oracle=f"""
 WITH e AS (SELECT vec_id,
-                  list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1000 + 0.5)) AS emb
+                  {duck_qvec()} AS emb
            FROM embeddings WHERE vec_id < 200),
      n AS (SELECT vec_id, emb, sqrt(list_inner_product(emb, emb)) AS nrm FROM e)
 SELECT e1.vec_id AS vec_id1, e2.vec_id AS vec_id2,
-       floor(list_inner_product(e1.emb, e2.emb) / (e1.nrm * e2.nrm) * 10000 + 0.5)
-         / 10000.0 AS cos
+       {duck_fr4('list_inner_product(e1.emb, e2.emb) / (e1.nrm * e2.nrm)')} AS cos
 FROM n e1 JOIN n e2 ON e1.vec_id < e2.vec_id
 ORDER BY cos DESC, vec_id1 ASC, vec_id2 ASC
 LIMIT 10
@@ -754,8 +735,8 @@ truth AS (
 ),
 hx AS (
   SELECT doc_id,
-         {_duck_hex28('md5(s)', 1)} AS a,
-         {_duck_hex28('md5(s)', 8)} AS b
+         {duck_hex_int('md5(s)', 1, 7)} AS a,
+         {duck_hex_int('md5(s)', 8, 7)} AS b
   FROM sh
 ),
 hj AS (
@@ -1251,7 +1232,7 @@ WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
 w AS (SELECT doc_id, unnest(ws) AS w FROM d WHERE len(ws) > 0),
 h AS (
   SELECT doc_id,
-         ({_duck_hex28('md5(w)', 1)} * 268435456 + {_duck_hex28('md5(w)', 8)}) AS h
+         {duck_hex_int('md5(w)', 1, 14)} AS h
   FROM w
 ),
 bits AS (

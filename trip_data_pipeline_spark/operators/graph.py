@@ -43,8 +43,6 @@ driver per round).
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -55,8 +53,6 @@ from trip_data_pipeline_spark.registry import op
 CAT = "graph / iterative"
 
 MAX_ROUNDS = 50
-
-_drop_stats_fallback_warned = False
 
 
 def _drop_plan_stats(df: DataFrame) -> DataFrame:
@@ -77,32 +73,14 @@ def _drop_plan_stats(df: DataFrame) -> DataFrame:
     default size estimate again.  The default estimate is conservative
     (`spark.sql.defaultSizeInBytes`), which also suppresses accidental
     broadcast of the unbounded label table — the safe choice at 100 TB.
-    Falls back to the plain DataFrame when the classic JVM handles are
-    unavailable (e.g. Spark Connect)."""
-    try:
-        j = df._jdf
-        spark = df.sparkSession
-        new_j = spark._jsparkSession.internalCreateDataFrame(
-            j.queryExecution().toRdd(), j.schema(), False
-        )
-        return DataFrame(new_j, spark)
-    except Exception as exc:  # pragma: no cover — classic mode always has _jdf
-        # Canary (VERDICT r12 item 8): the fallback is CORRECT but
-        # silently reintroduces the quadratic-stats pathology (plan
-        # estimates square per self-join round).  Say so loudly once
-        # per process; tests/test_graph_exchange_reuse.py fails if
-        # this path ever engages on the pinned Spark version.
-        global _drop_stats_fallback_warned
-        if not _drop_stats_fallback_warned:
-            _drop_stats_fallback_warned = True
-            print(
-                "[graph] _drop_plan_stats fell back to the plain DataFrame "
-                f"({type(exc).__name__}: {exc}) — iterative self-join rounds "
-                "will slow geometrically (propagated sizeInBytes squares "
-                "per round); see _drop_plan_stats docstring",
-                file=sys.stderr,
-            )
-        return df
+    The engine runs on classic PySpark only (``common.spread`` reads
+    ``df.rdd``), so the JVM handles are always there."""
+    j = df._jdf
+    spark = df.sparkSession
+    new_j = spark._jsparkSession.internalCreateDataFrame(
+        j.queryExecution().toRdd(), j.schema(), False
+    )
+    return DataFrame(new_j, spark)
 
 
 def _copart_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

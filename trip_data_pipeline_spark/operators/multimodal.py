@@ -28,8 +28,10 @@ from trip_data_pipeline_spark.operators.common import (
     _decode_ppm,
     _encode_ppm,
     bigint,
+    duck_qmilli,
     l2norm,
     nz,
+    qmilli,
     r4,
     spread,
 )
@@ -308,7 +310,7 @@ def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "pipeline_multimodal_prep",
-    oracle="""
+    oracle=f"""
 WITH meta AS (SELECT doc_id, octet_length(encode(text)) AS nb,
                      doc_id % 3 AS m FROM documents),
 img AS (SELECT doc_id, sum((doc_id * 31 + i) % 256) AS feat
@@ -322,8 +324,8 @@ vid AS (SELECT doc_id, least(CAST(ceil(least(nb, 256) / 32.0) AS BIGINT), 8) AS 
 feat AS (SELECT * FROM img UNION ALL SELECT * FROM aud UNION ALL SELECT * FROM vid),
 qn AS (SELECT vec_id,
               CAST(list_aggregate(list_transform(embedding,
-                     x -> floor(CAST(x AS DOUBLE) * 1000 + 0.5)
-                          * floor(CAST(x AS DOUBLE) * 1000 + 0.5)), 'sum')
+                     x -> {duck_qmilli('x')}
+                          * {duck_qmilli('x')}), 'sum')
                    AS BIGINT) AS qn
        FROM embeddings)
 SELECT CASE meta.m WHEN 0 THEN 'image/fake'
@@ -381,10 +383,8 @@ def pipeline_multimodal_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     feat = meta.mapInPandas(decode_dispatch, schema="doc_id bigint, feat bigint")
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id",
-        F.expr(
-            "aggregate(transform(embedding,"
-            " x -> cast(floor(cast(x as double) * 1000 + 0.5) as bigint)),"
-            " 0L, (a, v) -> a + v * v)"
+        F.aggregate(
+            F.transform("embedding", qmilli), F.lit(0).cast("bigint"), lambda a, v: a + v * v
         ).alias("qn"),
     )
     return (

@@ -6,7 +6,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trip_data_pipeline_spark.io import load
-from trip_data_pipeline_spark.operators.common import bigint, spread
+from trip_data_pipeline_spark.operators.common import (
+    bigint,
+    duck_hex_int,
+    hex_int,
+    spread,
+)
 from trip_data_pipeline_spark.registry import op
 
 CAT = "2.7 set operations"
@@ -169,12 +174,11 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "sample_deterministic_hash",
-    oracle="""
+    oracle=f"""
 SELECT l_orderkey, l_linenumber,
        CAST(l_quantity AS BIGINT) AS qty
 FROM lineitem
-WHERE CAST(('0x' || substr(md5(CAST(l_orderkey AS VARCHAR) || '-'
-                           || CAST(l_linenumber AS VARCHAR)), 1, 4)) AS INT)
+WHERE {duck_hex_int("md5(CAST(l_orderkey AS VARCHAR) || '-' || CAST(l_linenumber AS VARCHAR))", 1, 4)}
       % 100 < 10
 ORDER BY l_orderkey, l_linenumber
 """,
@@ -194,7 +198,7 @@ def sample_deterministic_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("-"),
         F.col("l_linenumber").cast("string"),
     )
-    bucket = F.conv(F.substring(F.md5(key), 1, 4), 16, 10).cast("int") % 100
+    bucket = hex_int(F.md5(key), 1, 4) % 100
     return (
         li.filter(bucket < 10)
         .select(

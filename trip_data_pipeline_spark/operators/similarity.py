@@ -10,7 +10,9 @@ Ranking parity rule (round 3, per ADVICE): ops whose RANKING (top-k /
 nearest / threshold order) depends on cosine compute it from
 integer-quantized vectors (``qvec``) and round it with the portable
 ``fr4`` — every intermediate is then bit-identical across engines, so
-a rank can never flip at a rounding boundary.  Ops that merely OUTPUT
+a rank can never flip at a rounding boundary.  These kernels and
+their DuckDB renderings (``duck_qvec``, ``duck_fr4``) live in
+``operators/common.py``.  Ops that merely OUTPUT
 a similarity keep plain ``r4`` (a last-ulp output difference is
 absorbed by rounding except at measure-zero half-boundaries, verified
 empty at 3 SFs)."""
@@ -18,16 +20,20 @@ empty at 3 SFs)."""
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trip_data_pipeline_spark.io import load
 from trip_data_pipeline_spark.operators.common import (
     bigint,
     dot,
+    duck_fr4,
+    duck_qmilli,
+    duck_qvec,
     fr4,
     l2norm,
     nz,
+    qmilli,
     qvec,
     r4,
     spread,
@@ -37,27 +43,16 @@ from trip_data_pipeline_spark.registry import op
 CAT = "2.11 similarity search"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2norm(a) * l2norm(b))
-
-
-# SQL mirrors of qvec / fr4 (see qvec docstring for the exactness
-# argument; list_inner_product(q, q) == l2norm-squared, both exact)
-_DUCK_QEMB = "list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1000 + 0.5))"
-
-_DUCK_QNORM = f"sqrt(list_inner_product({_DUCK_QEMB}, {_DUCK_QEMB}))"
-
-
-def duck_fr4(x: str) -> str:
-    return f"floor({x} * 10000 + 0.5) / 10000.0"
+# list_inner_product(q, q) == l2norm-squared, exact (see common.qvec)
+_DUCK_QNORM = f"sqrt(list_inner_product({duck_qvec()}, {duck_qvec()}))"
 
 
 @op(
     "sim_cosine_pairwise_topk",
     oracle=f"""
-WITH q AS (SELECT vec_id AS q_id, {_DUCK_QEMB} AS qe, {_DUCK_QNORM} AS qn
+WITH q AS (SELECT vec_id AS q_id, {duck_qvec()} AS qe, {_DUCK_QNORM} AS qn
            FROM embeddings WHERE vec_id < 10),
-     c AS (SELECT vec_id AS c_id, {_DUCK_QEMB} AS ce, {_DUCK_QNORM} AS cn
+     c AS (SELECT vec_id AS c_id, {duck_qvec()} AS ce, {_DUCK_QNORM} AS cn
            FROM embeddings),
      s AS (SELECT q_id, c_id,
                   {duck_fr4('list_inner_product(qe, ce) / (qn * cn)')} AS cos
@@ -125,9 +120,9 @@ def sim_cosine_pairwise_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @op(
     "sim_cosine_topk_vectorized",
     oracle=f"""
-WITH q AS (SELECT vec_id AS q_id, {_DUCK_QEMB} AS qe, {_DUCK_QNORM} AS qn
+WITH q AS (SELECT vec_id AS q_id, {duck_qvec()} AS qe, {_DUCK_QNORM} AS qn
            FROM embeddings WHERE vec_id < 10),
-     c AS (SELECT vec_id AS c_id, {_DUCK_QEMB} AS ce, {_DUCK_QNORM} AS cn
+     c AS (SELECT vec_id AS c_id, {duck_qvec()} AS ce, {_DUCK_QNORM} AS cn
            FROM embeddings),
      s AS (SELECT q_id, c_id,
                   {duck_fr4('list_inner_product(qe, ce) / (qn * cn)')} AS cos
@@ -224,9 +219,9 @@ def sim_cosine_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
 @op(
     "sim_knn_label_vote",
     oracle=f"""
-WITH q AS (SELECT vec_id AS q_id, {_DUCK_QEMB} AS qe, {_DUCK_QNORM} AS qn
+WITH q AS (SELECT vec_id AS q_id, {duck_qvec()} AS qe, {_DUCK_QNORM} AS qn
            FROM embeddings WHERE vec_id < 10),
-     c AS (SELECT vec_id AS c_id, label, {_DUCK_QEMB} AS ce, {_DUCK_QNORM} AS cn
+     c AS (SELECT vec_id AS c_id, label, {duck_qvec()} AS ce, {_DUCK_QNORM} AS cn
            FROM embeddings),
      s AS (SELECT q_id, c_id, label,
                   {duck_fr4('list_inner_product(qe, ce) / (qn * cn)')} AS cos
@@ -283,7 +278,7 @@ def sim_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
 @op(
     "sim_ann_ivf_bucket",
     oracle=f"""
-WITH e AS (SELECT vec_id, label, {_DUCK_QEMB} AS emb, {_DUCK_QNORM} AS nrm,
+WITH e AS (SELECT vec_id, label, {duck_qvec()} AS emb, {_DUCK_QNORM} AS nrm,
                   CAST(embedding[1] > 0 AS INT) * 4
                 + CAST(embedding[2] > 0 AS INT) * 2
                 + CAST(embedding[3] > 0 AS INT) AS bucket
@@ -408,7 +403,7 @@ def _lsh_planes_sql() -> str:
     for j in range(6):
         s = (
             "list_aggregate(list_transform(range(0, 64), i -> "
-            f"CAST(floor(CAST(embedding[i + 1] AS DOUBLE) * 1000 + 0.5) AS BIGINT)"
+            f"CAST({duck_qmilli('embedding[i + 1]')} AS BIGINT)"
             f" * ((((i * 31) + {j * 17}) % 7) - 3)), 'sum')"
         )
         bits.append(f"CAST({s} > 0 AS INT) * {1 << j}")
@@ -420,15 +415,14 @@ def _lsh_planes_sql() -> str:
     oracle=f"""
 WITH e AS (
   SELECT vec_id,
-         list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1000 + 0.5)) AS emb,
+         {duck_qvec()} AS emb,
          {_lsh_planes_sql()} AS bucket
   FROM embeddings
 ),
 n AS (SELECT vec_id, emb, bucket, sqrt(list_inner_product(emb, emb)) AS nrm FROM e),
 q AS (SELECT vec_id AS q_id, emb AS qe, nrm AS qn, bucket FROM n WHERE vec_id < 20),
 s AS (SELECT q.q_id, n.vec_id AS c_id,
-             floor(list_inner_product(q.qe, n.emb) / (q.qn * n.nrm) * 10000 + 0.5)
-               / 10000.0 AS cos
+             {duck_fr4('list_inner_product(q.qe, n.emb) / (q.qn * n.nrm)')} AS cos
       FROM q JOIN n ON n.bucket = q.bucket AND n.vec_id <> q.q_id),
 r AS (SELECT q_id, c_id, cos,
              CAST(row_number() OVER (PARTITION BY q_id
@@ -468,7 +462,7 @@ def sim_ann_lsh_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id",
         "pos",
-        F.floor(F.col("val").cast("double") * 1000 + 0.5).cast("bigint").alias("iv"),
+        qmilli(F.col("val")).alias("iv"),
     )
     plane_sums = [
         F.sum(
@@ -517,10 +511,10 @@ def sim_ann_lsh_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "embed_covariance_int",
-    oracle="""
+    oracle=f"""
 WITH q AS (
   SELECT vec_id,
-         list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS iv
+         list_transform(embedding, x -> CAST({duck_qmilli('x')} AS BIGINT)) AS iv
   FROM embeddings
 ),
 cells AS (
@@ -559,13 +553,8 @@ def embed_covariance_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 sum_ij holds to ~9.2e12 vectors (~2 PB of 64-dim float32) —
     an order of magnitude past the 100 TB target; past that, widen the
     accumulator to DECIMAL(38,0) exactly as the ppm ops do."""
-    # floor(x*1000 + 0.5): engine-independent rounding — DuckDB round()
-    # and Spark round() disagree at exact .5 boundaries (hit at sf0.1)
     q = spread(load(spark, sf_dir, "embeddings")).select(
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.floor(x.cast("double") * 1000 + 0.5).cast("bigint"),
-        ).alias("iv")
+        F.transform(F.col("embedding"), qmilli).alias("iv")
     )
     pairs = q.select(
         F.explode(
@@ -588,16 +577,15 @@ def embed_covariance_int(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "knn_eval_confusion",
-    oracle="""
+    oracle=f"""
 WITH e0 AS (SELECT vec_id, label,
-                   list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1000 + 0.5)) AS emb
+                   {duck_qvec()} AS emb
             FROM embeddings),
 e AS (SELECT vec_id, label, emb, sqrt(list_inner_product(emb, emb)) AS nrm FROM e0),
 q AS (SELECT vec_id AS q_id, label AS true_label, emb AS qe, nrm AS qn
       FROM e WHERE vec_id < 50),
 s AS (SELECT q.q_id, q.true_label, e.label AS cand_label,
-             floor(list_inner_product(q.qe, e.emb) / (q.qn * e.nrm) * 10000 + 0.5)
-               / 10000.0 AS cos,
+             {duck_fr4('list_inner_product(q.qe, e.emb) / (q.qn * e.nrm)')} AS cos,
              e.vec_id AS c_id
       FROM q JOIN e ON e.vec_id <> q.q_id
       WHERE q.qn > 0 AND e.nrm > 0),
@@ -732,7 +720,7 @@ PQ_CENTS = 16
     oracle=f"""
 WITH v AS (
   SELECT vec_id, gd,
-         CAST(floor(CAST(embedding[CAST(gd + 1 AS INT)] AS DOUBLE) * 1000 + 0.5)
+         CAST({duck_qmilli('embedding[CAST(gd + 1 AS INT)]')}
               AS BIGINT) AS val
   FROM (SELECT vec_id, embedding, unnest(range(0, 64)) AS gd
         FROM embeddings WHERE embedding IS NOT NULL)
@@ -773,7 +761,7 @@ def embed_pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id",
         "gd",
-        F.floor(F.col("x").cast("double") * 1000 + 0.5).cast("bigint").alias("val"),
+        qmilli(F.col("x")).alias("val"),
     )
     cents = spark.range(PQ_CENTS).select(F.col("id").cast("int").alias("c"))
     cent_val = ((F.col("c") * 31 + F.col("gd") * 17) % 21 - 10) * 1000
@@ -796,10 +784,9 @@ def embed_pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "embed_matryoshka_truncate",
-    oracle="""
+    oracle=f"""
 WITH q AS (SELECT vec_id,
-                  list_transform(embedding,
-                                 x -> floor(CAST(x AS DOUBLE) * 1000 + 0.5)) AS e
+                  {duck_qvec()} AS e
            FROM embeddings)
 SELECT vec_id,
        CAST(list_inner_product(e[1:16], e[1:16]) AS BIGINT) AS prefix_sq,
@@ -857,9 +844,9 @@ def embed_matryoshka_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RECALL_DUCK_BASE = """
+_RECALL_DUCK_BASE = f"""
 e AS (SELECT vec_id,
-             list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1000 + 0.5)) AS emb,
+             {duck_qvec()} AS emb,
              CAST(embedding[1] > 0 AS INT) * 4
            + CAST(embedding[2] > 0 AS INT) * 2
            + CAST(embedding[3] > 0 AS INT) AS bucket
@@ -980,12 +967,12 @@ def sim_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "embed_quality_gate",
-    oracle="""
+    oracle=f"""
 WITH q AS (
   SELECT vec_id, label,
          CAST(list_inner_product(
-           list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1000 + 0.5)),
-           list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1000 + 0.5)))
+           {duck_qvec()},
+           {duck_qvec()})
            AS BIGINT) AS sq,
          CAST(len(list_filter(embedding, x -> x = 0)) AS BIGINT) AS n_zero,
          CAST(len(embedding) AS BIGINT) AS dim
@@ -1055,7 +1042,7 @@ _IVF_SEED_MOD, _IVF_SEED_CAP = 50, 400
 WITH q AS (
   SELECT vec_id,
          list_transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS v
+           x -> CAST({duck_qmilli('x')} AS BIGINT)) AS v
   FROM embeddings
 ),
 c AS (
@@ -1099,10 +1086,7 @@ def embed_ivf_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     attach via 1-row global aggregates (bounded crossJoin)."""
     q = spread(load(spark, sf_dir, "embeddings")).select(
         "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * 1000 + 0.5).cast("bigint"),
-        ).alias("v"),
+        F.transform("embedding", qmilli).alias("v"),
     )
     c = (
         q.filter(
@@ -1143,11 +1127,11 @@ def embed_ivf_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "embed_centroid_drift",
-    oracle="""
+    oracle=f"""
 WITH q AS (
   SELECT vec_id % 2 AS half,
          list_transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS iv
+           x -> CAST({duck_qmilli('x')} AS BIGINT)) AS iv
   FROM embeddings
 ),
 cells AS (
@@ -1186,10 +1170,7 @@ def embed_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = raw.select(
         (F.col("vec_id") % 2).alias("half"),
         F.posexplode(
-            F.transform(
-                "embedding",
-                lambda x: F.floor(x.cast("double") * 1000 + 0.5).cast("bigint"),
-            )
+            F.transform("embedding", qmilli)
         ).alias("dim", "v"),
     )
     m = cells.groupBy("dim").agg(

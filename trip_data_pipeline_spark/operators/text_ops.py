@@ -18,14 +18,14 @@ from trip_data_pipeline_spark.io import load
 from trip_data_pipeline_spark.operators.common import (
     _BPE_RE,
     _LANG_MARKERS,
-    _duck_hex28,
     _duck_norm,
     _duck_words,
-    _hex28,
     _marker_regex,
     _norm,
     _words,
     bigint,
+    duck_hex_int,
+    hex_int,
     r2,
     r4,
     spread,
@@ -665,11 +665,10 @@ def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "split_train_holdout",
-    oracle="""
+    oracle=f"""
 WITH bucketed AS (
   SELECT doc_id, n_chars,
-         CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS INT)
-           % 100 AS bucket
+         {duck_hex_int('md5(CAST(doc_id AS VARCHAR))', 1, 4)} % 100 AS bucket
   FROM documents
 )
 SELECT CASE WHEN bucket < 80 THEN 'train'
@@ -692,11 +691,7 @@ def split_train_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs.  Pure narrow projection + one tiny aggregate: the split
     itself never shuffles the corpus."""
     d = load(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("int")
-        % 100
-    )
+    bucket = hex_int(F.md5(F.col("doc_id").cast("string")), 1, 4) % 100
     return (
         d.select(
             F.when(bucket < 80, "train")
@@ -731,7 +726,7 @@ WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
 d6 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= 6),
 sh AS (SELECT doc_id, i AS pos, ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3] AS s
        FROM (SELECT doc_id, ws, unnest(range(0, len(ws) - 2)) AS i FROM d6)),
-h AS (SELECT doc_id, pos, {_duck_hex28('md5(s)', 1)} AS h FROM sh),
+h AS (SELECT doc_id, pos, {duck_hex_int('md5(s)', 1, 7)} AS h FROM sh),
 enc AS (SELECT doc_id, pos, h * 2097152 + (1048576 - pos) AS e,
                count(*) OVER (PARTITION BY doc_id) AS ns
         FROM h),
@@ -791,7 +786,7 @@ def text_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("pos", "s"),
     )
     h = sh.select(
-        "doc_id", "pos", _hex28(F.md5("s"), 1).alias("h")
+        "doc_id", "pos", hex_int(F.md5("s"), 1, 7).alias("h")
     ).select(
         "doc_id",
         "pos",
