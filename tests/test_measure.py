@@ -16,6 +16,7 @@ def test_batch_op_record_and_plan(spark, sf_dir, tmp_path):
     assert rec["jobs"] >= 1 and rec["stages"] >= 1
     assert rec["tasks"] >= rec["stages"]
     assert rec["execute_s"] > 0
+    assert rec["compiles"] == 0  # the warm write cached its classes
     assert "Physical Plan" in (tmp_path / "agg_pricing_summary.txt").read_text()
 
 

@@ -10,22 +10,10 @@ collecting the same memoized plan twice.
 
 from __future__ import annotations
 
+from bench import BENCH_QUERIES
 from trip_data_pipeline_spark.registry import _PLAN_CACHE_ATTR, OPS, queries
 
 SMALL = "/root/testdata/sf0.001"
-
-BENCH_QUERIES = [
-    "agg_pricing_summary",
-    "join_star_5way",
-    "join_theta_band",
-    "win_topk_per_group",
-    "agg_grouping_sets",
-    "sessionize_batch",
-    "text_term_freq",
-    "sim_cosine_pairwise_topk",
-    "dedup_exact_hash",
-    "limit_topk",
-]
 
 
 def test_bench_queries_all_declared_pure():

@@ -1,10 +1,11 @@
 """Physical-plan shape assertions (SURVEY.md §4 / docs/SCALE.md).
 
-These tests never execute the queries — they only check that Catalyst
-produced the plan the 100 TB design requires: filters pushed into
-scans, columns pruned, dims broadcast, top-k compiled to bounded
-operators, and (globally) no Python row evaluation outside the
-operators that exist to cover the UDF surface.
+These tests check that Catalyst produced the plan the 100 TB design
+requires: filters pushed into scans, columns pruned, dims broadcast,
+top-k compiled to bounded operators, and (globally) no Python row
+evaluation outside the operators that exist to cover the UDF surface.
+The last test is about compiled code rather than plan shape: a warm
+headline pass must reuse its generated classes.
 """
 
 from __future__ import annotations
@@ -2218,3 +2219,26 @@ def test_decontam_semi_joins_broadcast_corpus_unshuffled(spark):
         for line in p.splitlines()
         if "BroadcastHashJoin" in line and "LeftSemi" in line
     ) >= 3, p
+
+
+def test_warm_headline_pass_compiles_nothing(spark, sf_dir):
+    """The generated-code cache holds the headline's working set: the
+    ten ``bench.py`` queries compile over 100 classes, which Spark's
+    stock 100-entry cache cannot keep, so every warm pass recompiled
+    some of them.  With the session's pin a second pass over the ten, in
+    another order, compiles nothing (``CodegenMetrics`` counts every
+    Janino compile in the JVM)."""
+    from bench import BENCH_QUERIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1024"
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run_pass(order):
+        before = compiles.getCount()
+        for name in order:
+            OPS[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return compiles.getCount() - before
+
+    run_pass(BENCH_QUERIES)
+    assert run_pass(BENCH_QUERIES[::-1]) == 0

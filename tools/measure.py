@@ -16,8 +16,12 @@ jobs, completed stages, tasks, single-task stages, task run/CPU/GC
 seconds, shuffle read/write and spill MB, Python-worker CPU seconds,
 and the streaming batches with their summed state-store commit time
 and state rows (streaming ops drain while they are built, so a rep
-covers its drain).  An op that raises is recorded as ``{"err": ...}``
-and the loop moves on.
+covers its drain).  ``compiles`` is the number of classes Janino
+compiled during the last rep (``CodegenMetrics``' compile count, a
+JVM-wide counter): after the warm write an op's generated code is
+cached, so an op that still compiles there makes different code on
+every execution and pays a compile floor at any cache size.  An op
+that raises is recorded as ``{"err": ...}`` and the loop moves on.
 
 Prints (or writes to ``--out``) one JSON object: ``sf_dir``, ``reps``,
 ``cores``, ``pyspark``, ``wall_s`` and ``ops`` = {op: record}.  Exit
@@ -93,6 +97,7 @@ def _measure_op(spark, sf_dir: str, name: str, reps: int, plans: str | None, lis
 
     fn = OPS[name].fn
     sc = spark.sparkContext
+    compiles = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     if plans:
         df = fn(spark, sf_dir)
         with open(os.path.join(plans, f"{name}.txt"), "w") as f:
@@ -106,6 +111,7 @@ def _measure_op(spark, sf_dir: str, name: str, reps: int, plans: str | None, lis
         listener.drain(False)  # keep only the last rep's batches
         sc.setJobGroup(group, name)
         py0 = trace.python_cpu_s(os.getpid())
+        c0 = compiles.getCount()
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         t1 = time.perf_counter()
@@ -114,6 +120,7 @@ def _measure_op(spark, sf_dir: str, name: str, reps: int, plans: str | None, lis
         build.append(t1 - t0)
         execute.append(t2 - t1)
     python_cpu_s = trace.python_cpu_s(os.getpid()) - py0
+    compiled = compiles.getCount() - c0
     return {
         "build_s": min(build),
         "build_spread_s": max(build) - min(build),
@@ -121,6 +128,7 @@ def _measure_op(spark, sf_dir: str, name: str, reps: int, plans: str | None, lis
         "execute_spread_s": max(execute) - min(execute),
         **_layers(trace.job_records(spark, group), listener.drain(False)),
         "python_cpu_s": python_cpu_s,
+        "compiles": compiled,
     }
 
 

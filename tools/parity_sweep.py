@@ -201,13 +201,13 @@ def _minhash_eval_scaled(con) -> str:
         SHINGLE_K,
         _duck_words,
         duck_hex_int,
+        duck_shingles,
     )
-    from trip_data_pipeline_spark.operators.dedup import _SHINGLES_DUCK
 
     base = f"""
 WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
 d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K})
-SELECT DISTINCT doc_id, unnest({_SHINGLES_DUCK}) AS s FROM d3
+SELECT DISTINCT doc_id, unnest({duck_shingles()}) AS s FROM d3
 """
     con.execute(f"CREATE OR REPLACE TEMP TABLE mh_sh AS {base}")
     con.execute("""
@@ -318,7 +318,7 @@ def _decontam_scaled(con) -> str:
     removed), which blows the oracle budget from 100x up.  Same
     mathematical object; value-locked to the registry oracle at sf0.01
     by tests/test_scaled_oracles.py.  Shingle/minhash construction is
-    shared verbatim with the registry oracles via _SHINGLES_DUCK and
+    shared verbatim with the registry oracles via common.duck_shingles and
     the minhash constants."""
     from trip_data_pipeline_spark.operators.common import (
         LSH_BANDS,
@@ -327,14 +327,14 @@ def _decontam_scaled(con) -> str:
         SHINGLE_K,
         _duck_words,
         duck_hex_int,
+        duck_shingles,
     )
-    from trip_data_pipeline_spark.operators.dedup import _SHINGLES_DUCK
 
     con.execute(f"""
 CREATE OR REPLACE TEMP TABLE dc_sh AS
 WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
 d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K})
-SELECT DISTINCT doc_id, unnest({_SHINGLES_DUCK}) AS s FROM d3
+SELECT DISTINCT doc_id, unnest({duck_shingles()}) AS s FROM d3
 """)
     con.execute(f"""
 CREATE OR REPLACE TEMP TABLE dc_cand AS

@@ -293,6 +293,17 @@ def shingle_col(ws: Column, k: int = SHINGLE_K) -> Column:
     ).otherwise(F.expr("CAST(array() AS ARRAY<STRING>)"))
 
 
+def duck_shingles(brk: str = " ") -> str:
+    """DuckDB side of ``shingle_col``: the ``SHINGLE_K``-word shingles
+    of word list ``ws`` as a list comprehension (1-based ``ws[i]``,
+    exclusive-upper ``range``), for lists of at least ``SHINGLE_K``
+    words.  ``brk`` is the whitespace before ``for`` (layout only)."""
+    gram = " || ' ' || ".join(
+        f"ws[i+{j}]" if j else "ws[i]" for j in range(SHINGLE_K)
+    )
+    return f"[{gram}{brk}for i in range(1, len(ws) - {SHINGLE_K - 2})]"
+
+
 # marker-word "n-gram model" per language: the tiny deterministic
 # heuristic version of fasttext-style lang-ID.  Markers are chosen from
 # common function words; on this synthetic corpus most docs fall through
@@ -343,9 +354,9 @@ def hex_int(h: Column | str, start: int, n: int) -> Column:
     return F.conv(F.substring(h, start, n), 16, 10).cast("bigint")
 
 
-def duck_hex_int(h: str, start: int, n: int) -> str:
+def duck_hex_int(h: str, start: int | str, n: int) -> str:
     """DuckDB side of ``hex_int``: a '0x'-prefixed string casts to the
-    same BIGINT."""
+    same BIGINT.  ``start`` may be a SQL expression."""
     return f"('0x' || substr({h}, {start}, {n}))::BIGINT"
 
 

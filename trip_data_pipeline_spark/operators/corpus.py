@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from trip_data_pipeline_spark.io import load
 from trip_data_pipeline_spark.operators.common import (
     LSH_BANDS,
+    MINHASH_MOD,
     MINHASH_PERMS,
     SHINGLE_K,
     _BPE_RE,
@@ -34,6 +35,7 @@ from trip_data_pipeline_spark.operators.common import (
     bigint,
     duck_hex_int,
     duck_qmilli,
+    duck_shingles,
     hex_int,
     minhash_signatures_arrow,
     qmilli,
@@ -1047,13 +1049,13 @@ def corpus_domain_mix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_DECON_BRK = "\n" + " " * 17  # the comprehension's line break
 _DECON_ORACLE = f"""
 WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
-d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= 3),
+d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K}),
 sh AS (
   SELECT DISTINCT doc_id,
-         unnest([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                 for i in range(1, len(ws) - 1)]) AS s
+         unnest({duck_shingles(brk=_DECON_BRK)}) AS s
   FROM d3
 ),
 hx AS (
@@ -1063,12 +1065,12 @@ hx AS (
   FROM sh
 ),
 hj AS (
-  SELECT doc_id, j, min((a + (j + 1) * b) % 2147483647) AS mh
-  FROM hx CROSS JOIN (SELECT unnest(range(0, 64)) AS j) perms
+  SELECT doc_id, j, min((a + (j + 1) * b) % {MINHASH_MOD}) AS mh
+  FROM hx CROSS JOIN (SELECT unnest(range(0, {MINHASH_PERMS})) AS j) perms
   GROUP BY doc_id, j
 ),
 bands AS (
-  SELECT doc_id, j // 4 AS band_idx,
+  SELECT doc_id, j // {MINHASH_PERMS // LSH_BANDS} AS band_idx,
          string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS band_key
   FROM hj GROUP BY doc_id, band_idx
 ),

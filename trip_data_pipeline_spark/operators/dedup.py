@@ -45,6 +45,7 @@ from trip_data_pipeline_spark.operators.common import (
     duck_fr4,
     duck_hex_int,
     duck_qvec,
+    duck_shingles,
     fr4,
     hex_int,
     l2norm,
@@ -158,16 +159,11 @@ def verified_jaccard_pairs(docs: DataFrame, pairs: DataFrame, tau: float) -> Dat
 # 64 permutation mins, bands them with the same '_'-joined keys, and
 # verifies the same exact Jaccard — full value-hash parity, not
 # rows-only.
-_SHINGLES_DUCK = (
-    "[ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] "
-    "for i in range(1, len(ws) - 1)]"
-)
-
 _MINHASH_ORACLE = f"""
 WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
 d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K}),
 sh AS (
-  SELECT DISTINCT doc_id, unnest({_SHINGLES_DUCK}) AS s FROM d3
+  SELECT DISTINCT doc_id, unnest({duck_shingles()}) AS s FROM d3
 ),
 hx AS (
   SELECT doc_id,
@@ -193,7 +189,7 @@ cand AS (
                AND b1.doc_id < b2.doc_id
 ),
 sets_ AS (
-  SELECT doc_id, list_distinct({_SHINGLES_DUCK}) AS sset FROM d3
+  SELECT doc_id, list_distinct({duck_shingles()}) AS sset FROM d3
 )
 SELECT doc_id1, doc_id2, jaccard FROM (
   SELECT c.doc_id1, c.doc_id2,
@@ -719,9 +715,9 @@ def _minhash_eval_duck() -> str:
 WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
 d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K}),
 sh AS (
-  SELECT DISTINCT doc_id, unnest({_SHINGLES_DUCK}) AS s FROM d3
+  SELECT DISTINCT doc_id, unnest({duck_shingles()}) AS s FROM d3
 ),
-sets_ AS (SELECT doc_id, list_distinct({_SHINGLES_DUCK}) AS sset FROM d3),
+sets_ AS (SELECT doc_id, list_distinct({duck_shingles()}) AS sset FROM d3),
 truth AS (
   SELECT doc_id1, doc_id2 FROM (
     SELECT c.doc_id1, c.doc_id2,

@@ -365,12 +365,20 @@ def join_theta_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark executes the equi part (user_id) as a hash/SMJ join and the
     band predicate as a post-join filter; at 100 TB you'd additionally
     bucket by time-chunk so candidate pairs stay bounded per partition
-    (same pattern as the LSH band join in dedup_near_minhash)."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", "user_id", epoch_s("ts").alias("s")
-    )
-    e1 = ev.alias("e1")
-    e2 = ev.alias("e2")
+    (same pattern as the LSH band join in dedup_near_minhash).
+
+    The probe side (e1; the planner broadcasts e2) is ``spread``: a
+    single-row-group events file scans as one task, and the whole
+    band test (~6.7M candidate pairs for 100k events) would run in it.
+    Spread one wave wide it runs on every core (sf0.1, 4 cores, median
+    of 12 alternating reps in one JVM: 0.52 -> 0.35 s, same rows).  The build side stays the raw
+    scan, since it is broadcast whole either way.  At scale the scan
+    already has >= defaultParallelism splits and ``spread`` returns
+    it untouched."""
+    raw = load(spark, sf_dir, "events")
+    cols = ("event_id", "user_id", epoch_s("ts").alias("s"))
+    e1 = spread(raw).select(*cols).alias("e1")
+    e2 = raw.select(*cols).alias("e2")
     return (
         e1.join(
             e2,

@@ -28,6 +28,7 @@ from trip_data_pipeline_spark.operators.common import (
     _decode_ppm,
     _encode_ppm,
     bigint,
+    duck_hex_int,
     duck_qmilli,
     l2norm,
     nz,
@@ -140,7 +141,7 @@ def multimodal_decode_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "multimodal_frame_sample",
-    oracle="""
+    oracle=f"""
 WITH v AS (
   SELECT doc_id, text, octet_length(encode(text)) AS nb
   FROM documents WHERE doc_id % 3 = 2
@@ -156,11 +157,7 @@ SELECT doc_id,
        -- the op is a byte-level frame sampler, and on multibyte text
        -- a char index diverges from the byte index (round-8 unicode
        -- sweep; DuckDB cannot slice BLOBs directly)
-       CAST((strpos('0123456789ABCDEF',
-                    substr(hex(encode(text)), CAST(fi * 64 + 1 AS INT), 1)) - 1)
-              * 16
-            + (strpos('0123456789ABCDEF',
-                      substr(hex(encode(text)), CAST(fi * 64 + 2 AS INT), 1)) - 1)
+       CAST({duck_hex_int("hex(encode(text))", "CAST(fi * 64 + 1 AS INT)", 2)}
             AS INT) AS frame_val
 FROM f
 """,
