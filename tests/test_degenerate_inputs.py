@@ -105,8 +105,8 @@ def test_abtest_mixed_outcomes_unchanged(spark, sf_dir, duck):
     compare(df, duck, o.oracle)
 
 
-def test_shingle_col_total_below_k(spark):
-    """shingle_col must be total for ANY input length: the external
+def test_word_ngrams_total_below_k(spark):
+    """word_ngrams must be total for ANY input length: the external
     size(ws) >= 3 filters at its call sites are defeated by codegen
     subexpression elimination when an inferred constraint on a
     shingle-derived column lands in the same Filter node (round-8
@@ -114,7 +114,7 @@ def test_shingle_col_total_below_k(spark):
     INSIDE the expression.  1-word input must yield [], not raise."""
     from pyspark.sql import functions as F
 
-    from trip_data_pipeline_spark.operators.common import shingle_col
+    from trip_data_pipeline_spark.operators.common import SHINGLE_K, word_ngrams
 
     df = spark.createDataFrame(
         [(0, []), (1, ["a"]), (2, ["a", "b"]), (3, ["a", "b", "c"])],
@@ -122,6 +122,6 @@ def test_shingle_col_total_below_k(spark):
     )
     got = {
         r["id"]: r["sh"]
-        for r in df.select("id", shingle_col(F.col("ws")).alias("sh")).collect()
+        for r in df.select("id", word_ngrams(F.col("ws"), SHINGLE_K).alias("sh")).collect()
     }
     assert got == {0: [], 1: [], 2: [], 3: ["a b c"]}

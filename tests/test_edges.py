@@ -169,6 +169,49 @@ def test_hash_and_quantize_kernels_match_duckdb(spark):
     assert dict(got)[0] == 63 and dict(got)[1] == -62 and dict(got)[len(xs) - 1] is None
 
 
+def test_word_ngram_kernels_match_duckdb(spark):
+    """The word n-gram every n-gram op shares with its oracle:
+    common.word_ngrams / duck_word_ngrams agree with each other and
+    with a plain-Python sliding window, gram for gram and in order, at
+    every n the ops use, on an empty text, one word, exactly n words, a
+    doubled space (an empty word) and unicode words; NULL text gives no
+    rows once exploded, in both engines."""
+    from trip_data_pipeline_spark.operators.common import duck_word_ngrams, word_ngrams
+
+    con = duckdb.connect()
+    for n in (2, 3, 4, 5, 6, 8):
+        texts = [
+            "",
+            "one",
+            " ".join(f"w{i}" for i in range(n)),
+            "a  b c d e f g h i",
+            "héllo wörld 日本 語 ñandú ça χ ψ ω",
+        ]
+        ids = list(range(len(texts) + 1))
+        sdf = spark.createDataFrame(list(zip(ids, texts + [None])), "id int, text string")
+        got = sorted(
+            tuple(r)
+            for r in sdf.select(
+                "id", F.posexplode(word_ngrams(F.split("text", " "), n))
+            ).collect()
+        )
+        con.register("t", pd.DataFrame({"id": ids, "text": texts + [None]}))
+        want = sorted(
+            con.execute(
+                f"SELECT id, generate_subscripts(g, 1) - 1, unnest(g) FROM "
+                f"(SELECT id, {duck_word_ngrams('w', n)} AS g FROM "
+                "(SELECT id, string_split(text, ' ') AS w FROM t))"
+            ).fetchall()
+        )
+        ref = sorted(
+            (i, p, " ".join(w[p : p + n]))
+            for i, w in enumerate(t.split(" ") for t in texts)
+            for p in range(len(w) - n + 1)
+        )
+        assert got == want == ref, f"n={n}\nspark={got}\nduck={want}\npython={ref}"
+        assert {r[0] for r in ref} == {2, 3, 4}
+
+
 def test_parse_extra_conf():
     """SPARK_GRAFT_EXTRA_CONF parsing (ADVICE r2/r3): well-formed
     entries round-trip, malformed entries raise loudly."""

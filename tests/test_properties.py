@@ -258,10 +258,10 @@ def test_connected_components_fixed_point(spark):
     assert bad_rep == 0
 
 
-def test_word_ngrams_zip_form_equals_index_transform(spark):
-    """Round-12 internals lock: word_ngrams' zip-of-shifted-slices
-    build (per-row cost under optimizer inlining) is value-identical
-    to the reference index-transform form for every n in use (2..6),
+def test_word_ngrams_equals_index_transform(spark):
+    """Internals lock: word_ngrams' bind-once build (the word array
+    evaluated once per row) is value-identical to the reference
+    index-transform form for every n in use (2, 3, 4, 5, 6, 8),
     including short docs (< n words), exactly-n docs, empty-string
     words from doubled separators, and NULL text."""
     from trip_data_pipeline_spark.operators.common import word_ngrams
@@ -274,10 +274,12 @@ def test_word_ngrams_zip_form_equals_index_transform(spark):
         (5, None),
         (6, "x  y z"),  # doubled space -> empty-string word
         (7, "r r r r r r"),
+        (8, "a b c d e f g h"),
+        (9, "p q  r s t u v w x y"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     w = F.split("text", " ")
-    for n in (2, 3, 4, 5, 6):
+    for n in (2, 3, 4, 5, 6, 8):
         ref = F.when(
             F.size(w) >= n,
             F.transform(
@@ -955,7 +957,7 @@ def test_minhash_eval_index_and_counts_equivalence(spark):
        instead of three separate aggs crossJoined; n_truth/n_cand/n_hit
        must be identical.
     """
-    from trip_data_pipeline_spark.operators.common import SHINGLE_K, _words, shingle_col
+    from trip_data_pipeline_spark.operators.common import SHINGLE_K, _words, word_ngrams
     from trip_data_pipeline_spark.operators.dedup import minhash_candidate_pairs
     from trip_data_pipeline_spark.io import load
     from trip_data_pipeline_spark.registry import OPS, queries
@@ -967,7 +969,7 @@ def test_minhash_eval_index_and_counts_equivalence(spark):
         .select("doc_id", _words().alias("ws"))
         .filter(F.size("ws") >= SHINGLE_K)
     )
-    sh = shingle_col(F.col("ws"))
+    sh = word_ngrams(F.col("ws"), SHINGLE_K)
     a_old = (
         d3.select("doc_id", F.array_distinct(sh).alias("ss"))
         .select(

@@ -99,7 +99,7 @@ def test_arrow_op_runs_from_outside_the_checkout(tmp_path, sf_dir, duck):
         """
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    env["SPARK_GRAFT_EXTRA_CONF"] = "spark.driver.memory=1g"
     proc = subprocess.run(
         [sys.executable, "-c", code],
         capture_output=True,

@@ -258,7 +258,6 @@ def test_stateful_drain_runs_one_wave_of_state_stores(spark, sf_dir):
     """A stateful run_to_memory drain plans one task wave of state
     stores, not the batch default, and leaves the confs it pins as it
     found them."""
-    import os
     import threading
 
     from pyspark.sql.streaming import StreamingQueryListener
@@ -288,7 +287,7 @@ def test_stateful_drain_runs_one_wave_of_state_stores(spark, sf_dir):
         assert rec.done.wait(30)  # progress reaches listeners asynchronously
     finally:
         spark.streams.removeListener(rec)
-    batch_default = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "16"))
+    batch_default = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert set(rec.parts) == {one_wave_partitions(spark)}
     assert set(rec.parts) == {min(batch_default, spark.sparkContext.defaultParallelism)}
     assert _confs(spark) == before

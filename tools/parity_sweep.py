@@ -201,13 +201,13 @@ def _minhash_eval_scaled(con) -> str:
         SHINGLE_K,
         _duck_words,
         duck_hex_int,
-        duck_shingles,
+        duck_word_ngrams,
     )
 
     base = f"""
 WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
 d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K})
-SELECT DISTINCT doc_id, unnest({duck_shingles()}) AS s FROM d3
+SELECT DISTINCT doc_id, unnest({duck_word_ngrams('ws', SHINGLE_K)}) AS s FROM d3
 """
     con.execute(f"CREATE OR REPLACE TEMP TABLE mh_sh AS {base}")
     con.execute("""
@@ -271,17 +271,14 @@ def _shingle_containment_scaled(con) -> str:  # noqa: ARG001 — uniform signatu
     index IS |A∩B| — no candidate-DISTINCT, no per-pair re-join, no
     list_intersect over the full arrays.  The 10*nb >= 9*na size
     filter is lossless (a qualifying pair has i >= ceil(0.9*na) and
-    i <= nb, hence 10*nb >= 9*na).  Shingle construction is verbatim
-    from the registry oracle (dedup.py dedup_shingle_containment)."""
-    return """
+    i <= nb, hence 10*nb >= 9*na).  Shingles come from the registry
+    oracle's kernel, common.duck_word_ngrams."""
+    from trip_data_pipeline_spark.operators.common import SHINGLE_K, duck_word_ngrams
+
+    return f"""
 WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= 3),
-sets_ AS (
-  SELECT doc_id,
-         list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                        for i in range(1, len(ws) - 1)]) AS sset
-  FROM d3
-),
+d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K}),
+sets_ AS (SELECT doc_id, list_distinct({duck_word_ngrams('ws', SHINGLE_K)}) AS sset FROM d3),
 she AS (SELECT doc_id, len(sset) AS n, unnest(sset) AS s FROM sets_)
 SELECT small_id, big_id,
        CAST(i_ AS BIGINT) AS n_shared,
@@ -295,15 +292,6 @@ FROM (
   GROUP BY 1, 2, 4
 ) WHERE 10 * i_ >= 9 * na
 """
-# NOTE (ADVICE r9): the shingle-construction SQL above (string_split,
-# k=3, list-comprehension shingles) intentionally duplicates the
-# registry oracle in dedup.py rather than importing it — the registry
-# oracle is a single opaque SQL string with the verify arm fused in, so
-# there is no shared sub-expression to factor without rewriting it.
-# The duplication is guarded: tests/test_scaled_oracles.py locks this
-# override value-identical to the registry oracle at sf0.01, so any
-# tokenization drift in either copy fails that lock before it can skew
-# an at-scale sweep.
 
 
 def _decontam_scaled(con) -> str:
@@ -318,7 +306,7 @@ def _decontam_scaled(con) -> str:
     removed), which blows the oracle budget from 100x up.  Same
     mathematical object; value-locked to the registry oracle at sf0.01
     by tests/test_scaled_oracles.py.  Shingle/minhash construction is
-    shared verbatim with the registry oracles via common.duck_shingles and
+    shared with the registry oracles via common.duck_word_ngrams and
     the minhash constants."""
     from trip_data_pipeline_spark.operators.common import (
         LSH_BANDS,
@@ -327,14 +315,14 @@ def _decontam_scaled(con) -> str:
         SHINGLE_K,
         _duck_words,
         duck_hex_int,
-        duck_shingles,
+        duck_word_ngrams,
     )
 
     con.execute(f"""
 CREATE OR REPLACE TEMP TABLE dc_sh AS
 WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
 d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K})
-SELECT DISTINCT doc_id, unnest({duck_shingles()}) AS s FROM d3
+SELECT DISTINCT doc_id, unnest({duck_word_ngrams('ws', SHINGLE_K)}) AS s FROM d3
 """)
     con.execute(f"""
 CREATE OR REPLACE TEMP TABLE dc_cand AS

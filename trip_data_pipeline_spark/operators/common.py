@@ -230,78 +230,48 @@ def words_of(col: str = "text") -> Column:
 
 
 def word_ngrams(w: Column, n: int) -> Column:
-    """All n-word grams joined by spaces, with multiplicity, in
-    document order.  Guarded for docs shorter than n (Spark's
-    ``sequence(1, k)`` DESCENDS for k < 1 — an unguarded short doc
-    would silently produce garbage grams).
+    """All n-word grams of word array ``w``, joined by single spaces,
+    with multiplicity, in document order — TOTAL for any input: fewer
+    than n words, or a NULL array, yields an empty array.  DuckDB
+    mirror: ``duck_word_ngrams``.
 
-    DuckDB mirror: ``list_transform(range(1, len(w) - {n-2}),
-    i -> array_to_string(w[i:i+{n-1}], ' '))`` (range is
-    exclusive-upper; slice is inclusive 1-based on both engines).
+    ``w`` is bound once per row as the lambda variable ``ws`` of
+    ``transform(array(w), ws -> ...)``, because an interpreted
+    higher-order lambda re-evaluates a non-lambda input such as
+    ``split(text)`` for every element, which measured 8.3 s at n = 2
+    and 28.0 s at n = 8 against 0.37 s and 0.41 s bound once (sf0.1
+    documents, 4 cores; the word n-gram kernel entry in CHANGES.md).
 
-    Round-12 shape (guide §1.1/§4): built as a ZIP of n shifted
-    slices, not ``transform(sequence(...), i -> slice(w, i, n))``.
-    Higher-order lambdas are interpreted, and an interpreted lambda
-    body re-evaluates non-lambda subexpressions PER ELEMENT — when the
-    optimizer inlines `w = split(text)` into the lambda (projection
-    collapse, and the inferred `size(grams) > 0` pre-explode filter
-    pushed to the scan does it unconditionally), each gram re-split
-    the whole document: O(words²) per doc, ~5x the runtime of the
-    consuming operators.  In the zip form every slice is evaluated
-    once per ROW under the same inlining, so the worst case stays
-    O(n·words).  Element j is w[j..j+n-1] joined by single spaces in
-    both forms (split() yields no NULL elements, so concat_ws ==
-    array_join here), and the short-doc guard is unchanged."""
-    cnt = F.size(w) - F.lit(n - 1)
-    grams = F.slice(w, 1, cnt)
-    for i in range(1, n):
-        grams = F.zip_with(
-            grams,
-            F.slice(w, i + 1, cnt),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-    return F.when(F.size(w) >= n, grams).otherwise(
-        F.expr("CAST(array() AS ARRAY<STRING>)")
+    The short-doc guard lives INSIDE the expression: Spark's
+    ``sequence(1, size - n + 1)`` DESCENDS below n words, and codegen
+    subexpression elimination can evaluate a gram expression inside a
+    Filter before that Filter's own ``size >= n`` conjunct (round-8
+    degenerate gate), so a guard at the call site is not enough;
+    CASE-WHEN branches are exempt from that elimination."""
+
+    def grams(ws: Column) -> Column:
+        return F.when(
+            F.size(ws) >= n,
+            F.transform(
+                F.sequence(F.lit(1), F.size(ws) - (n - 1)),
+                lambda i: F.concat_ws(" ", *[F.element_at(ws, i + j) for j in range(n)]),
+            ),
+        ).otherwise(F.expr("CAST(array() AS ARRAY<STRING>)"))
+
+    return F.element_at(F.transform(F.array(w), grams), 1)
+
+
+def duck_word_ngrams(w: str, n: int) -> str:
+    """DuckDB side of ``word_ngrams`` over list expression ``w``: the
+    exclusive-upper ``range`` is already empty below n words, and the
+    slice ``w[i:i+n-1]`` is 1-based and inclusive."""
+    return (
+        f"list_transform(range(1, len({w}) - {n - 2}), "
+        f"i -> array_to_string({w}[i:i+{n - 1}], ' '))"
     )
 
 
 SHINGLE_K = 3
-
-
-def shingle_col(ws: Column, k: int = SHINGLE_K) -> Column:
-    """k-word shingles of a token array, as strings — TOTAL for any
-    input length (empty array below k words).
-
-    The guard is load-bearing even though every call site filters
-    size(ws) >= k first: the round-8 degenerate-shape gate caught
-    codegen SUBEXPRESSION ELIMINATION evaluating this transform
-    eagerly inside a Filter predicate (an inferred isnotnull
-    constraint on a shingle-derived column lands in the same Filter
-    as the size guard, and subExpr_0$ runs before the conjunct
-    short-circuit), where a 1-word doc made sequence(0, size-k)
-    DESCEND and element_at(ws, 2) raise.  CASE-WHEN branches are
-    exempt from subexpression elimination, so guarding INSIDE the
-    expression is the only placement the optimizer cannot reorder."""
-    return F.when(
-        F.size(ws) >= k,
-        F.transform(
-            F.sequence(F.lit(0), F.size(ws) - k),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(ws, i + j + 1) for j in range(k)]
-            ),
-        ),
-    ).otherwise(F.expr("CAST(array() AS ARRAY<STRING>)"))
-
-
-def duck_shingles(brk: str = " ") -> str:
-    """DuckDB side of ``shingle_col``: the ``SHINGLE_K``-word shingles
-    of word list ``ws`` as a list comprehension (1-based ``ws[i]``,
-    exclusive-upper ``range``), for lists of at least ``SHINGLE_K``
-    words.  ``brk`` is the whitespace before ``for`` (layout only)."""
-    gram = " || ' ' || ".join(
-        f"ws[i+{j}]" if j else "ws[i]" for j in range(SHINGLE_K)
-    )
-    return f"[{gram}{brk}for i in range(1, len(ws) - {SHINGLE_K - 2})]"
 
 
 # marker-word "n-gram model" per language: the tiny deterministic
@@ -377,7 +347,7 @@ def minhash_signatures_arrow(docs: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    sh = shingle_col(F.col("ws"))
+    sh = word_ngrams(F.col("ws"), SHINGLE_K)
     # Round-12 (guide §1.2 per-task work, §4.1): ONE md5 + ONE hex parse
     # per shingle instead of two.  The old shape ran two separate
     # transform lambdas — a = hex_int(md5(s), 1, 7) and

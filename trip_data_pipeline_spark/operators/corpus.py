@@ -35,13 +35,12 @@ from trip_data_pipeline_spark.operators.common import (
     bigint,
     duck_hex_int,
     duck_qmilli,
-    duck_shingles,
+    duck_word_ngrams,
     hex_int,
     minhash_signatures_arrow,
     qmilli,
     r2,
     r4,
-    shingle_col,
     spread,
     word_ngrams,
     words_of,
@@ -51,18 +50,11 @@ from trip_data_pipeline_spark.registry import op
 CAT = "2.15 corpus curation"
 
 
-def _duck_ngrams(n: int, w: str = "w") -> str:
-    return (
-        f"list_transform(range(1, len({w}) - {n - 2}), "
-        f"i -> array_to_string({w}[i:i+{n - 1}], ' '))"
-    )
-
-
 @op(
     "corpus_boilerplate_ngram_prune",
     oracle=f"""
 WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-g AS (SELECT doc_id, unnest({_duck_ngrams(5)}) AS gram FROM d),
+g AS (SELECT doc_id, unnest({duck_word_ngrams('w', 5)}) AS gram FROM d),
 boiler AS (
   SELECT gram FROM (SELECT gram, count(DISTINCT doc_id) AS df FROM g GROUP BY gram)
   WHERE df >= 4
@@ -112,7 +104,7 @@ def corpus_boilerplate_ngram_prune(spark: SparkSession, sf_dir: str) -> DataFram
     "eval_contamination_ngram",
     oracle=f"""
 WITH d AS (SELECT doc_id, md5(text) AS h, string_split(text, ' ') AS w FROM documents),
-g AS (SELECT doc_id, h, unnest({_duck_ngrams(6)}) AS gram FROM d),
+g AS (SELECT doc_id, h, unnest({duck_word_ngrams('w', 6)}) AS gram FROM d),
 eval_grams AS (SELECT DISTINCT gram FROM g WHERE substr(h, 1, 1) IN ('0','1','2','3')),
 train AS (SELECT doc_id, gram FROM g WHERE substr(h, 1, 1) NOT IN ('0','1','2','3'))
 SELECT t.doc_id,
@@ -449,11 +441,7 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "lm_bigram_condprob",
     oracle=f"""
 WITH d AS (SELECT {_duck_words()} AS w FROM documents),
-g AS (
-  SELECT unnest(list_transform(range(1, len(w)),
-                i -> array_to_string(w[i:i+1], ' '))) AS gram
-  FROM d
-),
+g AS (SELECT unnest({duck_word_ngrams('w', 2)}) AS gram FROM d),
 c AS (SELECT gram, CAST(count(*) AS BIGINT) AS cnt FROM g GROUP BY gram),
 h AS (SELECT gram, cnt, split_part(gram, ' ', 1) AS w1,
              sum(cnt) OVER (PARTITION BY split_part(gram, ' ', 1)) AS head_cnt
@@ -478,20 +466,8 @@ def lm_bigram_condprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers with the portable floor-round, so it is
     bit-identical across engines."""
     d = spread(load(spark, sf_dir, "documents"))
-    w = _words()
-    # same guard as common.word_ngrams: sequence(1, k) DESCENDS for
-    # k < 1, so a 1-word document produced slice(w, 0, 2) and raised
-    # INVALID_PARAMETER_VALUE.START (round-8 degenerate gate); DuckDB's
-    # exclusive-upper range(1, 1) is already empty there
-    grams = F.when(
-        F.size(w) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - 1),
-            lambda i: F.array_join(F.slice(w, i, 2), " "),
-        ),
-    ).otherwise(F.expr("CAST(array() AS ARRAY<STRING>)"))
     c = (
-        d.select(F.explode(grams).alias("gram"))
+        d.select(F.explode(word_ngrams(_words(), 2)).alias("gram"))
         .groupBy("gram")
         .agg(bigint(F.count(F.lit(1))).alias("cnt"))
     )
@@ -559,11 +535,9 @@ def corpus_mixture_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "lm_doc_quality_ppm",
-    oracle="""
+    oracle=f"""
 WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-g AS (SELECT doc_id,
-             unnest(list_transform(range(1, len(w)), i -> array_to_string(w[i:i+1], ' '))) AS gram
-      FROM d),
+g AS (SELECT doc_id, unnest({duck_word_ngrams('w', 2)}) AS gram FROM d),
 m AS (SELECT doc_id, gram, string_split(gram, ' ')[1] AS w1 FROM g),
 c AS (SELECT doc_id,
              count(*) OVER (PARTITION BY gram) AS c2,
@@ -616,12 +590,9 @@ def lm_doc_quality_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "corpus_ngram_novelty",
-    oracle="""
+    oracle=f"""
 WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-g AS (SELECT doc_id,
-             unnest(list_transform(range(1, len(w) - 2),
-                                   i -> array_to_string(w[i:i+3], ' '))) AS gram
-      FROM d),
+g AS (SELECT doc_id, unnest({duck_word_ngrams('w', 4)}) AS gram FROM d),
 m AS (SELECT doc_id, gram,
              min(doc_id) OVER (PARTITION BY gram) AS first_doc
       FROM g)
@@ -806,12 +777,9 @@ def bpe_apply_merge_recount(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "corpus_bitext_candidates",
-    oracle="""
+    oracle=f"""
 WITH d AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
-g AS (SELECT DISTINCT doc_id, lang,
-             unnest(list_transform(range(1, len(w) - 3),
-                                   i -> array_to_string(w[i:i+4], ' '))) AS gram
-      FROM d),
+g AS (SELECT DISTINCT doc_id, lang, unnest({duck_word_ngrams('w', 5)}) AS gram FROM d),
 df AS (SELECT gram, count(*) AS c FROM g GROUP BY gram),
 rare AS (SELECT gram FROM df WHERE c BETWEEN 2 AND 4),
 pairs AS (
@@ -1049,13 +1017,11 @@ def corpus_domain_mix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DECON_BRK = "\n" + " " * 17  # the comprehension's line break
 _DECON_ORACLE = f"""
 WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
 d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K}),
 sh AS (
-  SELECT DISTINCT doc_id,
-         unnest({duck_shingles(brk=_DECON_BRK)}) AS s
+  SELECT DISTINCT doc_id, unnest({duck_word_ngrams('ws', SHINGLE_K)}) AS s
   FROM d3
 ),
 hx AS (
@@ -1185,7 +1151,7 @@ def corpus_decontam_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     sh = d3.select(
-        "doc_id", F.explode(F.array_distinct(shingle_col(F.col("ws")))).alias("s")
+        "doc_id", F.explode(F.array_distinct(word_ngrams(F.col("ws"), SHINGLE_K))).alias("s")
     )
     # Round-12 (guide §2.4, §3.1, §3.2): the three shingle-leg joins
     # against the checkpointed candidate set used to plan as SORT-MERGE

@@ -45,15 +45,15 @@ from trip_data_pipeline_spark.operators.common import (
     duck_fr4,
     duck_hex_int,
     duck_qvec,
-    duck_shingles,
+    duck_word_ngrams,
     fr4,
     hex_int,
     l2norm,
     minhash_signatures_arrow,
     qvec,
     r4,
-    shingle_col,
     spread,
+    word_ngrams,
 )
 from trip_data_pipeline_spark.operators.graph import connected_components
 from trip_data_pipeline_spark.registry import op
@@ -134,7 +134,7 @@ def verified_jaccard_pairs(docs: DataFrame, pairs: DataFrame, tau: float) -> Dat
     """Join candidate pairs back to shingle sets and keep those with
     true Jaccard >= tau."""
     sets_ = docs.select(
-        "doc_id", F.array_distinct(shingle_col(F.col("ws"))).alias("sset")
+        "doc_id", F.array_distinct(word_ngrams(F.col("ws"), SHINGLE_K)).alias("sset")
     )
     j = (
         pairs.join(sets_.withColumnRenamed("doc_id", "doc_id1").withColumnRenamed("sset", "s1"), "doc_id1")
@@ -163,7 +163,7 @@ _MINHASH_ORACLE = f"""
 WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
 d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K}),
 sh AS (
-  SELECT DISTINCT doc_id, unnest({duck_shingles()}) AS s FROM d3
+  SELECT DISTINCT doc_id, unnest({duck_word_ngrams('ws', SHINGLE_K)}) AS s FROM d3
 ),
 hx AS (
   SELECT doc_id,
@@ -189,7 +189,7 @@ cand AS (
                AND b1.doc_id < b2.doc_id
 ),
 sets_ AS (
-  SELECT doc_id, list_distinct({duck_shingles()}) AS sset FROM d3
+  SELECT doc_id, list_distinct({duck_word_ngrams('ws', SHINGLE_K)}) AS sset FROM d3
 )
 SELECT doc_id1, doc_id2, jaccard FROM (
   SELECT c.doc_id1, c.doc_id2,
@@ -715,9 +715,9 @@ def _minhash_eval_duck() -> str:
 WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
 d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K}),
 sh AS (
-  SELECT DISTINCT doc_id, unnest({duck_shingles()}) AS s FROM d3
+  SELECT DISTINCT doc_id, unnest({duck_word_ngrams('ws', SHINGLE_K)}) AS s FROM d3
 ),
-sets_ AS (SELECT doc_id, list_distinct({duck_shingles()}) AS sset FROM d3),
+sets_ AS (SELECT doc_id, list_distinct({duck_word_ngrams('ws', SHINGLE_K)}) AS sset FROM d3),
 truth AS (
   SELECT doc_id1, doc_id2 FROM (
     SELECT c.doc_id1, c.doc_id2,
@@ -845,7 +845,7 @@ def dedup_minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inlined (sh is never null here — d3 filters size(ws)>=3 —
     # so coalesce changes no value).  Same (doc, shingle, n1) rows
     # by construction; truth arm after: 2.2 s.
-    sh = shingle_col(F.col("ws"))
+    sh = word_ngrams(F.col("ws"), SHINGLE_K)
     # Round-13 (guide §2.2/§3.2 — VERDICT r12 item 3): EXACT-DUPLICATE
     # COLLAPSE before the inverted-index join.  The truth predicate
     # 2|A∩B| >= |A∪B| depends only on the two shingle SETS, and a
@@ -1030,15 +1030,10 @@ def dedup_cross_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "dedup_shingle_containment",
-    oracle="""
+    oracle=f"""
 WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= 3),
-sets_ AS (
-  SELECT doc_id,
-         list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                        for i in range(1, len(ws) - 1)]) AS sset
-  FROM d3
-),
+d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K}),
+sets_ AS (SELECT doc_id, list_distinct({duck_word_ngrams('ws', SHINGLE_K)}) AS sset FROM d3),
 sh AS (SELECT doc_id, unnest(sset) AS s FROM sets_),
 cand AS (
   SELECT DISTINCT a.doc_id AS small_id, b.doc_id AS big_id
@@ -1110,7 +1105,7 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("ws") >= SHINGLE_K)
     )
     sets_ = d3.select(
-        "doc_id", F.array_distinct(shingle_col(F.col("ws"))).alias("sset")
+        "doc_id", F.array_distinct(word_ngrams(F.col("ws"), SHINGLE_K)).alias("sset")
     )
     sh = sets_.select(
         "doc_id",
@@ -1163,10 +1158,7 @@ WIN_K = 8  # words per substring-dedup window
     "dedup_substring_window",
     oracle=f"""
 WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-g AS (SELECT doc_id,
-             unnest(list_transform(range(1, len(w) - {WIN_K - 2}),
-                    i -> md5(array_to_string(w[i:i+{WIN_K - 1}], ' ')))) AS h
-      FROM d WHERE len(w) >= {WIN_K}),
+g AS (SELECT doc_id, md5(unnest({duck_word_ngrams('w', WIN_K)})) AS h FROM d),
 c AS (SELECT doc_id, h, count(*) OVER (PARTITION BY h) AS cnt FROM g)
 SELECT doc_id,
        CAST(count(*) AS BIGINT)                         AS n_windows,
@@ -1193,17 +1185,9 @@ def dedup_substring_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-shuffle suffix of the span-dedup pipeline; the explode is
     narrow (pipelined with the scan)."""
     d = spread(load(spark, sf_dir, "documents"))
-    w = F.split(F.col("text"), " ")
-    docs = d.select("doc_id", w.alias("w")).filter(F.size("w") >= WIN_K)
-    wins = docs.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("w") - WIN_K),
-                lambda i: F.md5(F.array_join(F.slice("w", i + 1, WIN_K), " ")),
-            )
-        ).alias("h"),
-    )
+    wins = d.select(
+        "doc_id", F.explode(word_ngrams(F.split("text", " "), WIN_K)).alias("g")
+    ).select("doc_id", F.md5("g").alias("h"))
     cnt = F.count(F.lit(1)).over(Window.partitionBy("h"))
     marked = wins.select("doc_id", (cnt >= 2).cast("int").alias("dup"))
     return (

@@ -25,6 +25,7 @@ from trip_data_pipeline_spark.operators.common import (
     _words,
     bigint,
     duck_hex_int,
+    duck_word_ngrams,
     hex_int,
     r2,
     r4,
@@ -225,8 +226,7 @@ WITH t AS (SELECT doc_id, {_duck_words()} AS ws FROM documents)
 SELECT doc_id,
        CAST(len(ws) - 2 AS BIGINT) AS n_shingles,
        list_aggregate(
-         list_transform(range(1, len(ws) - 1),
-                        i -> substring(md5(ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]), 1, 16)),
+         list_transform({duck_word_ngrams('ws', 3)}, s -> substring(md5(s), 1, 16)),
          'min') AS fingerprint
 FROM t
 WHERE len(ws) >= 3
@@ -250,15 +250,7 @@ def text_fingerprint_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
             bigint(F.size("ws") - 2).alias("n_shingles"),
             F.array_min(
                 F.transform(
-                    F.transform(
-                        F.sequence(F.lit(0), F.size("ws") - 3),
-                        lambda i: F.concat_ws(
-                            " ",
-                            F.element_at(F.col("ws"), i + 1),
-                            F.element_at(F.col("ws"), i + 2),
-                            F.element_at(F.col("ws"), i + 3),
-                        ),
-                    ),
+                    word_ngrams(F.col("ws"), 3),
                     lambda s: F.substring(F.md5(s), 1, 16),
                 )
             ).alias("fingerprint"),
@@ -324,9 +316,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_ngram_freq",
     oracle=f"""
 WITH t AS (SELECT {_duck_words()} AS ws FROM documents),
-     b AS (SELECT unnest(list_transform(range(1, len(ws)),
-                         i -> ws[i] || ' ' || ws[i+1])) AS bigram
-           FROM t WHERE len(ws) >= 2)
+     b AS (SELECT unnest({duck_word_ngrams('ws', 2)}) AS bigram FROM t)
 SELECT bigram, CAST(count(*) AS BIGINT) AS n
 FROM b GROUP BY bigram
 ORDER BY n DESC, bigram ASC
@@ -338,17 +328,8 @@ def text_ngram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus bigram frequency, top-20 — task-brief text addition (the
     n-gram layer under n-gram-Jaccard dedup)."""
     d = spread(load(spark, sf_dir, "documents"))
-    wsc = F.col("ws")
-    bigrams = F.transform(
-        F.sequence(F.lit(0), F.size(wsc) - 2),
-        lambda i: F.concat_ws(
-            " ", F.element_at(wsc, i + 1), F.element_at(wsc, i + 2)
-        ),
-    )
     return (
-        d.select(_words().alias("ws"))
-        .filter(F.size("ws") >= 2)
-        .select(F.explode(bigrams).alias("bigram"))
+        d.select(F.explode(word_ngrams(_words(), 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(bigint(F.count(F.lit(1))).alias("n"))
         .orderBy(F.col("n").desc(), F.col("bigram").asc())
@@ -493,11 +474,9 @@ def pipeline_training_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "text_repetition_metrics",
-    oracle="""
+    oracle=f"""
 WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-g AS (SELECT doc_id, w,
-             list_transform(range(1, len(w)), i -> array_to_string(w[i:i+1], ' ')) AS bg
-      FROM d)
+g AS (SELECT doc_id, w, {duck_word_ngrams('w', 2)} AS bg FROM d)
 SELECT doc_id,
        CAST(len(w) AS BIGINT) AS n_words,
        CAST(len(list_distinct(w)) AS BIGINT) AS n_distinct,
@@ -724,8 +703,8 @@ def _winnow_oracle() -> str:
     return f"""
 WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
 d6 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= 6),
-sh AS (SELECT doc_id, i AS pos, ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3] AS s
-       FROM (SELECT doc_id, ws, unnest(range(0, len(ws) - 2)) AS i FROM d6)),
+sh AS (SELECT doc_id, generate_subscripts(g, 1) - 1 AS pos, unnest(g) AS s
+       FROM (SELECT doc_id, {duck_word_ngrams('ws', 3)} AS g FROM d6)),
 h AS (SELECT doc_id, pos, {duck_hex_int('md5(s)', 1, 7)} AS h FROM sh),
 enc AS (SELECT doc_id, pos, h * 2097152 + (1048576 - pos) AS e,
                count(*) OVER (PARTITION BY doc_id) AS ns
@@ -776,15 +755,7 @@ def text_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", _words().alias("ws"))
         .filter(F.size("ws") >= 6)
     )
-    sh = d.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                "transform(sequence(0, size(ws) - 3),"
-                " i -> concat(ws[i], ' ', ws[i+1], ' ', ws[i+2]))"
-            )
-        ).alias("pos", "s"),
-    )
+    sh = d.select("doc_id", F.posexplode(word_ngrams(F.col("ws"), 3)).alias("pos", "s"))
     h = sh.select(
         "doc_id", "pos", hex_int(F.md5("s"), 1, 7).alias("h")
     ).select(

@@ -79,14 +79,13 @@ def one_wave_partitions(spark: SparkSession) -> int:
 
 def get_session(app_name: str = "trip-data-pipeline-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    # 16 measured fastest for the sf0.1 bench on this box (vs 8/32);
-    # a real cluster deployment sets ~2-3x total cores and lets AQE
-    # coalesce down — this knob is local-mode-scale only.
-    shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "16")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", shuffle_parts)
+        # 16 measured fastest for the sf0.1 bench on 4 cores (vs 8/32);
+        # a real cluster deployment sets ~2-3x total cores and lets AQE
+        # coalesce down — this value is local-mode-scale only.
+        .config("spark.sql.shuffle.partitions", "16")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -94,7 +93,7 @@ def get_session(app_name: str = "trip-data-pipeline-spark") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", "8g")
         .config("spark.python.daemon.module", "trip_data_pipeline_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.sql.codegen.cache.maxEntries", "1024")
