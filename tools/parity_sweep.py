@@ -7,7 +7,9 @@ ppm overflows, for example, only materialize once counts approach
 10^9+ and were caught by a hand audit, not a gate.  This sweep
 mechanizes that audit: every registered op runs against its DuckDB
 oracle ON THE SAME 10x (sf≈1) layout and the full VALUE bag is
-compared, not just timings (tools/measure.py) or row counts.
+compared, not just timings (tools/measure.py) or row counts.  The
+oracle is always the registry's own text, the one the driver checks at
+sf0.01; there is no at-scale override.
 
 Two comparison modes, chosen per op by output size:
 
@@ -64,14 +66,12 @@ from trip_data_pipeline_spark.registry import OPS, queries
 
 CAP = int(os.environ.get("PARITY_CAP_ROWS", "500000"))
 
-# Per-op DuckDB budget: a few oracles are full-algorithm replays whose
-# MATERIALIZATION is quadratic at 10x (the minhash-eval truth arm
-# DISTINCTs a ~279M-row inverted-index self-join) — the engine under
-# test is fine, the oracle is the bottleneck.  Rather than stall the
-# whole sweep, interrupt the oracle after the budget and record
-# ORACLE-BUDGET-NA; those ops get their at-scale parity at a smaller
-# replication where the oracle is tractable — or, since round 9, at
-# full 10x via the SCALED_ORACLES overrides below.
+# Per-op DuckDB budget: every registry oracle finishes at 10x inside it
+# (the eight whose brute-force forms did not now count shared shingles,
+# drive the verify join from candidates or propagate component labels;
+# tests/test_scaled_oracles.py locks them to those forms).  A regressed
+# oracle plan is interrupted after the budget and recorded as
+# ORACLE-BUDGET-NA instead of stalling the whole sweep.
 ORACLE_BUDGET_S = float(os.environ.get("PARITY_ORACLE_BUDGET", "300"))
 
 
@@ -101,443 +101,6 @@ CONTRACT_NA = {
         "declared single-file premise broken by the 16-part replicated "
         "layout (same contract_na as docs/PROFILE_10x.json)"
     ),
-}
-
-
-# ---------------------------------------------------------------------------
-# Scale-tractable oracle overrides (round-9, VERDICT r8 item 3).
-#
-# Two registry oracles are correct but have super-linear EVALUATION
-# cost that exceeds any reasonable budget at 10x — the cost is the
-# oracle's materialization strategy, not the comparison:
-#
-# - graph_connected_components: the recursive-CTE transitive closure
-#   materializes every (node, reachable-node) pair — O(sum of
-#   component-size^2) rows, 307 s at 3x and super-quadratic beyond.
-# - dedup_minhash_recall_eval: the truth arm DISTINCTs the inverted-
-#   index self-join then re-joins both shingle arrays per pair for
-#   list_intersect — 1,517 s at 3x.
-#
-# Each override computes THE SAME mathematical object with a scalable
-# evaluation: iterative min-label propagation to a fixed point for
-# components (any correct CC algorithm yields the identical labelling
-# because component id == min reachable node id), and the
-# shared-shingle-count identity for the truth arm (both sides of the
-# index join are per-doc-distinct, so the per-pair join-row count IS
-# |A∩B|, and |A∪B| = n1 + n2 - i; the Arasu'06 size filter at t=0.5
-# is lossless).  Overrides are OPT-IN (PARITY_SCALED_ORACLES=1), every
-# record that used one carries "scaled_oracle": true, and
-# tests/test_scaled_oracles.py locks each override value-identical to
-# the original registry oracle on the driver fixture — so the scaled
-# artifact chains to the independent oracle through an equality that
-# is itself machine-checked.
-# ---------------------------------------------------------------------------
-
-
-def _cc_oracle_iterative(con) -> str:
-    """Connected components by min-label propagation + pointer jumping
-    in DuckDB temp tables (the same O(log diameter) loop the engine
-    runs, re-implemented against the oracle's own edge definition).
-    Convergence detector: sum(label) is strictly decreasing until the
-    fixed point (labels only ever decrease, bounded below)."""
-    con.execute("""
-CREATE OR REPLACE TEMP TABLE cc_e AS
-WITH op_ AS (SELECT DISTINCT l_orderkey AS k, l_partkey AS p
-             FROM lineitem WHERE l_orderkey % 97 = 0)
-SELECT a.p AS src, b.p AS dst FROM op_ a JOIN op_ b
-ON a.k = b.k AND a.p <> b.p
-""")
-    con.execute(
-        "CREATE OR REPLACE TEMP TABLE cc_l AS "
-        "SELECT DISTINCT src AS node, src AS label FROM cc_e"
-    )
-    prev = None
-    for _ in range(64):
-        # one hop of neighbor-min propagation ...
-        con.execute("""
-CREATE OR REPLACE TEMP TABLE cc_hop AS
-SELECT l.node, least(l.label, coalesce(m.nbr, l.label)) AS label
-FROM cc_l l LEFT JOIN (
-  SELECT e.dst AS node, min(l2.label) AS nbr
-  FROM cc_e e JOIN cc_l l2 ON l2.node = e.src GROUP BY e.dst
-) m ON m.node = l.node
-""")
-        # ... then pointer jumping (label := label-of-label)
-        con.execute("""
-CREATE OR REPLACE TEMP TABLE cc_next AS
-SELECT a.node, least(a.label, coalesce(b.label, a.label)) AS label
-FROM cc_hop a LEFT JOIN cc_hop b ON b.node = a.label
-""")
-        con.execute("CREATE OR REPLACE TEMP TABLE cc_l AS SELECT * FROM cc_next")
-        cur = con.execute("SELECT sum(label) FROM cc_l").fetchone()[0]
-        if cur == prev:
-            return (
-                "SELECT CAST(node AS BIGINT) AS node, "
-                "CAST(label AS BIGINT) AS component FROM cc_l ORDER BY node"
-            )
-        prev = cur
-    raise RuntimeError("cc scaled oracle: no fixed point in 64 rounds")
-
-
-def _minhash_eval_scaled(con) -> str:
-    """dedup_minhash_recall_eval oracle with the truth arm evaluated
-    via the shared-shingle-count identity instead of candidate-DISTINCT
-    + per-pair list_intersect, and each arm MATERIALIZED into a temp
-    table before the summary row reads their counts.
-
-    The materialization is load-bearing, not style: every arm is
-    individually fast at 10x (truth group-count 13 s, candidate join
-    4 s, band signatures <2 s — measured), but the registry oracle's
-    single-statement shape puts five scalar subqueries over shared
-    CTEs into one plan, and DuckDB's evaluation of that combined tree
-    spilled >80 GB of hash-join temp at 10x where the arms run alone
-    in seconds.  Stepwise temp tables pin the fast per-arm plans and
-    make the final summary a read over three tiny relations — the
-    same imperative pattern as the CC override above."""
-    from trip_data_pipeline_spark.operators.common import (
-        LSH_BANDS,
-        MINHASH_MOD,
-        MINHASH_PERMS,
-        SHINGLE_K,
-        _duck_words,
-        duck_hex_int,
-        duck_word_ngrams,
-    )
-
-    base = f"""
-WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
-d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K})
-SELECT DISTINCT doc_id, unnest({duck_word_ngrams('ws', SHINGLE_K)}) AS s FROM d3
-"""
-    con.execute(f"CREATE OR REPLACE TEMP TABLE mh_sh AS {base}")
-    con.execute("""
-CREATE OR REPLACE TEMP TABLE mh_truth AS
-WITH nsz AS (SELECT doc_id, count(*) AS n FROM mh_sh GROUP BY doc_id),
-she AS (SELECT mh_sh.doc_id, mh_sh.s, nsz.n
-        FROM mh_sh JOIN nsz USING (doc_id))
-SELECT doc_id1, doc_id2 FROM (
-  SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2,
-         a.n AS n1, b.n AS n2, count(*) AS i_
-  FROM she a JOIN she b
-    ON a.s = b.s AND a.doc_id < b.doc_id
-   AND b.n <= 2 * a.n AND a.n <= 2 * b.n
-  GROUP BY 1, 2, 3, 4
-) WHERE 2 * i_ >= n1 + n2 - i_
-""")
-    con.execute(f"""
-CREATE OR REPLACE TEMP TABLE mh_cand AS
-WITH hx AS (
-  SELECT doc_id,
-         {duck_hex_int('md5(s)', 1, 7)} AS a,
-         {duck_hex_int('md5(s)', 8, 7)} AS b
-  FROM mh_sh
-),
-hj AS (
-  SELECT doc_id, j, min((a + (j + 1) * b) % {MINHASH_MOD}) AS mh
-  FROM hx CROSS JOIN (SELECT unnest(range(0, {MINHASH_PERMS})) AS j) perms
-  GROUP BY doc_id, j
-),
-bands AS (
-  SELECT doc_id, j // {MINHASH_PERMS // LSH_BANDS} AS band_idx,
-         string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS band_key
-  FROM hj GROUP BY doc_id, band_idx
-)
-SELECT DISTINCT b1.doc_id AS doc_id1, b2.doc_id AS doc_id2
-FROM bands b1
-JOIN bands b2 ON b1.band_idx = b2.band_idx
-             AND b1.band_key = b2.band_key
-             AND b1.doc_id < b2.doc_id
-""")
-    con.execute("""
-CREATE OR REPLACE TEMP TABLE mh_hit AS
-SELECT t.doc_id1 FROM mh_truth t
-JOIN mh_cand c ON c.doc_id1 = t.doc_id1 AND c.doc_id2 = t.doc_id2
-""")
-    return """
-SELECT CAST((SELECT count(*) FROM mh_truth) AS BIGINT) AS n_truth,
-       CAST((SELECT count(*) FROM mh_cand) AS BIGINT) AS n_cand,
-       CAST((SELECT count(*) FROM mh_hit) AS BIGINT) AS n_hit,
-       CAST((1000000 * (SELECT count(*) FROM mh_hit))
-              // (SELECT count(*) FROM mh_truth) AS BIGINT) AS recall_ppm,
-       CAST((1000000 * (SELECT count(*) FROM mh_hit))
-              // (SELECT count(*) FROM mh_cand) AS BIGINT) AS precision_ppm
-"""
-
-
-def _shingle_containment_scaled(con) -> str:  # noqa: ARG001 — uniform signature
-    """dedup_shingle_containment oracle with the verify arm evaluated
-    via the shared-shingle-count identity: sset is per-doc distinct
-    (list_distinct), so the per-pair join-row count over the inverted
-    index IS |A∩B| — no candidate-DISTINCT, no per-pair re-join, no
-    list_intersect over the full arrays.  The 10*nb >= 9*na size
-    filter is lossless (a qualifying pair has i >= ceil(0.9*na) and
-    i <= nb, hence 10*nb >= 9*na).  Shingles come from the registry
-    oracle's kernel, common.duck_word_ngrams."""
-    from trip_data_pipeline_spark.operators.common import SHINGLE_K, duck_word_ngrams
-
-    return f"""
-WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K}),
-sets_ AS (SELECT doc_id, list_distinct({duck_word_ngrams('ws', SHINGLE_K)}) AS sset FROM d3),
-she AS (SELECT doc_id, len(sset) AS n, unnest(sset) AS s FROM sets_)
-SELECT small_id, big_id,
-       CAST(i_ AS BIGINT) AS n_shared,
-       CAST(na AS BIGINT) AS n_small
-FROM (
-  SELECT a.doc_id AS small_id, b.doc_id AS big_id,
-         count(*) AS i_, a.n AS na
-  FROM she a JOIN she b
-    ON a.s = b.s AND a.doc_id <> b.doc_id
-   AND 10 * b.n >= 9 * a.n
-  GROUP BY 1, 2, 4
-) WHERE 10 * i_ >= 9 * na
-"""
-
-
-def _decontam_scaled(con) -> str:
-    """corpus_decontam_fuzzy oracle with the verification arm evaluated
-    CANDIDATE-DRIVEN — the same round-11 semi-join pruning the op
-    itself ships (corpus.py): sh / cand materialize stepwise into temp
-    tables, both shingle legs of the intersection count are
-    semi-filtered to the LSH candidate doc sets, and doc sizes still
-    compute over the UNPRUNED shingle sets.  The registry oracle's
-    single-statement form joins the FULL inverted index against itself
-    before the candidate filter (the exact plan shape the op fix
-    removed), which blows the oracle budget from 100x up.  Same
-    mathematical object; value-locked to the registry oracle at sf0.01
-    by tests/test_scaled_oracles.py.  Shingle/minhash construction is
-    shared with the registry oracles via common.duck_word_ngrams and
-    the minhash constants."""
-    from trip_data_pipeline_spark.operators.common import (
-        LSH_BANDS,
-        MINHASH_MOD,
-        MINHASH_PERMS,
-        SHINGLE_K,
-        _duck_words,
-        duck_hex_int,
-        duck_word_ngrams,
-    )
-
-    con.execute(f"""
-CREATE OR REPLACE TEMP TABLE dc_sh AS
-WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
-d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K})
-SELECT DISTINCT doc_id, unnest({duck_word_ngrams('ws', SHINGLE_K)}) AS s FROM d3
-""")
-    con.execute(f"""
-CREATE OR REPLACE TEMP TABLE dc_cand AS
-WITH hx AS (
-  SELECT doc_id,
-         {duck_hex_int('md5(s)', 1, 7)} AS a,
-         {duck_hex_int('md5(s)', 8, 7)} AS b
-  FROM dc_sh
-),
-hj AS (
-  SELECT doc_id, j, min((a + (j + 1) * b) % {MINHASH_MOD}) AS mh
-  FROM hx CROSS JOIN (SELECT unnest(range(0, {MINHASH_PERMS})) AS j) perms
-  GROUP BY doc_id, j
-),
-bands AS (
-  SELECT doc_id, j // {MINHASH_PERMS // LSH_BANDS} AS band_idx,
-         string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS band_key
-  FROM hj GROUP BY doc_id, band_idx
-)
-SELECT DISTINCT t.doc_id AS train_doc, e.doc_id AS eval_doc
-FROM bands t
-JOIN bands e ON t.band_idx = e.band_idx
-            AND t.band_key = e.band_key
-            AND t.doc_id % 97 != 0 AND e.doc_id % 97 = 0
-""")
-    con.execute("""
-CREATE OR REPLACE TEMP TABLE dc_i AS
-SELECT st.doc_id AS train_doc, se.doc_id AS eval_doc, count(*) AS i_
-FROM (SELECT * FROM dc_sh
-      WHERE doc_id IN (SELECT train_doc FROM dc_cand)) st
-JOIN (SELECT * FROM dc_sh
-      WHERE doc_id IN (SELECT eval_doc FROM dc_cand)) se
-  ON st.s = se.s
-JOIN dc_cand c ON c.train_doc = st.doc_id AND c.eval_doc = se.doc_id
-GROUP BY 1, 2
-""")
-    return """
-WITH sz AS (SELECT doc_id, count(*) AS n FROM dc_sh GROUP BY doc_id),
-hits AS (
-  SELECT dc_i.train_doc, dc_i.eval_doc
-  FROM dc_i
-  JOIN sz s1 ON s1.doc_id = dc_i.train_doc
-  JOIN sz s2 ON s2.doc_id = dc_i.eval_doc
-  WHERE 2 * dc_i.i_ >= s1.n + s2.n - dc_i.i_
-)
-SELECT train_doc AS doc_id,
-       CAST(count(*) AS BIGINT)      AS n_eval_dups,
-       CAST(min(eval_doc) AS BIGINT) AS first_eval_dup
-FROM hits GROUP BY train_doc
-"""
-
-
-def _triangle_scaled(con) -> str:
-    """graph_triangle_count oracle evaluated STEPWISE — the registry
-    oracle already uses the right algorithm (degree-ordered
-    orientation, each triangle enumerated once), but its
-    single-statement form fuses edge construction, degree join,
-    orientation and the two-hop wedge join into one DuckDB plan that
-    blows the oracle budget at 1000x, exactly the plan-fusion spill
-    class the CC and minhash overrides fixed.  Materializing e / o /
-    tri into temp tables pins the fast per-stage plans; the SQL text
-    of each stage is verbatim from the registry oracle.  Value-locked
-    at sf0.01 by tests/test_scaled_oracles.py."""
-    con.execute("""
-CREATE OR REPLACE TEMP TABLE tc_e AS
-WITH op_ AS (SELECT DISTINCT l_orderkey AS k, l_partkey AS p
-             FROM lineitem WHERE l_orderkey % 97 = 0)
-SELECT DISTINCT a.p AS src, b.p AS dst
-FROM op_ a JOIN op_ b ON a.k = b.k AND a.p <> b.p
-""")
-    con.execute("""
-CREATE OR REPLACE TEMP TABLE tc_o AS
-WITH deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS d
-             FROM tc_e GROUP BY 1)
-SELECT tc_e.src AS u, tc_e.dst AS v
-FROM tc_e JOIN deg du ON du.node = tc_e.src
-          JOIN deg dv ON dv.node = tc_e.dst
-WHERE du.d < dv.d OR (du.d = dv.d AND tc_e.src < tc_e.dst)
-""")
-    con.execute("""
-CREATE OR REPLACE TEMP TABLE tc_tri AS
-SELECT e1.u AS a, e1.v AS b, e2.v AS c
-FROM tc_o e1
-JOIN tc_o e2 ON e2.u = e1.v
-JOIN tc_o e3 ON e3.u = e1.u AND e3.v = e2.v
-""")
-    return """
-WITH nodes AS (SELECT a AS node FROM tc_tri
-               UNION ALL SELECT b FROM tc_tri
-               UNION ALL SELECT c FROM tc_tri)
-SELECT CAST(node AS BIGINT) AS node, CAST(count(*) AS BIGINT) AS n_tri
-FROM nodes GROUP BY node
-ORDER BY n_tri DESC, node LIMIT 20
-"""
-
-
-def _normalize_tokenize_scaled(con) -> str:
-    """text_normalize_tokenize oracle with the normalize+split bound
-    ONCE — the registry oracle's macro expansion repeats the
-    translate+string_split expression three times (len / [1] / [-1]),
-    and at 5M x ~1KB docs the repeated string passes blow the oracle
-    budget (VERDICT r11 item 2).  A temp table pins single evaluation;
-    the three list accessors are verbatim from the registry oracle.
-    Value-locked at sf0.01 by tests/test_scaled_oracles.py."""
-    from trip_data_pipeline_spark.operators.common import _duck_words
-
-    con.execute(f"""
-CREATE OR REPLACE TEMP TABLE tnt_m AS
-SELECT doc_id,
-       CAST(len(ws) AS BIGINT) AS n_tokens,
-       ws[1]                   AS first_token,
-       ws[-1]                  AS last_token
-FROM (SELECT doc_id, {_duck_words()} AS ws FROM documents) w
-""")
-    return "SELECT doc_id, n_tokens, first_token, last_token FROM tnt_m"
-
-
-def _quality_score_scaled(con) -> str:
-    """text_quality_score oracle with the stopword arm evaluated
-    RELATIONALLY — the registry oracle's list_filter lambda executes
-    per element, and at ~1.5B tokens the un-vectorized lambda pass
-    (run TWICE: stop_ratio and the quality blend) blows the oracle
-    budget.  The scaled form unnests once and counts stop hits with a
-    vectorized grouped CASE — same count by construction (stop_hits =
-    len(list_filter(ws, x -> x IN stops)) = sum over tokens of
-    [x IN stops]); n_tokens = len(ws) = count(*) over the unnest
-    (string_split of '' yields [''], so every doc keeps >= 1 row).
-    The punct/length arithmetic is verbatim from the registry oracle.
-    Value-locked at sf0.01 by tests/test_scaled_oracles.py."""
-    from trip_data_pipeline_spark.operators.common import _duck_norm, _duck_words
-    from trip_data_pipeline_spark.operators.text_ops import _STOP_SQL
-
-    con.execute(f"""
-CREATE OR REPLACE TEMP TABLE tqs_m AS
-WITH tok AS (
-  SELECT doc_id, unnest({_duck_words()}) AS x FROM documents
-)
-SELECT doc_id,
-       count(*) AS n_tokens,
-       CAST(sum(CASE WHEN x IN ({_STOP_SQL}) THEN 1 ELSE 0 END) AS DOUBLE)
-         AS stop_hits
-FROM tok GROUP BY doc_id
-""")
-    return f"""
-WITH lens AS (
-  SELECT doc_id,
-         CAST(length(text) AS DOUBLE) AS len_raw,
-         CAST(length({_duck_norm()}) AS DOUBLE) AS len_norm
-  FROM documents
-)
-SELECT m.doc_id,
-       CAST(m.n_tokens AS BIGINT) AS n_tokens,
-       CASE WHEN l.len_raw = 0 THEN NULL
-            ELSE round((l.len_raw - l.len_norm) / l.len_raw, 4) END
-         AS punct_ratio,
-       round(m.stop_hits / m.n_tokens, 4) AS stop_ratio,
-       round(least(1.0, m.n_tokens / 50.0)
-             * (0.5 + 0.5 * m.stop_hits / m.n_tokens), 4) AS quality
-FROM tqs_m m JOIN lens l ON l.doc_id = m.doc_id
-"""
-
-
-def _gopher_rules_scaled(con) -> str:
-    """corpus_gopher_quality_rules oracle with the per-token measures
-    evaluated RELATIONALLY — the registry oracle runs THREE per-element
-    list lambdas per doc (list_filter stop-hits, list_transform
-    lengths, list_aggregate max), which blows the budget at ~1.5B
-    tokens.  The scaled form unnests once and computes all four
-    measures as one vectorized grouped aggregate: n_words = len(ws) =
-    count(*); n_tok_chars = length(nt) - (len(ws) - 1) =
-    sum(length(token)) exactly (k tokens joined by k-1 single spaces
-    reconstruct nt); stop_hits / max_wlen are grouped CASE/max.  The
-    rule bitmask stage is verbatim from the registry oracle.
-    Value-locked at sf0.01 by tests/test_scaled_oracles.py."""
-    from trip_data_pipeline_spark.operators.common import _duck_words
-
-    con.execute(f"""
-CREATE OR REPLACE TEMP TABLE gqr_m AS
-WITH tok AS (
-  SELECT doc_id, unnest({_duck_words()}) AS x FROM documents
-)
-SELECT doc_id,
-       count(*) AS n_words,
-       sum(length(x)) AS n_tok_chars,
-       sum(CASE WHEN x IN ('the','a','of','to','and') THEN 1 ELSE 0 END)
-         AS stop_hits,
-       max(length(x)) AS max_wlen
-FROM tok GROUP BY doc_id
-""")
-    return """
-WITH f AS (
-  SELECT doc_id, n_words,
-         CASE WHEN n_words BETWEEN 20 AND 100000 THEN 0 ELSE 1 END
-       + CASE WHEN 3 * n_words <= n_tok_chars
-               AND n_tok_chars <= 10 * n_words THEN 0 ELSE 2 END
-       + CASE WHEN stop_hits >= 2 THEN 0 ELSE 4 END
-       + CASE WHEN max_wlen <= 15 THEN 0 ELSE 8 END AS failed_mask
-  FROM gqr_m
-)
-SELECT doc_id, CAST(n_words AS BIGINT) AS n_words,
-       CAST(failed_mask AS BIGINT) AS failed_mask,
-       failed_mask = 0 AS passes
-FROM f
-"""
-
-
-SCALED_ORACLES = {
-    "graph_connected_components": _cc_oracle_iterative,
-    "dedup_minhash_recall_eval": _minhash_eval_scaled,
-    "dedup_shingle_containment": _shingle_containment_scaled,
-    "corpus_decontam_fuzzy": _decontam_scaled,
-    "graph_triangle_count": _triangle_scaled,
-    "text_normalize_tokenize": _normalize_tokenize_scaled,
-    "text_quality_score": _quality_score_scaled,
-    "corpus_gopher_quality_rules": _gopher_rules_scaled,
 }
 
 
@@ -815,7 +378,7 @@ def exact_sample_check(con, df, oracle: str, total_rows: int) -> dict:
     }
 
 
-def check_op(spark, con, name: str, sf_dir: str, scaled: bool = False) -> dict:
+def check_op(spark, con, name: str, sf_dir: str) -> dict:
     o = OPS[name]
     t0 = time.time()
     rec: dict = {}
@@ -825,13 +388,6 @@ def check_op(spark, con, name: str, sf_dir: str, scaled: bool = False) -> dict:
         rec["secs"] = round(time.time() - t0, 2)
         return rec
     oracle = o.oracle
-    if scaled and name in SCALED_ORACLES:
-        # The override's temp-table materialization is the heavy part of
-        # these oracles, so it must sit under the same budget interrupt
-        # as the comparison reads (ADVICE r9): a regressed override plan
-        # records ORACLE-BUDGET-NA instead of stalling the sweep.
-        oracle = _with_budget(con, lambda: SCALED_ORACLES[name](con))
-        rec["scaled_oracle"] = True
     s_rows = df.limit(CAP + 1).collect()
     if len(s_rows) <= CAP:
         body = oracle.rstrip().rstrip(";")
@@ -940,7 +496,6 @@ def main() -> int:
     spark = get_session()
     spark.sparkContext.setLogLevel("ERROR")
     con = duck_connect(sf_dir)
-    scaled = os.environ.get("PARITY_SCALED_ORACLES", "") == "1"
     results: dict[str, dict] = {}
     out = {
         "protocol": (
@@ -949,15 +504,8 @@ def main() -> int:
             f"engine-side md5 canonical-row fingerprint (two 56-bit sums) above, "
             f"PLUS a content-addressed stratified exact-sample bag compare "
             f"(skeleton-hash mod K, target ~{SAMPLE_TARGET} rows) on every "
-            f"fingerprint-compared op (round-10)"
-            + (
-                f"; PARITY_SCALED_ORACLES=1 — ops in {sorted(SCALED_ORACLES)} "
-                "use the scale-tractable oracle evaluation (value-locked to "
-                "the registry oracle by tests/test_scaled_oracles.py), "
-                "flagged per-record as scaled_oracle"
-                if scaled
-                else ""
-            )
+            f"fingerprint-compared op (round-10); every op against its "
+            f"registry oracle, no override"
         ),
         "sf_dir": sf_dir,
         "cap_rows": CAP,
@@ -1000,7 +548,7 @@ def main() -> int:
             results[name] = {"status": "CONTRACT-NA", "detail": CONTRACT_NA[name]}
         else:
             try:
-                results[name] = check_op(spark, con, name, sf_dir, scaled=scaled)
+                results[name] = check_op(spark, con, name, sf_dir)
             except OracleBudgetExceeded:
                 results[name] = {
                     "status": "ORACLE-BUDGET-NA",

@@ -271,6 +271,44 @@ def duck_word_ngrams(w: str, n: int) -> str:
     )
 
 
+def duck_components(edges: str) -> str:
+    """DuckDB connected components of relation ``edges(src, dst)`` as
+    CTEs for a ``WITH RECURSIVE`` list, ending in
+    ``comp(node, component)``, where component is the least node id in
+    the node's component (the labelling of ``connected_components``).
+
+    Min-label propagation with pointer jumping, one recursive CTE:
+    each round gives each node least(own label, min neighbour label,
+    min label of the neighbour's label) and carries
+    ``bool_or(moved) OVER ()``.  The round after the last one that
+    moved repeats its labels with ``moved`` false, which ends the
+    recursion; that round is the fixed point.  The edges are
+    materialized once: inlined, every round re-evaluates them, and the
+    grid-cell theta join of ``geo_grid_density_cluster`` took 3.3 s
+    that way against 0.3 s materialized (sf0.01, DuckDB 1.0.0,
+    4 threads; the duck_components entry in CHANGES.md).
+
+    ``edges`` must be symmetric, and every node must have an edge:
+    nodes are read off ``src`` and receive labels over their
+    in-edges, so a node without one is missing from ``comp``."""
+    return f"""ce_ AS MATERIALIZED (SELECT DISTINCT src, dst FROM {edges}),
+cc_(node, label, moved) AS (
+  SELECT DISTINCT src, src, true FROM ce_
+  UNION ALL
+  SELECT node, label, bool_or(moved) OVER () FROM (
+    SELECT c.node, least(c.label, min(u.label), min(w.label)) AS label,
+           least(c.label, min(u.label), min(w.label)) < c.label AS moved
+    FROM cc_ c
+    JOIN ce_ e ON e.dst = c.node
+    JOIN cc_ u ON u.node = e.src
+    JOIN cc_ w ON w.node = u.label
+    WHERE c.moved
+    GROUP BY c.node, c.label
+  )
+),
+comp AS (SELECT node, label AS component FROM cc_ WHERE NOT moved)"""
+
+
 SHINGLE_K = 3
 
 

@@ -27,7 +27,6 @@ from trip_data_pipeline_spark.operators.common import (
     SHINGLE_K,
     _BPE_RE,
     _LANG_MARKERS,
-    _duck_norm,
     _duck_words,
     _marker_regex,
     _norm,
@@ -1017,39 +1016,46 @@ def corpus_domain_mix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Candidate-driven, as the op itself: both shingle legs of the
+# intersection count are semi-filtered to the LSH candidate docs, while
+# doc sizes count the unpruned shingle sets.  Joining the full inverted
+# index against itself first is the plan the op's fix removed.
 _DECON_ORACLE = f"""
-WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
-d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K}),
-sh AS (
-  SELECT DISTINCT doc_id, unnest({duck_word_ngrams('ws', SHINGLE_K)}) AS s
-  FROM d3
+WITH sh AS MATERIALIZED (
+  WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
+  d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K})
+  SELECT DISTINCT doc_id, unnest({duck_word_ngrams('ws', SHINGLE_K)}) AS s FROM d3
 ),
-hx AS (
-  SELECT doc_id,
-         {duck_hex_int('md5(s)', 1, 7)} AS a,
-         {duck_hex_int('md5(s)', 8, 7)} AS b
-  FROM sh
-),
-hj AS (
-  SELECT doc_id, j, min((a + (j + 1) * b) % {MINHASH_MOD}) AS mh
-  FROM hx CROSS JOIN (SELECT unnest(range(0, {MINHASH_PERMS})) AS j) perms
-  GROUP BY doc_id, j
-),
-bands AS (
-  SELECT doc_id, j // {MINHASH_PERMS // LSH_BANDS} AS band_idx,
-         string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS band_key
-  FROM hj GROUP BY doc_id, band_idx
-),
-cand AS (
+cand AS MATERIALIZED (
+  WITH hx AS (
+    SELECT doc_id,
+           {duck_hex_int('md5(s)', 1, 7)} AS a,
+           {duck_hex_int('md5(s)', 8, 7)} AS b
+    FROM sh
+  ),
+  hj AS (
+    SELECT doc_id, j, min((a + (j + 1) * b) % {MINHASH_MOD}) AS mh
+    FROM hx CROSS JOIN (SELECT unnest(range(0, {MINHASH_PERMS})) AS j) perms
+    GROUP BY doc_id, j
+  ),
+  bands AS (
+    SELECT doc_id, j // {MINHASH_PERMS // LSH_BANDS} AS band_idx,
+           string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS band_key
+    FROM hj GROUP BY doc_id, band_idx
+  )
   SELECT DISTINCT t.doc_id AS train_doc, e.doc_id AS eval_doc
   FROM bands t
   JOIN bands e ON t.band_idx = e.band_idx
               AND t.band_key = e.band_key
               AND t.doc_id % 97 != 0 AND e.doc_id % 97 = 0
 ),
-i_ AS (
+i_ AS MATERIALIZED (
   SELECT st.doc_id AS train_doc, se.doc_id AS eval_doc, count(*) AS i_
-  FROM sh st JOIN sh se ON st.s = se.s
+  FROM (SELECT * FROM sh
+        WHERE doc_id IN (SELECT train_doc FROM cand)) st
+  JOIN (SELECT * FROM sh
+        WHERE doc_id IN (SELECT eval_doc FROM cand)) se
+    ON st.s = se.s
   JOIN cand c ON c.train_doc = st.doc_id AND c.eval_doc = se.doc_id
   GROUP BY 1, 2
 ),
@@ -1218,32 +1224,37 @@ def corpus_decontam_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # integer-exact variants): word-count band, mean-word-length band
 # (cross-multiplied, no division), minimum stopword hits, max word
 # length.  Failed rules accumulate into a bitmask so downstream
-# filtering can attribute drops per rule, not just per doc.
+# filtering can attribute drops per rule, not just per doc.  The oracle
+# unnests the words once and aggregates per doc: k words joined by k-1
+# single spaces rebuild the normalized text, so sum(length(word)) equals
+# the op's length(norm) - (size - 1).  A NULL text has no words, so its
+# row comes from the LEFT JOIN with every measure NULL.
 _GOPHER_STOPWORDS = ("the", "a", "of", "to", "and")
 
 
 @op(
     "corpus_gopher_quality_rules",
     oracle=f"""
-WITH w AS (
-  SELECT doc_id, {_duck_words()} AS ws, {_duck_norm()} AS nt FROM documents
-),
-m AS (
+WITH m AS MATERIALIZED (
+  WITH tok AS (
+    SELECT doc_id, unnest({_duck_words()}) AS x FROM documents
+  )
   SELECT doc_id,
-         len(ws) AS n_words,
-         length(nt) - (len(ws) - 1) AS n_tok_chars,
-         len(list_filter(ws, x -> x IN ('the','a','of','to','and'))) AS stop_hits,
-         list_aggregate(list_transform(ws, x -> length(x)), 'max') AS max_wlen
-  FROM w
+         count(*) AS n_words,
+         sum(length(x)) AS n_tok_chars,
+         sum(CASE WHEN x IN ('the','a','of','to','and') THEN 1 ELSE 0 END)
+           AS stop_hits,
+         max(length(x)) AS max_wlen
+  FROM tok GROUP BY doc_id
 ),
 f AS (
-  SELECT doc_id, n_words,
+  SELECT d.doc_id, m.n_words,
          CASE WHEN n_words BETWEEN 20 AND 100000 THEN 0 ELSE 1 END
        + CASE WHEN 3 * n_words <= n_tok_chars
                AND n_tok_chars <= 10 * n_words THEN 0 ELSE 2 END
        + CASE WHEN stop_hits >= 2 THEN 0 ELSE 4 END
        + CASE WHEN max_wlen <= 15 THEN 0 ELSE 8 END AS failed_mask
-  FROM m
+  FROM documents d LEFT JOIN m ON m.doc_id = d.doc_id
 )
 SELECT doc_id, CAST(n_words AS BIGINT) AS n_words,
        CAST(failed_mask AS BIGINT) AS failed_mask,

@@ -42,6 +42,7 @@ from trip_data_pipeline_spark.operators.common import (
     _words,
     bigint,
     dot,
+    duck_components,
     duck_fr4,
     duck_hex_int,
     duck_qvec,
@@ -465,14 +466,9 @@ pairs AS (
 ),
 e AS (SELECT x AS src, y AS dst FROM pairs
       UNION SELECT y AS src, x AS dst FROM pairs),
-n AS (SELECT DISTINCT src AS node FROM e),
-reach(node, r) AS (
-  SELECT node, node FROM n
-  UNION
-  SELECT re.node, e2.dst FROM reach re JOIN e e2 ON re.r = e2.src
-)
-SELECT CAST(node AS BIGINT) AS doc_id, CAST(min(r) AS BIGINT) AS canonical_id
-FROM reach GROUP BY node ORDER BY doc_id
+{duck_components('e')}
+SELECT CAST(node AS BIGINT) AS doc_id, CAST(component AS BIGINT) AS canonical_id
+FROM comp ORDER BY doc_id
 """,
     category=CAT,
 )
@@ -488,11 +484,11 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     linking docs, and since each rep is its group's min id, the
     component min over reps IS the global min doc_id — so the result
     is identical to the naive formulation.  The DuckDB oracle is
-    exactly that naive formulation (brute-force pairs + recursive-CTE
-    transitive closure), so the hash check PROVES the optimized
-    algorithm equivalent on the fixture.  Measured on the 10x replica
-    this is what keeps the op linear in corpus size when duplicate
-    multiplicity grows (docs/SCALE.md)."""
+    exactly that naive formulation (brute-force pairs over every doc,
+    then ``common.duck_components``), so the hash check PROVES the
+    optimized algorithm equivalent on the fixture.  Measured on the
+    10x replica this is what keeps the op linear in corpus size when
+    duplicate multiplicity grows (docs/SCALE.md)."""
     d = load(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
@@ -710,49 +706,54 @@ def dedup_chunk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_eval_duck() -> str:
-
+    """Truth by the shared-shingle-count identity: both sides of the
+    index join are per-doc distinct, so a pair's join-row count IS
+    |A∩B| and |A∪B| = n1 + n2 - i; the size filter (Arasu'06) at
+    t = 0.5 is lossless.  Each arm is MATERIALIZED: the arms run in
+    seconds at 10x alone, but inlined into the summary's five scalar
+    subqueries DuckDB planned them as one tree that spilled >80 GB."""
     return f"""
-WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
-d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K}),
-sh AS (
+WITH sh AS MATERIALIZED (
+  WITH d AS (SELECT doc_id, {_duck_words()} AS ws FROM documents),
+  d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K})
   SELECT DISTINCT doc_id, unnest({duck_word_ngrams('ws', SHINGLE_K)}) AS s FROM d3
 ),
-sets_ AS (SELECT doc_id, list_distinct({duck_word_ngrams('ws', SHINGLE_K)}) AS sset FROM d3),
-truth AS (
+truth AS MATERIALIZED (
+  WITH nsz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+  she AS (SELECT sh.doc_id, sh.s, nsz.n FROM sh JOIN nsz USING (doc_id))
   SELECT doc_id1, doc_id2 FROM (
-    SELECT c.doc_id1, c.doc_id2,
-           len(list_intersect(s1.sset, s2.sset)) AS i_,
-           len(list_distinct(list_concat(s1.sset, s2.sset))) AS u_
-    FROM (SELECT DISTINCT a.doc_id AS doc_id1, b.doc_id AS doc_id2
-          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id) c
-    JOIN sets_ s1 ON s1.doc_id = c.doc_id1
-    JOIN sets_ s2 ON s2.doc_id = c.doc_id2
-  ) WHERE 2 * i_ >= u_
+    SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2,
+           a.n AS n1, b.n AS n2, count(*) AS i_
+    FROM she a JOIN she b
+      ON a.s = b.s AND a.doc_id < b.doc_id
+     AND b.n <= 2 * a.n AND a.n <= 2 * b.n
+    GROUP BY 1, 2, 3, 4
+  ) WHERE 2 * i_ >= n1 + n2 - i_
 ),
-hx AS (
-  SELECT doc_id,
-         {duck_hex_int('md5(s)', 1, 7)} AS a,
-         {duck_hex_int('md5(s)', 8, 7)} AS b
-  FROM sh
-),
-hj AS (
-  SELECT doc_id, j, min((a + (j + 1) * b) % {MINHASH_MOD}) AS mh
-  FROM hx CROSS JOIN (SELECT unnest(range(0, {MINHASH_PERMS})) AS j) perms
-  GROUP BY doc_id, j
-),
-bands AS (
-  SELECT doc_id, j // {MINHASH_PERMS // LSH_BANDS} AS band_idx,
-         string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS band_key
-  FROM hj GROUP BY doc_id, band_idx
-),
-cand AS (
+cand AS MATERIALIZED (
+  WITH hx AS (
+    SELECT doc_id,
+           {duck_hex_int('md5(s)', 1, 7)} AS a,
+           {duck_hex_int('md5(s)', 8, 7)} AS b
+    FROM sh
+  ),
+  hj AS (
+    SELECT doc_id, j, min((a + (j + 1) * b) % {MINHASH_MOD}) AS mh
+    FROM hx CROSS JOIN (SELECT unnest(range(0, {MINHASH_PERMS})) AS j) perms
+    GROUP BY doc_id, j
+  ),
+  bands AS (
+    SELECT doc_id, j // {MINHASH_PERMS // LSH_BANDS} AS band_idx,
+           string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS band_key
+    FROM hj GROUP BY doc_id, band_idx
+  )
   SELECT DISTINCT b1.doc_id AS doc_id1, b2.doc_id AS doc_id2
   FROM bands b1
   JOIN bands b2 ON b1.band_idx = b2.band_idx
                AND b1.band_key = b2.band_key
                AND b1.doc_id < b2.doc_id
 ),
-hit AS (
+hit AS MATERIALIZED (
   SELECT t.doc_id1 FROM truth t
   JOIN cand c ON c.doc_id1 = t.doc_id1 AND c.doc_id2 = t.doc_id2
 )
@@ -793,13 +794,11 @@ def dedup_minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelined inside the join stage with no candidate
     materialization at all.
 
-    At-scale parity (round 9): the registry oracle's truth arm
-    (candidate-DISTINCT + per-pair list_intersect) is the 1,517 s
-    cost that capped value verification at 3x — the 10x record in
-    docs/PARITY_10x.json uses the scale-tractable oracle in
-    tools/parity_sweep.py SCALED_ORACLES (shared-shingle-count
-    identity, stepwise temp tables), locked value-identical to
-    this oracle at sf0.01 by tests/test_scaled_oracles.py."""
+    At-scale parity: the oracle counts shared shingles the same way.
+    Its earlier truth arm (candidate-DISTINCT + per-pair
+    list_intersect) took 1,517 s at 3x and did not finish at sf0.1;
+    it stays in tests/test_scaled_oracles.py as the reference spec
+    this oracle is locked to."""
 
     docs = spread(load(spark, sf_dir, "documents"))
     d3 = (
@@ -1034,23 +1033,18 @@ def dedup_cross_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
 d3 AS (SELECT doc_id, ws FROM d WHERE len(ws) >= {SHINGLE_K}),
 sets_ AS (SELECT doc_id, list_distinct({duck_word_ngrams('ws', SHINGLE_K)}) AS sset FROM d3),
-sh AS (SELECT doc_id, unnest(sset) AS s FROM sets_),
-cand AS (
-  SELECT DISTINCT a.doc_id AS small_id, b.doc_id AS big_id
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id <> b.doc_id
-),
-v AS (
-  SELECT c.small_id, c.big_id,
-         len(list_intersect(s1.sset, s2.sset)) AS i_,
-         len(s1.sset) AS na
-  FROM cand c
-  JOIN sets_ s1 ON s1.doc_id = c.small_id
-  JOIN sets_ s2 ON s2.doc_id = c.big_id
-)
+she AS (SELECT doc_id, len(sset) AS n, unnest(sset) AS s FROM sets_)
 SELECT small_id, big_id,
        CAST(i_ AS BIGINT) AS n_shared,
        CAST(na AS BIGINT) AS n_small
-FROM v WHERE 10 * i_ >= 9 * na
+FROM (
+  SELECT a.doc_id AS small_id, b.doc_id AS big_id,
+         count(*) AS i_, a.n AS na
+  FROM she a JOIN she b
+    ON a.s = b.s AND a.doc_id <> b.doc_id
+   AND 10 * b.n >= 9 * a.n
+  GROUP BY 1, 2, 4
+) WHERE 10 * i_ >= 9 * na
 """,
     category=CAT,
 )
@@ -1090,14 +1084,14 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     SLOWER here (wider shuffle rows than the 40% candidate cut
     repaid) and is left out.
 
-    At-scale parity (round 9): the registry oracle's own
-    candidate-DISTINCT + per-pair list_intersect is what blew the
-    per-op DuckDB budget at 10x — the full 500,500-row value bag is
-    FP-OK in docs/PARITY_10x.json via the scaled oracle in
-    tools/parity_sweep.py SCALED_ORACLES (shared-shingle-count
-    identity; 10*nb >= 9*na is lossless there because it prunes the
-    ORACLE's join only), locked value-identical to this oracle at
-    sf0.01 by tests/test_scaled_oracles.py."""
+    At-scale parity: the oracle counts shared shingles over the
+    inverted index (sset is per-doc distinct, so the per-pair join-row
+    count IS |A∩B|), with the size filter 10*nb >= 9*na on its join;
+    that filter is lossless, since a qualifying pair has
+    i >= ceil(0.9*na) and i <= nb.  Its earlier candidate-DISTINCT +
+    per-pair list_intersect did not finish at sf0.1; it stays in
+    tests/test_scaled_oracles.py as the reference spec this oracle is
+    locked to."""
 
     d3 = (
         spread(load(spark, sf_dir, "documents"))

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trip_data_pipeline_spark.io import load
-from trip_data_pipeline_spark.operators.common import bigint
+from trip_data_pipeline_spark.operators.common import bigint, duck_components
 from trip_data_pipeline_spark.operators.graph import connected_components
 from trip_data_pipeline_spark.registry import op
 
@@ -226,16 +226,11 @@ e0 AS (SELECT a.node AS src, b.node AS dst
        FROM core a JOIN core b
          ON abs(a.cl - b.cl) <= 1 AND abs(a.co - b.co) <= 1
         AND a.node <> b.node),
-reach(node, r) AS (
-  SELECT src, src FROM e0
-  UNION
-  SELECT re.node, e.dst FROM reach re JOIN e0 e ON re.r = e.src
-),
-lab AS (SELECT node, min(r) AS component FROM reach GROUP BY 1)
-SELECT CAST(COALESCE(lab.component, core.node) AS BIGINT) AS cluster_id,
+{duck_components('e0')}
+SELECT CAST(COALESCE(comp.component, core.node) AS BIGINT) AS cluster_id,
        CAST(count(*) AS BIGINT) AS n_cells,
        CAST(sum(core.cnt) AS BIGINT) AS n_points
-FROM core LEFT JOIN lab ON lab.node = core.node
+FROM core LEFT JOIN comp ON comp.node = core.node
 GROUP BY 1
 """
 

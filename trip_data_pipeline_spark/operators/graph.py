@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trip_data_pipeline_spark.io import load
-from trip_data_pipeline_spark.operators.common import bigint
+from trip_data_pipeline_spark.operators.common import bigint, duck_components
 from trip_data_pipeline_spark.registry import op
 
 CAT = "graph / iterative"
@@ -226,36 +226,26 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_ROUNDS) -> Data
 
 @op(
     "graph_connected_components",
-    oracle="""
+    oracle=f"""
 WITH RECURSIVE
 op_ AS (SELECT DISTINCT l_orderkey AS k, l_partkey AS p
         FROM lineitem WHERE l_orderkey % 97 = 0),
 e0 AS (SELECT a.p AS src, b.p AS dst FROM op_ a JOIN op_ b
        ON a.k = b.k AND a.p <> b.p),
-n AS (SELECT DISTINCT src AS node FROM e0),
-reach(node, r) AS (
-  SELECT node, node FROM n
-  UNION
-  SELECT re.node, e.dst FROM reach re JOIN e0 e ON re.r = e.src
-)
-SELECT CAST(node AS BIGINT) AS node, CAST(min(r) AS BIGINT) AS component
-FROM reach GROUP BY node ORDER BY node
+{duck_components('e0')}
+SELECT CAST(node AS BIGINT) AS node, CAST(component AS BIGINT) AS component
+FROM comp ORDER BY node
 """,
     category=CAT,
 )
 def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components of the co-part graph by alternating star
-    contraction; the DuckDB oracle computes the same labelling via a
-    recursive-CTE transitive closure (component id == min reachable
-    node id on both sides).
-
-    At-scale parity (round 9): the recursive-CTE closure materializes
-    every (node, reachable-node) pair — O(sum component_size^2), 307 s
-    at 3x — so the 10x and 100x records (docs/PARITY_10x.json,
-    docs/PARITY_100x_subset.json, both HASH-OK) use the iterative
-    temp-table label-propagation oracle in tools/parity_sweep.py
-    SCALED_ORACLES, locked value-identical to this oracle at sf0.01 by
-    tests/test_scaled_oracles.py."""
+    contraction; the DuckDB oracle computes the same labelling by
+    min-label propagation with pointer jumping (``common.duck_components``;
+    component id == min reachable node id on both sides).  The
+    transitive closure it replaced, which materializes every
+    (node, reachable-node) pair, stays in tests/test_scaled_oracles.py
+    as the reference spec this oracle is locked to."""
     edges = _copart_edges(spark, sf_dir)
     return connected_components(edges).select(
         bigint(F.col("node")).alias("node"),
@@ -436,13 +426,13 @@ def graph_pagerank_int(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TRI_EDGES_DUCK = """
 op_ AS (SELECT DISTINCT l_orderkey AS k, l_partkey AS p
         FROM lineitem WHERE l_orderkey % 97 = 0),
-e AS (SELECT DISTINCT a.p AS src, b.p AS dst
+e AS MATERIALIZED (SELECT DISTINCT a.p AS src, b.p AS dst
       FROM op_ a JOIN op_ b ON a.k = b.k AND a.p <> b.p),
 deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS d FROM e GROUP BY 1),
-o AS (SELECT e.src AS u, e.dst AS v
+o AS MATERIALIZED (SELECT e.src AS u, e.dst AS v
       FROM e JOIN deg du ON du.node = e.src JOIN deg dv ON dv.node = e.dst
       WHERE du.d < dv.d OR (du.d = dv.d AND e.src < e.dst)),
-tri AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
+tri AS MATERIALIZED (SELECT e1.u AS a, e1.v AS b, e2.v AS c
         FROM o e1
         JOIN o e2 ON e2.u = e1.v
         JOIN o e3 ON e3.u = e1.u AND e3.v = e2.v)

@@ -41,11 +41,12 @@ CAT = "2.11 text analysis"
 @op(
     "text_normalize_tokenize",
     oracle=f"""
+WITH w AS MATERIALIZED (SELECT doc_id, {_duck_words()} AS ws FROM documents)
 SELECT doc_id,
-       CAST(len({_duck_words()}) AS BIGINT) AS n_tokens,
-       {_duck_words()}[1]                   AS first_token,
-       {_duck_words()}[-1]                  AS last_token
-FROM documents
+       CAST(len(ws) AS BIGINT) AS n_tokens,
+       ws[1]                   AS first_token,
+       ws[-1]                  AS last_token
+FROM w
 """,
     category=CAT,
 )
@@ -145,27 +146,40 @@ _STOPWORDS = ("select", "from", "where", "join", "group", "order", "the", "and",
 
 _STOP_SQL = ", ".join(f"'{w}'" for w in _STOPWORDS)
 
+# The quality oracle unnests the words once and counts per doc instead
+# of running a list lambda per element twice: string_split never yields
+# an empty list, so count(*) is len(ws), and a NULL text, which has no
+# words, gets its row (every measure NULL) from the LEFT JOIN.
+
 
 @op(
     "text_quality_score",
     oracle=f"""
-WITH t AS (
+WITH m AS MATERIALIZED (
+  WITH tok AS (
+    SELECT doc_id, unnest({_duck_words()}) AS x FROM documents
+  )
   SELECT doc_id,
-         {_duck_words()} AS ws,
+         count(*) AS n_tokens,
+         CAST(sum(CASE WHEN x IN ({_STOP_SQL}) THEN 1 ELSE 0 END) AS DOUBLE)
+           AS stop_hits
+  FROM tok GROUP BY doc_id
+),
+lens AS (
+  SELECT doc_id,
          CAST(length(text) AS DOUBLE) AS len_raw,
          CAST(length({_duck_norm()}) AS DOUBLE) AS len_norm
   FROM documents
 )
-SELECT doc_id,
-       CAST(len(ws) AS BIGINT) AS n_tokens,
-       CASE WHEN len_raw = 0 THEN NULL
-            ELSE round((len_raw - len_norm) / len_raw, 4) END AS punct_ratio,
-       round(CAST(len(list_filter(ws, x -> x IN ({_STOP_SQL}))) AS DOUBLE)
-             / len(ws), 4) AS stop_ratio,
-       round(least(1.0, len(ws) / 50.0)
-             * (0.5 + 0.5 * CAST(len(list_filter(ws, x -> x IN ({_STOP_SQL}))) AS DOUBLE)
-                / len(ws)), 4) AS quality
-FROM t
+SELECT l.doc_id,
+       CAST(m.n_tokens AS BIGINT) AS n_tokens,
+       CASE WHEN l.len_raw = 0 THEN NULL
+            ELSE round((l.len_raw - l.len_norm) / l.len_raw, 4) END
+         AS punct_ratio,
+       round(m.stop_hits / m.n_tokens, 4) AS stop_ratio,
+       round(least(1.0, m.n_tokens / 50.0)
+             * (0.5 + 0.5 * m.stop_hits / m.n_tokens), 4) AS quality
+FROM lens l LEFT JOIN m ON m.doc_id = l.doc_id
 """,
     category=CAT,
 )
