@@ -125,3 +125,19 @@ def test_word_ngrams_total_below_k(spark):
         for r in df.select("id", word_ngrams(F.col("ws"), SHINGLE_K).alias("sh")).collect()
     }
     assert got == {0: [], 1: [], 2: [], 3: ["a b c"]}
+
+
+def test_row_index_premise_checked_through_spark(spark, sf_dir, tmp_path):
+    """scan_metadata_row_index holds only for ONE events file
+    (row_index resets per file).  The op counts the files Spark lists
+    for its scan, so a two-file table read through a URI that os
+    cannot stat fails loudly instead of as an opaque hash mismatch."""
+    from trip_data_pipeline_spark.io import load
+    from trip_data_pipeline_spark.registry import OPS, queries
+
+    queries()
+    load(spark, sf_dir, "events").repartition(2).write.parquet(
+        str(tmp_path / "events.parquet")
+    )
+    with pytest.raises(AssertionError, match="premise broken"):
+        OPS["scan_metadata_row_index"].fn(spark, f"file://{tmp_path}")

@@ -40,7 +40,6 @@ PYTHON_OK = {
     "multimodal_decode_wav",  # mapInPandas RIFF/WAVE decoder is the op
     "pipeline_multimodal_prep",  # dispatching mapInPandas decoder is the op
     "sessionize_gap_and_cap",  # sequential gap+cap state needs applyInPandas
-    "sessionize_batch",  # r10 Arrow grouped-map: 2x over double window at 1000x
     "udf_map_in_arrow",  # the Arrow-native batch map surface is the op
     "multimodal_ppm_resize_nn",  # mapInPandas decode+resize is the op
     "multimodal_wav_decimate",  # mapInPandas decode+decimate is the op
@@ -158,8 +157,8 @@ SKIP_PLAN_SWEEP = {
 }
 
 
-def _plan(spark, name: str) -> str:
-    df = OPS[name].fn(spark, SF)
+def _plan(spark, name: str, sf_dir: str = SF) -> str:
+    df = OPS[name].fn(spark, sf_dir)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
@@ -217,7 +216,7 @@ def test_star_join_broadcasts_dims(spark):
 
 
 def test_star_join_strategy_switch(spark):
-    """The file-stat switch in join_star_5way: under the cap the fact
+    """The scan-size switch in join_star_5way: under the cap the fact
     join is a map-side broadcast (no Exchange feeding the lineitem
     join); over it (cap forced to 1 byte) the same query compiles to
     SHUFFLE_HASH builds, and both branches return identical rows."""
@@ -267,28 +266,19 @@ def test_star_join_probe_tier_broadcasts_small_reduced_side(spark):
     assert a == b
 
 
-def test_star_join_unstatable_path_fails_closed(spark, tmp_path, monkeypatch):
+def test_star_join_unstatable_path_fails_closed(spark, monkeypatch):
     """ADVICE r6 item 1, sharpened in round 7: the broadcast branch is
-    NEVER taken on an UNMEASURED relation.  A path os cannot stat
-    (remote URI — s3a://, hdfs:// — that Spark reads fine) skips the
-    scan-bytes fast path and falls through to the count probe; when
+    NEVER taken on an UNMEASURED relation.  A scan Spark cannot size
+    reports spark.sql.defaultSizeInBytes (Long.MaxValue), which is over
+    the cap, so the decision falls through to the count probe; when
     the MEASURED reduced side is over the cap, the plan must compile
     to the SHUFFLE_HASH shape — never a blind broadcast."""
     from trip_data_pipeline_spark.operators import joins as J
     from trip_data_pipeline_spark.registry import evict_plan
 
-    assert J._path_bytes("s3a://some-bucket/warehouse/orders") == 0
-    assert J._path_bytes(str(tmp_path / "does-not-exist")) == 0
-
-    # Simulate "orders lives at an unstatable URI" without needing a
-    # real remote store: stat the orders path as 0 while Spark still
-    # reads the local fixture, and pin the probe to a big answer.
-    real = J._path_bytes
-    monkeypatch.setattr(
-        J,
-        "_path_bytes",
-        lambda p: 0 if "orders" in p else real(p),
-    )
+    unknown = int(spark.conf.get("spark.sql.defaultSizeInBytes").rstrip("b"))
+    assert unknown == (1 << 63) - 1
+    monkeypatch.setattr(J, "_scan_bytes", lambda df: unknown)
     monkeypatch.setattr(J, "_star_reduced_rows", lambda o, dims: 10**9)
     evict_plan(spark, "join_star_5way")
     try:
@@ -299,31 +289,29 @@ def test_star_join_unstatable_path_fails_closed(spark, tmp_path, monkeypatch):
         evict_plan(spark, "join_star_5way")
 
 
-def test_star_join_unstatable_path_probes_then_broadcasts(spark, monkeypatch):
-    """The flip side of fail-closed (round 7): an unstatable (remote)
-    path must not PIN the deployment to the slow branch either — the
-    count probe measures the reduced side for real, and a measured
-    small relation broadcasts.  A counted cardinality is exactly as
-    safe as a measured file size; at sf0.01 the real probe finds 891
-    rows * 48 B, far under the cap."""
+def test_star_join_uri_scan_broadcasts_without_probe(spark, monkeypatch):
+    """join_star_5way asks Spark for the orders scan's size, so a small
+    table read through a URI that os cannot stat (file://, and likewise
+    s3a:// or hdfs://) takes the broadcast branch with no count probe,
+    and returns the plain path's rows."""
     from trip_data_pipeline_spark.operators import joins as J
     from trip_data_pipeline_spark.registry import evict_plan
 
-    real = J._path_bytes
-    monkeypatch.setattr(
-        J,
-        "_path_bytes",
-        lambda p: 0 if "orders" in p else real(p),
-    )
-    evict_plan(spark, "join_star_5way")
+    uri = f"file://{SF}"
     a = sorted(map(tuple, OPS["join_star_5way"].fn(spark, SF).collect()))
+
+    def no_probe(o, dims):
+        raise AssertionError("count probe ran on a sized scan")
+
+    monkeypatch.setattr(J, "_star_reduced_rows", no_probe)
+    evict_plan(spark, "join_star_5way")
     try:
-        p = _plan(spark, "join_star_5way")
+        p = _plan(spark, "join_star_5way", uri)
         assert "BroadcastHashJoin" in p and "ShuffledHashJoin" not in p
+        b = sorted(map(tuple, OPS["join_star_5way"].fn(spark, uri).collect()))
     finally:
         monkeypatch.undo()
         evict_plan(spark, "join_star_5way")
-    b = sorted(map(tuple, OPS["join_star_5way"].fn(spark, SF).collect()))
     assert a == b
 
 

@@ -869,31 +869,6 @@ def test_semdedup_vectorized_pairs_match_naive(spark, tmp_path, seed):
     assert want, "degenerate case: no hits — planted dups failed"
 
 
-def test_sessionize_tiers_value_identical(spark, monkeypatch):
-    """The size-tiered sessionize_batch (round 10) must produce the
-    identical bag from BOTH branches — the JVM double-window shape
-    (default at fixture size) and the Arrow grouped-map scale path
-    (forced by dropping the tier threshold to 0)."""
-    from trip_data_pipeline_spark.operators import sessionize as mod
-    from trip_data_pipeline_spark.registry import evict_plan
-
-    # Each leg pins the tier: a huge threshold guarantees the JVM
-    # double-window branch, 0 guarantees Arrow.  The op is
-    # plan-memoized, so each leg evicts before it builds.
-    try:
-        monkeypatch.setattr(mod, "_ARROW_MIN_BYTES", 1 << 60)
-        evict_plan(spark, "sessionize_batch")
-        small = mod.sessionize_batch(spark, SF).cache()
-        monkeypatch.setattr(mod, "_ARROW_MIN_BYTES", 0)
-        evict_plan(spark, "sessionize_batch")
-        big = mod.sessionize_batch(spark, SF).cache()
-        assert small.exceptAll(big).count() == 0
-        assert big.exceptAll(small).count() == 0
-    finally:
-        monkeypatch.undo()
-        evict_plan(spark, "sessionize_batch")
-
-
 def test_resample_next_frame_equivalence(spark):
     """timeseries_resample_linear (r12 optimization): "next observation"
     is computed as last(ignorenulls) over a GROWING frame on the

@@ -16,11 +16,13 @@ jobs, completed stages, tasks, single-task stages, task run/CPU/GC
 seconds, shuffle read/write and spill MB, Python-worker CPU seconds,
 and the streaming batches with their summed state-store commit time
 and state rows (streaming ops drain while they are built, so a rep
-covers its drain).  ``compiles`` is the number of classes Janino
-compiled during the last rep (``CodegenMetrics``' compile count, a
-JVM-wide counter): after the warm write an op's generated code is
-cached, so an op that still compiles there makes different code on
-every execution and pays a compile floor at any cache size.  An op
+covers its drain).  ``compiles`` lists, in rep order, the number of
+classes Janino compiled during each timed rep (``CodegenMetrics``'
+compile count, a JVM-wide counter): after the warm write an op's
+generated code is cached, so an op that still compiles there makes
+different code on every execution and pays a compile floor at any
+cache size; the per-rep list shows whether that count falls, holds
+or swings from rep to rep.  An op
 that raises is recorded as ``{"err": ...}`` and the loop moves on.
 
 Prints (or writes to ``--out``) one JSON object: ``sf_dir``, ``reps``,
@@ -105,7 +107,7 @@ def _measure_op(spark, sf_dir: str, name: str, reps: int, plans: str | None, lis
             plan = sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
             f.write(normalize_plan(plan))
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
-    build, execute = [], []
+    build, execute, compiled = [], [], []
     for rep in range(reps):
         group = f"measure:{name}:{rep}"
         listener.drain(False)  # keep only the last rep's batches
@@ -117,10 +119,10 @@ def _measure_op(spark, sf_dir: str, name: str, reps: int, plans: str | None, lis
         t1 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         t2 = time.perf_counter()
+        compiled.append(compiles.getCount() - c0)
         build.append(t1 - t0)
         execute.append(t2 - t1)
     python_cpu_s = trace.python_cpu_s(os.getpid()) - py0
-    compiled = compiles.getCount() - c0
     return {
         "build_s": min(build),
         "build_spread_s": max(build) - min(build),

@@ -1,9 +1,9 @@
 """Shared kernels: the parity-safe column helpers (SURVEY.md §5.3
-rules), scratch dirs and plan-time file sizes, and every kernel that
-two or more operator families use — text normalize/tokenize/shingle,
-the md5 hash family and MinHash, integer-quantized vector math, the
-PPM codec.  A kernel only one family uses lives in that family's
-module; operator modules import nothing private from each other.
+rules), scratch dirs, and every kernel that two or more operator
+families use — text normalize/tokenize/shingle, the md5 hash family
+and MinHash, integer-quantized vector math, the PPM codec.  A kernel
+only one family uses lives in that family's module; operator modules
+import nothing private from each other.
 
 The Spark<->DuckDB hash check compares exact values, so every derived
 double is rounded (2 dp money / 4 dp similarity) and every timestamp is
@@ -15,7 +15,6 @@ so integer µs/second math below is exact parity.
 from __future__ import annotations
 
 import atexit
-import os
 import shutil
 import tempfile
 
@@ -147,32 +146,6 @@ def spread(df, min_fraction: float = 1.0):
     if df.rdd.getNumPartitions() >= max(floor, int(target * min_fraction)):
         return df
     return df.repartition(target)
-
-
-def _file_sizes(path: str) -> list[int]:
-    """On-disk sizes of a fixture file, or of the data files under a
-    fixture directory (hidden and ``_``-prefixed files skipped).  A path
-    os cannot stat — a remote URI (s3a://, hdfs://) that Spark reads
-    fine — yields no sizes."""
-    if os.path.isfile(path):
-        return [os.path.getsize(path)]
-    return [
-        os.path.getsize(os.path.join(root, f))
-        for root, _dirs, files in os.walk(path)
-        for f in files
-        if not f.startswith((".", "_"))
-    ]
-
-
-def _path_bytes(path: str) -> int:
-    """Total on-disk bytes of a fixture file or directory (plan-time
-    scan-stat for strategy switches; fixture files are immutable).
-
-    Returns 0 for anything os cannot stat.  Callers MUST treat 0 as
-    over-cap (fail CLOSED): picking the broadcast branch for a relation
-    of unknown size is exactly the executor-OOM the cap exists to
-    prevent (ADVICE r6 item 1)."""
-    return sum(_file_sizes(path))
 
 
 # --------------------------------------------------------------------------

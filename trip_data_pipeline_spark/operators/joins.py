@@ -14,9 +14,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from trip_data_pipeline_spark.io import load, table_path
+from trip_data_pipeline_spark.io import load
 from trip_data_pipeline_spark.operators.common import (
-    _path_bytes,
     as_date,
     bigint,
     epoch_s,
@@ -60,6 +59,15 @@ _STAR_ROW_BYTES = 48
 # with one knob.
 def _star_probe_cap() -> int:
     return _STAR_BROADCAST_CAP // 2
+
+
+def _scan_bytes(df: DataFrame) -> int:
+    """Spark's size statistic for a raw ``load`` frame — the scan
+    bytes behind join_star_5way's first tier, on any URI Spark reads.
+    A scan Spark cannot size reports ``spark.sql.defaultSizeInBytes``
+    (Long.MaxValue), which is over every cap, so the decision fails
+    closed to the count probe.  Module-level so tests can pin it."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def _star_reduced_rows(o, dims) -> int:
@@ -267,16 +275,16 @@ def join_star_5way(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The two reduced sides both grow linearly with SF, so the join
     strategy is a three-tier switch: while the orders scan is under
-    ``_STAR_BROADCAST_CAP`` (a file-stat check, same plan-time stats
-    pattern as common.spread) the reduced sides broadcast with no
-    probe (no fact shuffle at all — partial agg on the scan, 25-group
-    final); over the cap, one count job measures the reduced side's
-    REAL cardinality (round-7: the scan-bytes proxy ignores the
-    date/region filters — at 1000x it mis-sent a 9.2M-row, ~440 MB
-    reduced relation to the shuffle branch) and broadcasts while
-    rows * ``_STAR_ROW_BYTES`` fits the probe tier's half-cap
-    (``_star_probe_cap`` — the estimate-based tier keeps extra
-    driver-collect margin, ADVICE r7); only past that do the
+    ``_STAR_BROADCAST_CAP`` (Spark's scan statistics, ``_scan_bytes``,
+    as common.spread asks Spark for a scan's width) the reduced sides
+    broadcast with no probe (no fact shuffle at all — partial agg on
+    the scan, 25-group final); over the cap, one count job measures
+    the reduced side's REAL cardinality (round-7: the scan-bytes
+    proxy ignores the date/region filters — at 1000x it mis-sent a
+    9.2M-row, ~440 MB reduced relation to the shuffle branch) and
+    broadcasts while rows * ``_STAR_ROW_BYTES`` fits the probe tier's
+    half-cap (``_star_probe_cap`` — the estimate-based tier keeps
+    extra driver-collect margin, ADVICE r7); only past that do the
     builds flip to SHUFFLE_HASH, bounding every per-partition hash
     map by shuffle.partitions, which scales with the data.  All
     shapes are value-identical (verified vs the same oracle).
@@ -289,16 +297,10 @@ def join_star_5way(spark: SparkSession, sf_dir: str) -> DataFrame:
     25.2 s SHUFFLE_HASH; the probe itself is one filtered 2-column
     scan + broadcast join (~3 s, memoized with the plan).
     """
-    # 0 bytes means "could not stat" (remote URI — the production
-    # deployment shape): the cheap scan-bytes fast path cannot answer,
-    # so the decision falls through to the count probe below.  The
-    # ADVICE-r6 invariant is preserved in its sharp form: the
-    # broadcast branch is NEVER taken on an UNMEASURED relation —
-    # either the scan bytes or a counted cardinality vouch for it.
-    _orders_bytes = _path_bytes(table_path(sf_dir, "orders"))
-    small = 0 < _orders_bytes <= _STAR_BROADCAST_CAP
+    orders = load(spark, sf_dir, "orders")
+    small = _scan_bytes(orders) <= _STAR_BROADCAST_CAP
     li = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders").filter(
+    o = orders.filter(
         (as_date(F.col("o_orderdate")) >= F.lit("1996-01-01").cast("date"))
         & (as_date(F.col("o_orderdate")) < F.lit("1998-01-01").cast("date"))
     ).select("o_orderkey", "o_custkey")
@@ -312,17 +314,13 @@ def join_star_5way(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.c_nationkey == F.col("n_nationkey"),
     ).select("c_custkey", "n_name")
     if not small:
-        # Over the scan-bytes cap, or the path was unstatable: one
-        # count job measures the REAL reduced-side cardinality
-        # (filtered orders x broadcast dims — strictly cheaper than
-        # either full branch, and the shuffle branch would re-do this
-        # work inside the join anyway).  The plan memo makes this a
-        # once-per-session cost; at the scales where the scan-bytes
-        # proxy already answers (sf0.01-100x here), the probe never
-        # runs.  Unstatable (remote) paths always probe — a measured
-        # count is exactly as safe as a measured file size, and it
-        # keeps s3a://-resident tables on the fast branch instead of
-        # pinning the whole production deployment to SHUFFLE_HASH.
+        # Over the scan-bytes cap: one count job measures the REAL
+        # reduced-side cardinality (filtered orders x broadcast dims —
+        # strictly cheaper than either full branch, and the shuffle
+        # branch would re-do this work inside the join anyway).  The
+        # plan memo makes this a once-per-session cost; at the scales
+        # where the scan bytes already answer (sf0.01-100x here), the
+        # probe never runs.
         small = (
             _star_reduced_rows(o, dims) * _STAR_ROW_BYTES
             <= _star_probe_cap()

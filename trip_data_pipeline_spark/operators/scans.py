@@ -579,23 +579,19 @@ def scan_metadata_row_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ADVICE r3: that premise silently requires ONE data file —
     row_index resets per file, so a multi-file fixture would fail as
-    an opaque hash mismatch.  Assert the layout loudly instead."""
+    an opaque hash mismatch.  Assert the layout loudly instead, from
+    the files Spark lists for the scan (so on any URI it reads)."""
     path = f"{sf_dir}/events.parquet"
-    if os.path.isdir(path):
-        parts = [
-            f
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
-        if len(parts) != 1:
-            raise AssertionError(
-                f"scan_metadata_row_index premise broken: {path} holds "
-                f"{len(parts)} data files; row_index==event_id only holds "
-                "for a single dense, event_id-ordered file"
-            )
     ev = spark.read.parquet(path).select(
         F.col("_metadata.row_index").alias("ri"), "event_id"
     )
+    n_files = len(ev.inputFiles())
+    if n_files != 1:
+        raise AssertionError(
+            f"scan_metadata_row_index premise broken: {path} holds "
+            f"{n_files} data files; row_index==event_id only holds "
+            "for a single dense, event_id-ordered file"
+        )
     return ev.groupBy((F.col("ri") % 7).cast("bigint").alias("bucket")).agg(
         bigint(F.count(F.lit(1))).alias("n"),
         bigint(F.sum("ri")).alias("sum_ri"),

@@ -2,14 +2,9 @@
 SURVEY.md §2.9's session windows, benched in BASELINE.md.
 
 Same semantics as stream_session_window (30-min inactivity gap,
-session = [first, last+gap)), size-tiered since round 10: the JVM
-double-window shape below the 256 MB ``_ARROW_MIN_BYTES`` tier of
-events scan, an Arrow grouped-map state collapse (one user-keyed
-shuffle, one vectorized per-user pass) above it — measured
-2x over the double window at 1000x; the full A/B (native
-session_window, partition counts, Arrow) is in the op docstring and
-docs/SCALE.md.  At 100 TB this shuffles each user's events once and
-keeps per-user state linear.
+session = [first, last+gap)).  ``sessionize_batch`` is one JVM double
+window (lag flag -> running sum -> hash agg) at every size; at 100 TB
+it shuffles each user's events once and keeps per-user state linear.
 
 ``sessionize_gap_and_cap`` adds a maximum session span on top of the
 inactivity gap, which needs ordered per-user state (an Arrow
@@ -18,23 +13,17 @@ grouped-map pass) rather than a pure window.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from trip_data_pipeline_spark.io import load, table_path
-from trip_data_pipeline_spark.operators.common import _path_bytes, bigint
+from trip_data_pipeline_spark.io import load
+from trip_data_pipeline_spark.operators.common import bigint
 from trip_data_pipeline_spark.registry import op
 from trip_data_pipeline_spark.session import one_wave_partitions
 
 CAT = "2.9 streaming (batch form)"
 
 GAP_US = 1800 * 1_000_000
-
-# Events-scan size at or below which sessionize_batch runs the JVM
-# double-window shape; above it (or when the path cannot be statted)
-# the Arrow grouped-map runs.  Derivation in the op docstring.  The op
-# is plan-memoized, so a caller that patches this must evict_plan first.
-_ARROW_MIN_BYTES = 256 << 20
 
 
 @op(
@@ -61,53 +50,16 @@ FROM s GROUP BY user_id, sid
     pure=True,
 )
 def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization, size-tiered (the join_star_5way pattern): below
-    the _ARROW_MIN_BYTES tier of events scan the JVM
-    double-window shape runs (no Python worker spin-up); above it — or
-    when the path cannot be statted (remote URI) — an Arrow
-    grouped-map state collapse: shuffle once by user_id, then one
-    vectorized numpy pass per user (sort, gap-diff, cumsum session
-    ids, groupby-agg) inside applyInPandas.  Both branches are
-    value-identical (exceptAll 0/0 at sf0.01 AND 10x) and share the
-    one oracle.
+    """Sessionization as a JVM double window over one user-keyed sort:
+    lag -> new-session flag -> running sum (session id) -> hash agg.
 
-    Tier default (round-10, measured three-point crossover): below
-    256 MB of events scan the JVM double-window shape wins (no Python
-    worker spin-up: 0.67 s vs 2.15 s at 10x/21 MB); at ~210 MB (100x)
-    the two are a wash (2.07-2.23 s vs 2.08-2.16 s paired); at 2.1 GB
-    (1000x) the Arrow grouped-map wins 2x (10.5-12.4 s vs
-    21.7-26.8 s).  256 MB splits the wash point; unstatable (remote)
-    paths take the Arrow branch — the scale path is the safe default
-    for a remote deployment and both branches are value-identical
-    anyway.
-
-    Round-10 plan change (VERDICT r9 item 3a) — the full A/B, all legs
-    paired/interleaved in one session on the 1000x layout (1B events):
-
-    - old double window (lag flag + running sum over one user-keyed
-      sort, then hash agg): 21.7-26.8 s — the shape whose DuckDB ratio
-      sat FLAT at 3.3-3.6x across 10x/100x/1000x.
-    - native batch session_window (MergingSessionsExec): 24.8-28.5 s —
-      NEGATIVE at scale despite winning at 10x (0.52 vs 0.76 s); the
-      merging pass runs outside whole-stage codegen and pays a
-      struct-typed session column through the agg.
-    - shuffle-partition count 32/64/128/256 on the old shape:
-      14.4/15.2/14.1/13.9 s same-session — NOT the binding constraint.
-    - THIS shape (Arrow grouped-map): 10.5-12.4 s — ~2x over the old
-      double window, 1000x ratio ~1.7-2.0x vs DuckDB's 6.3 s, inside
-      the 2x bar for the first time.  Value-identical to the old shape
-      and the oracle (exceptAll 0/0 at sf0.01 AND 10x).
-
-    Why it wins: the JVM sorts 1B (user_id, us, event_id) tuples for
-    the window shape — every comparison touches all three keys — then
-    makes a second window pass and a 100M-group hash agg.  Here the
-    shuffle sorts by user_id only, each user's small timeline sorts in
-    numpy, and the session agg happens in the same vectorized pass, so
-    rows cross Arrow once and the JVM never materializes per-event
-    session ids.  At 100 TB the bound is one user's event history in
-    memory (the same bound the double window's per-user sort frame
-    has), and the single user-keyed shuffle is identical; Arrow batch
-    transfer is the only added cost and it amortizes linearly.
+    One shape at every size.  The round-10 1000x record favoured a
+    per-user Arrow grouped map (10.5-12.4 s vs 21.7-26.8 s), but that
+    layout (~17 GB) and any workload on that side of the switch are not
+    in this checkout, and the grouped map lost 4-24x at the scales that
+    can be built here (CHANGES.md).  Native batch session_window was
+    slower at 1000x (24.8-28.5 s: the merging pass runs outside
+    whole-stage codegen).
 
     Tie semantics (round-9 stream-edge fixture): the break condition
     is gap STRICTLY GREATER than 30 min — Spark's native
@@ -118,62 +70,22 @@ def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     source filter (round-9 stream-edge class): a NULL ts has no
     session semantics, and left in, the engines disagree on where it
     even SORTS before the arithmetic goes three-valued."""
-    import numpy as np
-    import pandas as pd
-
-
     ev = load(spark, sf_dir, "events").filter(F.col("ts").isNotNull()).select(
         "user_id", "event_id", F.unix_micros("ts").alias("us")
     )
-    ev_bytes = _path_bytes(table_path(sf_dir, "events"))
-    if 0 < ev_bytes <= _ARROW_MIN_BYTES:
-        # JVM double-window shape (small tier): lag -> new-session
-        # flag -> running sum -> hash agg over one user-keyed sort.
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("user_id").orderBy("us", "event_id")
-        run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        prev = F.lag("us").over(w)
-        new_s = F.when(
-            prev.isNull() | (F.col("us") - prev > GAP_US), 1
-        ).otherwise(0)
-        return (
-            ev.withColumn("sid", F.sum(new_s).over(run))
-            .groupBy("user_id", "sid")
-            .agg(
-                bigint(F.min("us")).alias("sess_start_us"),
-                bigint(F.max("us") - F.min("us") + GAP_US).alias("dur_us"),
-                bigint(F.count(F.lit(1))).alias("n_events"),
-            )
-            .drop("sid")
+    w = Window.partitionBy("user_id").orderBy("us", "event_id")
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    prev = F.lag("us").over(w)
+    new_s = F.when(prev.isNull() | (F.col("us") - prev > GAP_US), 1).otherwise(0)
+    return (
+        ev.withColumn("sid", F.sum(new_s).over(run))
+        .groupBy("user_id", "sid")
+        .agg(
+            bigint(F.min("us")).alias("sess_start_us"),
+            bigint(F.max("us") - F.min("us") + GAP_US).alias("dur_us"),
+            bigint(F.count(F.lit(1))).alias("n_events"),
         )
-
-    def sess(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):  # applyInPandas never sends empty groups; belt
-            return pd.DataFrame(
-                columns=["user_id", "sess_start_us", "dur_us", "n_events"]
-            )
-        pdf = pdf.sort_values(["us", "event_id"])
-        us = pdf["us"].to_numpy()
-        brk = np.empty(len(us), dtype=bool)
-        brk[0] = True
-        brk[1:] = (us[1:] - us[:-1]) > GAP_US
-        sid = np.cumsum(brk)
-        g = pd.DataFrame(
-            {"user_id": pdf["user_id"].to_numpy(), "sid": sid, "us": us}
-        )
-        out = g.groupby("sid", sort=False).agg(
-            user_id=("user_id", "first"),
-            sess_start_us=("us", "min"),
-            mx=("us", "max"),
-            n_events=("us", "size"),
-        )
-        out["dur_us"] = out["mx"] - out["sess_start_us"] + GAP_US
-        return out[["user_id", "sess_start_us", "dur_us", "n_events"]]
-
-    return ev.groupBy("user_id").applyInPandas(
-        sess,
-        "user_id bigint, sess_start_us bigint, dur_us bigint, n_events bigint",
+        .drop("sid")
     )
 
 
